@@ -1,8 +1,12 @@
 #!/usr/bin/env python3
 """Local twin of the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf parquet tables and hash-compare against the Verify
-parquet dumps. Usage: compare.py <sfDir> <verifyOut>"""
-import sys, json, glob, hashlib
+parquet dumps. Usage: compare.py <sfDir> <verifyOut>
+
+Every registered query must have a dump: Verify writes none for a query
+that threw, so a missing dump is a FAIL. With SPARK_GRAFT_ONLY=a,b (the
+knob that filtered the Verify run) only the named queries are expected."""
+import os, sys, json, glob, hashlib
 import duckdb, pyarrow.parquet as pq
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
@@ -12,14 +16,18 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+only = os.environ.get("SPARK_GRAFT_ONLY")
+expected = {n.strip() for n in only.split(",")} if only else set(oracle)
 fail = []
 ran = 0
 for name, sql in sorted(oracle.items()):
-    files = glob.glob(f"{outdir}/{name}/*.parquet")
-    if not files:
-        # filtered dump (SPARK_GRAFT_ONLY): only compare what was run
+    if name not in expected:
         continue
     ran += 1
+    files = glob.glob(f"{outdir}/{name}/*.parquet")
+    if not files:
+        fail.append((name, "no dump: the query threw in Verify"))
+        continue
     spark_tbl = pq.read_table(files[0])
     # The DRIVER gate sorts columns through pandas, which cannot
     # factorize list/struct cells (unhashable numpy.ndarray) — round 7

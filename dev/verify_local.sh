@@ -1,12 +1,16 @@
 #!/bin/bash
 # Local correctness loop: Verify dump at sf0.01 + DuckDB compare.
 # Usage: dev/verify_local.sh [sfDir] [outDir]
+# Needs `sbt compile` first. Heap and cores follow SPARK_DRIVER_MEM and
+# SPARK_GRAFT_CPUS; unset, they are sized from the host like the test
+# command: half of RAM clamped to 2-8 GB, and every core.
 set -e
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
+MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
 rm -rf "$OUT"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java -Xmx24g \
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} java -Xmx"$MEM" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \

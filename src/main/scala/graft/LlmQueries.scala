@@ -645,7 +645,7 @@ object LlmQueries {
     * fine codebooks, which must ride a join). */
   private def qPqCodes(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val book = PqKNN.cachedSampledBook(e, "vec_id", "embedding", dir + "#pq")
+    val book = PqKNN.cachedSampledBook(e, "vec_id", "embedding", dir)
     e.select(col("vec_id"), PqKNN.pqCodes(col("embedding"), book).as("codes"))
       .select(col("vec_id"), PqKNN.packCodes(col("codes")).as("code_word"))
       .orderBy(col("vec_id"))
@@ -688,7 +688,7 @@ object LlmQueries {
     * the scan side instead of 256-byte vectors). */
   private def qKnnPq(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val book = PqKNN.cachedSampledBook(e, "vec_id", "embedding", dir + "#pq")
+    val book = PqKNN.cachedSampledBook(e, "vec_id", "embedding", dir)
     PqKNN.adcTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
       book, k = 5)
       .orderBy(col("query_id"), col("rank"))
@@ -734,7 +734,7 @@ object LlmQueries {
   private def qKnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val cents = IvfKNN.cachedSampledCentroids(e, "vec_id", "embedding", 16, dir)
-    val book = PqKNN.cachedSampledBook(e, "vec_id", "embedding", dir + "#pq")
+    val book = PqKNN.cachedSampledBook(e, "vec_id", "embedding", dir)
     PqKNN.ivfpqTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
       cents, book, k = 5, nprobe = 4)
       .orderBy(col("query_id"), col("rank"))
@@ -811,7 +811,7 @@ object LlmQueries {
     * loop), zero shuffle. */
   private def qSqCodes(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val p = SqKNN.cachedRange(e, "embedding", dir + "#sq")
+    val p = SqKNN.cachedRange(e, "embedding", dir)
     e.select(col("vec_id"), SqKNN.sqCodes(col("embedding"), p).as("codes"))
       .select(col("vec_id"), posexplode(col("codes")))
       .select(col("vec_id"), col("pos").as("d"), col("col").as("code"))
@@ -831,7 +831,7 @@ object LlmQueries {
     * set, the emb_knn_exact shape. */
   private def qKnnSq(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val p = SqKNN.cachedRange(e, "embedding", dir + "#sq")
+    val p = SqKNN.cachedRange(e, "embedding", dir)
     SqKNN.adcTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
       p, dim = 64, k = 5)
       .orderBy(col("query_id"), col("rank"))
@@ -894,7 +894,7 @@ object LlmQueries {
   private def qKnnIvfSq(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val cents = IvfKNN.cachedSampledCentroids(e, "vec_id", "embedding", 16, dir)
-    val p = SqKNN.cachedRange(e, "embedding", dir + "#sq")
+    val p = SqKNN.cachedRange(e, "embedding", dir)
     SqKNN.ivfsqTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
       cents, p, dim = 64, k = 5, nprobe = 4)
       .orderBy(col("query_id"), col("rank"))
@@ -1152,7 +1152,7 @@ object LlmQueries {
     val k = 8
     val e = emb(s, dir)
     val seed = IvfKNN.cachedSampledCentroids(e, "vec_id", "embedding", k, dir)
-    val trained = IvfKNN.cachedLloydCodebook(e, "vec_id", "embedding", k, 64, dir)
+    val trained = IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", k, 64, dir, iterations = 1)
     // spread before the two fused argmax projections (r15): a
     // single-file scan ran both quantizers on one task
     val cells = graft.operators.Spread.wide(e, col("vec_id")).select(
@@ -2106,8 +2106,8 @@ object LlmQueries {
 
   /** Learned BPE merge table: (merge_rank, left_sym, right_sym,
     * pair_freq). Training materializes vocab-sized checkpoints during
-    * construction (the mining-query class); the returned plan is a
-    * union of the eight one-row winner frames. */
+    * construction (the mining-query class); the trained table is read
+    * back from its at-rest parquet copy. */
   private def qBpeMerges(s: SparkSession, dir: String): DataFrame = {
     val (merges, _) = graft.ext.text.BpeTrainer.cachedTrain(
       docs(s, dir), "text", bpeMergeCount, source = dir)

@@ -76,16 +76,6 @@ object ScaleQueries {
 
   // -------------------------------------------------------- bucketed join
 
-  /** One bucketed layout per (catalog, source dir), built on first
-    * use and REUSED by every later invocation in the session — the
-    * honest cost model: a warehouse maintains its bucketed tables at
-    * rest and amortizes the one-time layout write over every repeated
-    * join, so billing the write to each query (as the first version
-    * of this query did) overstated the operator ~5×. The map is
-    * bounded by the number of distinct test corpora (≤3). */
-  private val layoutMemo =
-    new scala.collection.concurrent.TrieMap[String, (String, String)]
-
   /** Build (or reuse) the at-rest bucketed layout for `dir` — the
     * bench calls this explicitly so the one-time layout write is
     * reported as a `build` line instead of hiding in a first rep. */
@@ -94,22 +84,16 @@ object ScaleQueries {
     ()
   }
 
-  /** Bench-harness hook (see [[graft.ext.similarity.IvfKNN.clearBuildMemos]]):
-    * forget the layout memo so the next ensure call rebuilds — the
-    * saveAsTable writes are mode(overwrite), so a rebuild is safe. */
-  private[graft] def clearLayoutMemo(): Unit = layoutMemo.clear()
-
-  private def bucketedTables(s: SparkSession, dir: String): (String, String) = {
-    // memo hits must be re-validated against THIS session's catalog:
-    // table registrations die with their SparkSession, so a new
-    // session in the same JVM would otherwise get stale names
-    layoutMemo.get(dir).filter { case (li, _) => s.catalog.tableExists(li) }
-      .getOrElse {
-        val built = buildBucketedTables(s, dir)
-        layoutMemo.put(dir, built)
-        built
-      }
-  }
+  /** One bucketed layout per (session, source dir), built on first
+    * use and REUSED by every later invocation in the session — the
+    * honest cost model: a warehouse maintains its bucketed tables at
+    * rest and amortizes the one-time layout write over every repeated
+    * join, so billing the write to each query (as the first version
+    * of this query did) overstated the operator ~5×. The saveAsTable
+    * writes are mode(overwrite), so a rebuild after
+    * [[Artifacts.clear]] is safe. */
+  private def bucketedTables(s: SparkSession, dir: String): (String, String) =
+    Artifacts.get(s, "bucketed-layout", dir)(buildBucketedTables(s, dir))
 
   private def buildBucketedTables(s: SparkSession, dir: String): (String, String) = {
       import s.implicits._

@@ -4,12 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loads the driver-generated parquet tables (TESTDATA.md).
   *
-  * Each table is one parquet file under `$sfDir/<name>.parquet`.
-  * Reads are plain `spark.read.parquet`, so Catalyst pushes filters
-  * and prunes columns down to the scan — callers should `select` /
-  * `filter` early and let pushdown do the rest. At 100 TB these
-  * would be partitioned parquet/iceberg table roots instead of
-  * single files; the API shape (name → DataFrame) is unchanged.
+  * Each table is one parquet file under `$sfDir/<name>.parquet`,
+  * read once per session with `spark.read.parquet` (events also
+  * normalizes its `ts` column) and then served from [[Artifacts]].
+  * Catalyst pushes filters and prunes columns down to the scan —
+  * callers should `select` / `filter` early and let pushdown do the
+  * rest. At 100 TB these would be partitioned parquet/iceberg table
+  * roots instead of single files; the API shape (name → DataFrame) is
+  * unchanged.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -28,22 +30,20 @@ object Tables {
     graft.plans.GraftTableFunctions.register(spark)
   }
 
-  /** Per-(session, dir, table) DataFrame memo (r15): `spark.read
-    * .parquet` builds a fresh relation per call — file listing +
-    * footer schema read, a driver-side job before every query even
-    * touches data, paid 125×2 times per bench run for the same ten
-    * immutable files. A catalog table reads its metadata once per
-    * session; this memo is that posture for the path-based corpus
-    * (the DataFrame handle is reused — every EXECUTION still scans
-    * the parquet files, nothing result-shaped is cached). Corpus dirs
-    * are immutable within a session (generators write before any
-    * read; upsert scratch never goes through Tables), and the memo
-    * keys on the session so a restarted session re-lists. */
-  private val frameMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]
-
+  /** The table as a DataFrame, held in [[Artifacts]] per (session,
+    * dir, table): `spark.read.parquet` builds a fresh relation per call
+    * — file listing + footer schema read, a driver-side job before
+    * every query even touches data, paid 125×2 times per bench run for
+    * the same ten files. A catalog table reads its metadata once per
+    * session; this is that posture for the path-based corpus (the
+    * DataFrame handle is reused — every EXECUTION still scans the
+    * parquet files, nothing result-shaped is cached). The entry carries
+    * no snapshot token: corpus dirs are immutable within a session
+    * (generators write before any read; upsert scratch never goes
+    * through Tables). It lives until the session's SparkContext ends
+    * or [[Artifacts.clear]]. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    frameMemo.getOrElseUpdate((spark, sfDir, name), build(spark, sfDir, name))
+    Artifacts.get(spark, "table", (sfDir, name))(build(spark, sfDir, name))
 
   private def build(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name != "events")

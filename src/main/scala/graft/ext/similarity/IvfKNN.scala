@@ -53,44 +53,17 @@ object IvfKNN {
       .zipWithIndex
       .map { case (r, i) => mk(i, r.getSeq[Float](0).toArray) }
 
-  private val codebookMemo =
-    new scala.collection.concurrent.TrieMap[(String, String, String, Int), Seq[Centroid]]
-
-  /** Corpus snapshot token: file count + per-file (length, mtime)
-    * folded into one hash, read from the plan's already-materialized
-    * file listing. Folded into the memo keys so a corpus REWRITTEN in
-    * place (same path, new files) retrains instead of silently
-    * serving the stale codebook — the round-4 hygiene item. Non-file
-    * frames (in-memory tests) token as "mem", preserving plain
-    * per-source memoization. */
-  private[graft] def snapshotToken(corpus: DataFrame): String = {
-    val files = corpus.inputFiles.sorted
-    if (files.isEmpty) "mem"
-    else {
-      val conf = corpus.sparkSession.sessionState.newHadoopConf()
-      var acc = 17L
-      files.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        acc = acc * 31 + f.hashCode
-        acc = acc * 31 + st.getLen
-        acc = acc * 31 + st.getModificationTime
-      }
-      s"${files.length}:${java.lang.Long.toHexString(acc)}"
-    }
-  }
-
-  /** [[sampledCentroids]] memoized per (source snapshot, k). A real
-    * IVF index trains its codebook once when the index is built and
-    * every query reuses it; recomputing the (deterministic) codebook
-    * per query would bill index-build cost to query latency. `source`
-    * names the corpus (e.g. its path); the snapshot token invalidates
-    * the entry when the files under that path change. */
+  /** [[sampledCentroids]] held in [[graft.Artifacts]] per (corpus
+    * snapshot, source, k). A real IVF index trains its codebook once
+    * when the index is built and every query reuses it; recomputing
+    * the (deterministic) codebook per query would bill index-build
+    * cost to query latency. `source` names the corpus (e.g. its path);
+    * the snapshot token invalidates the entry when the files under
+    * that path change. */
   def cachedSampledCentroids(
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       source: String): Seq[Centroid] =
-    codebookMemo.getOrElseUpdate(
-      (source + "@" + snapshotToken(corpus), idCol, vecCol, k),
+    graft.Artifacts.ofCorpus(corpus, "ivf-sampled", (source, idCol, vecCol, k))(
       sampledCentroids(corpus, idCol, vecCol, k))
 
   /** Lloyd refinement: assign (map stage) → per-dimension mean (one
@@ -222,41 +195,23 @@ object IvfKNN {
     }
   }
 
-  private val lloydMemo =
-    new scala.collection.concurrent.TrieMap[(String, String, String, Int, Int), Seq[DCentroid]]
-
-  /** Drop every training memo so the NEXT build call retrains from
-    * scratch — bench-harness hook (ScaleBench times at-rest builds
-    * min-of-N; without this the second rep would hit the memo and
-    * time nothing). Not for production paths, which rely on the
-    * memos for build-once-per-corpus cost. */
-  private[graft] def clearBuildMemos(): Unit = {
-    codebookMemo.clear()
-    lloydMemo.clear()
-  }
-
   /** [[lloydOnceExact]] + (iterations-1) × [[lloydStepExact]] from
-    * the cached seed, memoized per (corpus snapshot, k, iterations) —
-    * training is index-build cost, paid once; a rewritten corpus gets
-    * a fresh snapshot token and so retrains. */
+    * the cached seed, held in [[graft.Artifacts]] per (corpus
+    * snapshot, source, k, iterations) — training is index-build cost,
+    * paid once; a rewritten corpus gets a fresh snapshot token and so
+    * retrains. */
   def cachedLloydTrain(
       corpus: DataFrame, idCol: String, vecCol: String, k: Int, dim: Int,
       source: String, iterations: Int): Seq[DCentroid] =
-    lloydMemo.getOrElseUpdate(
-      (source + "@" + snapshotToken(corpus), idCol, vecCol, k, iterations), {
+    graft.Artifacts.ofCorpus(corpus, "ivf-lloyd",
+        (source, idCol, vecCol, k, iterations)) {
       if (iterations == 1)
         lloydOnceExact(corpus, vecCol,
           cachedSampledCentroids(corpus, idCol, vecCol, k, source), dim)
       else
         lloydStepExact(corpus, vecCol,
           cachedLloydTrain(corpus, idCol, vecCol, k, dim, source, iterations - 1), dim)
-    })
-
-  /** Back-compat name for the single-iteration codebook. */
-  def cachedLloydCodebook(
-      corpus: DataFrame, idCol: String, vecCol: String, k: Int, dim: Int,
-      source: String): Seq[DCentroid] =
-    cachedLloydTrain(corpus, idCol, vecCol, k, dim, source, iterations = 1)
+    }
 
   /** Dot of a vector with a trained centroid, products rounded to 12
     * decimals and folded in DECIMAL(38,12) — the accumulation is

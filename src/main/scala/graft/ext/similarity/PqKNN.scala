@@ -91,13 +91,13 @@ object PqKNN {
     }.toIndexedSeq
   }
 
-  /** [[sampledBook]] memoized per (corpus snapshot, dir) like the IVF
-    * codebooks — the book is index metadata built once per corpus. */
-  private val bookMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, PqBook]()
+  /** [[sampledBook]] held in [[graft.Artifacts]] per (corpus
+    * snapshot, tag) like the IVF codebooks — the book is index
+    * metadata built once per corpus. */
   def cachedSampledBook(
       corpus: DataFrame, idCol: String, vecCol: String, tag: String): PqBook =
-    bookMemo.computeIfAbsent(tag, _ => sampledBook(corpus, idCol, vecCol))
+    graft.Artifacts.ofCorpus(corpus, "pq-book", (tag, idCol, vecCol))(
+      sampledBook(corpus, idCol, vecCol))
 
   private def litF(xs: Array[Float]): Column =
     array(xs.toIndexedSeq.map(lit): _*)

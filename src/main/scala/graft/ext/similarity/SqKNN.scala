@@ -65,17 +65,16 @@ object SqKNN {
     SqParams(mn, (mx - mn) / levels)
   }
 
-  /** [[trainedRange]] memoized per corpus snapshot, like the IVF/PQ
-    * codebooks — train once per corpus, reuse across queries. The key
-    * folds in [[IvfKNN.snapshotToken]] (file length + mtime), not just
-    * the caller tag: a corpus regenerated in place within one JVM must
-    * invalidate the trained (mn, s) or its codes would hash-mismatch
-    * the oracle (round-7 ADVICE). */
-  private val rangeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, SqParams]()
+  /** [[trainedRange]] held in [[graft.Artifacts]] per (corpus
+    * snapshot, tag), like the IVF/PQ codebooks — train once per
+    * corpus, reuse across queries. The snapshot token (file length +
+    * mtime), not just the caller tag, keys the entry: a corpus
+    * regenerated in place within one JVM must invalidate the trained
+    * (mn, s) or its codes would hash-mismatch the oracle (round-7
+    * ADVICE). */
   def cachedRange(corpus: DataFrame, vecCol: String, tag: String): SqParams =
-    rangeMemo.computeIfAbsent(tag + "@" + IvfKNN.snapshotToken(corpus),
-      _ => trainedRange(corpus, vecCol))
+    graft.Artifacts.ofCorpus(corpus, "sq-range", (tag, vecCol))(
+      trainedRange(corpus, vecCol))
 
   /** SQ codes of a vector: `array<int>` with one [0, 255] code per
     * dimension. Pure projection. */

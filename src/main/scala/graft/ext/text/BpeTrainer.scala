@@ -1,5 +1,6 @@
 package graft.ext.text
 
+import graft.ext.dedup.NearDup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -171,33 +172,21 @@ object BpeTrainer {
     } else (learned.reduce(_.union(_)), words)
   }
 
-  private val trainMemo = new scala.collection.concurrent.TrieMap[
-    (String, String, Int), (DataFrame, DataFrame)]
-
-  /** [[train]] memoized per (corpus snapshot, text column, merge
-    * count) — a tokenizer is an AT-REST artifact like an IVF
-    * codebook: trained once when the corpus is built, reused by every
-    * query; retraining per query would bill build cost to query
-    * latency. The snapshot token (file lengths + mtimes,
-    * [[graft.ext.similarity.IvfKNN.snapshotToken]]) invalidates the
-    * entry when the corpus is rewritten in place. Memoized frames are
-    * vocabulary-sized checkpoints — bounded session state. */
+  /** [[train]] held in [[graft.Artifacts]] per (corpus snapshot,
+    * source, text column, merge count) — a tokenizer is an AT-REST
+    * artifact like an IVF codebook: trained once when the corpus is
+    * built, reused by every query; retraining per query would bill
+    * build cost to query latency. Both frames are written to scratch
+    * parquet and the training checkpoints freed, so the entry pins no
+    * executor storage — the [[NgramLm.cachedRefTrain]] posture. */
   def cachedTrain(docs: DataFrame, textCol: String, numMerges: Int,
       source: String): (DataFrame, DataFrame) =
-    trainMemo.getOrElseUpdate(
-      (source + "@" + graft.ext.similarity.IvfKNN.snapshotToken(docs),
-        textCol, numMerges),
-      train(docs, textCol, numMerges))
-
-  /** Drop the training memo (ScaleBench min-of-N builds: the second
-    * rep must retrain, not hit the memo), freeing the checkpointed
-    * RDDs it pinned. */
-  private[graft] def clearTrainMemo(): Unit = {
-    trainMemo.values.foreach { case (m, w) =>
-      freeCheckpoint(m); freeCheckpoint(w)
+    graft.Artifacts.ofCorpus(docs, "bpe", (source, textCol, numMerges)) {
+      val (merges, words) = train(docs, textCol, numMerges)
+      try (NearDup.materializeAndRelease(merges, "bpe_merges"),
+        NearDup.materializeAndRelease(words, "bpe_words"))
+      finally { freeCheckpoint(merges); freeCheckpoint(words) }
     }
-    trainMemo.clear()
-  }
 
   /** Per-document piece statistics under a trained tokenizer:
     * (idCol, n_tokens, n_pieces, pieces_per_token). The per-word

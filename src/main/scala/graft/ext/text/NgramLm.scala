@@ -100,33 +100,24 @@ object NgramLm {
         expr(s"($Scale * cb) div cu").as("score_scaled"))
   }
 
-  private val refModelMemo =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]
-
   /** [[train]] over a FIXED reference snapshot (`idCol < maxRefId`),
-    * memoized as an at-rest parquet table — the CCNet-true posture
-    * (round-7 verdict task 6): production LM quality scoring trains
-    * the model ONCE on a fixed reference corpus (CCNet: Wikipedia)
-    * and scores any corpus against it, so the model stays FLAT as the
-    * scored corpus grows. The self-scoring registry query's model
-    * grows with the scored corpus's Heaps vocabulary — documented
+    * kept in [[graft.Artifacts]] as an at-rest parquet table — the
+    * CCNet-true posture (round-7 verdict task 6): production LM quality
+    * scoring trains the model ONCE on a fixed reference corpus (CCNet:
+    * Wikipedia) and scores any corpus against it, so the model stays
+    * FLAT as the scored corpus grows. The self-scoring registry query's
+    * model grows with the scored corpus's Heaps vocabulary — documented
     * OOM-class at scale; this variant bounds the scoring join's
     * build side by the snapshot. The snapshot token invalidates the
-    * memo if the corpus files are rewritten in place. */
+    * entry if the corpus files are rewritten in place. */
   def cachedRefTrain(docs: DataFrame, idCol: String, textCol: String,
       maxRefId: Long, source: String): DataFrame =
-    refModelMemo.getOrElseUpdate(
-      source + "@" + graft.ext.similarity.IvfKNN.snapshotToken(docs) +
-        "#" + maxRefId,
+    graft.Artifacts.ofCorpus(docs, "lm-ref", (source, idCol, textCol, maxRefId))(
       // materialize to scratch parquet: an at-rest table holding no
       // executor storage, re-read by every consumer like any other
       // warehouse table
       graft.ext.dedup.NearDup.materializeAndRelease(
         train(docs.filter(col(idCol) < maxRefId), idCol, textCol), "lmref"))
-
-  /** Drop the reference-model memo (ScaleBench min-of-N builds: the
-    * second rep must retrain, not hit the memo). */
-  private[graft] def clearRefModelMemo(): Unit = refModelMemo.clear()
 
   /** Score every document against a trained model: per-doc exact sum
     * of bigram scores, bigram count, and their (deterministic) double

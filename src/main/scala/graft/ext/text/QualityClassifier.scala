@@ -189,30 +189,22 @@ object QualityClassifier {
     pocket.zipWithIndex.minBy { case ((err, _), i) => (err, i) }._1._2
   }
 
-  private val refModelMemo =
-    new scala.collection.concurrent.TrieMap[String, Array[Long]]
-
   /** [[train]] over a FIXED reference snapshot (`idCol < maxRefId`),
-    * memoized — the CCNet/fastText-true posture (round-9 verdict task
-    * 3, the [[NgramLm.cachedRefTrain]] twin): a production quality
-    * filter trains ONCE on a labeled reference corpus and scores any
-    * corpus against the frozen weights, so training cost and model
-    * size stay FLAT as the scored corpus grows. The model is Dim+1 =
-    * 257 longs (~2 KB of driver-held index metadata — unlike the LM's
-    * vocab-sized table it needs no at-rest parquet), entering every
-    * scoring pass as plan literals under the 4 KB budget. The
-    * snapshot token invalidates the memo if the corpus files are
-    * rewritten in place. */
+    * kept in [[graft.Artifacts]] — the CCNet/fastText-true posture
+    * (round-9 verdict task 3, the [[NgramLm.cachedRefTrain]] twin): a
+    * production quality filter trains ONCE on a labeled reference
+    * corpus and scores any corpus against the frozen weights, so
+    * training cost and model size stay FLAT as the scored corpus grows.
+    * The model is Dim+1 = 257 longs (~2 KB of driver-held index
+    * metadata — unlike the LM's vocab-sized table it needs no at-rest
+    * parquet), entering every scoring pass as plan literals under the
+    * 4 KB budget. The snapshot token invalidates the entry if the
+    * corpus files are rewritten in place. */
   def cachedRefTrain(docs: DataFrame, idCol: String, textCol: String,
       maxRefId: Long, iters: Int, source: String): Array[Long] =
-    refModelMemo.getOrElseUpdate(
-      source + "@" + graft.ext.similarity.IvfKNN.snapshotToken(docs) +
-        "#" + idCol + "#" + textCol + "#" + maxRefId + "#" + iters,
+    graft.Artifacts.ofCorpus(docs, "quality-ref",
+        (source, idCol, textCol, maxRefId, iters))(
       train(docs.filter(col(idCol) < maxRefId), idCol, textCol, iters))
-
-  /** Drop the reference-model memo (ScaleBench min-of-N builds: the
-    * second rep must retrain, not hit the memo). */
-  private[graft] def clearRefModelMemo(): Unit = refModelMemo.clear()
 
   /** Corpus-wide scoring under trained weights: one aggregate pass,
     * weights as plan literals. Output: (id, label, margin, pred). */

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * amortizes away (round-4 verdict tasks 2 and 5):
   *
   *  - [[AtRestBuilds]]: every at-rest / index structure the engine
-  *    memoizes (IVF codebooks, bucketed layout, z-order layout) is
+  *    keeps (IVF codebooks, bucketed layout, BPE tokenizer, reference
+  *    models in [[graft.Artifacts]]; the z-order layout) is
   *    built here EXPLICITLY and timed, so BENCH_DETAIL carries the
   *    one-time build cost as its own line instead of hiding it in a
   *    first rep. Running the builds before the query loop also means
@@ -23,8 +24,10 @@ import org.apache.spark.sql.functions._
 object AtRestBuilds {
 
   /** (name, build action). Each action is idempotent per session —
-    * builds land in the same memos the registered queries consume, so
-    * the query loop that follows measures steady state. */
+    * builds land in the [[graft.Artifacts]] entries the registered
+    * queries look up, so the query loop that follows measures steady
+    * state. The float codebook and the z-order layout are not stored:
+    * no query reads them, and they are rebuilt on every call. */
   def all: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "ivf_exact_codebook_iter1" -> { (s, dir) =>
       val e = graft.Tables(s, dir, "embeddings")

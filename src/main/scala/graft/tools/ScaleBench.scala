@@ -35,7 +35,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Methodology matches [[graft.Bench]]: min-of-N reps (default 2) per
   * query per SF, at-rest builds run explicitly BEFORE the query loop
-  * and ALSO at min-of-N with their memos cleared between reps (their
+  * and ALSO at min-of-N with [[graft.Artifacts]] cleared between reps (their
   * cost reported per-SF in a "builds" section — index builds scale
   * with the corpus too and must not hide in a first rep, and a
   * single-shot build cell would carry shared-host noise the query
@@ -418,21 +418,17 @@ object ScaleBench {
       math.max(minFreeGb, perQueryFloorGb.getOrElse(name, 0.0))
 
     // at-rest builds at min-of-N too: they are single-shot by design
-    // (they land in the memos the query loop consumes), which made
+    // (they land in the artifact store the query loop reads), which made
     // their cells the run's noise magnet on a shared host — a burst
     // during one rung's build phase wrote an 8×-elevated cell the
-    // queries' min-of-2 would have filtered. Clearing the build memos
-    // between reps forces a true rebuild; after the last rep the
-    // memos are warm again for the query loop.
+    // queries' min-of-2 would have filtered. Clearing the artifact
+    // store between reps forces a true rebuild (it also drops the
+    // Tables frames and the PQ/SQ quantizers, which the next read
+    // rebuilds); after the last rep the builds are warm again for the
+    // query loop.
     def measureBuilds(dir: String): Seq[(String, Either[String, Double])] = {
       val reps0 = (0 until reps).map { r =>
-        if (r > 0) {
-          graft.ext.similarity.IvfKNN.clearBuildMemos()
-          graft.ScaleQueries.clearLayoutMemo()
-          graft.ext.text.BpeTrainer.clearTrainMemo()
-          graft.ext.text.NgramLm.clearRefModelMemo()
-          graft.ext.text.QualityClassifier.clearRefModelMemo()
-        }
+        if (r > 0) graft.Artifacts.clear()
         AtRestBuilds.measure(spark, dir)
       }
       reps0.transpose.map { attempts =>

@@ -108,29 +108,6 @@ class IvfSpec extends SparkSpec {
     assert(out.sameElements(again))
   }
 
-  test("rewriting a corpus in place invalidates the memoized codebook") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString + "/emb"
-    def write(shift: Int): Unit =
-      emb.withColumn("vec_id", $"vec_id" + shift)
-        .write.mode("overwrite").parquet(dir)
-    write(0)
-    val first = IvfKNN.cachedSampledCentroids(
-      spark.read.parquet(dir), "vec_id", "embedding", 4, dir)
-    // identical files → served from the memo (same object, no recompute)
-    val again = IvfKNN.cachedSampledCentroids(
-      spark.read.parquet(dir), "vec_id", "embedding", 4, dir)
-    assert(again eq first)
-    // rewrite IN PLACE: same path, different rows — the k lowest-id
-    // vectors change, so a stale memo would serve a wrong codebook
-    write(1000)
-    val retrained = IvfKNN.cachedSampledCentroids(
-      spark.read.parquet(dir), "vec_id", "embedding", 4, dir)
-    assert(!(retrained eq first))
-    val expect = IvfKNN.sampledCentroids(
-      spark.read.parquet(dir), "vec_id", "embedding", 4)
-    assert(retrained.map(_.vec.toSeq) == expect.map(_.vec.toSeq))
-  }
-
   test("native stable quantizer matches the Column decimal formulation exactly") {
     val seed = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
     val trained = IvfKNN.lloydOnceExact(emb, "embedding", seed, 64)

@@ -21,6 +21,23 @@ class PqKNNSpec extends SparkSpec {
     assert(b.map(_.map(_.sub.length).sum).sum == PqKNN.M * PqKNN.ksub * PqKNN.dsub)
   }
 
+  test("rewriting a corpus in place invalidates the cached codebook") {
+    val dir = tmpDir("graft_pq_rewrite") + "/emb"
+    def write(reversed: Boolean): Unit =
+      emb.withColumn("vec_id", if (reversed) lit(10000L) - $"vec_id" else $"vec_id")
+        .write.mode("overwrite").parquet(dir)
+    def subs(b: PqKNN.PqBook) = b.map(_.map(_.sub.toSeq))
+    write(reversed = false)
+    val first = PqKNN.cachedSampledBook(spark.read.parquet(dir), "vec_id", "embedding", dir)
+    // rewrite IN PLACE: same path, and the ksub lowest ids now name
+    // other vectors, so a stale entry would serve the wrong book
+    write(reversed = true)
+    val rebuilt = PqKNN.cachedSampledBook(spark.read.parquet(dir), "vec_id", "embedding", dir)
+    val expect = PqKNN.sampledBook(spark.read.parquet(dir), "vec_id", "embedding")
+    assert(subs(first) != subs(expect))
+    assert(subs(rebuilt) == subs(expect))
+  }
+
   test("seed vectors self-quantize: vector j encodes to code j in every sub-space") {
     // sub-centroid j of sub-space m IS the m-th slice of vector j, so
     // vector j's distance to it is exactly 0 — the argmin must pick j

@@ -191,7 +191,7 @@ class RangeJoinRuleSpec extends SparkSpec {
           df.queryExecution.optimizedPlan.toString.take(2000))
       } finally {
         // do NOT stop() s2 — that would stop the SHARED SparkContext;
-        // the extra session is GC-able once the defaults are restored
+        // Artifacts holds s2 (its Tables entry) until that context ends
       }
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
