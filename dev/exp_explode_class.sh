@@ -14,7 +14,6 @@ EXP_TMP=$(mktemp -d /tmp/graft_exp_XXXX)
 SPARK_GRAFT_OUT="$OUT" \
 SPARK_GRAFT_STREAMING=off \
 SPARK_GRAFT_ONLY="$ONLY" \
-SPARK_GRAFT_STAGE_SPILL=on \
 SPARK_DRIVER_MEM=24g \
 SPARK_LOCAL_DIRS="$EXP_TMP" \
 JAVA_TOOL_OPTIONS="-Djava.io.tmpdir=$EXP_TMP" \

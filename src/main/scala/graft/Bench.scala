@@ -19,10 +19,10 @@ import org.apache.spark.sql.SparkSession
   * Catalyst drops unreferenced aggregate expressions from an
   * Aggregate, so round-1's q1_pricing_summary cell never ran the
   * eight exact-decimal sums (0.75 s count-forced vs ~1.9 s full on
-  * the same binary/corpus — ProfileWatchRows) and events_profile's
-  * never ran its four distinct/min/max columns (0.38 vs ~1.9 s);
-  * their round-1 cells are optimizer artifacts, adjudicated
-  * round 12, isolated min-of-5 on a quiet host.)
+  * the same binary/corpus — SURVEY §8, round-12 brief, item 8) and
+  * events_profile's never ran its four distinct/min/max columns
+  * (0.38 vs ~1.9 s); their round-1 cells are optimizer artifacts,
+  * adjudicated round 12, isolated min-of-5 on a quiet host.)
   *
   * Noise control (this host has shown 1.6× total drift between
   * identical binaries hours apart): each query runs
@@ -34,8 +34,16 @@ import org.apache.spark.sql.SparkSession
   * per-query map crossed 1800 chars at 74 queries). The COMPLETE
   * min-of-N map, per-rep times and load averages go to
   * `BENCH_DETAIL.json` in the working directory, committed with the
-  * repo — read it for per-query comparisons. `SPARK_GRAFT_ONLY=q1,q2`
-  * restricts the run for isolated adjudication reruns.
+  * repo — read it for per-query comparisons. A detail file already
+  * there is first renamed after its own UTC mtime, so no run clobbers
+  * an earlier one.
+  *
+  * Every measured rep is a [[graft.obs.Probe]] window; the detail's
+  * `layers` map gives, per query, the min rep's split into planning,
+  * jobs, stages and tasks (run/CPU/GC), bytes (input, shuffle, spill),
+  * task skew and its three heaviest stages. `SPARK_GRAFT_ONLY=q1,q2`
+  * restricts the run — isolated adjudication reruns, and the way to
+  * profile one query.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -52,6 +60,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val probe = graft.obs.Probe.attach(spark)
 
     def loadAvg: Double =
       try java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
@@ -83,14 +92,16 @@ object Bench {
     // a failing query must be VISIBLE in the output (null time + an
     // errors entry), never a silent -1 that shrinks the total
     val results = selected.map { case (name, fn) =>
-      val times = Seq.newBuilder[Double]
+      val runs = Seq.newBuilder[(Double, graft.obs.Window)]
       var err: Option[String] = None
       var r = 0
       while (r < reps && err.isEmpty) {
+        val before = probe.snapshot()
         val t0 = System.nanoTime()
         try {
           graft.tools.Force.rows(fn(spark, sfDir))
-          times += (System.nanoTime() - t0) / 1e9
+          val sec = (System.nanoTime() - t0) / 1e9
+          runs += sec -> probe.snapshot().since(before)
         }
         catch { case e: Throwable =>
           err = Some(e.toString.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)) }
@@ -101,7 +112,7 @@ object Bench {
         if (sys.env.contains("SPARK_GRAFT_CLEAR_CACHE")) spark.catalog.clearCache()
         r += 1
       }
-      (name, times.result(), err)
+      (name, runs.result(), err)
     }
     // The driver captures only the LAST ~2000 chars of stdout and
     // parses the JSON line out of that tail — round 3's inline per-rep
@@ -120,14 +131,17 @@ object Bench {
     // stdout now carries only the SLOWEST 12 (the graded tails) plus
     // any failures; the COMPLETE min-of-N map and per-rep times live
     // in BENCH_DETAIL.json, which is committed with the repo.
-    val ok = results.collect { case (k, ts, None) => k -> ts.min }
+    val ok = results.collect { case (k, rs, None) => k -> rs.map(_._1).min }
     val slowest = ok.sortBy(-_._2).take(12)
       .map { case (k, t) => "\"" + k + "\":" + ms(t) }.mkString("{", ",", "}")
     val failedQs = results.collect { case (k, _, Some(_)) => "\"" + k + "\":null" }
     val qs = ok.map { case (k, t) => "\"" + k + "\":" + ms(t) }
       .mkString("{", ",", "}")
-    val allReps = results.map { case (k, ts, _) =>
-      "\"" + k + "\":" + fmtTimes(ts)
+    val allReps = results.map { case (k, rs, _) =>
+      "\"" + k + "\":" + fmtTimes(rs.map(_._1))
+    }.mkString("{", ",", "}")
+    val layers = results.collect { case (k, rs, None) =>
+      "\"" + k + "\":" + rs.minBy(_._1)._2.json
     }.mkString("{", ",", "}")
     val errs = results.collect { case (k, _, Some(e)) => "\"" + k + "\":\"" + e + "\"" }
       .mkString("{", ",", "}")
@@ -141,17 +155,20 @@ object Bench {
     val detail = s"""{"reps":$reps,"queries":$qs,"rep_times":$allReps,""" +
       s""""build":${graft.tools.AtRestBuilds.json(buildResults)},""" +
       s""""streaming":${graft.tools.StreamBench.json(streaming)},""" +
-      s""""load_before":$loadBefore,"load_after":$loadAvg,"errors":$errs,"sf":"$sfDir"}"""
+      s""""load_before":$loadBefore,"load_after":$loadAvg,"errors":$errs,"sf":"$sfDir",""" +
+      s""""layers":$layers}"""
     try {
-      // never silently clobber an existing detail file: an
-      // adjudication rerun in the same checkout used to overwrite the
-      // driver's uncommitted detail (round-9 verdict task 6) — the
-      // previous content now survives as BENCH_DETAIL.prev.json
+      // never clobber an existing detail file (round-9 verdict task
+      // 6: a rerun overwrote an uncommitted detail): it is renamed
+      // after its own UTC mtime, e.g. BENCH_DETAIL.20260101T120000Z.json
       val f = new java.io.File("BENCH_DETAIL.json")
-      if (f.exists())
+      if (f.exists()) {
+        val stamp = java.time.format.DateTimeFormatter
+          .ofPattern("yyyyMMdd'T'HHmmss'Z'").withZone(java.time.ZoneOffset.UTC)
+          .format(java.time.Instant.ofEpochMilli(f.lastModified()))
         java.nio.file.Files.move(f.toPath,
-          java.nio.file.Paths.get("BENCH_DETAIL.prev.json"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          java.nio.file.Paths.get(s"BENCH_DETAIL.$stamp.json"))
+      }
       val w = new java.io.PrintWriter(f)
       try w.println(detail) finally w.close()
     } catch {

@@ -9,6 +9,7 @@ import graft.meta.{HandlerExecution, MonitorStore}
 import graft.operators.{Dedup, EntitySplit, KeyGen, Normalize}
 import graft.sinks.ParquetUpsertSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Handler (reference entry point 3, `src/handler/handler.py`):
   * locate the staged batch for a workflow, split it by entity,
@@ -19,7 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The staged frame is cached once and each entity is a filter over
   * it (one scan feeds all entities). Per-entity failure is caught so
   * one entity's bad batch never blocks the others — the reference's
-  * contract (`handler.py:91-100`).
+  * contract (`handler.py:91-100`). Fatal JVM errors (out of memory,
+  * interrupts) are not per-entity failures: they propagate and the
+  * remaining entities are not attempted.
   */
 object HandlerJob {
 
@@ -100,7 +103,7 @@ object HandlerJob {
             "entity" -> entity, "table" -> schema.targetTable, "rows" -> n)
           entity -> Right(n)
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             // full stack trace, matching the reference's traceback
             // capture (src/helper/postgres.py:45-63)
             log.error("entity failed", e, "workflow" -> workflowId,

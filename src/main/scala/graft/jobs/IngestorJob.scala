@@ -9,6 +9,7 @@ import graft.meta.{IngestorExecution, MonitorStore}
 import graft.sources.JsonLinesSource
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 /** Ingestor (reference entry point 2, `src/ingestor/ingestor.py`):
   * advance the hourly cursor, pull that hour's JSON-lines files from
@@ -70,7 +71,7 @@ object IngestorJob {
         "staged" -> staged.getOrElse("-"))
       Result(hour, files.size, staged)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         log.error("ingestor failed", e, "workflow" -> workflowId,
           "execution" -> executionId, "hour" -> hour)
         store.recordIngestor(IngestorExecution(

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Idempotent keyed upsert onto a parquet table (reference op K-2,
   * `src/helper/postgres.py:157-189`: `INSERT ... ON CONFLICT (key) DO
@@ -87,7 +88,7 @@ object ParquetUpsertSink {
         }
       val p = new Path(path)
       if (!f.exists(p)) 0L else walk(p)
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

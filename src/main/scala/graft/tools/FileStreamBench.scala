@@ -18,8 +18,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * JSON records the FileStreamSource description as evidence).
   *
   * Per batch it records Spark's own progress metrics (input rows,
-  * trigger wall, state-store rows) plus task-metric deltas snapped at
-  * each progress event (shuffle r/w, memory/disk spill) — the
+  * trigger wall, state-store rows) plus the task metrics of the
+  * stages the batch submitted (shuffle r/w, memory/disk spill) — the
   * at-scale cells for the state-read-pruning claims: semantic dedup's
   * cluster semi-join against a state table that grows by 300 k+
   * vectors per batch, and the ngram/domain-cap `__batch_id < current`
@@ -34,28 +34,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * local-mode's shared SparkContext, and late placement bounds the
   * blast radius to itself (the ScaleBench ordering lesson). */
 object FileStreamBench {
-
-  /** Per-batch shuffle/spill deltas snapped at each progress event.
-    * The listener bus is async, but batches execute sequentially and
-    * every task-end of a batch precedes its progress event, so the
-    * per-batch attribution is exact up to bus-flush jitter. */
-  private final class BatchProbe extends org.apache.spark.scheduler.SparkListener {
-    private val sw = new java.util.concurrent.atomic.AtomicLong
-    private val sr = new java.util.concurrent.atomic.AtomicLong
-    private val sm = new java.util.concurrent.atomic.AtomicLong
-    private val sd = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        sm.addAndGet(m.memoryBytesSpilled)
-        sd.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snap(): (Long, Long, Long, Long) = (sw.get, sr.get, sm.get, sd.get)
-  }
 
   private case class BatchPoint(
       batchId: Long, rows: Long, sec: Double, stateRows: Long,
@@ -117,8 +95,7 @@ object FileStreamBench {
     val sfDir = s"$workDir/sf$sf"
     require(new java.io.File(s"$sfDir/documents.parquet").exists(),
       s"rung corpus missing at $sfDir — run ScaleBench/SynthGen first")
-    val probe = new BatchProbe
-    spark.sparkContext.addSparkListener(probe)
+    val probe = graft.obs.Probe.attach(spark)
 
     // ---- slice the rung corpus once (cached across runs) ----------
     val streamRoot = s"$workDir/stream_sf$sf"
@@ -191,8 +168,10 @@ object FileStreamBench {
         mk: String => StreamingQuery): PathPoint =
       try {
         val tmp = Scratch.dir(s"graft_fsbench_$name")
+        // (batch id, input rows, trigger seconds, state rows, trigger
+        // start epoch ms) per progress event
         val marks =
-          scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Long, (Long, Long, Long, Long))]
+          scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Long, Long)]
         val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
           override def onQueryStarted(
               e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -206,17 +185,12 @@ object FileStreamBench {
                 Option(p.durationMs.get("triggerExecution"))
                   .map(_.toDouble / 1000).getOrElse(0.0),
                 p.stateOperators.map(_.numRowsTotal).sum,
-                probe.snap()))
+                java.time.Instant.parse(p.timestamp).toEpochMilli))
             }
           }
         }
         spark.streams.addListener(listener)
-        // baseline snapshot: without it the first batch's delta would
-        // absorb every byte shuffled since JVM start — static-side
-        // builds, the previous path's post-run state read — and the
-        // batch-0 cell would be contaminated (measured: 11 GB
-        // attributed to a 424 MB batch before this fix)
-        val base = probe.snap()
+        val before = probe.snapshot()
         val src =
           try {
             val t = System.nanoTime()
@@ -228,13 +202,19 @@ object FileStreamBench {
             println(f"[fsbench] $name done in ${(System.nanoTime() - t) / 1e9}%.1f s")
             desc
           } finally spark.streams.removeListener(listener)
+        // batches run one after another, so a batch's stages are the
+        // ones submitted between its trigger start and the next one's;
+        // the window starts at this path's own start, so no earlier
+        // path's or static side's shuffle lands in batch 0
+        val window = probe.snapshot().since(before)
         val snapshot = marks.synchronized(marks.toSeq).sortBy(_._1)
-        val prev = base +: snapshot.map(_._5)
-        val batches = snapshot.zip(prev).collect {
+        val nextStart = snapshot.drop(1).map(_._5) :+ Long.MaxValue
+        val batches = snapshot.zip(nextStart).collect {
           // drop the no-data final trigger progress rows
-          case ((bid, rows, sec, st, cur), pv) if rows > 0 =>
-            BatchPoint(bid, rows, sec, st,
-              cur._1 - pv._1, cur._2 - pv._2, cur._3 - pv._3, cur._4 - pv._4)
+          case ((bid, rows, sec, st, start), end) if rows > 0 =>
+            val w = window.submittedIn(start, end)
+            BatchPoint(bid, rows, sec, st, w.shuffleWriteBytes, w.shuffleReadBytes,
+              w.memSpillBytes, w.diskSpillBytes)
         }
         // at-rest state curve from the __batch_id partitions
         val atRest = stateDir.map { sd =>

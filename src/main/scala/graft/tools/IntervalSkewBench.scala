@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,21 +35,6 @@ import org.apache.spark.sql.functions._
   * (scales fixed: 2M → 20M points, 200k intervals each).
   */
 object IntervalSkewBench {
-
-  private final class Probe extends SparkListener {
-    val sw = new java.util.concurrent.atomic.AtomicLong
-    val sm = new java.util.concurrent.atomic.AtomicLong
-    val sd = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        sm.addAndGet(m.memoryBytesSpilled)
-        sd.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def reset(): Unit = { sw.set(0); sm.set(0); sd.set(0) }
-  }
 
   private val yearMicros = 365L * 86400 * 1000000
   private val epoch0 = 1704067200000000L // 2024-01-01T00:00:00Z in µs
@@ -99,8 +83,7 @@ object IntervalSkewBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val probe = new Probe
-    spark.sparkContext.addSparkListener(probe)
+    val probe = graft.obs.Probe.attach(spark)
 
     val scales = Seq(2000000L, 20000000L)
     val nIv = 200000L
@@ -117,17 +100,16 @@ object IntervalSkewBench {
     case class Cell(sec: Double, rows: Long, swMb: Double, spillMb: Double)
     def measure(n: Long, shape: String, hotDiv: Long): Cell = {
       val cells = (0 until reps).map { _ =>
-        probe.reset()
+        val before = probe.snapshot()
         val t0 = System.nanoTime()
         val rows = Force.rows(graft.operators.IntervalAgg.countSum(
           points(spark, n, shape, hotDiv), intervals(spark, nIv),
           "p_ts", "p_value", "iid", "s", "e", bucketWidthSec = 60L))
         val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.ListenerBridge
-          .waitUntilEmpty(spark.sparkContext)
+        val w = probe.snapshot().since(before)
         Cell(sec, rows,
-          probe.sw.get / 1048576.0,
-          (probe.sm.get + probe.sd.get) / 1048576.0)
+          w.shuffleWriteBytes / 1048576.0,
+          (w.memSpillBytes + w.diskSpillBytes) / 1048576.0)
       }
       val best = cells.minBy(_.sec)
       System.err.println(f"[skewbench] n=$n shape=$shape " +

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Scale-validation bench (round-4 verdict task 1): measure the
@@ -148,79 +147,10 @@ object ScaleBench {
     // with it). Running it last bounds the blast radius to itself.
     "docs_simhash_pairs")    // pigeonhole bucket join
 
-  /** Task-metric totals accumulated between [[reset]] and [[snap]] —
-    * shuffle and spill bytes for whatever jobs ran in the window
-    * (single-threaded bench: the window is exactly one query rep). */
-  private final class MetricsProbe extends SparkListener {
-    private val sw = new java.util.concurrent.atomic.AtomicLong
-    private val sr = new java.util.concurrent.atomic.AtomicLong
-    private val sm = new java.util.concurrent.atomic.AtomicLong
-    private val sd = new java.util.concurrent.atomic.AtomicLong
-    private val ib = new java.util.concurrent.atomic.AtomicLong
-    // per-stage spill attribution (SPARK_GRAFT_STAGE_SPILL=on): which
-    // named stage carries the memory spill — the evidence that
-    // adjudicates map-side-sort vs reduce-agg vs window pressure
-    private val perStage =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-    private val stageNames =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    override def onStageSubmitted(
-        ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-      // the stage NAME under AQE is a thread-capture callsite; the RDD
-      // OPERATION SCOPES carry the physical operators the stage
-      // executes (Exchange/SortAggregate/...), and the stage details
-      // hold the user-code callsite — both are what spill attribution
-      // actually needs (RDD type names alone read as
-      // "MapPartitionsRDD,ShuffledRowRDD" for every stage)
-      stageNames.put(ss.stageInfo.stageId, {
-        val scopes = ss.stageInfo.rddInfos
-          .flatMap(i => Option(i.scope).flatten.map(_.name))
-          .distinct
-        val site = ss.stageInfo.details.linesIterator
-          .find(_.contains("graft.")).getOrElse("").trim
-        (scopes.mkString(",") + " @ " + site).take(300)
-      })
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        sm.addAndGet(m.memoryBytesSpilled)
-        sd.addAndGet(m.diskBytesSpilled)
-        ib.addAndGet(m.inputMetrics.bytesRead)
-        if (m.memoryBytesSpilled > 0 || m.diskBytesSpilled > 0)
-          perStage.merge(te.stageId,
-            (m.memoryBytesSpilled, m.diskBytesSpilled),
-            (a, b) => (a._1 + b._1, a._2 + b._2))
-      }
-    }
-    def reset(): Unit = {
-      sw.set(0); sr.set(0); sm.set(0); sd.set(0); ib.set(0)
-      perStage.clear()
-    }
-    /** (shuffleWrite, shuffleRead, memSpill, diskSpill, inputRead)
-      * bytes — inputRead is the source-scan volume (round-7 verdict
-      * task 7: the sf100 token_stats cell needs bytes-read evidence
-      * to adjudicate IO-bound vs compute-super-linear). */
-    def snap(): (Long, Long, Long, Long, Long) =
-      (sw.get, sr.get, sm.get, sd.get, ib.get)
-    /** Top spilling stages of the window, worst first. */
-    def topSpillStages(n: Int): Seq[String] = {
-      import scala.jdk.CollectionConverters._
-      perStage.asScala.toSeq.sortBy(-_._2._1).take(n).map {
-        case (sid, (mem, disk)) =>
-          f"stage$sid mem=${mem / 1048576}%dMB disk=${disk / 1048576}%dMB " +
-            s"[${stageNames.getOrDefault(sid, "?")}]"
-      }
-    }
-  }
-
   /** One measured rep: wall seconds + that rep's task-metric window
     * + (for the instrumented queries) upsert IO. */
   private case class Rep(
-      sec: Double, rows: Long,
-      shuffleWrite: Long, shuffleRead: Long, memSpill: Long, diskSpill: Long,
-      inputRead: Long,
+      sec: Double, rows: Long, window: graft.obs.Window,
       upsertIo: Option[graft.sinks.ParquetUpsertSink.UpsertIo])
 
   private case class QueryPoint(
@@ -361,8 +291,7 @@ object ScaleBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val probe = new MetricsProbe
-    spark.sparkContext.addSparkListener(probe)
+    val probe = graft.obs.Probe.attach(spark)
     def ms(t: Double) = (math.rint(t * 1000) / 1000).toString
     def mb(b: Long) = (math.rint(b / 1048576.0 * 10) / 10).toString
 
@@ -470,28 +399,35 @@ object ScaleBench {
         var r = 0
         while (r < reps && err.isEmpty) {
           if (upsertQueries(name)) graft.sinks.ParquetUpsertSink.resetIoStats()
-          probe.reset()
+          val before = probe.snapshot()
           val t0 = System.nanoTime()
-          try {
-            // Force.rows, not count(): a bare count lets Catalyst
-            // prune pure-map projections to parquet metadata and
-            // eliminate aggregate-keyed left joins — the flat
-            // token_stats/keygen/lm_score rows of the earlier ladder
-            // artifacts measured exactly that (round-7 fix)
-            val rows = graft.tools.Force.rows(fn(spark, dir))
-            val sec = (System.nanoTime() - t0) / 1e9
-            org.apache.spark.graftbridge.ListenerBridge
-              .waitUntilEmpty(spark.sparkContext)
-            val (sw, sr, sm, sd, ib) = probe.snap()
-            repsSeen += Rep(sec, rows, sw, sr, sm, sd, ib,
+          val ran =
+            try {
+              // Force.rows, not count(): a bare count lets Catalyst
+              // prune pure-map projections to parquet metadata and
+              // eliminate aggregate-keyed left joins — the flat
+              // token_stats/keygen/lm_score rows of the earlier ladder
+              // artifacts measured exactly that (round-7 fix)
+              val rows = graft.tools.Force.rows(fn(spark, dir))
+              Some((rows, (System.nanoTime() - t0) / 1e9))
+            }
+            catch { case e: Throwable =>
+              err = Some(e.toString.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200))
+              None
+            }
+          val window = probe.snapshot().since(before)
+          ran.foreach { case (rows, sec) =>
+            repsSeen += Rep(sec, rows, window,
               if (upsertQueries(name)) Some(graft.sinks.ParquetUpsertSink.ioStats)
               else None)
           }
-          catch { case e: Throwable =>
-            err = Some(e.toString.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)) }
-          if (sys.env.get("SPARK_GRAFT_STAGE_SPILL").contains("on"))
-            probe.topSpillStages(6).foreach(l =>
-              System.err.println(s"[scalebench]   spill $name rep$r: $l"))
+          // which named stage carries the memory spill — the evidence
+          // that adjudicates map-side-sort vs reduce-agg vs window
+          // pressure; prints nothing when nothing spilled
+          window.topSpillStages(6).foreach { s =>
+            System.err.println(s"[scalebench]   spill $name rep$r: stage${s.id} " +
+              s"mem=${s.memSpillBytes / 1048576}MB disk=${s.diskSpillBytes / 1048576}MB [${s.name}]")
+          }
           r += 1
         }
         val best = repsSeen.result().sortBy(_.sec).headOption
@@ -612,11 +548,11 @@ object ScaleBench {
       val base =
         s""""sec":[${arr(r => ms(r.sec))}],""" +
           s""""rows":[${arr(_.rows.toString)}],""" +
-          s""""shuffle_write_mb":[${arr(r => mb(r.shuffleWrite))}],""" +
-          s""""shuffle_read_mb":[${arr(r => mb(r.shuffleRead))}],""" +
-          s""""mem_spill_mb":[${arr(r => mb(r.memSpill))}],""" +
-          s""""input_read_mb":[${arr(r => mb(r.inputRead))}],""" +
-          s""""disk_spill_mb":[${arr(r => mb(r.diskSpill))}],""" +
+          s""""shuffle_write_mb":[${arr(r => mb(r.window.shuffleWriteBytes))}],""" +
+          s""""shuffle_read_mb":[${arr(r => mb(r.window.shuffleReadBytes))}],""" +
+          s""""mem_spill_mb":[${arr(r => mb(r.window.memSpillBytes))}],""" +
+          s""""input_read_mb":[${arr(r => mb(r.window.inputBytes))}],""" +
+          s""""disk_spill_mb":[${arr(r => mb(r.window.diskSpillBytes))}],""" +
           s""""ratio":${ms(ratio)},"ratio_sf_span":${ms(ratioSpan)}"""
       val errJson = points.zip(measured).collect {
         case (p, (sf, _, _, _)) if p.err.isDefined =>

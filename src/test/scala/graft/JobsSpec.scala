@@ -8,7 +8,11 @@ import java.util.UUID
 
 import graft.config.EntitySchema
 import graft.jobs.{Executor, HandlerJob, IngestorJob, Pipelines}
-import graft.meta.{FileMonitorStore, JdbcMonitorStore, MonitorStore, StoreAdmin}
+import graft.meta.{FileMonitorStore, HandlerExecution, IngestorExecution, JdbcMonitorStore, MonitorStore, StoreAdmin}
+
+/** A fatal JVM error a store call can raise (out of memory and the
+  * like are its siblings). */
+final class StubFatalError extends VirtualMachineError("stub fatal error")
 
 /** End-to-end: landing JSON-lines → ingestor (cursor + hour pruning +
   * staging) → handler (split/normalize/key/dedup/upsert) → monitor
@@ -168,6 +172,43 @@ class JobsSpec extends SparkSpec {
     assert(recorded.exists(r =>
       Option(r.getAs[String]("traceback")).exists(_.contains("quality gate failed"))),
       recorded.mkString("; "))
+  }
+
+  test("a fatal JVM error propagates out of the handler; the next entity is not attempted") {
+    val root = tmpDir("fatal")
+    val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
+    val files = new FileMonitorStore(spark, s"$root/monitor",
+      warehouseDir = Some(s"$root/tables"))
+    val schemas = EntitySchema.reference
+    files.migrate(schemas.map(_.targetTable))
+    writeLanding(landing, "a.json", hour0.plusSeconds(60),
+      """{"event": "update", "on": "vehicle", "at": "2022-11-24T10:02:11Z", "organization_id": "o", "data": {"id": "v-1", "location": {"lat": 1.5, "lng": 2.5, "at": "2022-11-24T10:02:10Z"}}}""",
+      """{"event": "create", "on": "operating_period", "at": "2022-11-24T10:00:05Z", "organization_id": "o", "data": {"id": "op-1", "start": "2022-11-24T08:00:00Z", "finish": "2022-11-24T20:00:00Z"}}""")
+    val wf = UUID.randomUUID().toString
+    IngestorJob.run(spark, files, landing, s"$root/staging",
+      Pipelines.unionSourceStruct(schemas), wf)
+    // the first audit write dies with a fatal error; later ones succeed
+    val recorded = scala.collection.mutable.ArrayBuffer.empty[HandlerExecution]
+    val store = new MonitorStore {
+      def lastSuccessfulFetchHour() = files.lastSuccessfulFetchHour()
+      def stagedFilePath(workflowId: String) = files.stagedFilePath(workflowId)
+      def recordIngestor(row: IngestorExecution): Unit = files.recordIngestor(row)
+      def recordHandler(row: HandlerExecution): Unit = {
+        recorded += row
+        if (recorded.size == 1) throw new StubFatalError
+        files.recordHandler(row)
+      }
+      def targetTableExists(table: String) = files.targetTableExists(table)
+    }
+    intercept[StubFatalError] {
+      HandlerJob.run(spark, store, s"$root/tables", schemas, wf)
+    }
+    assert(recorded.map(_.destinationTable) == Seq(schemas.head.targetTable),
+      "the error must not become a failure row")
+    val second =
+      try spark.read.parquet(s"$root/tables/${schemas(1).targetTable}").count()
+      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    assert(second == 0L, "the second entity must not be attempted")
   }
 
   test("handler with no staged file is a clean no-op") {
