@@ -1152,7 +1152,7 @@ object LlmQueries {
     val k = 8
     val e = emb(s, dir)
     val seed = IvfKNN.cachedSampledCentroids(e, "vec_id", "embedding", k, dir)
-    val trained = IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", k, 64, dir, iterations = 1)
+    val trained = IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", k, dir, iterations = 1)
     // spread before the two fused argmax projections (r15): a
     // single-file scan ran both quantizers on one task
     val cells = graft.operators.Spread.wide(e, col("vec_id")).select(
@@ -1270,7 +1270,7 @@ object LlmQueries {
     val book = IvfKNN.lloydTrainTable(e, "vec_id", "embedding", k, iterations = 1)
     // counts consume only list_id — the bare argmax assignment, no
     // vector re-attach join (r15; see IvfKNN.assignExactIds)
-    val counts = IvfKNN.assignExactIds(e, "vec_id", "embedding", book, stable = true)
+    val counts = IvfKNN.assignExactIds(e, "vec_id", "embedding", book)
       .groupBy(col("list_id")).agg(count(lit(1)).as("cnt"))
     book.select(col("cid").as("list_id"), round(col("cnorm"), 9).as("tnorm9"))
       .join(counts, Seq("list_id"), "left")
@@ -1297,8 +1297,8 @@ object LlmQueries {
   private def qIvfLloyd2(s: SparkSession, dir: String): DataFrame = {
     val k = 8
     val e = emb(s, dir)
-    val t1 = IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", k, 64, dir, iterations = 1)
-    val t2 = IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", k, 64, dir, iterations = 2)
+    val t1 = IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", k, dir, iterations = 1)
+    val t2 = IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", k, dir, iterations = 2)
     // spread before the two fused argmax projections (r15; see
     // qIvfLloyd)
     val cells = graft.operators.Spread.wide(e, col("vec_id")).select(
@@ -1323,8 +1323,7 @@ object LlmQueries {
 
   /** One exact-Lloyd iteration as DuckDB CTEs; `tcent{i-1}` must
     * already exist (`tcent0` = the seed as doubles). Mirrors
-    * [[IvfKNN.lloydOnceExact]]/[[IvfKNN.lloydStepExact]] formula for
-    * formula. */
+    * [[IvfKNN.lloydStep]] formula for formula. */
   private def lloydIterCtes(i: Int): String = {
     val (pa, pl) = if (i == 1) ("assign0", "list0") else (s"assign${i - 1}", s"list${i - 1}")
     s"""dmean$i AS (

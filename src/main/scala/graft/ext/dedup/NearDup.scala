@@ -111,8 +111,6 @@ object NearDup {
 
   // -------------------------------------------------------------- minhash
 
-  import graft.functions.PolyHash
-
   /** MinHash signature of a shingle set: `numHashes` salted families
     * over the two [[graft.functions.PolyHash]] base hashes — family j
     * is `(h31 + j·h37) mod P`, the classic 2-universal construction —
@@ -124,14 +122,6 @@ object NearDup {
     * to hash-verified. */
   def minhashSignature(shingleSet: Column, numHashes: Int): Column =
     graft.functions.MinHashSig.of(shingleSet, numHashes)
-
-  /** The HOF formulation MinHashSig replaced — kept only as the
-    * parity oracle for MinHashSigSpec. */
-  private[graft] def minhashSigReferenceChain(shingleSet: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      j => array_min(transform(
-        transform(shingleSet, s => PolyHash.polyhashPacked(s)),
-        p => (shiftright(p, 30) + j * p.bitwiseAND(0x3FFFFFFFL)) % PolyHash.P)))
 
   /** Candidate pairs via banded LSH over minhash signatures, each
     * verified with exact Jaccard over the shingle sets.
@@ -333,24 +323,12 @@ object NearDup {
     * token-hash array is referenced exactly once). Bits 60-63 are
     * always 0 for non-empty docs; hamming distances are unaffected. */
   def withSimhash(df: DataFrame, textCol: String, out: String = "sim"): DataFrame = {
-    import graft.functions.PolyHash
     // spread the input first: single-file scans are 1 partition and
     // the tokenize+hash work would otherwise run on one task
     val par = df.sparkSession.sparkContext.defaultParallelism
     df.repartition(par)
       .withColumn(out, graft.functions.SimHashTokens.of(
         TextFunctions.tokens(col(textCol))))
-  }
-
-  /** The 64-expression HOF formulation SimHash64 replaced — kept only
-    * as the parity oracle for SimHashSpec. */
-  private[graft] def simhashReferenceChain(hashes: Column): Column = {
-    val n = size(hashes)
-    (0 until 64).map { b =>
-      when(size(filter(hashes,
-        h => shiftright(h, b).bitwiseAND(1) === 1)) * 2 >= n,
-        lit(1L << b)).otherwise(0L)
-    }.reduce(_ + _)
   }
 
   /** Near-equal widths of `b` chunks covering the 64 simhash bits

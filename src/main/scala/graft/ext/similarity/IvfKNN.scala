@@ -21,14 +21,18 @@ import org.apache.spark.sql.types.DecimalType
   *     [[graft.functions.TopKByScore]] aggregate (k rows per
   *     (task, query) after the partial pass).
   *
-  * Centroid choice is pluggable:
+  * Codebooks:
   *  - [[sampledCentroids]] — the K lowest-id corpus vectors
-  *    (deterministic, training-free; what the registered,
-  *    DuckDB-oracle-checked query uses, since it is exactly
-  *    replayable in SQL);
-  *  - [[trainCentroids]] — Lloyd iterations from that seed (better
-  *    list balance/recall; deterministic up to FP summation order, so
-  *    spec-tested for recall rather than hash-matched).
+  *    (deterministic, training-free; what emb_knn_ivf uses, and the
+  *    seed of every trainer);
+  *  - [[cachedLloydTrain]] — exact Lloyd iterations from that seed,
+  *    collected to the driver; [[lloydTrainTable]] is its table twin
+  *    for codebooks that must not become plan literals. Both are
+  *    deterministic and replayed hash-for-hash by the DuckDB oracle.
+  *
+  * Assignment has one path per role: [[assignLists]] (flat, literal
+  * codebook), [[assignListsJoined]] (two-level, fine codebook as a
+  * table) and [[assignExactJoined]] (exact, codebook as a table).
   *
   * All cosines are rounded to 9 decimals (project convention) and
   * ties break toward the lower centroid/neighbor id, so every step is
@@ -66,35 +70,6 @@ object IvfKNN {
     graft.Artifacts.ofCorpus(corpus, "ivf-sampled", (source, idCol, vecCol, k))(
       sampledCentroids(corpus, idCol, vecCol, k))
 
-  /** Lloyd refinement: assign (map stage) → per-dimension mean (one
-    * shuffle) per iteration, driver-collecting the small codebook
-    * between iterations. */
-  def trainCentroids(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      iterations: Int = 5): Seq[Centroid] = {
-    var centroids = sampledCentroids(corpus, idCol, vecCol, k)
-    (0 until iterations).foreach { _ =>
-      val assigned = corpus
-        .select(col(vecCol).as("v"), nearestCentroid(col(vecCol), centroids).as("list_id"))
-      val means = assigned
-        .select(col("list_id"), posexplode(col("v")))
-        .groupBy(col("list_id"), col("pos"))
-        .agg(avg(col("col")).as("m"))
-        .collect()
-        .groupBy(_.getLong(0))
-        .map { case (cid, rows) =>
-          val dims = rows.sortBy(_.getInt(1)).map(_.getDouble(2).toFloat).toArray
-          cid.toInt -> dims
-        }
-      // empty lists keep their previous centroid (standard Lloyd fix)
-      centroids = centroids.map(c => means.get(c.id).map(mk(c.id, _)).getOrElse(c))
-    }
-    centroids
-  }
-
   // ------------------------------------------------- exact Lloyd iteration
 
   /** A trained codebook entry. Unlike the float seed [[Centroid]],
@@ -103,16 +78,15 @@ object IvfKNN {
     * values fall out of any engine that follows the recipe. */
   case class DCentroid(id: Int, vec: Array[Double], norm: Double)
 
-  private val dec12 = DecimalType(38, 12)
-
-  /** Accumulator type for decimal fold chains: scale 12 like [[dec12]]
-    * but precision 30, so `Decimal(30,12) + Decimal(30,12)` infers
-    * precision 31 ≤ 38 and the add stays EXACT. A (38,12) accumulator
-    * infers precision 39 > the 38 max, and Spark's precision-loss rule
-    * silently rescales the result to (38,11) — HALF_UP rounding the
-    * running sum at 11 decimals on EVERY fold step, a ~1e-11 drift per
-    * 64-term chain that broke bit-parity with the driver-side exact
-    * BigDecimal recipe (caught by IvfSpec's table-Lloyd pin). */
+  /** Accumulator type for decimal fold chains: scale 12 like the
+    * oracle's DECIMAL(38,12), but precision 30, so
+    * `Decimal(30,12) + Decimal(30,12)` infers precision 31 ≤ 38 and the
+    * add stays EXACT. A (38,12) accumulator infers precision 39 > the
+    * 38 max, and Spark's precision-loss rule silently rescales the
+    * result to (38,11) — HALF_UP rounding the running sum at 11
+    * decimals on EVERY fold step, a ~1e-11 drift per 64-term chain that
+    * broke bit-parity with the driver-side exact BigDecimal recipe
+    * (caught by IvfSpec's table-Lloyd pin). */
   private val dec12acc = DecimalType(30, 12)
 
   /** |v| where v² terms are rounded to 12 decimals and summed as
@@ -128,137 +102,102 @@ object IvfKNN {
     math.sqrt(s.doubleValue)
   }
 
-  /** ONE exact Lloyd refinement of a seed codebook:
+  /** The float seed in the trained shape: vectors widened to double,
+    * norms re-derived by [[stableNorm]] — the form an empty list keeps
+    * through a Lloyd step. */
+  def exactSeed(seed: Seq[Centroid]): Seq[DCentroid] =
+    seed.map { c =>
+      val v = c.vec.map(_.toDouble)
+      DCentroid(c.id, v, stableNorm(v))
+    }
+
+  /** The new centroid of every non-empty list: per-dimension mean,
+    * accumulated as DECIMAL(18,6) (order-independent) and divided in
+    * double — one posexplode + one hash aggregate over `assigned`'s
+    * (`list_id`, `vecCol`), K·dim output rows `(list_id, pos, m)`. */
+  private def dimMeans(assigned: DataFrame, vecCol: String): DataFrame =
+    assigned
+      .select(col("list_id"), posexplode(col(vecCol)))
+      .groupBy(col("list_id"), col("pos"))
+      .agg((sum(col("col").cast("double").cast(DecimalType(18, 6))).cast("double") /
+        count(lit(1))).as("m"))
+
+  /** ONE exact Lloyd step from codebook `cents`:
     *
-    *  - assign every vector to its nearest seed centroid (the same
-    *    9-dp cosine / lower-id tie rule as [[nearestCentroid]]);
-    *  - new centroid = per-dimension mean, accumulated as
-    *    DECIMAL(18,6) (order-independent) and divided in double —
-    *    one posexplode + one hash aggregate, K·dim output rows;
-    *  - empty lists keep their seed centroid (standard Lloyd fix).
+    *  - assign every vector by `quantizer` — [[nearestCentroid]] over
+    *    the float seed on the first step, [[nearestCentroidStable]]
+    *    over `cents` after that;
+    *  - new centroid = [[dimMeans]], norm by [[stableNorm]];
+    *  - an empty list keeps its centroid from `cents` (standard Lloyd
+    *    fix), so a seed goes in through [[exactSeed]].
     *
     * Every step is deterministic and replayable in ANSI SQL, so the
     * trained codebook — although collected to the driver like any IVF
     * index metadata — is cross-engine reproducible and the registered
     * query's DuckDB oracle recomputes it from scratch. */
-  def lloydOnceExact(
-      corpus: DataFrame, vecCol: String, seed: Seq[Centroid], dim: Int): Seq[DCentroid] = {
-    // assignment in its OWN select below the explode: a single
-    // select(quantizer, posexplode(v)) analyzes to Project(quantizer,…)
-    // ABOVE the Generate, re-evaluating the quantizer once per element
-    // (dim×, not 1×, per vector) — the shape that made exact training
-    // ~64× slower than the arithmetic itself
+  def lloydStep(
+      corpus: DataFrame, vecCol: String, quantizer: Column,
+      cents: Seq[DCentroid]): Seq[DCentroid] = {
     // parallelism barrier BEFORE the quantizer (r15): a single-file
-    // corpus scans as one task and the K·dim decimal argmax fuses into
-    // that scan stage — the whole assignment ran serially while 31
-    // cores idled (the Spread.wide class; a many-file corpus passes
-    // through untouched)
-    val sums = graft.operators.Spread.wide(corpus, col(vecCol))
-      .select(col(vecCol).as("__v"), nearestCentroid(col(vecCol), seed).as("list_id"))
-      .select(col("list_id"), posexplode(col("__v")))
-      .groupBy(col("list_id"), col("pos"))
-      .agg((sum(col("col").cast("double").cast(DecimalType(18, 6))).cast("double") /
-        count(lit(1))).as("m"))
-      .collect()
-    val byList = sums.groupBy(_.getLong(0)).map { case (cid, rows) =>
-      val dims = new Array[Double](dim)
-      rows.foreach(r => dims(r.getInt(1)) = r.getDouble(2))
-      cid.toInt -> dims
-    }
-    seed.map { c =>
-      val v = byList.getOrElse(c.id, c.vec.map(_.toDouble))
-      DCentroid(c.id, v, stableNorm(v))
-    }
-  }
-
-  /** One FURTHER exact Lloyd step from an already-trained codebook:
-    * assignment via the stabilized quantizer, means and fallbacks as
-    * in [[lloydOnceExact]] (an empty list keeps its previous trained
-    * centroid — norm included, since it was stabilized from the same
-    * values). */
-  def lloydStepExact(
-      corpus: DataFrame, vecCol: String, cents: Seq[DCentroid], dim: Int): Seq[DCentroid] = {
-    val sums = graft.operators.Spread.wide(corpus, col(vecCol)) // see lloydOnceExact (r15)
-      .select(col(vecCol).as("__v"), nearestCentroidStable(col(vecCol), cents).as("list_id"))
-      .select(col("list_id"), posexplode(col("__v"))) // see lloydOnceExact: keep
-      .groupBy(col("list_id"), col("pos"))            // the quantizer below Generate
-      .agg((sum(col("col").cast("double").cast(DecimalType(18, 6))).cast("double") /
-        count(lit(1))).as("m"))
-      .collect()
-    val byList = sums.groupBy(_.getLong(0)).map { case (cid, rows) =>
-      val dims = new Array[Double](dim)
-      rows.foreach(r => dims(r.getInt(1)) = r.getDouble(2))
-      cid.toInt -> dims
-    }
+    // corpus scans as one task and the K·dim argmax fuses into that
+    // scan stage — the whole assignment ran serially while 31 cores
+    // idled (the Spread.wide class; a many-file corpus passes through
+    // untouched). The assignment is its OWN select below the explode:
+    // a single select(quantizer, posexplode(v)) analyzes to
+    // Project(quantizer,…) ABOVE the Generate, re-evaluating the
+    // quantizer once per element (dim×, not 1×, per vector) — the
+    // shape that made exact training ~64× slower than the arithmetic
+    val assigned = graft.operators.Spread.wide(corpus, col(vecCol))
+      .select(col(vecCol), quantizer.as("list_id"))
+    val dim = cents.head.vec.length
+    val byList = dimMeans(assigned, vecCol).collect().groupBy(_.getLong(0))
+      .map { case (cid, rows) =>
+        val dims = new Array[Double](dim)
+        rows.foreach(r => dims(r.getInt(1)) = r.getDouble(2))
+        cid.toInt -> dims
+      }
     cents.map { c =>
       byList.get(c.id).map(v => DCentroid(c.id, v, stableNorm(v))).getOrElse(c)
     }
   }
 
-  /** [[lloydOnceExact]] + (iterations-1) × [[lloydStepExact]] from
-    * the cached seed, held in [[graft.Artifacts]] per (corpus
-    * snapshot, source, k, iterations) — training is index-build cost,
-    * paid once; a rewritten corpus gets a fresh snapshot token and so
-    * retrains. */
+  /** `iterations` chained [[lloydStep]]s from the cached seed, each
+    * held in [[graft.Artifacts]] per (corpus snapshot, source, k,
+    * iterations) — training is index-build cost, paid once; a
+    * rewritten corpus gets a fresh snapshot token and so retrains. */
   def cachedLloydTrain(
-      corpus: DataFrame, idCol: String, vecCol: String, k: Int, dim: Int,
-      source: String, iterations: Int): Seq[DCentroid] =
+      corpus: DataFrame, idCol: String, vecCol: String, k: Int,
+      source: String, iterations: Int): Seq[DCentroid] = {
+    require(iterations >= 1, "cachedLloydTrain: iterations must be >= 1")
     graft.Artifacts.ofCorpus(corpus, "ivf-lloyd",
         (source, idCol, vecCol, k, iterations)) {
-      if (iterations == 1)
-        lloydOnceExact(corpus, vecCol,
-          cachedSampledCentroids(corpus, idCol, vecCol, k, source), dim)
-      else
-        lloydStepExact(corpus, vecCol,
-          cachedLloydTrain(corpus, idCol, vecCol, k, dim, source, iterations - 1), dim)
+      if (iterations == 1) {
+        val seed = cachedSampledCentroids(corpus, idCol, vecCol, k, source)
+        lloydStep(corpus, vecCol, nearestCentroid(col(vecCol), seed), exactSeed(seed))
+      } else {
+        val prev = cachedLloydTrain(corpus, idCol, vecCol, k, source, iterations - 1)
+        lloydStep(corpus, vecCol, nearestCentroidStable(col(vecCol), prev), prev)
+      }
     }
-
-  /** Dot of a vector with a trained centroid, products rounded to 12
-    * decimals and folded in DECIMAL(38,12) — the accumulation is
-    * order-independent, unlike a plain double fold, so a SQL engine
-    * summing the same products under GROUP BY gets the identical
-    * double out. Still a pure codegen'd projection (array literal +
-    * `zip_with`/`aggregate`). */
-  private def dotStable(vec: Column, c: DCentroid): Column = {
-    val cv = array(c.vec.toIndexedSeq.map(lit): _*)
-    aggregate(
-      zip_with(vec, cv, (x, m) => round(x.cast("double") * m, 12).cast(dec12acc)),
-      lit(java.math.BigDecimal.ZERO).cast(dec12acc),
-      (acc, y) => (acc + y).cast(dec12acc)
-    ).cast("double")
   }
 
   /** Nearest TRAINED centroid as a pure projection. The ranking score
     * is round(dot/|c|, 9) — cosine with the per-row |v| factor
     * dropped (constant within a row, so the argmax is unchanged) —
     * which keeps the whole comparison inside the order-independent
-    * stable-dot arithmetic; ties break to the lower centroid id
-    * (centroids scored in id order, first max wins).
+    * stable-dot arithmetic; ties break to the lower centroid id.
     *
     * Evaluates through the native
     * [[graft.functions.NearestCentroidStable]] node — ONE expression
-    * instead of the K×dim round/decimal-fold tree, which dominated
-    * exact-Lloyd training cost (round-4 bench: 113.8 s first rep).
-    * [[nearestCentroidStableColumns]] keeps the original Column
-    * formulation; IvfSpec pins the two paths equal. */
+    * instead of the K×dim round/decimal-fold tree of the Column form,
+    * which dominated exact-Lloyd training cost (round-4 bench: 113.8 s
+    * first rep). IvfSpec keeps the Column form as the oracle the node
+    * is pinned against. */
   def nearestCentroidStable(vec: Column, cents: Seq[DCentroid]): Column = {
     val sorted = cents.sortBy(_.id)
     requireDense(sorted.map(_.id), sorted.map(_.norm))
     graft.functions.NearestCentroidStable(
       vec, sorted.map(_.vec.toSeq), sorted.map(_.norm))
-  }
-
-  /** The original Column-API formulation of [[nearestCentroidStable]]
-    * (K per-centroid decimal folds + first-position-of-max — field-
-    * name-free on purpose: a struct argmax loses its field aliases
-    * when the projection is rewritten around a Generate
-    * (CleanupAliases), which broke this expression next to a
-    * posexplode). Kept as the executable spec of the arithmetic the
-    * native node replicates. */
-  def nearestCentroidStableColumns(vec: Column, cents: Seq[DCentroid]): Column = {
-    val scores = array(
-      cents.sortBy(_.id).map(c => round(dotStable(vec, c) / lit(c.norm), 9)): _*)
-    (array_position(scores, array_max(scores)) - 1).cast("long")
   }
 
   /** Cosine to one codebook entry (vector literal folded into the
@@ -272,14 +211,9 @@ object IvfKNN {
     *
     * Evaluates through the native
     * [[graft.functions.NearestCentroidCosine]] node — ONE expression
-    * instead of K struct/array-literal entries. At the fixed K=8..16
-    * of the ANN queries the literal form was fine, but the
-    * corpus-scaled K the SemDeDup query uses (K = n/250) blew the
-    * projection past the codegen size limit and made assignment cost
-    * non-monotonic in corpus size (round-5 scale bench).
-    * [[nearestCentroidColumns]] keeps the original Column formulation;
-    * IvfSpec pins the two paths equal. Ids are assumed dense 0..K-1
-    * (every codebook builder here constructs them that way). */
+    * instead of K struct/array-literal entries, so the plan stays O(1)
+    * in K. IvfSpec keeps the Column form as the oracle the node is
+    * pinned against. */
   def nearestCentroid(vec: Column, centroids: Seq[Centroid]): Column = {
     val sorted = centroids.sortBy(_.id)
     requireDense(sorted.map(_.id), sorted.map(_.norm))
@@ -302,70 +236,6 @@ object IvfKNN {
         "score NaN, which wins the argmax)")
   }
 
-  // --------------------------------------------- hierarchical assignment
-
-  /** Coarse layer over a fine codebook: coarse centers are the
-    * C = ⌈√K⌉ lowest-id centroids, and each fine centroid belongs to
-    * its nearest coarse center (rounded-cosine argmax, ties to the
-    * lower coarse id — the same rule as every other assignment here,
-    * so the DuckDB oracle replays it as a QUALIFY). Driver-side K·C
-    * dots over index metadata, like codebook training. */
-  case class HierLayer(coarse: Seq[Centroid], members: Seq[Seq[Int]])
-
-  def hierLayer(cents: Seq[Centroid]): HierLayer = {
-    val sorted = cents.sortBy(_.id)
-    requireDense(sorted.map(_.id), sorted.map(_.norm))
-    val c = math.max(1, math.ceil(math.sqrt(sorted.length.toDouble)).toInt)
-    val coarse = sorted.take(c)
-    val members = Array.fill(c)(Seq.newBuilder[Int])
-    sorted.foreach { f =>
-      // a coarse cell's own centroid is PINNED to its cell: cos(g,g)
-      // rounds to 1.0 so the argmax would normally pick it anyway, but
-      // a duplicate centroid at a lower id ties at 1.0 and would steal
-      // it, leaving cell g empty — and an all-empty probe set has no
-      // defined answer (the oracle's member join just drops the row).
-      // Pinning makes every cell non-empty BY CONSTRUCTION; the oracle
-      // mirrors the rule (member CTE: cid < C routes to itself).
-      if (f.id < c) { members(f.id) += f.id }
-      else {
-        var best = Double.NegativeInfinity
-        var bestG = 0
-        var first = true
-        coarse.foreach { g =>
-          var dot = 0.0
-          val n = math.min(f.vec.length, g.vec.length)
-          var i = 0
-          while (i < n) { dot += f.vec(i).toDouble * g.vec(i).toDouble; i += 1 }
-          val s = java.math.BigDecimal.valueOf(dot / (f.norm * g.norm))
-            .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-          if (first || java.lang.Double.compare(s, best) > 0) {
-            best = s; bestG = g.id; first = false
-          }
-        }
-        members(bestG) += f.id
-      }
-    }
-    HierLayer(coarse, members.toIndexedSeq.map(_.result()))
-  }
-
-  /** [[assignLists]] through the two-level quantizer
-    * ([[graft.functions.NearestCentroidHier]]): rows are routed to
-    * their `probes` nearest coarse cells and scan only those cells'
-    * centroids — (√K + probes·√K)·dim work per row instead of K·dim,
-    * the scale path for corpus-proportional K (SemDeDup's K = n/250
-    * made flat assignment O(n²·dim/250); round-5 verdict task 2).
-    * Deterministic and oracle-replayable; approximate in the IVF
-    * sense (the true nearest centroid can live in an unprobed cell). */
-  def assignListsHier(
-      corpus: DataFrame, vecCol: String, centroids: Seq[Centroid],
-      probes: Int = 2): DataFrame = {
-    val sorted = centroids.sortBy(_.id)
-    val hl = hierLayer(sorted)
-    corpus.withColumn("list_id", graft.functions.NearestCentroidHier(
-      col(vecCol), hl.coarse.map(_.vec.toSeq), hl.coarse.map(_.norm),
-      hl.members, sorted.map(_.vec.toSeq), sorted.map(_.norm), probes))
-  }
-
   // ------------------------------------------- codebook-as-data assignment
 
   /** The fine codebook as a DISTRIBUTED table instead of plan
@@ -379,14 +249,19 @@ object IvfKNN {
     * rule is "the K lowest-id corpus vectors", same as the oracle's
     * `WHERE vec_id < K`, so ids must be dense 0..n-1, the graft
     * convention), `cv` (vector), `cnorm`, and `gid` (owning coarse
-    * cell). Only the C = ⌈√K⌉ coarse centroids ever live on the
-    * driver; fine membership is computed DISTRIBUTED as a pure map
-    * over the K codebook rows (C·dim work each, coarse level folded
-    * as literals — C grows as √n, e.g. ~10⁴ at 10⁸ centroids).
-    * Coarse cells own their own centroid by construction (`cid < C`
-    * pins `gid = cid` — see [[hierLayer]]), so no cell is empty and
-    * every probe set has candidates. At rest, write this table
-    * partitioned/bucketed by `gid`. */
+    * cell). Only the C = ⌈√K⌉ coarse centroids (`coarse`, the C
+    * lowest-id vectors) ever live on the driver; fine membership is
+    * computed DISTRIBUTED as a pure map over the K codebook rows (C·dim
+    * work each, coarse level folded as literals — C grows as √n, e.g.
+    * ~10⁴ at 10⁸ centroids): each fine centroid belongs to its nearest
+    * coarse center by rounded cosine, ties to the lower coarse id.
+    * A coarse cell's own centroid is PINNED to its cell (`cid < C` ⇒
+    * `gid = cid`): cos(g,g) rounds to 1.0 so the argmax would normally
+    * pick it anyway, but a duplicate centroid at a lower id ties at 1.0
+    * and would steal it, leaving cell g empty — and an all-empty probe
+    * set has no defined answer. Pinning makes every cell non-empty BY
+    * CONSTRUCTION; the oracle mirrors the rule. At rest, write this
+    * table partitioned/bucketed by `gid`. */
   def fineCodebookTable(
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       coarse: Seq[Centroid]): DataFrame = {
@@ -428,26 +303,7 @@ object IvfKNN {
           .otherwise(nearestCentroid(col("cv"), coarse)).as("gid"))
   }
 
-  /** Two-level assignment with the fine codebook AS DATA: each row is
-    * routed to its `probes` nearest coarse cells (coarse level = plan
-    * literals, the only driver-resident piece) and then JOINED against
-    * the probed cells' fine centroids from [[fineCodebookTable]] —
-    * per-row argmax by (rounded cosine DESC, cid ASC), the identical
-    * rule to [[assignListsHier]]'s inlined form (IvfSpec pins the two
-    * paths equal row-for-row).
-    *
-    * Scale shape: explode(probes) → join on `gid` → hash-agg argmax
-    * keyed by the row id. With `broadcastFine` the codebook ships to
-    * executors once and the corpus never moves; past broadcast size
-    * (~10⁷ centroids) set it false and the join shuffles by `gid`
-    * against the bucketed at-rest codebook — the standard IVF probe
-    * join, same shape as [[ivfTopK]]. The argmax agg is map-side
-    * (candidates for a row never leave its partition under broadcast),
-    * so the shuffle moves exactly one row per input row.
-    *
-    * Output: (idCol, vecCol, list_id) — same surface as
-    * [[assignListsHier]]. */
-  /** The (cosine DESC, cid ASC) argmax ordering packed into ONE
+  /** The (score DESC, cid ASC) argmax ordering packed into ONE
     * non-negative long, so the per-row argmax aggregates as a plain
     * `max(bigint)` — a truly FIXED-WIDTH buffer. `max(struct(cos,
     * -cid))` was already narrow, but a struct field in an UnsafeRow
@@ -457,9 +313,9 @@ object IvfKNN {
     * compiles to SortAggregate + per-task Sort; the packed form to
     * HashAggregate with zero sorts — IvfSpec pins it).
     *
-    * Exactness: `cos` is already rounded to 9 dp, so
-    * `s9 = round(cos·10⁹)` recovers the exact scaled integer
-    * (|cos| ≤ 1 ⇒ |s9| ≤ 10⁹, double-exact far below 2⁵³); the pack
+    * Exactness: the score is already rounded to 9 dp, so
+    * `s9 = round(score·10⁹)` recovers the exact scaled integer
+    * (|score| ≤ 1 ⇒ |s9| ≤ 10⁹, double-exact far below 2⁵³); the pack
     * is `(s9 + 10⁹)·2³² + (2³¹ − cid)` — strictly monotone in
     * (s9, −cid) because consecutive s9 values sit 2³² apart while
     * the cid term spans < 2³¹, and ≤ 2·10⁹·2³² + 2³¹ < 2⁶³ so the
@@ -487,10 +343,74 @@ object IvfKNN {
       (lit(2147483648L) - cid.cast("long"))
   }
 
-  /** Decode the winning cid back out of a [[packArgmax]] maximum. */
-  private def unpackArgmaxCid(packed: Column): Column =
-    lit(2147483648L) - (packed % 4294967296L)
+  /** Per-row argmax of the candidate stream `scored` — one row per
+    * (idCol, candidate `cid`, rounded score `__s`) — as the bare
+    * `(idCol, list_id)` assignment.
+    *
+    * The aggregate must stay FIXED-WIDTH: carrying the vector through
+    * it (the former `first(vecCol)`) gives the aggregation buffer a
+    * var-length field, which disqualifies the fast hash map and
+    * sort-aggregates the ENTIRE candidate stream, each row still
+    * hauling the vector — stage-level spill attribution pinned
+    * emb_semantic_dedup's whole 98–101 GB sf100 memory spill on
+    * exactly that sort, invariant to scan width or any upstream
+    * exchange, and the exact trainer paid it once per Lloyd iteration.
+    * With only the packed (score, -cid) long in the buffer
+    * ([[packArgmax]] — a struct would still sort-agg) the partial
+    * argmax is a true map-side hash agg (per-task state = groups ×
+    * 16 B at any corpus). */
+  private def packedArgmaxIds(scored: DataFrame, idCol: String): DataFrame =
+    scored.groupBy(col(idCol))
+      .agg(max(packArgmax(col("__s"), col("cid"))).as("__best"))
+      .select(col(idCol),
+        (lit(2147483648L) - (col("__best") % 4294967296L)).as("list_id"))
 
+  /** `ids` (the [[packedArgmaxIds]] result) with the vector re-attached
+    * by one id equi-join against the corpus: (idCol, vecCol, list_id).
+    *
+    * Hash-build the narrow (id, list_id) side: a sort-merge re-attach
+    * would sort the WIDE vector side by id for nothing. The forced
+    * build side is corpus-LINEAR in rows but BOUNDED per partition as
+    * a fraction of the partition size AQE already manages: both join
+    * inputs shuffle on id into the SAME partitioning, the build row is
+    * ~50 B (two longs + hash-relation overhead) while the probe row
+    * carries the vector (≥ 4·dim B — ~300 B at dim 64, more at
+    * production dims), so per partition the build is ≤ ~1/6 of the
+    * bytes the advisory target caps — ~3 MB at the ladder's 16 MB
+    * sf100 advisory, shrinking relative to the stream as dim grows.
+    * That is categorically unlike the upsert's removed blind hint,
+    * whose build carried FULL-WIDTH rows (build bytes = stream bytes)
+    * under stage fusion. Measured: emb_semantic_dedup 88.5 s / ZERO
+    * spill at sf100; emb_ivf_lloyd_table has its own sf100 cell. */
+  private def reattach(
+      corpus: DataFrame, idCol: String, vecCol: String, ids: DataFrame): DataFrame =
+    corpus.select(col(idCol), col(vecCol))
+      .join(ids.hint("shuffle_hash"), Seq(idCol))
+
+  /** Two-level assignment with the fine codebook AS DATA — the one
+    * two-level quantizer: each row is routed to its `probes` nearest
+    * coarse cells ([[probeLists]]; coarse level = plan literals, the
+    * only driver-resident piece) and then JOINED against the probed
+    * cells' fine centroids from [[fineCodebookTable]] — per-row argmax
+    * by (rounded cosine DESC, cid ASC), the flat [[assignLists]] rule
+    * over the probed candidates. With `probes` = C it equals
+    * [[assignLists]] exactly (IvfSpec pins it); with fewer it is
+    * approximate in the IVF sense (the true nearest centroid can live
+    * in an unprobed cell) but stays deterministic and
+    * oracle-replayable — the scale path for corpus-proportional K,
+    * (C + probes·K/C)·dim work per row instead of K·dim.
+    *
+    * Scale shape: explode(probes) → join on `gid` → hash-agg argmax
+    * keyed by the row id ([[packedArgmaxIds]]) → [[reattach]]. With
+    * `broadcastFine` the codebook ships to executors once and the
+    * corpus never moves; past broadcast size (~10⁷ centroids) set it
+    * false and the join shuffles by `gid` against the bucketed at-rest
+    * codebook — the standard IVF probe join, same shape as
+    * [[ivfTopK]]. The argmax agg is map-side (candidates for a row
+    * never leave its partition under broadcast), so the shuffle moves
+    * exactly one row per input row.
+    *
+    * Output: (idCol, vecCol, list_id). */
   def assignListsJoined(
       corpus: DataFrame, idCol: String, vecCol: String,
       coarse: Seq[Centroid], fine: DataFrame, probes: Int,
@@ -499,50 +419,22 @@ object IvfKNN {
       CosineKNN.norm(col(vecCol)).as("__vn"),
       explode(probeLists(col(vecCol), coarse, probes)).as("gid"))
     val f = if (broadcastFine) broadcast(fine) else fine
-    // The argmax aggregate must stay FIXED-WIDTH: carrying the vector
-    // through it (the former `first(vecCol)`) gives the aggregation
-    // buffer a var-length field, which disqualifies the fast hash map
-    // and sort-aggregates the ENTIRE candidate stream (rows ×
-    // probes·K/√K, each still hauling the vector) — stage-level spill
-    // attribution pinned emb_semantic_dedup's whole 98–101 GB sf100
-    // memory spill on exactly that sort, invariant to scan width or
-    // any upstream exchange. With only the packed (cos, -cid) long in
-    // the buffer ([[packArgmax]] — a struct would still sort-agg) the
-    // partial argmax is a true map-side hash agg (per-task state =
-    // groups × 16 B at any corpus), and the vector re-attaches by one
-    // id equi-join against the corpus afterwards.
-    val best = probed.join(f, "gid")
-      .withColumn("__cos",
+    val scored = probed.join(f, "gid")
+      .withColumn("__s",
         round(CosineKNN.dot(col(vecCol), col("cv")) / (col("__vn") * col("cnorm")), 9))
-      .groupBy(col(idCol))
-      .agg(max(packArgmax(col("__cos"), col("cid"))).as("__best"))
-      .select(col(idCol), unpackArgmaxCid(col("__best")).as("list_id"))
-    // hash-build the narrow (id, list_id) argmax result: a sort-merge
-    // re-attach would sort the WIDE vector side by id for nothing.
-    // The forced build side is corpus-LINEAR in rows but BOUNDED per
-    // partition as a fraction of the partition size AQE already
-    // manages: both join inputs shuffle on id into the SAME
-    // partitioning, the build row is ~50 B (two longs + hash-relation
-    // overhead) while the probe row carries the vector (≥ 4·dim B —
-    // ~300 B at dim 64, more at production dims), so per partition
-    // the build is ≤ ~1/6 of the bytes the advisory target caps —
-    // ~3 MB at the ladder's 16 MB sf100 advisory, shrinking relative
-    // to the stream as dim grows. That is categorically unlike the
-    // upsert's removed blind hint, whose build carried FULL-WIDTH
-    // rows (build bytes = stream bytes) under stage fusion. Measured:
-    // emb_semantic_dedup (this path) 88.5 s / ZERO spill at sf100;
-    // emb_ivf_lloyd_table (the assignExactJoined twin) has its own
-    // sf100 cell.
-    corpus.select(col(idCol), col(vecCol))
-      .join(best.hint("shuffle_hash"), Seq(idCol))
+    reattach(corpus, idCol, vecCol, packedArgmaxIds(scored, idCol))
   }
 
   // ------------------------------------------------ codebook-as-data Lloyd
 
-  /** [[dotStable]] against a codebook COLUMN instead of a plan
-    * literal — the same order-independent 12-dp decimal fold, usable
-    * when the codebook arrives via a join. */
-  private def dotStableCol(vec: Column, cm: Column): Column =
+  /** Dot of a vector with a trained centroid COLUMN: products rounded
+    * to 12 decimals and folded in DECIMAL(30,12) — the accumulation is
+    * order-independent, unlike a plain double fold, so a SQL engine
+    * summing the same products under GROUP BY gets the identical
+    * double out. The one Column form of the stable dot: the at-rest
+    * table path scores with it, and [[graft.functions.NearestCentroidStable]]
+    * replicates it bit-for-bit. */
+  private[graft] def dotStableCol(vec: Column, cm: Column): Column =
     aggregate(
       zip_with(vec, cm, (x, m) => round(x.cast("double") * m, 12).cast(dec12acc)),
       lit(java.math.BigDecimal.ZERO).cast(dec12acc),
@@ -568,15 +460,19 @@ object IvfKNN {
       .select(col(idCol).cast("long").as("cid"), col(vecCol).as("cv"),
         CosineKNN.norm(col(vecCol)).as("cnorm"))
 
+  /** A trained codebook table carries `cm` (array<double> means); a
+    * seed table carries `cv` (the float vectors). */
+  private def isTrained(codebook: DataFrame): Boolean = codebook.columns.contains("cm")
+
   /** Exact nearest-centroid assignment with the codebook AS DATA:
     * broadcast the K codebook rows, score every (row, centroid) pair,
     * per-row argmax by (score DESC, cid ASC) — the same rule as the
     * literal-folding quantizers, but nothing codebook-shaped ever
-    * lives on the driver or in the plan. `stable = false` scores with
-    * the float-seed arithmetic (`round(dot/(|v|·|c|), 9)` — mirrors
-    * [[nearestCentroid]]); `stable = true` scores with the trained
-    * arithmetic (`round(dotStable/|c|, 9)`, per-row |v| dropped —
-    * mirrors [[nearestCentroidStable]]).
+    * lives on the driver or in the plan. A seed table scores with the
+    * float-seed arithmetic (`round(dot/(|v|·|c|), 9)` — mirrors
+    * [[nearestCentroid]]); a trained table with the trained arithmetic
+    * (`round(dotStable/|c|, 9)`, per-row |v| dropped — mirrors
+    * [[nearestCentroidStable]]).
     *
     * Scale shape: the broadcast loop-join is bounded by the codebook
     * (build side = K rows); candidates never leave their partition
@@ -588,11 +484,8 @@ object IvfKNN {
     * but must not be plan literals. */
   def assignExactJoined(
       corpus: DataFrame, idCol: String, vecCol: String,
-      codebook: DataFrame, stable: Boolean): DataFrame =
-    assignExactIds(corpus, idCol, vecCol, codebook, stable) match {
-      case best => corpus.select(col(idCol), col(vecCol))
-        .join(best.hint("shuffle_hash"), Seq(idCol))
-    }
+      codebook: DataFrame): DataFrame =
+    reattach(corpus, idCol, vecCol, assignExactIds(corpus, idCol, vecCol, codebook))
 
   /** [[assignExactJoined]] WITHOUT the vector re-attach: the bare
     * `(idCol, list_id)` assignment straight off the packed argmax.
@@ -605,7 +498,8 @@ object IvfKNN {
     * the unique id. */
   def assignExactIds(
       corpus: DataFrame, idCol: String, vecCol: String,
-      codebook: DataFrame, stable: Boolean): DataFrame = {
+      codebook: DataFrame): DataFrame = {
+    val stable = isTrained(codebook)
     val cb = broadcast(
       codebook.select(col("cid"),
         (if (stable) col("cm") else col("cv")).as("__cv"), col("cnorm")))
@@ -623,59 +517,29 @@ object IvfKNN {
             CosineKNN.norm(col(vecCol)).as("__vn")).crossJoin(cb)
           .withColumn("__s",
             round(CosineKNN.dot(col(vecCol), col("__cv")) / (col("__vn") * col("cnorm")), 9))
-    // The argmax aggregate must stay FIXED-WIDTH (the
-    // [[assignListsJoined]] rewrite, verbatim): the former
-    // `first(vecCol)` put a var-length field in the aggregation
-    // buffer, which disqualifies the fast hash map and
-    // sort-aggregates the ENTIRE n·K candidate stream with every row
-    // hauling the vector — the exact mechanism behind
-    // emb_semantic_dedup's ~100 GB sf100 spill, and here it ran once
-    // per Lloyd iteration inside [[lloydStepTable]]. With only the
-    // packed (s, -cid) long in the buffer ([[packArgmax]]) the
-    // partial argmax is a true map-side hash agg (per-task state =
-    // groups × 16 B at any corpus); the
-    // vector re-attaches by one id equi-join afterwards, hash-building
-    // the narrow (id, list_id) side — a sort-merge re-attach would
-    // sort the WIDE vector side by id for nothing. The forced build is
-    // corpus-linear in ROWS but bounded per partition as a ~1/6 BYTES
-    // fraction of the AQE-managed partition size (see the
-    // [[assignListsJoined]] re-attach comment for the full argument:
-    // ~50 B build rows vs ≥ 4·dim B probe rows in the same id
-    // partitioning — nothing like the upsert's removed full-width
-    // blind hint). Runs once per Lloyd iteration; the sf100
-    // emb_ivf_lloyd_table cell measures exactly this join.
-    scored.groupBy(col(idCol))
-      .agg(max(packArgmax(col("__s"), col("cid"))).as("__best"))
-      .select(col(idCol), unpackArgmaxCid(col("__best")).as("list_id"))
+    packedArgmaxIds(scored, idCol)
   }
 
   /** ONE exact Lloyd step with the codebook as a DataFrame end to end
-    * — the table twin of [[lloydOnceExact]]/[[lloydStepExact]], with
-    * NO `collect()` anywhere: assignment is [[assignExactJoined]],
-    * per-dimension means are the same DECIMAL(18,6) aggregate, the
-    * new codebook is re-assembled as `(cid, cm array<double>, cnorm)`
-    * rows, and empty lists keep their previous centroid via a left
-    * join. The norm is recomputed from the resulting vector in BOTH
-    * branches (the [[lloydOnceExact]] convention).
+    * — the table twin of [[lloydStep]], with NO `collect()` anywhere:
+    * assignment is [[assignExactJoined]], per-dimension means are the
+    * same [[dimMeans]], the new codebook is re-assembled as `(cid, cm
+    * array<double>, cnorm)` rows, and empty lists keep their previous
+    * centroid via a left join. The norm is recomputed from the
+    * resulting vector in BOTH branches (the [[exactSeed]] convention).
     *
-    * `prev` is either a seed table (`cv` float — pass
-    * `stable = false`) or a trained table (`cm` double — `stable =
-    * true`). Output is always the trained shape. */
+    * `prev` is either a seed table (`cv` float) or a trained table
+    * (`cm` double). Output is always the trained shape. */
   def lloydStepTable(
       corpus: DataFrame, idCol: String, vecCol: String,
-      prev: DataFrame, stable: Boolean): DataFrame = {
-    val assigned = assignExactJoined(corpus, idCol, vecCol, prev, stable)
-    val means = assigned
-      .select(col("list_id"), posexplode(col(vecCol)))
-      .groupBy(col("list_id"), col("pos"))
-      .agg((sum(col("col").cast("double").cast(DecimalType(18, 6))).cast("double") /
-        count(lit(1))).as("m"))
+      prev: DataFrame): DataFrame = {
+    val means = dimMeans(assignExactJoined(corpus, idCol, vecCol, prev), vecCol)
       .groupBy(col("list_id"))
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("m")))),
         e => e.getField("m")).as("cm"))
     val prevCm =
-      if (stable) prev.select(col("cid"), col("cm").as("__prev"))
+      if (isTrained(prev)) prev.select(col("cid"), col("cm").as("__prev"))
       else prev.select(col("cid"),
         transform(col("cv"), x => x.cast("double")).as("__prev"))
     prevCm.join(means, prevCm("cid") === means("list_id"), "left")
@@ -691,26 +555,11 @@ object IvfKNN {
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       iterations: Int): DataFrame = {
     require(iterations >= 1, "lloydTrainTable: iterations must be >= 1")
-    var book = lloydStepTable(
-      corpus, idCol, vecCol,
-      seedCodebookTable(corpus, idCol, vecCol, k), stable = false)
-      .localCheckpoint()
-    (2 to iterations).foreach { _ =>
-      book = lloydStepTable(corpus, idCol, vecCol, book, stable = true)
-        .localCheckpoint()
+    var book = seedCodebookTable(corpus, idCol, vecCol, k)
+    (1 to iterations).foreach { _ =>
+      book = lloydStepTable(corpus, idCol, vecCol, book).localCheckpoint()
     }
     book
-  }
-
-  /** The original Column-API formulation of [[nearestCentroid]] —
-    * argmax over K (cosine, -id) structs, struct ordering giving max
-    * cosine with ties to the LOWER id. Kept as the executable spec of
-    * the arithmetic the native node replicates. */
-  def nearestCentroidColumns(vec: Column, centroids: Seq[Centroid]): Column = {
-    val n = CosineKNN.norm(vec)
-    val entries = centroids.map(c =>
-      struct(cosTo(vec, n, c).as("cos"), lit(-c.id).as("negid")))
-    (-array_max(array(entries: _*)).getField("negid")).cast("long")
   }
 
   /** Top-`nprobe` centroid ids as a pure projection (descending

@@ -1,14 +1,9 @@
 package graft.functions
 
-import java.math.{BigDecimal => JBD, RoundingMode}
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Native Catalyst form of the float/cosine IVF quantizer
   * ([[graft.ext.similarity.IvfKNN.nearestCentroid]]): nearest
@@ -17,113 +12,63 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   *
   * Why native: the Column formulation expands to K `struct(round(
   * fvec_dot(v, [dim literals]) / (sqrt(fvec_dot(v,v)) * |c|), 9),
-  * -id)` entries — a plan literal per codebook element. Fine at the
-  * fixed K=8..16 the ANN queries use; at the corpus-scaled K the
-  * SemDeDup query needs (K = n/250, 252 at the 31.6× scale rung) the
-  * single projection carries K·dim ≈ 16k literals, which blows past
-  * the codegen method-size limit into interpreted evaluation and
-  * bloats every analyzer pass over the plan. The round-5 scale bench
-  * surfaced it: semantic-dedup time NON-monotonic in corpus size once
-  * K scaled. This node keeps the plan O(1) regardless of K.
+  * -id)` entries — a plan literal per codebook element, K·dim of them
+  * in one projection. Past a few hundred centroids that blows the
+  * codegen method-size limit into interpreted evaluation and bloats
+  * every analyzer pass over the plan (round-5 scale bench). This node
+  * keeps the plan O(1) in K. Its callers hold index-sized codebooks:
+  * the fixed-K ANN queries, the Lloyd seed assignment and the coarse
+  * cells of [[graft.ext.similarity.IvfKNN.fineCodebookTable]].
+  * SemDeDup's corpus-scaled K = n/250 never reaches this node: its fine
+  * codebook is a table, joined by
+  * [[graft.ext.similarity.IvfKNN.assignListsJoined]].
   *
-  * The arithmetic replicates the Column chain exactly (the DuckDB
-  * oracles replay that recipe):
-  *
-  *  1. dot(v, c) and dot(v, v) — left-to-right double accumulation
-  *     over float→double elements, identical to
-  *     [[graft.functions.FloatVectorDot]];
-  *  2. score = `Round(dot / (sqrt(dot(v,v)) * |c|), 9)` — Spark's
-  *     `Round(DoubleType)` is `BigDecimal.valueOf(p).setScale(9,
-  *     HALF_UP).toDouble`;
-  *  3. argmax over centroids in id order, ties to the LOWER id
-  *     (the struct-ordering trick `max(struct(cos, -id))` encodes);
-  *     doubles compare by `java.lang.Double.compare` exactly like
-  *     Spark's interpreted double ordering.
-  *
-  * Vector elements are assumed non-null and finite (embedding
-  * vectors), as everywhere else on the ANN paths. The codebook is
-  * index metadata (K·dim floats), folded into the node like the
-  * literal arrays it replaces.
+  * The score is `dot(v, c) / (sqrt(dot(v, v)) * |c|)`, both dots a
+  * left-to-right double accumulation over float→double elements,
+  * identical to [[graft.functions.FloatVectorDot]]; rounding and the
+  * argmax are [[CentroidArgmax]]'s (the struct-ordering trick
+  * `max(struct(cos, -id))` of the Column form).
   */
 case class NearestCentroidCosine(
     child: Expression,
     vecs: Seq[Seq[Float]],
     norms: Seq[Double])
-  extends UnaryExpression with CodegenFallback {
+  extends CentroidArgmax {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      if (vecs.isEmpty || vecs.length != norms.length)
-        TypeCheckResult.TypeCheckFailure(
-          s"nearest_centroid_cosine: ${vecs.length} centroid vectors vs " +
-            s"${norms.length} norms (need equal, non-empty)")
-      // a zero or non-finite norm scores NaN, and NaN WINS the argmax
-      // (Double.compare ranks it above every number) — validate here
-      // instead of only claiming it in the message
-      else if (!norms.forall(n => java.lang.Double.isFinite(n) && n > 0))
-        TypeCheckResult.TypeCheckFailure(
-          "nearest_centroid_cosine: centroid norms must be finite and > 0 " +
-            "(zero-norm centroids would score NaN, which wins the argmax)")
-      else if (vecs.map(_.length).distinct.length != 1)
-        TypeCheckResult.TypeCheckFailure(
-          "nearest_centroid_cosine: centroid vectors must share one dimension")
-      else TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"nearest_centroid_cosine expects array<float|double>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
   override def prettyName: String = "nearest_centroid_cosine"
 
-  private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  // flattened [k][dim] for tight access; built once per task
+  // [k][dim] for tight access; built once per task
   @transient private lazy val cents: Array[Array[Float]] = vecs.map(_.toArray).toArray
-  @transient private lazy val cnorms: Array[Double] = norms.toArray
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  // |v| once per row, like codegen subexpression elimination does for
+  // the Column form
+  override protected def rowTerm(v: ArrayData): Double = {
     val nv = v.numElements()
-    // norm(v) once per row, like codegen subexpression elimination
-    // does for the Column form
     var acc = 0.0
     var i = 0
     while (i < nv) {
-      val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+      val x = elem(v, i)
       acc += x * x
       i += 1
     }
-    val vnorm = math.sqrt(acc)
-    val k = cents.length
-    var best = Double.NegativeInfinity
-    var bestIdx = 0L
-    var first = true
-    var c = 0
-    while (c < k) {
-      val m = cents(c)
-      // a row vector shorter/longer than the codebook dim contributes
-      // only the overlapping prefix to the dot — intentional: it
-      // matches [[FloatVectorDot]], which the Column formulation
-      // evaluates through (embedding dims are schema-fixed in
-      // practice; the companion rejects ragged CODEBOOKS)
-      val n = math.min(nv, m.length)
-      var dot = 0.0
-      var j = 0
-      while (j < n) {
-        val x = if (isFloat) v.getFloat(j).toDouble else v.getDouble(j)
-        dot += x * m(j).toDouble
-        j += 1
-      }
-      val score = JBD.valueOf(dot / (vnorm * cnorms(c)))
-        .setScale(9, RoundingMode.HALF_UP).doubleValue()
-      if (first || java.lang.Double.compare(score, best) > 0) {
-        best = score; bestIdx = c.toLong; first = false
-      }
-      c += 1
+    math.sqrt(acc)
+  }
+
+  override protected def score(v: ArrayData, vnorm: Double, c: Int): Double = {
+    val m = cents(c)
+    // a row vector shorter/longer than the codebook dim contributes
+    // only the overlapping prefix to the dot — intentional: it matches
+    // [[FloatVectorDot]], which the Column formulation evaluates
+    // through (embedding dims are schema-fixed in practice; the input
+    // check rejects ragged CODEBOOKS)
+    val n = math.min(v.numElements(), m.length)
+    var dot = 0.0
+    var j = 0
+    while (j < n) {
+      dot += elem(v, j) * m(j).toDouble
+      j += 1
     }
-    bestIdx
+    dot / (vnorm * cnorms(c))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -37,14 +37,12 @@ class ArtifactsSpec extends SparkSpec {
       e => IvfKNN.sampledCentroids(e, "vec_id", "embedding", 4),
       v => v.asInstanceOf[Seq[IvfKNN.Centroid]].map(c => (c.id, c.vec.toSeq))),
     Kind("lloyd iterations 1", "embeddings",
-      (e, d) => IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", 4, 64, d, iterations = 1),
-      e => IvfKNN.lloydOnceExact(e, "embedding",
-        IvfKNN.sampledCentroids(e, "vec_id", "embedding", 4), 64),
+      (e, d) => IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", 4, d, iterations = 1),
+      e => IvfOracles.lloyd1(e, 4),
       v => v.asInstanceOf[Seq[IvfKNN.DCentroid]].map(c => (c.id, c.vec.toSeq))),
     Kind("lloyd iterations 2", "embeddings",
-      (e, d) => IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", 4, 64, d, iterations = 2),
-      e => IvfKNN.lloydStepExact(e, "embedding", IvfKNN.lloydOnceExact(e, "embedding",
-        IvfKNN.sampledCentroids(e, "vec_id", "embedding", 4), 64), 64),
+      (e, d) => IvfKNN.cachedLloydTrain(e, "vec_id", "embedding", 4, d, iterations = 2),
+      e => IvfOracles.lloydNext(e, IvfOracles.lloyd1(e, 4)),
       v => v.asInstanceOf[Seq[IvfKNN.DCentroid]].map(c => (c.id, c.vec.toSeq))),
     Kind("pq book", "embeddings",
       (e, d) => PqKNN.cachedSampledBook(e, "vec_id", "embedding", d),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.IvfOracles._
 import graft.ext.similarity.{CosineKNN, IvfKNN}
 import org.apache.spark.sql.functions._
 
@@ -7,6 +8,12 @@ class IvfSpec extends SparkSpec {
   import spark.implicits._
 
   private def emb = Tables(spark, "/root/testdata/sf0.001", "embeddings")
+
+  /** The coarse cells of an 8-entry fine codebook: its C = ⌈√8⌉ = 3
+    * lowest-id vectors. */
+  private val c = 3
+  private def coarse = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", c)
+  private def fine = IvfKNN.fineCodebookTable(emb, "vec_id", "embedding", 8, coarse)
 
   test("full probe (nprobe = K) equals brute force exactly") {
     val cents = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
@@ -87,9 +94,21 @@ class IvfSpec extends SparkSpec {
     val sampled = IvfKNN.sampledCentroids(df, "vec_id", "embedding", 8)
     val rSampled = recallWith(sampled)
     assert(rSampled >= 0.9, s"sampled-centroid recall $rSampled")
-    val trained = IvfKNN.trainCentroids(df, "vec_id", "embedding", 8, iterations = 3)
+    val trained = IvfKNN.cachedLloydTrain(df, "vec_id", "embedding", 8,
+        "ivfspec_clustered", iterations = 3)
+      .map { t =>
+        val v = t.vec.map(_.toFloat)
+        IvfKNN.Centroid(t.id, v, math.sqrt(v.foldLeft(0.0)((a, x) => a + x.toDouble * x)))
+      }
     val rTrained = recallWith(trained)
     assert(rTrained >= rSampled - 0.05, s"trained $rTrained vs sampled $rSampled")
+  }
+
+  test("collected Lloyd trainer rejects iterations < 1") {
+    val df = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    intercept[IllegalArgumentException] {
+      IvfKNN.cachedLloydTrain(df, "vec_id", "embedding", 2, "ivfspec_zero", iterations = 0)
+    }
   }
 
   test("exact Lloyd step: counts conserve the corpus, movement is real, result is stable") {
@@ -109,13 +128,12 @@ class IvfSpec extends SparkSpec {
   }
 
   test("native stable quantizer matches the Column decimal formulation exactly") {
-    val seed = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val trained = IvfKNN.lloydOnceExact(emb, "embedding", seed, 64)
+    val trained = lloyd1(emb, 8)
     // the whole corpus, both paths, row for row
     val both = emb.select(
         $"vec_id",
         IvfKNN.nearestCentroidStable($"embedding", trained).as("native"),
-        IvfKNN.nearestCentroidStableColumns($"embedding", trained).as("columns"))
+        nearestCentroidStableColumns($"embedding", trained).as("columns"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getLong(1) == r.getLong(2), s"vec ${r.getLong(0)}"))
@@ -129,7 +147,7 @@ class IvfSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val both2 = hard.select(
         IvfKNN.nearestCentroidStable($"embedding", cents2).as("native"),
-        IvfKNN.nearestCentroidStableColumns($"embedding", cents2).as("columns"))
+        nearestCentroidStableColumns($"embedding", cents2).as("columns"))
       .collect()
     both2.foreach(r => assert(r.getLong(0) == r.getLong(1)))
     // the planted duplicate of centroid 0 always loses the tie to the
@@ -145,7 +163,7 @@ class IvfSpec extends SparkSpec {
     val both = emb.select(
         $"vec_id",
         IvfKNN.nearestCentroid($"embedding", cents).as("native"),
-        IvfKNN.nearestCentroidColumns($"embedding", cents).as("columns"))
+        nearestCentroidColumns($"embedding", cents).as("columns"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getLong(1) == r.getLong(2), s"vec ${r.getLong(0)}"))
@@ -159,7 +177,7 @@ class IvfSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val both2 = hard.select(
         IvfKNN.nearestCentroid($"embedding", cents2).as("native"),
-        IvfKNN.nearestCentroidColumns($"embedding", cents2).as("columns"))
+        nearestCentroidColumns($"embedding", cents2).as("columns"))
       .collect()
     both2.foreach(r => assert(r.getLong(0) == r.getLong(1)))
     // the planted duplicate of centroid 0 always loses the tie
@@ -169,9 +187,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("stable-quantizer assignment is a pure map: no shuffle/window/crossJoin") {
-    val seed = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val trained = IvfKNN.lloydOnceExact(emb, "embedding", seed, 64)
-    val p = emb.select(IvfKNN.nearestCentroidStable($"embedding", trained))
+    val p = emb.select(IvfKNN.nearestCentroidStable($"embedding", lloyd1(emb, 8)))
       .queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), p.take(2000))
     assert(!p.contains("Window"), p.take(2000))
@@ -179,55 +195,49 @@ class IvfSpec extends SparkSpec {
       p.take(2000))
   }
 
-  // ------------------------------------------ two-level (hier) quantizer
+  // ------------------------------------------------ two-level quantizer
 
-  test("hier layer: coarse cells partition the dense fine ids") {
+  test("codebook-as-data: fine table partitions dense ids, every cell owns its centroid") {
+    val got = fine.select($"cid", $"gid").as[(Long, Long)].collect().sortBy(_._1)
+    assert(got.map(_._1).toList == (0L until 8L).toList)
+    assert(got.forall(_._2 < c))
+    // pinning: cell g contains fine centroid g (no empty cells possible)
+    (0L until c.toLong).foreach(g => assert(got.contains((g, g))))
+    // and the distributed membership equals the driver-side reference
     val cents = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val hl = IvfKNN.hierLayer(cents)
-    assert(hl.coarse.length == 3) // ceil(sqrt(8))
-    assert(hl.members.flatten.sorted == (0 until 8).toList)
+    assert(got.toList == coarseMembership(cents, c).toList)
   }
 
-  test("hier quantizer probing ALL cells equals the flat quantizer exactly") {
+  test("joined assignment probing ALL cells equals the flat quantizer exactly") {
     // with every coarse cell probed the candidate set is the whole
     // codebook, so the two-level argmax must reduce to the flat one —
     // the same reduction the full-probe IVF test pins for search
     val cents = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val c = IvfKNN.hierLayer(cents).coarse.length
     val flat = IvfKNN.assignLists(emb, "embedding", cents)
       .select($"vec_id", $"list_id")
-    val hier = IvfKNN.assignListsHier(emb, "embedding", cents, probes = c)
-      .select($"vec_id", $"list_id")
-    assert(flat.exceptAll(hier).isEmpty && hier.exceptAll(flat).isEmpty)
-  }
-
-  test("codebook-as-data: fine table partitions dense ids, every cell owns its centroid") {
-    val cents = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val hl = IvfKNN.hierLayer(cents)
-    val fine = IvfKNN.fineCodebookTable(emb, "vec_id", "embedding", 8, hl.coarse)
-      .select($"cid", $"gid").as[(Long, Long)].collect().sortBy(_._1)
-    assert(fine.map(_._1).toList == (0L until 8L).toList)
-    assert(fine.forall(_._2 < hl.coarse.length))
-    // pinning: cell g contains fine centroid g (no empty cells possible)
-    hl.coarse.foreach(g => assert(fine.contains((g.id.toLong, g.id.toLong))))
-    // and the distributed membership equals the driver-side hierLayer's
-    val hlPairs = hl.members.zipWithIndex
-      .flatMap { case (ms, g) => ms.map(c => (c.toLong, g.toLong)) }.sortBy(_._1)
-    assert(fine.toList == hlPairs.toList)
-  }
-
-  test("join-based assignment equals the inlined hier quantizer row-for-row") {
-    val cents = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val hl = IvfKNN.hierLayer(cents)
-    val fine = IvfKNN.fineCodebookTable(emb, "vec_id", "embedding", 8, hl.coarse)
     val joined = IvfKNN.assignListsJoined(
         emb.select($"vec_id", $"embedding"), "vec_id", "embedding",
-        hl.coarse, fine, probes = 2)
+        coarse, fine, probes = c)
       .select($"vec_id", $"list_id")
-    val hier = IvfKNN.assignListsHier(emb, "embedding", cents, probes = 2)
+    assert(joined.count() == emb.count())
+    assert(flat.exceptAll(joined).isEmpty && joined.exceptAll(flat).isEmpty)
+  }
+
+  test("joined assignment with 2 probes equals the driver-side reference row-for-row") {
+    val joined = IvfKNN.assignListsJoined(
+        emb.select($"vec_id", $"embedding"), "vec_id", "embedding",
+        coarse, fine, probes = 2)
       .select($"vec_id", $"list_id")
-    assert(joined.count() == emb.count(), "join path must keep every row")
-    assert(joined.exceptAll(hier).isEmpty && hier.exceptAll(joined).isEmpty)
+    val cents = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
+    val rows = emb.select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()
+      .map { case (id, v) => (id, v.toArray) }.toSeq
+    val got = joined.as[(Long, Long)].collect().toMap
+    assert(got.size == rows.size, "join path must keep every row")
+    assert(got == joinedAssignment(rows, cents, c, probes = 2))
+    // and 2 probes of 3 cells is a real restriction on this corpus
+    val flat = IvfKNN.assignLists(emb, "embedding", cents)
+      .select($"vec_id", $"list_id").as[(Long, Long)].collect().toMap
+    assert(got != flat, "2 probes never missed the flat argmax: the probe is untested")
     // plan: broadcast join against the codebook table — never a
     // cartesian/BNLJ, never a window; the fine codebook must NOT
     // appear as plan literals (only the C coarse vectors do)
@@ -239,9 +249,8 @@ class IvfSpec extends SparkSpec {
   }
 
   test("table-form Lloyd equals the collected exact trainer bit-for-bit") {
-    val seed = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val t1 = IvfKNN.lloydOnceExact(emb, "embedding", seed, 64)
-    val t2 = IvfKNN.lloydStepExact(emb, "embedding", t1, 64)
+    val t1 = lloyd1(emb, 8)
+    val t2 = lloydNext(emb, t1)
     def check(book: org.apache.spark.sql.DataFrame,
         cents: Seq[IvfKNN.DCentroid]): Unit = {
       val rows = book.orderBy($"cid").collect()
@@ -259,8 +268,7 @@ class IvfSpec extends SparkSpec {
     // native quantizer, row for row
     val lit = emb.select($"vec_id",
       IvfKNN.nearestCentroidStable($"embedding", t1).as("list_id"))
-    val joined = IvfKNN.assignExactJoined(emb, "vec_id", "embedding", b1,
-        stable = true)
+    val joined = IvfKNN.assignExactJoined(emb, "vec_id", "embedding", b1)
       .select($"vec_id", $"list_id")
     assert(joined.count() == emb.count())
     assert(joined.exceptAll(lit).isEmpty && lit.exceptAll(joined).isEmpty)
@@ -280,11 +288,8 @@ class IvfSpec extends SparkSpec {
     // the vector by a hash-built id equi-join, so the executed plan
     // must contain NO sort-based operator of any kind.
     val b1 = IvfKNN.lloydTrainTable(emb, "vec_id", "embedding", 8, iterations = 1)
-    Seq(true, false).foreach { stable =>
-      val assigned = IvfKNN.assignExactJoined(
-        emb, "vec_id", "embedding",
-        if (stable) b1 else IvfKNN.seedCodebookTable(emb, "vec_id", "embedding", 8),
-        stable = stable)
+    Seq(b1, IvfKNN.seedCodebookTable(emb, "vec_id", "embedding", 8)).foreach { book =>
+      val assigned = IvfKNN.assignExactJoined(emb, "vec_id", "embedding", book)
       val plan = assigned.queryExecution.executedPlan.toString
       assert(!plan.contains("SortAggregate"), plan.take(2000))
       assert(!plan.contains("SortMergeJoin"), plan.take(2000))
@@ -298,12 +303,9 @@ class IvfSpec extends SparkSpec {
     }
     // the probed two-level assignment (semantic dedup's quantizer)
     // carries the same packed-long argmax — no sort-based operator
-    val cents = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val hl = IvfKNN.hierLayer(cents)
-    val fine = IvfKNN.fineCodebookTable(emb, "vec_id", "embedding", 8, hl.coarse)
     val joined = IvfKNN.assignListsJoined(
       emb.select($"vec_id", $"embedding"), "vec_id", "embedding",
-      hl.coarse, fine, probes = 2)
+      coarse, fine, probes = 2)
     val jPlan = joined.queryExecution.executedPlan.toString
     assert(!jPlan.contains("SortAggregate"), jPlan.take(2000))
     assert(!jPlan.contains("Sort "), jPlan.take(2000))
@@ -319,16 +321,13 @@ class IvfSpec extends SparkSpec {
     // DIVIDE_BY_ZERO at the cosine division itself; the silent path
     // the guard closes is a NaN/Inf VALUE inside a vector, where the
     // divisor is NaN, not zero.)
-    val cents = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val hl = IvfKNN.hierLayer(cents)
-    val fine = IvfKNN.fineCodebookTable(emb, "vec_id", "embedding", 8, hl.coarse)
     val poisoned = emb.select($"vec_id",
       when($"vec_id" === 3L,
         array_repeat(lit(Float.NaN), org.apache.spark.sql.functions.size($"embedding")))
         .otherwise($"embedding").as("embedding"))
     val e = intercept[Exception] {
       IvfKNN.assignListsJoined(poisoned, "vec_id", "embedding",
-        hl.coarse, fine, probes = 2).collect()
+        coarse, fine, probes = 2).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
@@ -337,32 +336,32 @@ class IvfSpec extends SparkSpec {
       s"expected the packArgmax guard, got: ${msgs(e).mkString(" | ")}")
   }
 
-  test("hier quantizer is a pure map and routes tight clusters like the flat one") {
-    val cents = IvfKNN.sampledCentroids(emb, "vec_id", "embedding", 8)
-    val plan = IvfKNN.assignListsHier(emb, "embedding", cents, probes = 2)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange") && !plan.contains("Window") &&
-      !plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      plan.take(2000))
+  test("joined quantizer routes tight clusters like the flat one") {
     // clustered corpus: points tightly around each centroid must get
     // their own centroid back even through coarse routing (the coarse
-    // argmax sees nearly the centroid itself)
+    // argmax sees nearly the centroid itself). The 9 centroids are
+    // corpus rows 0..8, so they form the fine codebook table.
     val rnd = new scala.util.Random(11)
     val seeds = Array.fill(9)(Array.fill(16)(rnd.nextGaussian().toFloat))
     val points = (0 until 9).flatMap { s =>
       (0 until 20).map { i =>
         val v = seeds(s).map(x => x + 0.01f * rnd.nextGaussian().toFloat)
-        (s.toLong * 100 + i, v.toSeq)
+        ((s + 1).toLong * 100 + i, v.toSeq)
       }
     }.toDF("vec_id", "embedding")
-    val seedCents = seeds.toIndexedSeq.zipWithIndex.map { case (v, i) =>
-      IvfKNN.Centroid(i, v,
-        math.sqrt(v.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))
-    }
-    val assigned = IvfKNN.assignListsHier(points, "embedding", seedCents, probes = 2)
+    val corpus = seeds.toSeq.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
+      .toDF("vec_id", "embedding").union(points)
+    val cells = IvfKNN.sampledCentroids(corpus, "vec_id", "embedding", 3)
+    val book = IvfKNN.fineCodebookTable(corpus, "vec_id", "embedding", 9, cells)
+    val joined = IvfKNN.assignListsJoined(points, "vec_id", "embedding", cells, book,
+        probes = 2)
       .select($"vec_id", $"list_id").as[(Long, Long)].collect()
-    assigned.foreach { case (vid, lid) =>
-      assert(lid == vid / 100, s"vector $vid routed to $lid")
+    val flat = IvfKNN.assignLists(points, "embedding",
+        IvfKNN.sampledCentroids(corpus, "vec_id", "embedding", 9))
+      .select($"vec_id", $"list_id").as[(Long, Long)].collect()
+    assert(joined.length == points.count())
+    (joined ++ flat).foreach { case (vid, lid) =>
+      assert(lid == vid / 100 - 1, s"vector $vid routed to $lid")
     }
   }
 }

@@ -1,12 +1,19 @@
 package graft
 
-import graft.ext.dedup.NearDup
 import graft.ext.text.TextFunctions
-import graft.functions.{MinHashSig, SimHashTokens}
+import graft.functions.{MinHashSig, PolyHash, SimHashTokens}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class MinHashSigSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The HOF formulation MinHashSig replaced: the parity oracle. */
+  private def referenceChain(shingleSet: Column, numHashes: Int): Column =
+    transform(sequence(lit(0), lit(numHashes - 1)),
+      j => array_min(transform(
+        transform(shingleSet, s => PolyHash.polyhashPacked(s)),
+        p => (shiftright(p, 30) + j * p.bitwiseAND(0x3FFFFFFFL)) % PolyHash.P)))
 
   test("native signature matches the HOF chain element-for-element on real documents") {
     val sh = TextFunctions.shinglesFromTokens(
@@ -15,7 +22,7 @@ class MinHashSigSpec extends SparkSpec {
       .filter(size(TextFunctions.tokens($"text")) >= 2)
       .select(
         MinHashSig.of(sh, 64).as("native"),
-        NearDup.minhashSigReferenceChain(sh, 64).as("chain"))
+        referenceChain(sh, 64).as("chain"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -34,7 +41,7 @@ class MinHashSigSpec extends SparkSpec {
       .toMap
     assert(got(1L) == null && got(2L) == null)
     // one shingle: sig(j) = (h31 + j*h37) mod P exactly
-    val p = graft.functions.PolyHash.P
+    val p = PolyHash.P
     val h31 = ((97L * 31 + 98) % p)
     val h37 = ((97L * 37 + 98) % p)
     assert(got(3L) == Seq(h31, (h31 + h37) % p, (h31 + 2 * h37) % p, (h31 + 3 * h37) % p))
@@ -46,7 +53,7 @@ class MinHashSigSpec extends SparkSpec {
       .select(
         SimHashTokens.of(toks).as("fused"),
         graft.functions.SimHash64.simhash(
-          transform(toks, t => graft.functions.PolyHash.polyhashPacked(t))).as("staged"))
+          transform(toks, t => PolyHash.polyhashPacked(t))).as("staged"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))

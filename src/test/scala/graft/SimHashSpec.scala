@@ -1,11 +1,22 @@
 package graft
 
-import graft.ext.dedup.NearDup
 import graft.functions.SimHash64
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class SimHashSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The 64-expression HOF formulation SimHash64 replaced: the parity
+    * oracle. */
+  private def referenceChain(hashes: Column): Column = {
+    val n = size(hashes)
+    (0 until 64).map { b =>
+      when(size(filter(hashes,
+        h => shiftright(h, b).bitwiseAND(1) === 1)) * 2 >= n,
+        lit(1L << b)).otherwise(0L)
+    }.reduce(_ + _)
+  }
 
   test("matches the 64-expression HOF chain bit-for-bit on real documents") {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
@@ -13,7 +24,7 @@ class SimHashSpec extends SparkSpec {
     val rows = docs
       .select($"doc_id",
         SimHash64.simhash(hashes).as("native"),
-        NearDup.simhashReferenceChain(hashes).as("chain"))
+        referenceChain(hashes).as("chain"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
