@@ -105,11 +105,9 @@ object Bench {
         }
         catch { case e: Throwable =>
           err = Some(e.toString.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)) }
-        // Caches are KEPT across queries by default: the round-1
-        // baseline was measured that way, and same-methodology numbers
-        // are the ones comparable across rounds. Verify clears per
-        // query; set SPARK_GRAFT_CLEAR_CACHE=1 to measure fully cold.
-        if (sys.env.contains("SPARK_GRAFT_CLEAR_CACHE")) spark.catalog.clearCache()
+        // Caches are KEPT across queries: the round-1 baseline was
+        // measured that way, and same-methodology numbers are the ones
+        // comparable across rounds. Verify clears per query.
         r += 1
       }
       (name, runs.result(), err)

@@ -42,13 +42,6 @@ case class EntitySchema(
     columns: Seq[ColumnSpec]) {
 
   def keyColumns: Seq[ColumnSpec] = columns.filter(_.isKey)
-
-  /** Spark read-schema for the *source* JSON, rebuilt from dot-paths
-    * (e.g. `data.location.lat` → nested structs). Declared leaf types
-    * are read as string and cast later, so unparseable values coerce
-    * to null exactly like the reference's `errors="coerce"`. */
-  def sourceStruct: StructType =
-    EntitySchema.structFromPaths(columns.map(_.srcPath))
 }
 
 /** Loader for the reference's restricted YAML dialect: two-level maps
@@ -60,7 +53,10 @@ case class EntitySchema(
 object EntitySchema {
 
   /** Build a nested `StructType` of string leaves from dot-paths
-    * (shared by per-entity and union source schemas). */
+    * (e.g. `data.location.lat` → nested structs) — the union source
+    * schema. Declared leaf types are read as string and cast later, so
+    * unparseable values coerce to null exactly like the reference's
+    * `errors="coerce"`. */
   def structFromPaths(paths: Seq[String]): StructType = {
     def insert(fields: Seq[StructField], path: List[String]): Seq[StructField] =
       path match {

@@ -212,7 +212,8 @@ object BlockDedup {
     * streaming twin's per-batch kernel): a gram is duplicated if an
     * earlier occurrence exists WITHIN this batch (the batch window)
     * OR its hash is in `seenHashes` — the at-rest state of every
-    * first occurrence from earlier batches. Returns
+    * first occurrence from earlier batches (None before any batch
+    * committed state). Returns
     * `(result, newHashes)`:
     *   - `result` — the batch operator's (id, n_tokens, n_kept,
     *     text_kept) under the extended duplicate rule;
@@ -231,19 +232,20 @@ object BlockDedup {
       idCol: String,
       textCol: String,
       gramTokens: Int,
-      seenHashes: DataFrame): (DataFrame, DataFrame) = {
+      seenHashes: Option[DataFrame]): (DataFrame, DataFrame) = {
     val grams = keyedGrams(docs, idCol, textCol, gramTokens, hashKey = true)
     val ranked = grams.withColumn("rk",
       row_number().over(
         Window.partitionBy(col("gram"))
           .orderBy(col("doc"), col("pos"))))
     val firsts = ranked.filter(col("rk") === 1)
+    val seen = seenHashes.getOrElse(firsts.select(col("gram")).limit(0))
     val dupStarts = ranked.filter(col("rk") > 1)
       .select(col("doc"), col("pos"))
-      .union(firsts.join(seenHashes, Seq("gram"), "left_semi")
+      .union(firsts.join(seen, Seq("gram"), "left_semi")
         .select(col("doc"), col("pos")))
       .select(col("doc"), col("pos"), lit(1).as("dup"))
-    val newHashes = firsts.join(seenHashes, Seq("gram"), "left_anti")
+    val newHashes = firsts.join(seen, Seq("gram"), "left_anti")
       .select(col("gram"))
     (assembleKept(docs, idCol, textCol, gramTokens, dupStarts), newHashes)
   }

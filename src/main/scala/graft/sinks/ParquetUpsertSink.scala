@@ -70,25 +70,30 @@ object ParquetUpsertSink {
     }
   }
 
-  /** Data files (non-marker) under `path`, recursive — hive partition
-    * dirs included. `listStatus` recursion, not `listFiles(recursive)`:
-    * the latter builds LocatedFileStatus, which some FileSystem
-    * implementations (including the local-FS wrapper the FS-contract
-    * tests drive through a custom scheme) cannot serve. Returns −1 on
-    * any failure — IO observability must never fail the write. */
+  /** Data files under `dir` that Spark's parquet reader would see,
+    * recursive, lazily. A name is hidden when it starts with `.` or
+    * with `_` and is not a hive partition dir (`__batch_id=0` is
+    * visible; `_SUCCESS`, `_temporary`, `.crc` files are not), and a
+    * hidden dir hides everything under it. `listStatus` recursion,
+    * not `listFiles(recursive)`: the latter builds LocatedFileStatus,
+    * which some FileSystem implementations (including the local-FS
+    * wrapper the FS-contract tests drive through a custom scheme)
+    * cannot serve. */
+  private[graft] def visibleDataFiles(f: FileSystem, dir: Path): Iterator[Path] = {
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    def walk(p: Path): Iterator[Path] =
+      f.listStatus(p).iterator.filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
+        if (s.isDirectory) walk(s.getPath) else Iterator.single(s.getPath)
+      }
+    if (f.exists(dir)) walk(dir) else Iterator.empty
+  }
+
+  /** [[visibleDataFiles]] count under `path`; −1 on any failure — IO
+    * observability must never fail the write. */
   private def countDataFiles(spark: SparkSession, path: String): Long =
-    try {
-      val f = fs(spark, path)
-      def walk(p: Path): Long =
-        f.listStatus(p).foldLeft(0L) { (acc, s) =>
-          val n = s.getPath.getName
-          if (n.startsWith("_") || n.startsWith(".")) acc
-          else if (s.isDirectory) acc + walk(s.getPath)
-          else acc + 1
-        }
-      val p = new Path(path)
-      if (!f.exists(p)) 0L else walk(p)
-    } catch { case NonFatal(_) => -1L }
+    try visibleDataFiles(fs(spark, path), new Path(path)).size.toLong
+    catch { case NonFatal(_) => -1L }
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -101,14 +106,8 @@ object ParquetUpsertSink {
     * is a valid PRE-EXISTING but EMPTY table: the upsert then takes
     * the fresh-write path instead of trying to read a schema from
     * nothing. */
-  private def hasData(spark: SparkSession, path: String): Boolean = {
-    val f = fs(spark, path)
-    val p = new Path(path)
-    f.exists(p) && f.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
+  private def hasData(spark: SparkSession, path: String): Boolean =
+    visibleDataFiles(fs(spark, path), new Path(path)).hasNext
 
   /** HDFS-style FileSystem calls signal some failures by RETURNING
     * false rather than throwing (e.g. rename onto an existing path) —
@@ -132,7 +131,7 @@ object ParquetUpsertSink {
 
   /** True iff `path` holds a COMPLETE Spark write (its `_SUCCESS`
     * commit marker landed). */
-  private def isComplete(spark: SparkSession, path: String): Boolean =
+  private[graft] def isComplete(spark: SparkSession, path: String): Boolean =
     exists(spark, path.stripSuffix("/") + "/_SUCCESS")
 
   /** Roll the promote state machine forward after a crash. States
@@ -292,16 +291,27 @@ object ParquetUpsertSink {
     }
     val existing = spark.read.parquet(tablePath)
     val merged = merge(existing, incoming, key)
-    // can't overwrite a path while reading it: stage, then promote so a
-    // complete copy exists at every instant (see class doc + recover)
-    val tmp = stagingPath(tablePath)
-    merged.repartition(outputFiles).write.mode("overwrite").parquet(tmp)
+    // can't overwrite a path while reading it
+    val promoteSec = stageAndPromote(spark, merged.repartition(outputFiles), tablePath)
+    recordIo(countDataFiles(spark, tablePath), promoteSec)
+  }
+
+  /** Replace the table at `tablePath` with `df` through the crash-safe
+    * stage-then-promote of the class doc (the table→backup rename is
+    * skipped when no table exists yet). Records no [[ioStats]];
+    * returns the seconds spent after the staged write. */
+  private[graft] def stageAndPromote(
+      spark: SparkSession, df: DataFrame, tablePath: String): Double = {
+    val staged = new Path(stagingPath(tablePath))
+    df.write.mode("overwrite").parquet(staged.toString)
     val t0 = System.nanoTime()
     val f = fs(spark, tablePath)
-    renameOrThrow(f, new Path(tablePath), new Path(backupPath(tablePath)))
-    renameOrThrow(f, new Path(tmp), new Path(tablePath))
-    deleteOrThrow(f, new Path(backupPath(tablePath)))
-    recordIo(countDataFiles(spark, tablePath), (System.nanoTime() - t0) / 1e9)
+    val table = new Path(tablePath)
+    val backup = new Path(backupPath(tablePath))
+    if (f.exists(table)) renameOrThrow(f, table, backup)
+    renameOrThrow(f, staged, table)
+    deleteOrThrow(f, backup)
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** Partition-pruned upsert: merges only the partitions the batch

@@ -1,11 +1,14 @@
 package graft.streaming
 
 import graft.config.EntitySchema
+import graft.ext.text.TextFunctions
 import graft.jobs.Pipelines
 import graft.operators.{KeyGen, Normalize}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.sinks.ParquetUpsertSink
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured-Streaming variant of the reference pipeline (SURVEY.md
   * §2.7): the hourly-batch-with-cursor contract becomes a file-source
@@ -96,8 +99,7 @@ object StreamingEtl {
     * streams with an event-time column. */
   def dedupDocStream(docs: DataFrame, textCol: String): DataFrame =
     docs
-      .withColumn("fingerprint",
-        graft.ext.text.TextFunctions.fingerprint(col(textCol)))
+      .withColumn("fingerprint", TextFunctions.fingerprint(col(textCol)))
       .dropDuplicates("fingerprint")
 
   /** Bounded-state streaming dedup: `withWatermark` +
@@ -118,10 +120,22 @@ object StreamingEtl {
       eventTimeCol: String,
       watermark: String = "10 minutes"): DataFrame =
     docs
-      .withColumn("fingerprint",
-        graft.ext.text.TextFunctions.fingerprint(col(textCol)))
+      .withColumn("fingerprint", TextFunctions.fingerprint(col(textCol)))
       .withWatermark(eventTimeCol, watermark)
       .dropDuplicatesWithinWatermark("fingerprint")
+
+  /** The static eval split's distinct n-gram set, broadcast — the
+    * static side of both gram decontamination paths. Token arrays are
+    * staged into their own projection (r15): the shingle tree
+    * references its token argument ~2n+3× and zip_with is
+    * CodegenFallback, so raw tokens(text) re-tokenized per reference;
+    * the multi-referenced non-cheap alias blocks CollapseProject,
+    * pinning one tokenize per row. */
+  private def evalGramSet(evalDocs: DataFrame, textCol: String, n: Int): DataFrame =
+    broadcast(evalDocs
+      .select(TextFunctions.tokens(col(textCol)).as("__toks"))
+      .select(explode(TextFunctions.shinglesFromTokens(col("__toks"), n)).as("g"))
+      .distinct())
 
   /** Streaming decontamination: flag incoming documents that share
     * n-gram shingles with a STATIC benchmark split — a stream-static
@@ -137,17 +151,7 @@ object StreamingEtl {
       evalDocs: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int): DataFrame = {
-    import graft.ext.text.TextFunctions
-    // token arrays staged into their own projection (r15): the
-    // shingle tree references its token argument ~2n+3× and zip_with
-    // is CodegenFallback, so raw tokens(text) re-tokenized per
-    // reference; the multi-referenced non-cheap alias blocks
-    // CollapseProject, pinning one tokenize per row
-    val evalGrams = evalDocs
-      .select(TextFunctions.tokens(col(textCol)).as("__toks"))
-      .select(explode(TextFunctions.shinglesFromTokens(col("__toks"), n)).as("g"))
-      .distinct()
+      n: Int): DataFrame =
     // plain count, not count_distinct (unsupported on streams): the
     // shingle arrays are already per-doc distinct and a document is
     // one stream row, so the exploded (doc, gram) pairs are unique
@@ -155,29 +159,92 @@ object StreamingEtl {
       .select(col(idCol), TextFunctions.tokens(col(textCol)).as("__toks"))
       .select(col(idCol),
         explode(TextFunctions.shinglesFromTokens(col("__toks"), n)).as("g"))
-      .join(broadcast(evalGrams), Seq("g"))
+      .join(evalGramSet(evalDocs, textCol, n), Seq("g"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_overlap"))
+
+  // ------------------------------------------------ exactly-once protocol
+
+  /** The exactly-once protocol of the foreachBatch streams — the
+    * paper's idempotent re-delivery (an upsert on a deterministic key,
+    * SURVEY §2.7) in Structured Streaming form. foreachBatch is
+    * at-least-once: a crash after a batch's writes but before its
+    * offset commit replays the batch under the SAME `batchId` on
+    * restart. Three rules make the committed output exactly-once:
+    *  1. every write is [[writeBatch]]: the frame tagged
+    *     `__batch_id = batchId` and written with dynamic partition
+    *     OVERWRITE, partitioned by `__batch_id`, so a replay rewrites
+    *     its own partition instead of appending a second copy;
+    *  2. every state read is [[priorState]]: committed data only,
+    *     pinned to `__batch_id < batchId`, so a replay re-reads
+    *     exactly the state its first attempt saw (its own half-written
+    *     delta excluded);
+    *  3. a stateful stream writes its state delta FIRST and its output
+    *     second: a crash between the two replays under rules 1 and 2
+    *     and overwrites both partitions.
+    * This starts such a stream: Append mode, checkpointed offsets,
+    * `body(batch, batchId)` per micro-batch. [[upsertStream]] and
+    * [[scd2Stream]] get the same guarantee from their idempotent
+    * sinks instead (keyed upsert, versioned history). */
+  private def foreachBatchAppend(stream: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(body)
+      .start()
+
+  /** Rule 1 of [[foreachBatchAppend]]: batch `batchId`'s idempotent
+    * write of `df` under `dir`. */
+  private def writeBatch(df: DataFrame, batchId: Long, dir: String): Unit =
+    df.withColumn("__batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch_id")
+      .parquet(dir)
+
+  /** Rule 2 of [[foreachBatchAppend]]: the state under `dir` as batch
+    * `batchId` must see it — the committed deltas of earlier batches;
+    * None until some batch committed state. `Long.MaxValue` reads
+    * every committed delta. */
+  private[graft] def priorState(
+      s: SparkSession, dir: String, batchId: Long): Option[DataFrame] =
+    committedState(s, dir).map(_.filter(col("__batch_id") < batchId))
+
+  /** The state read gated on COMMITTED DATA rather than bare directory
+    * existence: a crash during the very first state write leaves the
+    * directory with only `_temporary/` task attempts (no committed
+    * files), and a bare existence check + schema-inference read would
+    * then fail every replay with "Unable to infer schema for Parquet"
+    * — permanently wedging the stream (round-12 advice). The gate
+    * looks for one file Spark's reader would see
+    * ([[graft.sinks.ParquetUpsertSink.visibleDataFiles]]: hive
+    * partition dirs like `__batch_id=0` count; `_temporary`,
+    * `.staging`, `.crc` do not) — i.e. exactly "some earlier batch
+    * committed state". A root `_SUCCESS` marker would be simpler but
+    * dynamic partition overwrite does NOT write one (probed on this
+    * Spark version), so presence-of-committed-data is the reliable
+    * signal; StreamingSpec pins the wedge scenario. */
+  private def committedState(s: SparkSession, dir: String): Option[DataFrame] = {
+    val p = new Path(dir)
+    val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (ParquetUpsertSink.visibleDataFiles(hfs, p).hasNext) Some(s.read.parquet(dir))
+    else None
   }
 
   /** End-to-end streaming curation: continuous ingestion of raw
     * documents into a curated training corpus —
     *
-    *  1. cross-batch exact dedup upstream of the sink (fingerprint +
-    *     `dropDuplicates`, the only STATEFUL stage: state size =
+    *  1. cross-batch exact dedup upstream of the sink
+    *     ([[dedupDocStream]], the only STATEFUL stage: state size =
     *     distinct fingerprints, one long per doc);
-    *  2. per micro-batch (foreachBatch gives batch semantics):
-    *     quality gate, n-gram decontamination against the static eval
-    *     split (exploded grams semi-joined to the broadcast gram set,
-    *     then a left-anti back onto the batch — the batch twin of
-    *     [[decontaminateStream]]), PII scrub on the survivors;
-    *  3. land survivors in the curated corpus path, partitioned by
-    *     batch id and written with dynamic partition OVERWRITE — so a
-    *     replayed batch (crash between the parquet commit and the
-    *     offset commit) rewrites its own partition instead of
-    *     appending a duplicate copy. foreachBatch is at-least-once;
-    *     the idempotent per-batch write is what upgrades the OUTPUT
-    *     to effectively exactly-once.
+    *  2. per micro-batch: quality gate, n-gram decontamination against
+    *     the static eval split (exploded grams semi-joined to the
+    *     broadcast gram set, then a left-anti back onto the batch —
+    *     the batch twin of [[decontaminateStream]]), PII scrub on the
+    *     survivors;
+    *  3. land survivors in the curated corpus path under the
+    *     [[foreachBatchAppend]] protocol.
     *
     * Everything per-batch is stateless and broadcast-joined, so the
     * firehose side never shuffles. */
@@ -189,50 +256,33 @@ object StreamingEtl {
       outDir: String,
       checkpointDir: String,
       n: Int = 3,
-      minQuality: Double = 0.3): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ext.text.TextFunctions
-    // staged token projection — the decontaminateStream r15 rule
-    val evalGrams = evalDocs
-      .select(TextFunctions.tokens(col(textCol)).as("__toks"))
-      .select(explode(TextFunctions.shinglesFromTokens(col("__toks"), n)).as("g"))
-      .distinct()
-    docStream
-      .withColumn("fingerprint", TextFunctions.fingerprint(col(textCol)))
-      .dropDuplicates("fingerprint")
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // the batch feeds TWO branches of the final plan (the anti-join
-        // probe and `contaminated`), and a foreachBatch batch re-executes
-        // its whole upstream — including the STATEFUL dedupe operator —
-        // once per branch (`persist()` does not reliably capture the
-        // localized batch plan; measured: state commits doubled).
-        // localCheckpoint materializes the batch ONCE and hands both
-        // branches the stored blocks: single state commit, half the work.
-        val b = batch.localCheckpoint()
-        // quality gate over a staged token column (r15): the score
-        // references the token array ~6× (size/stop-hits/length fold)
-        // and re-tokenized per reference over raw text
-        val good = b
-          .withColumn("__toks", TextFunctions.tokens(col(textCol)))
-          .filter(TextFunctions.qualityScoreFromTokens(
-            col(textCol), col("__toks")) >= minQuality)
-        val contaminated = good
-          .select(col(idCol),
-            explode(TextFunctions.shinglesFromTokens(col("__toks"), n)).as("g"))
-          .join(broadcast(evalGrams), Seq("g"))
-          .select(col(idCol)).distinct()
-        good.join(contaminated, Seq(idCol), "left_anti")
-          .withColumn(textCol, TextFunctions.scrubPii(col(textCol)))
-          .drop("fingerprint", "__toks")
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(outDir)
-      }
-      .start()
+      minQuality: Double = 0.3): StreamingQuery = {
+    val evalGrams = evalGramSet(evalDocs, textCol, n)
+    foreachBatchAppend(dedupDocStream(docStream, textCol), checkpointDir) { (batch, batchId) =>
+      // the batch feeds TWO branches of the final plan (the anti-join
+      // probe and `contaminated`), and a foreachBatch batch re-executes
+      // its whole upstream — including the STATEFUL dedupe operator —
+      // once per branch (`persist()` does not reliably capture the
+      // localized batch plan; measured: state commits doubled).
+      // localCheckpoint materializes the batch ONCE and hands both
+      // branches the stored blocks: single state commit, half the work.
+      val b = batch.localCheckpoint()
+      // quality gate over a staged token column (r15): the score
+      // references the token array ~6× (size/stop-hits/length fold)
+      // and re-tokenized per reference over raw text
+      val good = b
+        .withColumn("__toks", TextFunctions.tokens(col(textCol)))
+        .filter(TextFunctions.qualityScoreFromTokens(
+          col(textCol), col("__toks")) >= minQuality)
+      val contaminated = good
+        .select(col(idCol),
+          explode(TextFunctions.shinglesFromTokens(col("__toks"), n)).as("g"))
+        .join(evalGrams, Seq("g"))
+        .select(col(idCol)).distinct()
+      writeBatch(good.join(contaminated, Seq(idCol), "left_anti")
+        .withColumn(textCol, TextFunctions.scrubPii(col(textCol)))
+        .drop("fingerprint", "__toks"), batchId, outDir)
+    }
   }
 
   /** Streaming upsert sink: every micro-batch MERGEs into a keyed
@@ -244,13 +294,12 @@ object StreamingEtl {
       stream: DataFrame,
       tablePath: String,
       key: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.sinks.ParquetUpsertSink.upsert(
-          batch.sparkSession, batch.toDF(), tablePath, key)
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        ParquetUpsertSink.upsert(batch.sparkSession, batch.toDF(), tablePath, key)
       }
       .start()
 
@@ -263,11 +312,11 @@ object StreamingEtl {
     *  - a replayed batch is detected by `valid_from == version`
     *    already present in the history and SKIPPED — merging is
     *    idempotent per version;
-    *  - the rewrite uses the upsert sink's staging/backup naming
-    *    (`<table>__staging` / `<table>__backup`) and promote order,
-    *    so [[graft.sinks.ParquetUpsertSink.recover]] — invoked at
-    *    the top of every batch — rolls any crash state forward: a
-    *    complete history exists at every instant.
+    *  - the rewrite is the upsert sink's crash-safe promote
+    *    ([[graft.sinks.ParquetUpsertSink.stageAndPromote]]), so
+    *    [[graft.sinks.ParquetUpsertSink.recover]] — invoked at the top
+    *    of every batch — rolls any crash state forward: a complete
+    *    history exists at every instant.
     *
     * Per batch the merge is one per-key window over the BATCH plus
     * one equi join against history (Scd2's contract); Scd2Spec owns
@@ -278,36 +327,24 @@ object StreamingEtl {
       tablePath: String,
       key: Seq[String],
       ord: Seq[org.apache.spark.sql.Column],
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          graft.sinks.ParquetUpsertSink.recover(s, tablePath)
+          ParquetUpsertSink.recover(s, tablePath)
           val version = (batchId + 1).toInt
-          val tableP = new org.apache.hadoop.fs.Path(tablePath)
-          val hfs = tableP.getFileSystem(s.sparkContext.hadoopConfiguration)
           val history =
-            if (hfs.exists(new org.apache.hadoop.fs.Path(s"$tablePath/_SUCCESS")))
-              Some(s.read.parquet(tablePath))
+            if (ParquetUpsertSink.isComplete(s, tablePath)) Some(s.read.parquet(tablePath))
             else None
           val alreadyApplied = history.exists(h =>
             !h.filter(col("valid_from") === version).isEmpty)
-          if (!alreadyApplied) {
-            val merged = graft.operators.Scd2
-              .mergeBatch(history, batch.toDF(), key, ord, version)
-            val staged = tablePath.stripSuffix("/") + "__staging"
-            val backup = tablePath.stripSuffix("/") + "__backup"
-            merged.write.mode("overwrite").parquet(staged)
-            val stagedP = new org.apache.hadoop.fs.Path(staged)
-            val backupP = new org.apache.hadoop.fs.Path(backup)
-            if (hfs.exists(tableP))
-              require(hfs.rename(tableP, backupP), s"rename $tableP -> $backupP failed")
-            require(hfs.rename(stagedP, tableP), s"rename $stagedP -> $tableP failed")
-            hfs.delete(backupP, true)
-          }
+          if (!alreadyApplied)
+            ParquetUpsertSink.stageAndPromote(s,
+              graft.operators.Scd2.mergeBatch(history, batch.toDF(), key, ord, version),
+              tablePath)
         }
         ()
       }
@@ -370,48 +407,8 @@ object StreamingEtl {
     * ([[graft.ext.dedup.BlockDedup.dedupNgramsHashedIncremental]]):
     * a gram is duplicated if seen earlier in the batch OR present in
     * the state table; the batch's genuinely-new first-occurrence
-    * hashes are appended as the state delta.
-    *
-    * Exactly-once: foreachBatch is at-least-once, so BOTH writes land
-    * under a `__batch_id` partition with dynamic partition OVERWRITE
-    * (the [[curationStream]] idiom) and the state read is pinned to
-    * `__batch_id < batchId` — a replayed batch re-reads exactly the
-    * state it saw the first time (its own partially-written delta is
-    * excluded) and rewrites its own partitions idempotently. */
-  /** Prior-state read for the at-rest cross-batch dedup patterns,
-    * gated on COMMITTED DATA rather than bare directory existence: a
-    * crash during the very first state write leaves the directory
-    * with only `_temporary/` task attempts (no committed files), and
-    * a bare `hfs.exists(dir)` + schema-inference read would then fail
-    * every replay with "Unable to infer schema for Parquet" —
-    * permanently wedging the stream (round-12 advice). The gate looks
-    * for at least one file every path segment of which is visible to
-    * Spark's reader (hive partition dirs like `__batch_id=0` count;
-    * `_temporary`, `.staging`, `.crc` do not) — i.e. exactly "some
-    * earlier batch committed state". A root `_SUCCESS` marker would
-    * be simpler but dynamic partition overwrite does NOT write one
-    * (probed on this Spark version), so presence-of-committed-data is
-    * the reliable signal; StreamingSpec pins the wedge scenario. */
-  private def committedState(
-      s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def hiddenSeg(name: String): Boolean =
-      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
-    val hasCommitted = hfs.exists(p) && {
-      val qdir = hfs.makeQualified(p).toString
-      val it = hfs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next().getPath.toString
-        val rel = f.stripPrefix(qdir).stripPrefix("/")
-        found = rel.nonEmpty && rel.split("/").forall(seg => !hiddenSeg(seg))
-      }
-      found
-    }
-    if (hasCommitted) Some(s.read.parquet(dir)) else None
-  }
-
+    * hashes are the state delta. Exactly-once: the
+    * [[foreachBatchAppend]] protocol. */
   def ngramDedupStream(
       docStream: DataFrame,
       idCol: String,
@@ -419,45 +416,18 @@ object StreamingEtl {
       outDir: String,
       seenDir: String,
       checkpointDir: String,
-      gramTokens: Int = 20): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        // the batch feeds the gram ranking AND the coverage/reassembly
-        // branches — materialize once (the curationStream lesson:
-        // foreachBatch re-executes the upstream per branch)
-        val b = batch.localCheckpoint()
-        val seen =
-          committedState(s, seenDir) match {
-            case Some(st) =>
-              st.filter(col("__batch_id") < batchId).select(col("gram"))
-            case None =>
-              s.createDataFrame(
-                java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("gram",
-                    org.apache.spark.sql.types.LongType, nullable = false))))
-          }
-        val (res, newHashes) = graft.ext.dedup.BlockDedup
-          .dedupNgramsHashedIncremental(b, idCol, textCol, gramTokens, seen)
-        // state delta FIRST: if the batch dies between the two writes,
-        // the replay re-reads state < batchId (its own half-written
-        // delta invisible) and overwrites both partitions
-        newHashes.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(seenDir)
-        res.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(outDir)
-        ()
-      }
-      .start()
+      gramTokens: Int = 20): StreamingQuery =
+    foreachBatchAppend(docStream, checkpointDir) { (batch, batchId) =>
+      // the batch feeds the gram ranking AND the coverage/reassembly
+      // branches — materialize once (the curationStream lesson:
+      // foreachBatch re-executes the upstream per branch)
+      val b = batch.localCheckpoint()
+      val seen = priorState(batch.sparkSession, seenDir, batchId).map(_.select(col("gram")))
+      val (res, newHashes) = graft.ext.dedup.BlockDedup
+        .dedupNgramsHashedIncremental(b, idCol, textCol, gramTokens, seen)
+      writeBatch(newHashes, batchId, seenDir)
+      writeBatch(res, batchId, outDir)
+    }
 
   /** Streaming per-domain frequency caps — the cross-batch twin of
     * [[graft.ext.text.DomainCap.cap]]: keep at most `maxPerDomain`
@@ -468,16 +438,14 @@ object StreamingEtl {
     * (sum/max), the [[ngramDedupStream]] posture: built-in stateful
     * operators can't express "admit until a per-key budget is spent"
     * without buffering per-key rows, and the at-rest table is
-    * domain-cardinality-sized, never corpus-sized.
+    * domain-cardinality-sized, never corpus-sized. Exactly-once: the
+    * [[foreachBatchAppend]] protocol.
     *
     * Per batch: the batch is first capped by the bounded-heap batch
     * operator (≤ N candidate rows per domain leave the map side — a
     * hot domain's firehose never reaches the state join), then the
     * ≤ N survivors rank against the domain's remaining budget (a
-    * window BOUNDED at N rows per domain). Exactly-once follows
-    * [[ngramDedupStream]]: both writes land under `__batch_id` with
-    * dynamic partition overwrite, state reads pin `__batch_id <
-    * batchId`, state delta writes first.
+    * window BOUNDED at N rows per domain).
     *
     * Contract — ids unique and per-domain monotone across batches
     * (the arrival-order corpus convention): equality with the batch
@@ -506,82 +474,64 @@ object StreamingEtl {
       maxPerDomain: Int,
       outDir: String,
       stateDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val prior = committedState(s, stateDir).map(
-          _.filter(col("__batch_id") < batchId)
-            .groupBy(col(domainCol))
-            .agg(sum(col("kept_n")).as("__kept0"),
-              max(col("max_kept_id")).as("__maxid"),
-              sum(col("seen_n")).as("__seen0")))
-        val capped = graft.ext.text.DomainCap.cap(
-          batch.select(col(idCol), col(domainCol)), idCol, domainCol,
-          maxPerDomain)
-        val joined = prior match {
-          // null-safe: a null domain is one capped group (the batch
-          // operator's groupBy semantics) — Seq(domainCol) equi-join
-          // would never match the null state key, resetting a null
-          // domain's budget every batch
-          case Some(st) =>
-            val stR = st.withColumnRenamed(domainCol, "__st_dom")
-            capped.join(stR, col(domainCol) <=> col("__st_dom"), "left")
-              .drop("__st_dom")
-          case None => capped
-            .withColumn("__kept0", lit(null).cast("long"))
-            .withColumn("__maxid", lit(null).cast("long"))
-            .withColumn("__seen0", lit(null).cast("long"))
-        }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(domainCol)).orderBy(col(idCol))
-        // materialize: the ranked frame feeds the state delta AND the
-        // output (foreachBatch re-executes upstream per branch)
-        val ranked = joined
-          .withColumn("__kept", coalesce(col("__kept0"), lit(0L)))
-          // divergence condition, exactly: a late id changes the kept
-          // set iff the domain's cumulative pre-cap total exceeds the
-          // budget (kept = min(seen, N), so "full domain" is the
-          // special case seen_prev >= N; an overflowing not-yet-full
-          // domain diverges the same way and must throw too)
-          .filter(assert_true(
-            col(idCol) > coalesce(col("__maxid"), lit(Long.MinValue)) ||
-              coalesce(col("__seen0"), lit(0L)) + col("n_domain")
-                <= lit(maxPerDomain.toLong),
-            lit(s"non-monotone '$idCol': a late id at or below the " +
-              "domain's max kept id arrived while the domain's " +
-              "cumulative arrivals exceed the budget — the kept set " +
-              "would diverge from the batch operator " +
-              "(domain-cap stream contract)")).isNull)
-          .withColumn("__rn", row_number().over(w))
-          .withColumn("__keptFlag",
-            (col("__rn") <= lit(maxPerDomain.toLong) - col("__kept"))
-              .cast("long"))
-          .localCheckpoint()
-        // state delta FIRST (the replay-idempotence ordering)
-        ranked.groupBy(col(domainCol))
-          .agg(sum(col("__keptFlag")).as("kept_n"),
-            max(when(col("__keptFlag") === 1L, col(idCol))).as("max_kept_id"),
-            max(col("n_domain")).as("seen_n"))
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(stateDir)
-        ranked.filter(col("__keptFlag") === 1L)
-          .select(col(idCol), col(domainCol),
-            (col("n_domain") + coalesce(col("__seen0"), lit(0L)))
-              .as("n_domain_so_far"))
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(outDir)
-        ()
+      checkpointDir: String): StreamingQuery =
+    foreachBatchAppend(docStream, checkpointDir) { (batch, batchId) =>
+      val prior = priorState(batch.sparkSession, stateDir, batchId).map(
+        _.groupBy(col(domainCol))
+          .agg(sum(col("kept_n")).as("__kept0"),
+            max(col("max_kept_id")).as("__maxid"),
+            sum(col("seen_n")).as("__seen0")))
+      val capped = graft.ext.text.DomainCap.cap(
+        batch.select(col(idCol), col(domainCol)), idCol, domainCol,
+        maxPerDomain)
+      val joined = prior match {
+        // null-safe: a null domain is one capped group (the batch
+        // operator's groupBy semantics) — Seq(domainCol) equi-join
+        // would never match the null state key, resetting a null
+        // domain's budget every batch
+        case Some(st) =>
+          val stR = st.withColumnRenamed(domainCol, "__st_dom")
+          capped.join(stR, col(domainCol) <=> col("__st_dom"), "left")
+            .drop("__st_dom")
+        case None => capped
+          .withColumn("__kept0", lit(null).cast("long"))
+          .withColumn("__maxid", lit(null).cast("long"))
+          .withColumn("__seen0", lit(null).cast("long"))
       }
-      .start()
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(domainCol)).orderBy(col(idCol))
+      // materialize: the ranked frame feeds the state delta AND the
+      // output (foreachBatch re-executes upstream per branch)
+      val ranked = joined
+        .withColumn("__kept", coalesce(col("__kept0"), lit(0L)))
+        // divergence condition, exactly: a late id changes the kept
+        // set iff the domain's cumulative pre-cap total exceeds the
+        // budget (kept = min(seen, N), so "full domain" is the
+        // special case seen_prev >= N; an overflowing not-yet-full
+        // domain diverges the same way and must throw too)
+        .filter(assert_true(
+          col(idCol) > coalesce(col("__maxid"), lit(Long.MinValue)) ||
+            coalesce(col("__seen0"), lit(0L)) + col("n_domain")
+              <= lit(maxPerDomain.toLong),
+          lit(s"non-monotone '$idCol': a late id at or below the " +
+            "domain's max kept id arrived while the domain's " +
+            "cumulative arrivals exceed the budget — the kept set " +
+            "would diverge from the batch operator " +
+            "(domain-cap stream contract)")).isNull)
+        .withColumn("__rn", row_number().over(w))
+        .withColumn("__keptFlag",
+          (col("__rn") <= lit(maxPerDomain.toLong) - col("__kept"))
+            .cast("long"))
+        .localCheckpoint()
+      writeBatch(ranked.groupBy(col(domainCol))
+        .agg(sum(col("__keptFlag")).as("kept_n"),
+          max(when(col("__keptFlag") === 1L, col(idCol))).as("max_kept_id"),
+          max(col("n_domain")).as("seen_n")), batchId, stateDir)
+      writeBatch(ranked.filter(col("__keptFlag") === 1L)
+        .select(col(idCol), col(domainCol),
+          (col("n_domain") + coalesce(col("__seen0"), lit(0L)))
+            .as("n_domain_so_far")), batchId, outDir)
+    }
 
   /** Streaming semantic dedup (the last major curation operator
     * without a twin): each micro-batch of embedding rows is assigned
@@ -592,14 +542,9 @@ object StreamingEtl {
     * [[graft.ext.dedup.SemanticDedup.verdictsIncremental]].
     *
     * State is the `ngramDedupStream` at-rest pattern: every assigned
-    * vector lands under `stateDir` as `(vid, v, n, list_id)`
-    * partitioned by `__batch_id`; the per-batch read is pinned to
-    * `__batch_id < batchId` and pruned to the batch's touched
-    * clusters, and BOTH writes use dynamic partition overwrite, so a
-    * replayed batch (at-least-once foreachBatch) re-reads exactly the
-    * state it saw first time and rewrites its own partitions
-    * idempotently — state delta first, verdicts second, the crash
-    * between them replay-safe.
+    * vector lands under `stateDir` as `(vid, v, n, list_id)`, and the
+    * kernel prunes the prior state to the batch's touched clusters.
+    * Exactly-once: the [[foreachBatchAppend]] protocol.
     *
     * Batch parity (StreamingSpec): with id-monotone arrival the
     * concatenated verdict partitions equal
@@ -615,32 +560,17 @@ object StreamingEtl {
       stateDir: String,
       checkpointDir: String,
       threshold: Double = 0.3,
-      probes: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val b = batch.localCheckpoint()
-        val prior = committedState(s, stateDir).map(
-          _.filter(col("__batch_id") < batchId)
-            .select(col("vid"), col("v"), col("n"), col("list_id")))
-        val (verdictRows, delta) = graft.ext.dedup.SemanticDedup
-          .verdictsIncremental(b, idCol, vecCol, coarse, fine,
-            threshold, probes, prior)
-        delta.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(stateDir)
-        verdictRows.withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(outDir)
-        ()
-      }
-      .start()
+      probes: Int = 2): StreamingQuery =
+    foreachBatchAppend(vecStream, checkpointDir) { (batch, batchId) =>
+      val b = batch.localCheckpoint()
+      val prior = priorState(batch.sparkSession, stateDir, batchId).map(
+        _.select(col("vid"), col("v"), col("n"), col("list_id")))
+      val (verdictRows, delta) = graft.ext.dedup.SemanticDedup
+        .verdictsIncremental(b, idCol, vecCol, coarse, fine,
+          threshold, probes, prior)
+      writeBatch(delta, batchId, stateDir)
+      writeBatch(verdictRows, batchId, outDir)
+    }
 
   /** Stream-static semantic decontamination — the streaming twin of
     * [[graft.ext.dedup.SemanticDedup.decontaminate]], and the
@@ -653,9 +583,9 @@ object StreamingEtl {
     * table by cluster. Verdicts depend only on the batch row and the
     * static eval side, so the stream is STATELESS (unlike
     * [[semanticDedupStream]], whose drop rule couples batches):
-    * exactly-once comes free with the idempotent per-`__batch_id`
-    * dynamic-overwrite write, and batch/stream parity is structural —
-    * both paths call the same
+    * exactly-once is the [[foreachBatchAppend]] protocol's idempotent
+    * write alone, and batch/stream parity is structural — both paths
+    * call the same
     * [[graft.ext.dedup.SemanticDedup.flagsFromAssigned]] kernel
     * (StreamingSpec pins concatenated stream output row-identical to
     * the batch operator). */
@@ -669,26 +599,16 @@ object StreamingEtl {
       outDir: String,
       checkpointDir: String,
       threshold: Double = 0.3,
-      probes: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // localCheckpoint: the assigned batch feeds the pair join and
-        // the output spine (the curationStream lesson)
-        val t = graft.ext.dedup.SemanticDedup
-          .assigned(batch, idCol, vecCol, coarse, fine, probes)
-          .localCheckpoint()
-        graft.ext.dedup.SemanticDedup
-          .flagsFromAssigned(t, evalAssigned, idCol, threshold)
-          .withColumn("__batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch_id")
-          .parquet(outDir)
-        ()
-      }
-      .start()
+      probes: Int = 2): StreamingQuery =
+    foreachBatchAppend(vecStream, checkpointDir) { (batch, batchId) =>
+      // localCheckpoint: the assigned batch feeds the pair join and
+      // the output spine (the curationStream lesson)
+      val t = graft.ext.dedup.SemanticDedup
+        .assigned(batch, idCol, vecCol, coarse, fine, probes)
+        .localCheckpoint()
+      writeBatch(graft.ext.dedup.SemanticDedup
+        .flagsFromAssigned(t, evalAssigned, idCol, threshold), batchId, outDir)
+    }
 
   /** Watermarked stream-stream join: each purchase matched to clicks
     * from the same user within the preceding hour. Both sides carry

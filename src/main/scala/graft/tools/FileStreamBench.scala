@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.streaming.StreamingEtl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -80,7 +81,7 @@ object FileStreamBench {
     val workDir = if (args.length > 0) args(0) else "/root/synth"
     val sf = if (args.length > 1) args(1).toDouble else 31.6
     val out = if (args.length > 2) args(2) else s"FILESTREAM_BENCH_sf$sf.json"
-    val docBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "5").toInt
+    val docBatches = 5
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -116,9 +117,9 @@ object FileStreamBench {
       val embBatches = math.max(2L, nEmb / math.max(1L, perDoc)).toInt
       val perEmb = math.max(1L, nEmb / embBatches)
       // cache key = the slicing parameters, not mere existence: a
-      // changed SPARK_GRAFT_STREAM_BATCHES or a regenerated rung
-      // corpus must re-slice, or the JSON would label stale slices
-      // with the new batch counts
+      // changed batch count or a regenerated rung corpus must
+      // re-slice, or the JSON would label stale slices with the new
+      // batch counts
       val marker = new java.io.File(s"$streamRoot/_DONE")
       val sig = s"docBatches=$docBatches nDocs=$nDocs nEmb=$nEmb"
       val cachedSig =
@@ -216,17 +217,13 @@ object FileStreamBench {
             BatchPoint(bid, rows, sec, st, w.shuffleWriteBytes, w.shuffleReadBytes,
               w.memSpillBytes, w.diskSpillBytes)
         }
-        // at-rest state curve from the __batch_id partitions
+        // at-rest state curve from the committed __batch_id partitions
         val atRest = stateDir.map { sd =>
-          val deltas =
-            try spark.read.parquet(sd)
-              .groupBy(col("__batch_id").cast("long").as("__batch_id"))
+          val deltas = StreamingEtl.priorState(spark, sd, Long.MaxValue)
+            .map(_.groupBy(col("__batch_id").cast("long").as("__batch_id"))
               .agg(count(lit(1)).as("n"))
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-            catch { case e: Throwable =>
-              println(s"[fsbench] state read at $sd failed: ${e.toString.take(120)}")
-              Map.empty[Long, Long]
-            }
+              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+            .getOrElse(Map.empty[Long, Long])
           batches.map(_.batchId).scanLeft(0L) {
             case (acc, bid) => acc + deltas.getOrElse(bid, 0L)
           }.drop(1)
@@ -241,8 +238,6 @@ object FileStreamBench {
       df.writeStream.format("noop")
         .option("checkpointLocation", tmp + "/ck")
         .outputMode("update").start()
-
-    import graft.streaming.StreamingEtl
 
     // static sides / frozen models, built BEFORE the measured loop
     // (production posture: reference data and models live at rest)

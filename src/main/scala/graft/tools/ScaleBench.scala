@@ -334,7 +334,7 @@ object ScaleBench {
       .getOrElse(System.getProperty("java.io.tmpdir"))
     def freeGb: Double =
       math.rint(new java.io.File(scratchDir).getUsableSpace / 1e8) / 10
-    val minFreeGb = sys.env.getOrElse("SPARK_GRAFT_MIN_FREE_GB", "20").toDouble
+    val minFreeGb = 20.0
     // footprint-aware floors: rows whose own transient scratch exceeds
     // the generic floor would pass the gate and then ENOSPC mid-row —
     // the exact-string n-gram form shuffles ~27 GB of gram strings at
@@ -379,14 +379,6 @@ object ScaleBench {
         initialPartsFor(sf).toString)
       spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         s"${advisoryMbFor(sf)}m")
-      // experiment passthrough (isolated tuning runs only — a full
-      // ladder records its knobs in the artifact and must not carry
-      // silent overrides): SPARK_GRAFT_SQLCONF=k=v,k=v
-      sys.env.get("SPARK_GRAFT_SQLCONF").foreach(
-        _.split(",").filter(_.contains("=")).foreach { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          spark.conf.set(k, v)
-        })
       val builds = if (only.isEmpty) measureBuilds(dir) else Seq.empty
       val qs = selected.map { name =>
         val fn = graft.SparkEntry.queries(name)

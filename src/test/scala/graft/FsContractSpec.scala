@@ -3,12 +3,15 @@ package graft
 import java.time.Instant
 import graft.sinks.ParquetUpsertSink
 import graft.sources.JsonLinesSource
+import graft.streaming.StreamingEtl
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Abstract-FileSystem contract: the source listing, the Spark JSON
-  * read, and the crash-safe upsert promote all run against a NON-file
+  * read, the crash-safe upsert promote and a state-carrying stream's
+  * committed-state read all run against a NON-file
   * scheme ([[GraftTestFileSystem]], `graftfs://`) — proving the
   * engine's storage access goes through the Hadoop FileSystem API
   * everywhere (the path an `s3a://` deployment takes), not through
@@ -75,6 +78,30 @@ class FsContractSpec extends SparkSpec {
       val fs = new Path(table).getFileSystem(conf)
       assert(!fs.exists(new Path(table + "__staging")))
       assert(!fs.exists(new Path(table + "__backup")))
+    }
+  }
+
+  test("cross-batch n-gram dedup reads its at-rest state through a non-file scheme") {
+    implicit val sqlCtx = spark.sqlContext
+    withScheme { base =>
+      val passage = "alpha bravo charlie delta echo foxtrot"
+      val input = MemoryStream[(Long, String)]
+      val q = StreamingEtl.ngramDedupStream(
+        input.toDS().toDF("doc_id", "text"), "doc_id", "text",
+        s"$base/out", s"$base/seen", tmpDir("graft_fs_ngram_ckpt"), gramTokens = 3)
+      input.addData((1L, s"$passage golf"))
+      q.processAllAvailable()
+      input.addData((2L, s"hotel $passage"))
+      q.processAllAvailable()
+      q.stop()
+      val fs = new Path(base).getFileSystem(conf)
+      assert(fs.isInstanceOf[GraftTestFileSystem], fs.getClass.getName)
+      assert(fs.exists(new Path(s"$base/seen/__batch_id=0")))
+      // batch 2 saw every passage gram in batch 1's committed state:
+      // only its fresh leading token survives
+      val d2 = spark.read.parquet(s"$base/out").filter($"doc_id" === 2L)
+        .select($"n_tokens", $"n_kept", $"text_kept").as[(Long, Long, String)].collect()
+      assert(d2.toSeq == Seq((7L, 1L, "hotel")), d2.mkString(";"))
     }
   }
 }

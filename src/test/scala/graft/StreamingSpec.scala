@@ -17,6 +17,21 @@ class StreamingSpec extends SparkSpec {
     Files.write(Paths.get(s"$dir/$name"),
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
 
+  /** Simulate the crash window of the last micro-batch: its output
+    * landed but its streaming commit marker did not, so a restart
+    * replays it under the same batch id. */
+  private def dropLastCommit(checkpointDir: String): Unit = {
+    val commitDir = new java.io.File(s"$checkpointDir/commits")
+    val commits = commitDir.listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
+    assert(commits.nonEmpty)
+    val last = commits.last.getName
+    assert(commits.last.delete())
+    // the checksum sibling too, or the local FS refuses the rewrite
+    val crc = new java.io.File(commitDir, s".$last.crc")
+    if (crc.exists()) crc.delete()
+  }
+
   test("AvailableNow drain is incremental and exactly-once across runs") {
     val root = tmpDir("stream")
     val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
@@ -277,23 +292,61 @@ class StreamingSpec extends SparkSpec {
     writeLanding(landing, "b1.json",
       """{"doc_id":1,"text":"the quick brown fox jumps over the lazy dog tonight"}""")
     runOnce()
-    // simulate the crash window: parquet landed but the streaming
-    // commit marker didn't — on restart the engine replays the batch,
-    // and the per-batch dynamic partition overwrite must rewrite, not
-    // append
-    val commitDir = new java.io.File(s"$root/ckpt/commits")
-    val commits = commitDir.listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-    assert(commits.nonEmpty)
-    val last = commits.last.getName
-    assert(commits.last.delete())
-    // the checksum sibling too, or the local FS refuses the rewrite
-    val crc = new java.io.File(commitDir, s".$last.crc")
-    if (crc.exists()) crc.delete()
+    // on restart the engine replays the batch, and the per-batch
+    // dynamic partition overwrite must rewrite, not append
+    dropLastCommit(s"$root/ckpt")
     runOnce()
     val out = spark.read.parquet(s"$root/corpus")
       .select($"doc_id").collect().map(_.getLong(0)).toSeq
     assert(out == Seq(1L), s"replay duplicated rows: $out")
+  }
+
+  test("a replayed n-gram dedup micro-batch leaves output and seen-state equal to the fault-free run") {
+    val passage = "alpha bravo charlie delta echo foxtrot golf hotel"
+    def doc(id: Long, text: String) = s"""{"doc_id":$id,"text":"$text"}"""
+    // two batches (the second re-uses the first one's passage, so its
+    // verdicts depend on the at-rest state), then optionally the
+    // replay of the second
+    def run(root: String, replaySecond: Boolean) = {
+      val landing = s"$root/landing"
+      new java.io.File(landing).mkdirs()
+      def runOnce(): Unit = {
+        val stream = spark.readStream.schema("doc_id LONG, text STRING").json(landing)
+        val q = StreamingEtl.ngramDedupStream(stream, "doc_id", "text",
+          s"$root/out", s"$root/seen", s"$root/ckpt", gramTokens = 5)
+        q.processAllAvailable()
+        q.stop()
+      }
+      writeLanding(landing, "b1.json",
+        doc(1, s"$passage india juliet"), doc(2, s"kilo lima $passage"))
+      runOnce()
+      writeLanding(landing, "b2.json",
+        doc(3, s"mike november $passage oscar"),
+        doc(4, "papa quebec romeo sierra tango uniform victor whiskey"))
+      runOnce()
+      if (replaySecond) {
+        dropLastCommit(s"$root/ckpt")
+        runOnce()
+        assert(new java.io.File(s"$root/ckpt/commits/1").exists(),
+          "the replayed batch did not commit")
+      }
+      val out = spark.read.parquet(s"$root/out")
+        .select($"doc_id", $"n_tokens", $"n_kept", $"text_kept", $"__batch_id")
+        .orderBy($"doc_id").collect().toSeq
+      val seen = spark.read.parquet(s"$root/seen")
+        .select($"gram", $"__batch_id").orderBy($"gram").collect().toSeq
+      (out, seen)
+    }
+    val (out, seen) = run(tmpDir("ngramreplay"), replaySecond = true)
+    val (cleanOut, cleanSeen) = run(tmpDir("ngramclean"), replaySecond = false)
+    assert(out.map(_.getLong(0)) == Seq(1L, 2L, 3L, 4L), s"replay duplicated rows: $out")
+    assert(seen.distinct.length == seen.length, s"replay duplicated state: $seen")
+    assert(out == cleanOut, s"replay=$out clean=$cleanOut")
+    assert(seen == cleanSeen, s"replay=$seen clean=$cleanSeen")
+    // the replayed batch saw the first batch's state, not its own delta
+    val d3 = out.find(_.getLong(0) == 3L).get
+    assert(d3.getLong(2) < d3.getLong(1) && !d3.getString(3).contains("charlie"), d3.toString)
+    assert(out.find(_.getLong(0) == 4L).get.getLong(2) == 8L)
   }
 
   test("foreachBatch upsert sink is last-write-wins across micro-batches") {
