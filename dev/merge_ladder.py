@@ -109,9 +109,6 @@ merged = {
                for k, v in r.get("builds", {}).items()},
     "queries": queries,
 }
-for r in rungs:
-    if r and "streaming_scaled" in r:
-        merged["streaming_scaled"] = r["streaming_scaled"]
 
 with open(out_path, "w") as f:
     json.dump(merged, f)

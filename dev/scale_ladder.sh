@@ -6,7 +6,8 @@
 #
 # Each rung writes SCALE_RUNG_sf<sf>.json; dev/merge_ladder.py folds
 # the rung artifacts into one SCALE_BENCH-shaped file with cross-rung
-# ratios. Streaming runs only in the sf10 rung's process; simhash is
+# ratios. The streaming bench runs once, in its own JVM after the sf10
+# rung (FILESTREAM_BENCH_sf10.0.json); simhash is
 # skipped at sf100 because the auto scheme there selects b=5 — the
 # exact plan docs_simhash_pairs_wide already measures with pinned
 # chunks at every rung, so the cell would double-measure it (the old
@@ -21,8 +22,6 @@ cd "$(dirname "$0")/.."
 
 for SF in 10.0 31.6 100.0; do
   echo "=== rung sf$SF ($(date -u +%H:%M:%S)) ==="
-  STREAM=off
-  [ "$SF" = "10.0" ] && STREAM=on
   # a stale rung artifact from a previous run must never be merged as
   # fresh data: a rung JVM that dies before writing its output leaves
   # the old file in place otherwise
@@ -32,13 +31,20 @@ for SF in 10.0 31.6 100.0; do
   # into the next rung's disk budget
   RUNG_TMP=$(mktemp -d /tmp/graft_rung_XXXX)
   SPARK_GRAFT_OUT="SCALE_RUNG_sf$SF.json" \
-  SPARK_GRAFT_STREAMING=$STREAM \
   SPARK_DRIVER_MEM=24g \
   SPARK_LOCAL_DIRS="$RUNG_TMP" \
   JAVA_TOOL_OPTIONS="-Djava.io.tmpdir=$RUNG_TMP" \
     sbt -batch "runMain graft.tools.ScaleBench $WORK $SF" \
     > "ladder_sf$SF.log" 2>&1
   echo "rung sf$SF exit=$? ($(date -u +%H:%M:%S))"
+  if [ "$SF" = "10.0" ]; then
+    SPARK_DRIVER_MEM=24g \
+    SPARK_LOCAL_DIRS="$RUNG_TMP" \
+    JAVA_TOOL_OPTIONS="-Djava.io.tmpdir=$RUNG_TMP" \
+      sbt -batch "runMain graft.tools.StreamBench $WORK $SF" \
+      > "stream_sf$SF.log" 2>&1
+    echo "streaming sf$SF exit=$? ($(date -u +%H:%M:%S))"
+  fi
   rm -rf "$RUNG_TMP"
 done
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: times every registered query at the scale
   * factor in SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -64,7 +65,7 @@ object Bench {
 
     def loadAvg: Double =
       try java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
     val loadBefore = loadAvg
 
     // warmup outside the measured loop: one aggregation query and one
@@ -72,7 +73,7 @@ object Bench {
     // families lands before timing starts
     Seq("q1_pricing_summary", "docs_token_stats").foreach { q =>
       try graft.tools.Force.rows(SparkEntry.queries(q)(spark, sfDir))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     // at-rest / index builds, timed EXPLICITLY before the query loop:
@@ -103,7 +104,7 @@ object Bench {
           val sec = (System.nanoTime() - t0) / 1e9
           runs += sec -> probe.snapshot().since(before)
         }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           err = Some(e.toString.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)) }
         // Caches are KEPT across queries: the round-1 baseline was
         // measured that way, and same-methodology numbers are the ones
@@ -145,14 +146,15 @@ object Bench {
       .mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     val rc = results.count(_._3.isDefined)
-    // streaming micro-bench AFTER the query loop (temp-dir sinks; its
-    // cost never lands in any query's measured time)
+    // streaming bench AFTER the query loop (scratch slices and sinks;
+    // its cost never lands in any query's measured time)
     val streaming =
-      if (only.isEmpty) graft.tools.StreamBench.measure(spark, sfDir)
-      else Seq.empty
+      if (only.isEmpty) graft.tools.StreamBench.json(graft.tools.StreamBench.measure(
+        spark, sfDir, graft.tools.Scratch.dir("graft_sbench_slices"), probe))
+      else "{}"
     val detail = s"""{"reps":$reps,"queries":$qs,"rep_times":$allReps,""" +
       s""""build":${graft.tools.AtRestBuilds.json(buildResults)},""" +
-      s""""streaming":${graft.tools.StreamBench.json(streaming)},""" +
+      s""""streaming":$streaming,""" +
       s""""load_before":$loadBefore,"load_after":$loadAvg,"errors":$errs,"sf":"$sfDir",""" +
       s""""layers":$layers}"""
     try {
@@ -172,7 +174,7 @@ object Bench {
     } catch {
       // the detail file is best-effort (the stdout line is the record
       // of note) — but never swallow fatal errors
-      case scala.util.control.NonFatal(_) => ()
+      case NonFatal(_) => ()
     }
     val failedField =
       if (failedQs.isEmpty) "" else s""""failed_queries":${failedQs.mkString("{", ",", "}")},"""

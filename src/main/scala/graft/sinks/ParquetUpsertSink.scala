@@ -117,10 +117,10 @@ object ParquetUpsertSink {
     * move the staging dir INSIDE the still-live table dir. Every
     * transition goes through these, which throw on false so a failed
     * step aborts in a state [[recover]] models. */
-  private def renameOrThrow(f: FileSystem, src: Path, dst: Path): Unit =
+  private[graft] def renameOrThrow(f: FileSystem, src: Path, dst: Path): Unit =
     if (!f.rename(src, dst))
       throw new java.io.IOException(s"rename failed: $src -> $dst")
-  private def deleteOrThrow(f: FileSystem, p: Path): Unit =
+  private[graft] def deleteOrThrow(f: FileSystem, p: Path): Unit =
     if (!f.delete(p, true) && f.exists(p))
       throw new java.io.IOException(s"delete failed: $p")
 

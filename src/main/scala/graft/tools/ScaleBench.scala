@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Scale-validation bench (round-4 verdict task 1): measure the
   * scaling CURVE of the heavy operators instead of arguing it.
@@ -234,11 +235,11 @@ object ScaleBench {
           s"${unknown.toSeq.sorted.mkString(",")} (valid: ${heavy.mkString(",")})")
     }
     // SPARK_GRAFT_SKIP=a,b drops named queries but — unlike ONLY —
-    // keeps the run FULL: at-rest builds and the streaming section
-    // still run and the skip is recorded in the artifact note. Needed
-    // because the sf100 rung deliberately excludes docs_simhash_pairs
-    // (its fixed pigeonhole keyspace makes post-cap candidates ∝ n²,
-    // so the cell would measure the cap, not the engine) yet the
+    // keeps the run FULL: the at-rest builds still run and the skip is
+    // recorded in the artifact note. Needed because the sf100 rung
+    // deliberately excludes docs_simhash_pairs (its fixed pigeonhole
+    // keyspace makes post-cap candidates ∝ n², so the cell would
+    // measure the cap, not the engine) yet the
     // round-6 verdict asks for sf100 BUILD cells, which ONLY-mode
     // reruns skip.
     val skip = sys.env.get("SPARK_GRAFT_SKIP")
@@ -403,7 +404,7 @@ object ScaleBench {
               val rows = graft.tools.Force.rows(fn(spark, dir))
               Some((rows, (System.nanoTime() - t0) / 1e9))
             }
-            catch { case e: Throwable =>
+            catch { case NonFatal(e) =>
               err = Some(e.toString.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200))
               None
             }
@@ -426,7 +427,7 @@ object ScaleBench {
         val (stats, recall) =
           if (err.isEmpty)
             try mineStatsFor(spark, dir, sf, name)
-            catch { case _: Throwable => (None, None) }
+            catch { case NonFatal(_) => (None, None) }
           else (None, None)
         // hash-collision accounting for the hashed gram key (round-10
         // verdict task 6): one untimed stats pass per rung turns the
@@ -442,7 +443,7 @@ object ScaleBench {
             try Some(graft.ext.dedup.BlockDedup.gramHashStats(
               graft.Tables(spark, dir, "documents"), "doc_id", "text",
               graft.CurationQueries.NgramW))
-            catch { case _: Throwable => None }
+            catch { case NonFatal(_) => None }
           else None
         // release the row's scratch before the next row: reusable
         // tables (the events-sized upsert targets) are wiped
@@ -477,7 +478,7 @@ object ScaleBench {
     if (only.isEmpty) AtRestBuilds.measure(spark, dirW)
     selected.foreach { q =>
       try graft.tools.Force.rows(graft.SparkEntry.queries(q)(spark, dirW))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     val measured = rungs.map { case (sf, (dir, gen)) =>
@@ -500,25 +501,6 @@ object ScaleBench {
         s""""simhash_chunks":${
           graft.ext.dedup.NearDup.simhashSchemeFor(SynthGen.nDocs(sf))}}"""
     }.mkString("[", ",", "]")
-
-    // streaming at rung scale (round-6 verdict task 6): the BENCH
-    // streaming section drives 5 × ~1200-row batches; here the same
-    // paths run against the ladder rung nearest sf10 — 500 k docs =
-    // 100 k-row batches, where bounded-vs-exact state pressure is real
-    // SPARK_GRAFT_STREAMING=off skips the section: the per-rung-JVM
-    // ladder (dev/scale_ladder.sh) runs streaming only in the sf10
-    // rung's process — without the toggle every isolated rung would
-    // re-run it at its own scale
-    val streamingJson =
-      if (only.nonEmpty ||
-          sys.env.get("SPARK_GRAFT_STREAMING").contains("off")) ""
-      else rungs.map(_._1).filter(_ >= 1.0).minByOption(sf => math.abs(sf - 10.0))
-        .map { sf =>
-          val dir = s"$workDir/sf$sf"
-          System.err.println(s"[scalebench] streaming at sf$sf")
-          val rs = StreamBench.measure(spark, dir)
-          s""""streaming_scaled":{"sf":$sf,"paths":${StreamBench.json(rs)}},"""
-        }.getOrElse("")
 
     val qJson = selected.map { name =>
       val points = measured.map { case (_, _, _, qs) => qs.find(_.name == name).get }
@@ -590,7 +572,7 @@ object ScaleBench {
         s""""note":"filtered rerun: at-rest builds skipped; first rep of """ +
           s"""build-dependent queries absorbs build cost","""
       else if (skip.nonEmpty)
-        s""""note":"full run (builds + streaming) with queries skipped by """ +
+        s""""note":"full run (builds) with queries skipped by """ +
           s"""design: ${skip.toSeq.sorted.mkString(",")}","""
       else ""
     // per-rung scratch summary: free at rung start (first measured
@@ -615,7 +597,7 @@ object ScaleBench {
         s""""scratch":$scratchJson,""" +
         s""""heap":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",""" +
         s""""gen_sec":[${measured.map(m => ms(m._2)).mkString(",")}],""" +
-        s""""codebook_residency":$codebookJson,$streamingJson""" +
+        s""""codebook_residency":$codebookJson,""" +
         s""""builds":$buildsJson,"queries":$qJson}"""
     // a filtered rerun must not clobber the full committed artifact;
     // SPARK_GRAFT_OUT redirects any run (e.g. the sf100 extension

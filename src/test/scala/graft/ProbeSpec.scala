@@ -53,7 +53,7 @@ class ProbeSpec extends SparkSpec with BeforeAndAfterAll {
     val both = s2.since(s0)
     assert(both.shuffleWriteBytes == first.shuffleWriteBytes)
     assert(both.tasks == first.tasks + second.tasks)
-    // the batch split FileStreamBench relies on: stages by submit time
+    // the batch split StreamBench relies on: stages by submit time
     assert(both.submittedIn(split, Long.MaxValue).stages == second.stages)
   }
 
