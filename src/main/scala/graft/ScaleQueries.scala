@@ -26,15 +26,6 @@ object ScaleQueries {
   private val dec = DecimalType(18, 6)
   private def dsum(e: Column): Column = sum(e.cast(dec)).cast("double")
 
-  /** Write the small `out` frame to a temp parquet and return a scan
-    * of it, so side-effectful setup (catalog tables) can be torn down
-    * before the frame is handed to the caller. */
-  private def materialize(out: DataFrame, tag: String): DataFrame = {
-    val dir = graft.tools.Scratch.dir(s"graft_$tag") + "/out"
-    out.write.parquet(dir)
-    out.sparkSession.read.parquet(dir)
-  }
-
   // ---------------------------------------------------------- salted join
 
   /** Skewed fact→dim join, salted. The fact side is events with an
@@ -137,7 +128,7 @@ object ScaleQueries {
   }
 
   private def qBucketedJoin(s: SparkSession, dir: String): DataFrame =
-    materialize(bucketedJoinPlan(s, dir), "bucketed")
+    graft.ext.dedup.NearDup.materializeAndRelease(bucketedJoinPlan(s, dir), "bucketed")
 
   private val qBucketedJoinSql =
     """SELECT o_orderpriority, COUNT(*) AS n_lines,

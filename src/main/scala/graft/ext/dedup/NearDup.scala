@@ -42,57 +42,6 @@ object NearDup {
     } finally caches.foreach(_.unpersist())
   }
 
-  /** Candidate-generation health of one LSH mining run — the numbers
-    * that tell you whether candidate mass is inflating super-linearly
-    * BEFORE the bill arrives (round-5 verdict task 7: the sf10 ladder
-    * rung went 13.5× for 3.16× data and nothing in the artifact could
-    * attribute it to candidate count vs verify cost vs shuffle).
-    * `candidates` is Σ c·(c−1)/2 over surviving buckets — exactly the
-    * within-bucket join's output mass, the quantity that must grow
-    * ~linearly with the corpus for LSH to be scale-safe. */
-  case class MineStats(
-      buckets: Long,          // distinct bucket keys
-      collidingBuckets: Long, // buckets with ≥ 2 members
-      maxBucket: Long,        // largest bucket (pre-cap)
-      droppedBuckets: Long,   // buckets over the skew cap (excluded)
-      candidatesPreCap: Long, // Σ c(c-1)/2 over ALL buckets
-      candidates: Long,       // Σ c(c-1)/2 over surviving buckets
-      survivors: Long) {      // verified output pairs
-    def json: String =
-      s"""{"buckets":$buckets,"colliding_buckets":$collidingBuckets,""" +
-        s""""max_bucket":$maxBucket,"dropped_buckets":$droppedBuckets,""" +
-        s""""candidates_pre_cap":$candidatesPreCap,"candidates":$candidates,""" +
-        s""""survivors":$survivors}"""
-  }
-
-  /** Materialize the pair output, compute [[MineStats]] from the
-    * bucket-size frame (one extra aggregation over the cached
-    * signatures — no re-mining), release the caches. */
-  private[graft] def materializeWithStats(
-      out: DataFrame, tag: String, caches: Seq[DataFrame],
-      bucketSizes: DataFrame, cap: Int): (DataFrame, MineStats) = {
-    val spark = out.sparkSession
-    try {
-      val dir = graft.tools.Scratch.dir(s"graft_$tag") + "/out"
-      out.write.parquet(dir)
-      val result = spark.read.parquet(dir)
-      // `/` is double division in Spark; the product is even so the
-      // long cast is exact (and c(c-1) stays far under 2^53)
-      val pairsOf = (col("c") * (col("c") - 1) / lit(2L)).cast("long")
-      val r = bucketSizes.agg(
-        count(lit(1)).as("b"),
-        coalesce(sum(when(col("c") >= 2, 1L).otherwise(0L)), lit(0L)).as("cb"),
-        coalesce(max(col("c")), lit(0L)).as("mx"),
-        coalesce(sum(when(col("c") > cap, 1L).otherwise(0L)), lit(0L)).as("db"),
-        coalesce(sum(pairsOf), lit(0L)).as("pre"),
-        coalesce(sum(when(col("c") <= cap, pairsOf).otherwise(lit(0L))), lit(0L))
-          .as("post")
-      ).head()
-      (result, MineStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), result.count()))
-    } finally caches.foreach(_.unpersist())
-  }
-
   // ----------------------------------------------------------- exact dedup
 
   /** Exact dedup on the normalized-content fingerprint; keeps the
@@ -139,49 +88,19 @@ object NearDup {
       rowsPerBand: Int = 4,
       threshold: Double = 0.5,
       maxBucketSize: Int = 1000): DataFrame = {
-    val (out, caches) = minhashPairsPlan(
+    val (out, caches, _) = minhashPairsPlanFull(
       docs, idCol, textCol, shingleSize, bands, rowsPerBand, threshold, maxBucketSize)
     materializeAndRelease(out, "minhash", caches: _*)
   }
 
-  /** [[minhashPairs]] plus its [[MineStats]] — same mining plan, one
-    * extra bucket-size aggregation over the cached signatures. */
-  def minhashPairsWithStats(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int = 2,
-      bands: Int = 16,
-      rowsPerBand: Int = 4,
-      threshold: Double = 0.5,
-      maxBucketSize: Int = 1000): (DataFrame, MineStats) = {
-    val (out, caches, sizes) = minhashPairsPlanFull(
-      docs, idCol, textCol, shingleSize, bands, rowsPerBand, threshold, maxBucketSize)
-    materializeWithStats(out, "minhash", caches, sizes, maxBucketSize)
-  }
-
-  /** The lazy plan behind [[minhashPairs]] plus its cache handles —
-    * exposed so plan-shape tests can assert on the MINING plan (the
-    * public method returns a scan of the materialized output). */
-  private[graft] def minhashPairsPlan(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int,
-      bands: Int,
-      rowsPerBand: Int,
-      threshold: Double,
-      maxBucketSize: Int): (DataFrame, Seq[DataFrame]) = {
-    val (out, caches, _) = minhashPairsPlanFull(
-      docs, idCol, textCol, shingleSize, bands, rowsPerBand, threshold, maxBucketSize)
-    (out, caches)
-  }
-
-  /** [[minhashPairsPlan]] + the (band,key) bucket-size frame `(band,
-    * sig, c)` the stats aggregate consumes — derived from the SAME
-    * cached signature frame, so reading it costs one explode + one
-    * hash aggregation, not a re-mine. */
-  private def minhashPairsPlanFull(
+  /** The lazy mining plan behind [[minhashPairs]], its cache handles
+    * (released by whoever materializes the plan) and the (band, key)
+    * bucket-size frame `(band, sig, c)` — derived from the SAME cached
+    * signature frame, so a candidate-stats pass over it costs one
+    * explode + one hash aggregation, not a re-mine. Plan-shape tests
+    * assert on this plan (the public method returns a scan of the
+    * materialized output). */
+  private[graft] def minhashPairsPlanFull(
       docs: DataFrame,
       idCol: String,
       textCol: String,
@@ -384,42 +303,14 @@ object NearDup {
       maxHamming: Int = 3,
       maxBucketSize: Int = 1000,
       numChunks: Int = 0): DataFrame = {
-    val (out, caches) =
-      simhashPairsPlan(docs, idCol, textCol, maxHamming, maxBucketSize, numChunks)
+    val (out, caches, _) =
+      simhashPairsPlanFull(docs, idCol, textCol, maxHamming, maxBucketSize, numChunks)
     materializeAndRelease(out, "simhash", caches: _*)
   }
 
-  /** [[simhashPairs]] plus its [[MineStats]] (see
-    * [[minhashPairsWithStats]]). */
-  def simhashPairsWithStats(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 1000,
-      numChunks: Int = 0): (DataFrame, MineStats) = {
-    val (out, caches, sizes) =
-      simhashPairsPlanFull(docs, idCol, textCol, maxHamming, maxBucketSize, numChunks)
-    materializeWithStats(out, "simhash", caches, sizes, maxBucketSize)
-  }
-
-  /** Lazy plan + cache handles behind [[simhashPairs]] (see
-    * [[minhashPairsPlan]]). */
-  private[graft] def simhashPairsPlan(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int,
-      maxBucketSize: Int,
-      numChunks: Int = 0): (DataFrame, Seq[DataFrame]) = {
-    val (out, caches, _) =
-      simhashPairsPlanFull(docs, idCol, textCol, maxHamming, maxBucketSize, numChunks)
-    (out, caches)
-  }
-
-  /** [[simhashPairsPlan]] + the (chunk,piece) bucket-size frame (see
-    * [[minhashPairsPlanFull]]). */
-  private def simhashPairsPlanFull(
+  /** Lazy plan, cache handles and (chunk, piece) bucket-size frame
+    * behind [[simhashPairs]] (see [[minhashPairsPlanFull]]). */
+  private[graft] def simhashPairsPlanFull(
       docs: DataFrame,
       idCol: String,
       textCol: String,

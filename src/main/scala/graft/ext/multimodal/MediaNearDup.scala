@@ -36,71 +36,10 @@ object MediaNearDup {
       maxHamming: Int = 3,
       maxBucketSize: Int = 1000,
       numChunks: Int = 0): DataFrame = {
-    val (out, caches, _) =
-      phashPairsPlanFull(docs, maxHamming, maxBucketSize, numChunks)
+    val hashes = Multimodal.dhashImages(Multimodal.phashCorpus(docs.sparkSession, docs))
+    val (out, caches, _) = NearDup.hammingPairsPlanFull(
+      hashes, docs.count(), maxHamming, maxBucketSize, numChunks)
     NearDup.materializeAndRelease(out, "phash", caches: _*)
-  }
-
-  /** [[phashPairs]] plus its candidate-generation [[NearDup.MineStats]]
-    * (the per-rung health numbers ScaleBench records). */
-  def phashPairsWithStats(
-      docs: DataFrame,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 1000,
-      numChunks: Int = 0): (DataFrame, NearDup.MineStats) = {
-    val (pairs, st, _) =
-      phashPairsWithStatsAndHashes(docs, maxHamming, maxBucketSize, numChunks)
-    (pairs, st)
-  }
-
-  /** [[phashPairsWithStats]] that additionally hands back a
-    * FILE-BACKED `(doc, sim)` hash frame, so the untimed ScaleBench
-    * stats+recall pass can derive [[plantedTruthFromHashes]] without
-    * re-running the dominant encode→decode→dHash pass a second time
-    * over the whole corpus. File-backed, not cached: the miner caches
-    * its input internally and `materializeWithStats` releases those
-    * caches on exit (`Dataset.cache()` returns the SAME object, so a
-    * caller-held cache of the identical frame is released WITH them —
-    * the first cut of this method returned an already-unpersisted
-    * frame and the recall pass silently re-decoded the corpus). The
-    * one decode pass happens during the scratch write; everything
-    * downstream re-reads ~16 bytes/doc of parquet. */
-  def phashPairsWithStatsAndHashes(
-      docs: DataFrame,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 1000,
-      numChunks: Int = 0): (DataFrame, NearDup.MineStats, DataFrame) =
-    minedWithStatsAndHashes(
-      Multimodal.dhashImages(Multimodal.phashCorpus(docs.sparkSession, docs)),
-      "phash", docs, maxHamming, maxBucketSize, numChunks)
-
-  private def minedWithStatsAndHashes(
-      hashed: DataFrame,
-      tag: String,
-      docs: DataFrame,
-      maxHamming: Int,
-      maxBucketSize: Int,
-      numChunks: Int): (DataFrame, NearDup.MineStats, DataFrame) = {
-    val spark = docs.sparkSession
-    val dir = graft.tools.Scratch.dir(s"graft_${tag}_hashes") + "/hashes"
-    hashed.write.parquet(dir)
-    val hashes = spark.read.parquet(dir)
-    val (out, caches, sizes) = NearDup.hammingPairsPlanFull(
-      hashes, docs.count(), maxHamming, maxBucketSize, numChunks)
-    val (pairs, st) =
-      NearDup.materializeWithStats(out, tag, caches, sizes, maxBucketSize)
-    (pairs, st, hashes)
-  }
-
-  private def phashPairsPlanFull(
-      docs: DataFrame,
-      maxHamming: Int,
-      maxBucketSize: Int,
-      numChunks: Int): (DataFrame, Seq[DataFrame], DataFrame) = {
-    val spark = docs.sparkSession
-    val hashes = Multimodal.dhashImages(Multimodal.phashCorpus(spark, docs))
-    NearDup.hammingPairsPlanFull(
-      hashes, docs.count(), maxHamming, maxBucketSize, numChunks)
   }
 
   /** Near-duplicate AUDIO pairs at `hamming <= maxHamming` over the
@@ -122,29 +61,12 @@ object MediaNearDup {
     NearDup.materializeAndRelease(out, "afp", caches: _*)
   }
 
-  /** [[audioFpPairs]] plus mine stats plus the FILE-BACKED hash frame
-    * (the [[phashPairsWithStatsAndHashes]] contract). */
-  def audioFpPairsWithStatsAndHashes(
-      docs: DataFrame,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 1000,
-      numChunks: Int = 0): (DataFrame, NearDup.MineStats, DataFrame) =
-    minedWithStatsAndHashes(
-      Multimodal.afpHashes(Multimodal.afpCorpus(docs.sparkSession, docs)),
-      "afp", docs, maxHamming, maxBucketSize, numChunks)
-
-  /** The TRUE planted-pair frame for recall measurement: every
-    * within-family pair whose formula-replayed hashes are within
-    * `maxHamming` (truth is scheme- and cap-independent — exactly
-    * what the miner can lose to skew caps or, at hamming > h·scheme
-    * bounds, never sees). Linear in the corpus: ≤ 6 pairs/family. */
-  def plantedTruth(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    plantedTruthFromHashes(
-      Multimodal.dhashImages(Multimodal.phashCorpus(docs.sparkSession, docs)),
-      maxHamming)
-
-  /** [[plantedTruth]] over an already-computed `(doc, sim)` hash
-    * frame — the share point for callers that just ran the miner. */
+  /** The TRUE planted-pair frame for recall measurement over a
+    * `(doc, sim)` hash frame: every within-family pair whose hashes
+    * are within `maxHamming` (truth is scheme- and cap-independent —
+    * exactly what the miner can lose to skew caps or, at hamming >
+    * h·scheme bounds, never sees). Linear in the corpus: ≤ 6
+    * pairs/family. */
   def plantedTruthFromHashes(hashes: DataFrame, maxHamming: Int): DataFrame = {
     val fam = hashes.select(col("doc"), col("sim"),
       (col("doc") / 4).cast("long").as("__fam"))

@@ -33,10 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object DataProfiler {
 
-  case class ColumnProfile(
-      column: String, nRows: Long, nNulls: Long, nDistinct: Long,
-      minValue: String, maxValue: String)
-
   /** One row per column: (column, n_rows, n_nulls, n_distinct,
     * min_value, max_value) — identical values to the single-aggregate
     * form (ProfilerSpec pins the parity). */

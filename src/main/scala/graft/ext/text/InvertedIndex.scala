@@ -144,7 +144,7 @@ object InvertedIndex {
   }
 
   /** The lazy plan behind [[tfidfPairs]] plus its cache handle — the
-    * minhashPairsPlan idiom, so plan-shape tests and the r14 plan
+    * minhashPairsPlanFull idiom, so plan-shape tests and the r14 plan
     * dumps can inspect the MINING plan (the public method returns a
     * scan of the materialized output). */
   private[graft] def tfidfPairsPlan(

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * pipelines: a LINEAR model over hashed token features, trained by
   * iterated corpus passes, scored corpus-wide with the weight vector
   * riding the plan. It complements (does not replace) the
-  * hand-weighted [[TextFunctions.qualityScore]] cheap gate.
+  * hand-weighted [[TextFunctions.qualityScoreFromTokens]] cheap gate.
   *
   * Model: batch subgradient descent on the perceptron loss with
   * class-balanced, harmonically-decayed steps, plus Gallant's POCKET

@@ -146,14 +146,9 @@ object TextFunctions {
   /** Heuristic document quality score in [0,1]: length saturation,
     * stopword density, punctuation/digit penalties, mean token length
     * sanity. Deterministic double arithmetic (oracle-replicable).
-    * Same staging note as [[langId]]: this form re-tokenizes per
-    * sub-term; hot callers project the token array first and use
-    * [[qualityScoreFromTokens]]. */
-  def qualityScore(text: Column): Column =
-    qualityScoreFromTokens(text, tokens(text))
-
-  /** [[qualityScore]] over an already-projected token-array column
-    * (`text` is still needed for the character-class ratios). */
+    * Takes the already-projected token array (`toks`, see the staging
+    * note on [[langId]]); `text` is still needed for the
+    * character-class ratios. */
   def qualityScoreFromTokens(text: Column, toks: Column): Column = {
     val nTok = size(toks).cast("double")
     val stopHits = vocabHits(toks, stopwords.flatMap(_._2)).cast("double")

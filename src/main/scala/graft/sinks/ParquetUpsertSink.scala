@@ -263,36 +263,35 @@ object ParquetUpsertSink {
   private def requireNonNullKeys(batch: DataFrame, key: String): Unit =
     require(batch.filter(col(key).isNull).isEmpty, nullKeyMessage(key))
 
-  /** Full-table merge-on-write upsert. */
+  /** Data files per upsert rewrite. Modest: entity tables are row-few
+    * relative to the event stream, and per-file FS metadata work
+    * dominates rewrite cost at small scale. */
+  private val OutputFiles = 8
+
+  /** Full-table merge-on-write upsert. Every write, the first into an
+    * empty table included, goes through [[stageAndPromote]]. */
   def upsert(
       spark: SparkSession,
       batch: DataFrame,
       tablePath: String,
       key: String,
-      orderCol: Option[String] = None,
-      outputFiles: Int = 8): Unit = {
+      orderCol: Option[String] = None): Unit = {
     recover(spark, tablePath)
     // the null-key invariant is enforced inside dedupBatch (folded
     // into its single probe aggregate on the orderCol path)
-    // modest file counts: entity tables are row-few relative to the
-    // event stream, and per-file FS metadata work dominates rewrite
-    // cost at small scale (outputFiles stays a knob for big tables).
+    val incoming = dedupBatch(batch, key, orderCol)
+    // the staged write reads the live table, so it can't overwrite it
+    // in place; an empty table has nothing to merge
+    val merged =
+      if (hasData(spark, tablePath)) merge(spark.read.parquet(tablePath), incoming, key)
+      else incoming
     // repartition, NOT coalesce: coalesce is a narrow dependency, so
-    // it fused the dedup/merge work INTO an outputFiles-way final
+    // it fused the dedup/merge work INTO an OutputFiles-way final
     // stage — at sf100 that ran the whole merge at 8-task parallelism
     // (the dominant share of the 36 GB spill, and an OOM under a
     // forced hash build). The round-robin exchange decouples compute
     // width from file count for one extra narrow-format pass.
-    val incoming = dedupBatch(batch, key, orderCol)
-    if (!hasData(spark, tablePath)) {
-      incoming.repartition(outputFiles).write.mode("overwrite").parquet(tablePath)
-      recordIo(countDataFiles(spark, tablePath), 0.0)
-      return
-    }
-    val existing = spark.read.parquet(tablePath)
-    val merged = merge(existing, incoming, key)
-    // can't overwrite a path while reading it
-    val promoteSec = stageAndPromote(spark, merged.repartition(outputFiles), tablePath)
+    val promoteSec = stageAndPromote(spark, merged.repartition(OutputFiles), tablePath)
     recordIo(countDataFiles(spark, tablePath), promoteSec)
   }
 
@@ -317,16 +316,11 @@ object ParquetUpsertSink {
   /** Partition-pruned upsert: merges only the partitions the batch
     * touches and dynamically overwrites just those.
     *
-    * Contract: by default the partition-column value of a key must be
-    * immutable across batches (true when it is derived from the key's
-    * own columns, e.g. `event_date = date(ts)` under a `(user_id, ts)`
-    * key). If keys CAN legitimately move between partitions (e.g. a
-    * corrected event date), pass `detectMovedKeys = true`: incoming
-    * keys are semi-joined against rows OUTSIDE the touched partitions
-    * (one extra scan of the un-touched table, broadcast batch keys) so
-    * the old copies are merged away, and partitions left empty by the
-    * move are physically dropped (dynamic overwrite cannot rewrite a
-    * partition absent from the output).
+    * Contract: the partition-column value of a key must be immutable
+    * across batches (true when it is derived from the key's own
+    * columns, e.g. `event_date = date(ts)` under a `(user_id, ts)`
+    * key). A key that moved to another partition would keep its old
+    * copy there: only the touched partitions are read and merged.
     */
   def upsertPartitioned(
       spark: SparkSession,
@@ -334,8 +328,7 @@ object ParquetUpsertSink {
       tablePath: String,
       key: String,
       partitionCol: String,
-      orderCol: Option[String] = None,
-      detectMovedKeys: Boolean = false): Unit = {
+      orderCol: Option[String] = None): Unit = {
     // null-key invariant enforced inside dedupBatch (one probe job)
     val incoming = dedupBatch(batch, key, orderCol).cache()
     try {
@@ -359,10 +352,10 @@ object ParquetUpsertSink {
       // never match — string form is also what names the directory.
       // NULL partition values are unsupported: hive writes them as the
       // __HIVE_DEFAULT_PARTITION__ directory, which this string
-      // comparison (and the emptied-partition delete below) would not
-      // match — fail loudly instead of merging the wrong partitions.
-      def partValues(df: DataFrame): Seq[String] = {
-        val vs = df.select(col(partitionCol).cast("string")).distinct()
+      // comparison would not match — fail loudly instead of merging
+      // the wrong partitions.
+      val touched: Seq[String] = {
+        val vs = incoming.select(col(partitionCol).cast("string")).distinct()
           .collect().map(r => Option(r.getString(0))).toSeq
         require(vs.forall(_.isDefined),
           s"null values in partition column '$partitionCol' are unsupported " +
@@ -370,15 +363,8 @@ object ParquetUpsertSink {
             "default them upstream")
         vs.flatten
       }
-      val touched = partValues(incoming)
-      val all = spark.read.parquet(tablePath)
-      val moved: Seq[String] =
-        if (!detectMovedKeys) Nil
-        else partValues(
-          all.filter(!col(partitionCol).cast("string").isInCollection(touched))
-            .join(broadcast(incoming.select(col(key))), Seq(key), "left_semi"))
-      val affected = touched ++ moved
-      val existing = all.filter(col(partitionCol).cast("string").isInCollection(affected))
+      val existing = spark.read.parquet(tablePath)
+        .filter(col(partitionCol).cast("string").isInCollection(touched))
       val merged = merge(existing.select(incoming.columns.toIndexedSeq.map(col): _*), incoming, key)
         .cache()
       try {
@@ -387,19 +373,6 @@ object ParquetUpsertSink {
           .option("partitionOverwriteMode", "dynamic")
           .mode("overwrite")
           .parquet(tablePath)
-        if (moved.nonEmpty) {
-          // a partition whose only rows moved away produces no output
-          // rows, so dynamic overwrite leaves its stale files — drop it
-          val survived = merged.select(col(partitionCol).cast("string"))
-            .distinct().collect().map(_.getString(0)).toSet
-          val emptied = affected.filterNot(survived.contains)
-          val f = fs(spark, tablePath)
-          emptied.foreach { v =>
-            f.delete(new Path(s"${tablePath.stripSuffix("/")}/$partitionCol=$v"), true)
-          }
-        }
-        // count AFTER the stale-partition cleanup: a pre-delete count
-        // would include files removed on the next line
         recordIo(countDataFiles(spark, tablePath), 0.0)
       } finally merged.unpersist()
     } finally incoming.unpersist()
@@ -416,8 +389,8 @@ object ParquetUpsertSink {
     * Why not the `max_by(struct(all columns), __pri)` aggregate this
     * replaces: (a) its var-length buffer forced sort-based
     * aggregation over union-of-both-sides row mass, and (b) the
-    * write-side `coalesce(outputFiles)` narrowed the FINAL stage, so
-    * that sort-aggregation ran at outputFiles-way parallelism —
+    * write-side `coalesce(OutputFiles)` narrowed the FINAL stage, so
+    * that sort-aggregation ran at OutputFiles-way parallelism —
     * together the dominant share of the sf100 upsert cells' 36-45 GB
     * spill (the coalesce is now a repartition — see [[upsert]]).
     * The batch-keys side is corpus-LINEAR, so the join carries no

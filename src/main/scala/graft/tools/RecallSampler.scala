@@ -153,21 +153,14 @@ object RecallSampler {
     finally truth.unpersist()
   }
 
-  /** Recall of the perceptual-hash miner against the corpus's OWN
-    * planted families (the phash corpus plants its near-dups by
-    * construction — doc_id/4 families — so no SynthGen pair table is
-    * involved): truth is every within-family pair at exact hamming
-    * ≤ 3, scheme- and cap-independent. */
-  def phashRecall(spark: SparkSession, dir: String, pairs: DataFrame): Recall =
-    phashRecallFromHashes(
-      graft.ext.multimodal.Multimodal.dhashImages(
-        graft.ext.multimodal.Multimodal.phashCorpus(
-          spark, graft.Tables(spark, dir, "documents"))),
-      pairs)
-
-  /** [[phashRecall]] over an already-computed hash frame (the miner
-    * just produced one — re-running the corpus-wide decode pass for
-    * truth would double the untimed stats pass at every rung). */
+  /** Recall of a hamming miner over the image or audio corpus
+    * against the corpus's OWN planted families (the media corpora
+    * plant their near-dups by construction — doc_id/4 families — so no
+    * SynthGen pair table is involved): truth is every within-family
+    * pair of `hashes` at exact hamming ≤ 3, scheme- and
+    * cap-independent. Pass the hash frame the miner just consumed —
+    * re-running the corpus-wide decode pass for truth would double the
+    * untimed stats pass at every rung. */
   def phashRecallFromHashes(hashes: DataFrame, pairs: DataFrame): Recall = {
     val truth = graft.ext.multimodal.MediaNearDup
       .plantedTruthFromHashes(hashes, maxHamming = 3)

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.ext.dedup.NearDup
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** Scale-validation bench (round-4 verdict task 1): measure the
@@ -25,9 +26,9 @@ import scala.util.control.NonFatal
   *  - every measured query records shuffle read/write bytes and
   *    memory/disk spill from the fastest rep's task metrics, so
   *    memory-pressure onset and shuffle growth are visible per rung;
-  *  - the LSH pair miners additionally record [[NearDup.MineStats]]
-  *    (bucket count, max bucket, candidate mass pre/post skew-cap,
-  *    survivors) from one untimed stats pass, so super-linearity is
+  *  - the LSH pair miners additionally record [[MineStats]] (bucket
+  *    count, max bucket, candidate mass pre/post skew-cap, survivors)
+  *    from one untimed stats pass, so super-linearity is
   *    attributable to candidate inflation vs verify cost vs shuffle;
   *  - the upsert queries record files written + promote seconds
   *    ([[graft.sinks.ParquetUpsertSink.ioStats]]), separating commit/
@@ -156,13 +157,67 @@ object ScaleBench {
 
   private case class QueryPoint(
       name: String, err: Option[String], best: Option[Rep],
-      mineStats: Option[graft.ext.dedup.NearDup.MineStats],
+      mineStats: Option[MineStats],
       recall: Option[RecallSampler.Recall],
       gramStats: Option[graft.ext.dedup.BlockDedup.GramHashStats] = None,
       scratchFreeGb: Option[Double] = None)
 
+  /** Candidate-generation health of one LSH mining run — the numbers
+    * that tell you whether candidate mass is inflating super-linearly
+    * BEFORE the bill arrives (round-5 verdict task 7: the sf10 ladder
+    * rung went 13.5× for 3.16× data and nothing in the artifact could
+    * attribute it to candidate count vs verify cost vs shuffle).
+    * `candidates` is Σ c·(c−1)/2 over surviving buckets — exactly the
+    * within-bucket join's output mass, the quantity that must grow
+    * ~linearly with the corpus for LSH to be scale-safe. */
+  private[graft] case class MineStats(
+      buckets: Long,          // distinct bucket keys
+      collidingBuckets: Long, // buckets with ≥ 2 members
+      maxBucket: Long,        // largest bucket (pre-cap)
+      droppedBuckets: Long,   // buckets over the skew cap (excluded)
+      candidatesPreCap: Long, // Σ c(c-1)/2 over ALL buckets
+      candidates: Long,       // Σ c(c-1)/2 over surviving buckets
+      survivors: Long) {      // verified output pairs
+    def json: String =
+      s"""{"buckets":$buckets,"colliding_buckets":$collidingBuckets,""" +
+        s""""max_bucket":$maxBucket,"dropped_buckets":$droppedBuckets,""" +
+        s""""candidates_pre_cap":$candidatesPreCap,"candidates":$candidates,""" +
+        s""""survivors":$survivors}"""
+  }
+
+  /** Materialize one miner's lazy plan — the `(pairs, caches,
+    * bucketSizes)` triple a `NearDup.*PairsPlanFull` builder returns —
+    * with its [[MineStats]]: one aggregation over the bucket-size frame
+    * (it reads the plan's cached signatures, which the pair write then
+    * reuses — no re-mining), then [[NearDup.materializeAndRelease]]
+    * writes, reads back and releases the caches. `cap` is the
+    * builder's `maxBucketSize`. */
+  private[graft] def materializeWithStats(
+      plan: (DataFrame, Seq[DataFrame], DataFrame), tag: String, cap: Int)
+      : (DataFrame, MineStats) = {
+    import org.apache.spark.sql.functions._
+    val (out, caches, bucketSizes) = plan
+    // `/` is double division in Spark; the product is even so the
+    // long cast is exact (and c(c-1) stays far under 2^53)
+    val pairsOf = (col("c") * (col("c") - 1) / lit(2L)).cast("long")
+    val r =
+      try bucketSizes.agg(
+        count(lit(1)).as("b"),
+        coalesce(sum(when(col("c") >= 2, 1L).otherwise(0L)), lit(0L)).as("cb"),
+        coalesce(max(col("c")), lit(0L)).as("mx"),
+        coalesce(sum(when(col("c") > cap, 1L).otherwise(0L)), lit(0L)).as("db"),
+        coalesce(sum(pairsOf), lit(0L)).as("pre"),
+        coalesce(sum(when(col("c") <= cap, pairsOf).otherwise(lit(0L))), lit(0L))
+          .as("post")
+      ).head()
+      catch { case NonFatal(e) => caches.foreach(_.unpersist()); throw e }
+    val pairs = NearDup.materializeAndRelease(out, tag, caches: _*)
+    (pairs, MineStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getLong(4), r.getLong(5), pairs.count()))
+  }
+
   /** The registered LSH miners' exact parameters, replayed through
-    * the WithStats entry points for the untimed candidate-stats pass;
+    * their lazy plan builders for the untimed candidate-stats pass;
     * the mined pair frame additionally feeds the planted-pair recall
     * sampler (round-6 verdict task 5 — the skew caps drop buckets at
     * a recall cost that was never measured per rung). SemDeDup has no
@@ -170,42 +225,47 @@ object ScaleBench {
     * re-run. */
   private def mineStatsFor(
       spark: SparkSession, dir: String, sf: Double, name: String)
-      : (Option[graft.ext.dedup.NearDup.MineStats], Option[RecallSampler.Recall]) = {
-    import graft.ext.dedup.NearDup
+      : (Option[MineStats], Option[RecallSampler.Recall]) = {
+    import graft.ext.multimodal.Multimodal
+    val cap = 1000 // every registered miner's maxBucketSize
+    def docs = graft.Tables(spark, dir, "documents")
+    def simhashRow(numChunks: Int) = {
+      val (pairs, st) = materializeWithStats(NearDup.simhashPairsPlanFull(
+        docs, "doc_id", "text", maxHamming = 3, cap, numChunks), "simhash", cap)
+      (Some(st), Some(RecallSampler.simhashRecall(spark, dir, sf, pairs)))
+    }
+    // the image and audio rows share one hash frame between the miner
+    // and the planted truth — the decode pass is the row's dominant
+    // cost and must not run twice per rung. It is written to scratch
+    // and read back, not cached: the miner caches its input and
+    // materializeAndRelease unpersists it, and Dataset.cache() returns
+    // the SAME object, so a caller-held cache of the frame would be
+    // released with it and the truth pass would silently re-decode
+    def hashRow(tag: String, hashed: DataFrame) = {
+      val path = Scratch.dir(s"graft_${tag}_hashes") + "/hashes"
+      hashed.write.parquet(path)
+      val hashes = spark.read.parquet(path)
+      val (pairs, st) = materializeWithStats(NearDup.hammingPairsPlanFull(
+        hashes, docs.count(), maxHamming = 3, cap, numChunks = 0), tag, cap)
+      (Some(st), Some(RecallSampler.phashRecallFromHashes(hashes, pairs)))
+    }
     name match {
       case "docs_minhash_pairs" =>
-        val (pairs, st) = NearDup.minhashPairsWithStats(
-          graft.Tables(spark, dir, "documents"), "doc_id", "text",
-          shingleSize = 2, bands = 16, rowsPerBand = 4, threshold = 0.5)
+        val (pairs, st) = materializeWithStats(NearDup.minhashPairsPlanFull(
+          docs, "doc_id", "text", shingleSize = 2, bands = 16, rowsPerBand = 4,
+          threshold = 0.5, cap), "minhash", cap)
         (Some(st), Some(RecallSampler.minhashRecall(spark, dir, sf, pairs)))
-      case "docs_simhash_pairs" =>
-        val (pairs, st) = NearDup.simhashPairsWithStats(
-          graft.Tables(spark, dir, "documents"), "doc_id", "text", maxHamming = 3)
-        (Some(st), Some(RecallSampler.simhashRecall(spark, dir, sf, pairs)))
-      case "docs_simhash_pairs_wide" =>
-        // the registered wide row's exact parameters (numChunks = 5 —
-        // the simhashSchemeFor selection past ~1.05 M docs); recall
-        // truth is scheme-independent (exact hamming <= 3 on planted
-        // pairs), so the same sampler measures what the 2-chunk
-        // combination buckets + skew cap lose
-        val (pairs, st) = NearDup.simhashPairsWithStats(
-          graft.Tables(spark, dir, "documents"), "doc_id", "text",
-          maxHamming = 3, numChunks = 5)
-        (Some(st), Some(RecallSampler.simhashRecall(spark, dir, sf, pairs)))
+      case "docs_simhash_pairs" => simhashRow(numChunks = 0)
+      // the registered wide row's exact parameters (numChunks = 5 —
+      // the simhashSchemeFor selection past ~1.05 M docs); recall
+      // truth is scheme-independent (exact hamming <= 3 on planted
+      // pairs), so the same sampler measures what the 2-chunk
+      // combination buckets + skew cap lose
+      case "docs_simhash_pairs_wide" => simhashRow(numChunks = 5)
       case "multimodal_phash_pairs" =>
-        // hashes are shared between the miner replay and the planted
-        // truth — the decode pass is the row's dominant cost and must
-        // not run twice per rung
-        val (pairs, st, hashes) =
-          graft.ext.multimodal.MediaNearDup.phashPairsWithStatsAndHashes(
-            graft.Tables(spark, dir, "documents"), maxHamming = 3)
-        (Some(st), Some(RecallSampler.phashRecallFromHashes(hashes, pairs)))
+        hashRow("phash", Multimodal.dhashImages(Multimodal.phashCorpus(spark, docs)))
       case "multimodal_audio_fp_pairs" =>
-        // same shared-hash-frame discipline as the image row
-        val (pairs, st, hashes) =
-          graft.ext.multimodal.MediaNearDup.audioFpPairsWithStatsAndHashes(
-            graft.Tables(spark, dir, "documents"), maxHamming = 3)
-        (Some(st), Some(RecallSampler.phashRecallFromHashes(hashes, pairs)))
+        hashRow("afp", Multimodal.afpHashes(Multimodal.afpCorpus(spark, docs)))
       case "emb_semantic_dedup" =>
         val verdicts = graft.SparkEntry.queries(name)(spark, dir)
         (None, Some(RecallSampler.semdedupRecall(spark, sf, verdicts, dir)))
@@ -499,7 +559,7 @@ object ScaleBench {
       s"""{"sf":$sf,"emb_rows":$n,"codebook_rows":$k,"coarse_vectors":$c,""" +
         s""""driver_floats":${c * 64},"fine_floats":${k.toLong * 64},""" +
         s""""simhash_chunks":${
-          graft.ext.dedup.NearDup.simhashSchemeFor(SynthGen.nDocs(sf))}}"""
+          NearDup.simhashSchemeFor(SynthGen.nDocs(sf))}}"""
     }.mkString("[", ",", "]")
 
     val qJson = selected.map { name =>

@@ -1,6 +1,8 @@
 package graft
 
-import graft.ext.multimodal.{MediaCodecs, MediaNearDup}
+import graft.ext.dedup.NearDup
+import graft.ext.multimodal.{MediaCodecs, MediaNearDup, Multimodal}
+import graft.tools.ScaleBench
 import org.apache.spark.sql.functions._
 
 /** Audio fingerprint near-dup: codec round-trip parity (the
@@ -97,8 +99,10 @@ class AudioFpSpec extends SparkSpec {
 
   test("planted truth from shared hashes is covered by the mined pairs") {
     val docs = (0L until 400L).toDF("doc_id")
-    val (pairs, st, hashes) =
-      MediaNearDup.audioFpPairsWithStatsAndHashes(docs, maxHamming = 3)
+    val hashes = Multimodal.afpHashes(Multimodal.afpCorpus(spark, docs))
+    val (pairs, st) = ScaleBench.materializeWithStats(
+      NearDup.hammingPairsPlanFull(hashes, 400L, maxHamming = 3,
+        maxBucketSize = 1000, numChunks = 0), "afp", cap = 1000)
     val truth = MediaNearDup.plantedTruthFromHashes(hashes, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     truth.foreach { case (a, b) =>

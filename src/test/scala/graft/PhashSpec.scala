@@ -1,6 +1,8 @@
 package graft
 
+import graft.ext.dedup.NearDup
 import graft.ext.multimodal.{MediaCodecs, MediaNearDup, Multimodal}
+import graft.tools.ScaleBench
 import org.apache.spark.sql.functions._
 
 /** Perceptual-hash image near-dup: codec round-trip parity (the
@@ -70,7 +72,8 @@ class PhashSpec extends SparkSpec {
 
   test("plantedTruth is within-family, symmetric-free, and mined pairs cover it") {
     val docs = (0L until 400L).toDF("doc_id")
-    val truth = MediaNearDup.plantedTruth(docs, maxHamming = 3)
+    val truth = MediaNearDup.plantedTruthFromHashes(
+        Multimodal.dhashImages(Multimodal.phashCorpus(spark, docs)), maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     truth.foreach { case (a, b) =>
       assert(a < b && a / 4 === b / 4, s"($a,$b) not a canonical family pair")
@@ -80,6 +83,18 @@ class PhashSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // at spec scale no bucket cap binds: recall is exactly 1
     assert(truth.subsetOf(mined))
+  }
+
+  test("stats pass pairs equal the plain miner's") {
+    val docs = (0L until 200L).toDF("doc_id")
+    val plain = MediaNearDup.phashPairs(docs, maxHamming = 3)
+    val hashes = Multimodal.dhashImages(Multimodal.phashCorpus(spark, docs))
+    val (withStats, st) = ScaleBench.materializeWithStats(
+      NearDup.hammingPairsPlanFull(hashes, 200L, maxHamming = 3,
+        maxBucketSize = 1000, numChunks = 0), "phash", cap = 1000)
+    assert(plain.exceptAll(withStats).isEmpty && withStats.exceptAll(plain).isEmpty)
+    assert(st.survivors === plain.count())
+    assert(st.candidates > 0L && st.candidates <= st.candidatesPreCap)
   }
 
   test("dhash rejects images too small for distinct grid samples") {

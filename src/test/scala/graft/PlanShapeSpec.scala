@@ -85,10 +85,10 @@ class PlanShapeSpec extends SparkSpec {
     // minhash/simhash registry queries return a scan of their
     // materialized output, so assert on the lazy MINING plans directly
     val docs = Tables(spark, sf, "documents")
-    val (mh, mhCaches) = graft.ext.dedup.NearDup.minhashPairsPlan(
+    val (mh, mhCaches, _) = graft.ext.dedup.NearDup.minhashPairsPlanFull(
       docs, "doc_id", "text", 2, 16, 4, 0.5, 1000)
-    val (sh, shCaches) = graft.ext.dedup.NearDup.simhashPairsPlan(
-      docs, "doc_id", "text", 3, 1000)
+    val (sh, shCaches, _) = graft.ext.dedup.NearDup.simhashPairsPlanFull(
+      docs, "doc_id", "text", 3, 1000, 0)
     try {
       val plans = Seq(
         "minhash" -> mh.queryExecution.executedPlan.toString,

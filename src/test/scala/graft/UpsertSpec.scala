@@ -153,28 +153,6 @@ class UpsertSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == 2)
   }
 
-  test("partitioned upsert with detectMovedKeys removes a key's old-partition copy") {
-    val root = tmpDir("upsert_moved") + "/t"
-    val day1 = Seq(("k1", "2022-11-24", "a"), ("k2", "2022-11-24", "b"),
-      ("k3", "2022-11-25", "c")).toDF("id", "dt", "payload")
-    ParquetUpsertSink.upsertPartitioned(spark, day1, root, "id", "dt")
-    // k3's date is corrected 25→26; without moved-key detection its old
-    // copy under dt=2022-11-25 would survive as a duplicate
-    val fix = Seq(("k3", "2022-11-26", "C")).toDF("id", "dt", "payload")
-    ParquetUpsertSink.upsertPartitioned(spark, fix, root, "id", "dt",
-      detectMovedKeys = true)
-    // dt reads back type-inferred as DateType — compare via toString
-    val got = spark.read.parquet(root).collect()
-      .map(r => r.getAs[String]("id") ->
-        (r.getAs[Any]("dt").toString, r.getAs[String]("payload")))
-      .toMap
-    assert(spark.read.parquet(root).count() == 3) // no duplicate k3
-    assert(got == Map("k1" -> (("2022-11-24", "a")), "k2" -> (("2022-11-24", "b")),
-      "k3" -> (("2022-11-26", "C"))))
-    // dt=2022-11-25 had only k3 — the emptied partition dir must be gone
-    assert(!new java.io.File(s"$root/dt=2022-11-25").exists())
-  }
-
   test("live jdbc update-insert upsert against embedded Derby is last-write-wins") {
     val url = "jdbc:derby:memory:graft_rowmerge;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
