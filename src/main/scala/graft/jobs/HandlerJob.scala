@@ -8,6 +8,7 @@ import graft.config.EntitySchema
 import graft.meta.{HandlerExecution, MonitorStore}
 import graft.operators.{Dedup, EntitySplit, KeyGen, Normalize}
 import graft.sinks.ParquetUpsertSink
+import graft.sources.JsonLinesSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
@@ -17,10 +18,13 @@ import scala.util.control.NonFatal
   * table, with per-entity error isolation and an audit row per
   * run×entity.
   *
-  * The staged frame is cached once and each entity is a filter over
-  * it (one scan feeds all entities). Per-entity failure is caught so
-  * one entity's bad batch never blocks the others — the reference's
-  * contract (`handler.py:91-100`). Fatal JVM errors (out of memory,
+  * The staged frame is read with the schema the ingestor wrote it
+  * with (no inference job), cached once, and each entity is a filter
+  * over it (one scan feeds all entities). An entity's audit count is
+  * the upsert's count of its deduped batch, which costs no job.
+  * Per-entity failure is caught so one entity's bad batch never
+  * blocks the others — the reference's contract
+  * (`handler.py:91-100`). Fatal JVM errors (out of memory,
   * interrupts) are not per-entity failures: they propagate and the
   * remaining entities are not attempted.
   */
@@ -77,24 +81,25 @@ object HandlerJob {
     val stagedPath = store.stagedFilePath(workflowId)
     if (stagedPath.isEmpty) return Result(Map.empty, Map.empty)
 
-    val staged = spark.read.parquet(stagedPath.get).cache()
+    // the schema the ingestor staged: an empty read is analysis only
+    val stagedSchema = JsonLinesSource.read(spark, Nil, Pipelines.unionSourceStruct(schemas)).schema
+    val staged = spark.read.schema(stagedSchema).parquet(stagedPath.get).cache()
     try {
       val byEntity = EntitySplit(staged, "on", schemas.map(_.entity))
       val outcomes = schemas.map { schema =>
         val entity = schema.entity
-        // cache: the audit count and the upsert both consume the
-        // pipeline — without a materialization point the whole
-        // normalize→keygen→dedup chain (shuffle included) would
-        // execute twice per entity. Constructed INSIDE the try:
-        // analysis-time failures (e.g. AnalysisException on malformed
-        // staged data) must hit the per-entity catch and be recorded,
-        // not abort the remaining entities.
+        // cache: the upsert's null-key probe and its staged write (and
+        // the quality gate, when set) all consume the pipeline —
+        // without a materialization point the normalize→keygen→dedup
+        // chain would execute once per consumer. Constructed INSIDE
+        // the try: analysis-time failures (e.g. AnalysisException on
+        // malformed staged data) must hit the per-entity catch and be
+        // recorded, not abort the remaining entities.
         var ready: DataFrame = null
         try {
           ready = entityPipeline(byEntity(entity), schema).cache()
-          val n = ready.count()
           qualityGate.foreach(enforceGate(ready, _))
-          ParquetUpsertSink.upsert(
+          val n = ParquetUpsertSink.upsert(
             spark, ready, s"$warehouseDir/${schema.targetTable}", KeyGen.columnName)
           store.recordHandler(HandlerExecution(
             workflowId, executionId, Timestamp.from(now), stagedPath,

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -144,6 +144,8 @@ object ParquetUpsertSink {
     *  - B only, no T, no S: crashed between `rename S→T` failing
     *    half-way? Renames are atomic per directory on HDFS/local FS, so
     *    this state means S was already promoted and deleted — restore B.
+    *  - incomplete S only: a first write into a missing table crashed
+    *    mid-write; drop S.
     */
   def recover(spark: SparkSession, tablePath: String): Unit = {
     val f = fs(spark, tablePath)
@@ -160,6 +162,8 @@ object ParquetUpsertSink {
     } else if (f.exists(b)) {
       if (f.exists(s)) deleteOrThrow(f, s) // incomplete staging
       renameOrThrow(f, b, t)
+    } else if (f.exists(s)) {
+      deleteOrThrow(f, s) // a first write that never completed
     }
   }
 
@@ -269,22 +273,29 @@ object ParquetUpsertSink {
   private val OutputFiles = 8
 
   /** Full-table merge-on-write upsert. Every write, the first into an
-    * empty table included, goes through [[stageAndPromote]]. */
+    * empty table included, goes through [[stageAndPromote]].
+    *
+    * Returns the rows of the deduped batch: the distinct keys it
+    * inserted or updated. The count is observed on the staged write
+    * itself (`Dataset.observe` on the batch's branch of the merge
+    * union, not on the anti join's key side), so it costs no job. */
   def upsert(
       spark: SparkSession,
       batch: DataFrame,
       tablePath: String,
       key: String,
-      orderCol: Option[String] = None): Unit = {
+      orderCol: Option[String] = None): Long = {
     recover(spark, tablePath)
     // the null-key invariant is enforced inside dedupBatch (folded
     // into its single probe aggregate on the orderCol path)
     val incoming = dedupBatch(batch, key, orderCol)
+    val rows = Observation()
+    val counted = incoming.observe(rows, count(lit(1)).as("rows"))
     // the staged write reads the live table, so it can't overwrite it
     // in place; an empty table has nothing to merge
     val merged =
-      if (hasData(spark, tablePath)) merge(spark.read.parquet(tablePath), incoming, key)
-      else incoming
+      if (hasData(spark, tablePath)) merge(spark.read.parquet(tablePath), counted, incoming, key)
+      else counted
     // repartition, NOT coalesce: coalesce is a narrow dependency, so
     // it fused the dedup/merge work INTO an OutputFiles-way final
     // stage — at sf100 that ran the whole merge at 8-task parallelism
@@ -293,16 +304,19 @@ object ParquetUpsertSink {
     // width from file count for one extra narrow-format pass.
     val promoteSec = stageAndPromote(spark, merged.repartition(OutputFiles), tablePath)
     recordIo(countDataFiles(spark, tablePath), promoteSec)
+    rows.get("rows").asInstanceOf[Long]
   }
 
   /** Replace the table at `tablePath` with `df` through the crash-safe
     * stage-then-promote of the class doc (the table→backup rename is
-    * skipped when no table exists yet). Records no [[ioStats]];
-    * returns the seconds spent after the staged write. */
+    * skipped when no table exists yet), hive-partitioned by
+    * `partitionCol` when given. Records no [[ioStats]]; returns the
+    * seconds spent after the staged write. */
   private[graft] def stageAndPromote(
-      spark: SparkSession, df: DataFrame, tablePath: String): Double = {
+      spark: SparkSession, df: DataFrame, tablePath: String,
+      partitionCol: Option[String] = None): Double = {
     val staged = new Path(stagingPath(tablePath))
-    df.write.mode("overwrite").parquet(staged.toString)
+    df.write.partitionBy(partitionCol.toSeq: _*).mode("overwrite").parquet(staged.toString)
     val t0 = System.nanoTime()
     val f = fs(spark, tablePath)
     val table = new Path(tablePath)
@@ -314,7 +328,9 @@ object ParquetUpsertSink {
   }
 
   /** Partition-pruned upsert: merges only the partitions the batch
-    * touches and dynamically overwrites just those.
+    * touches and dynamically overwrites just those. The first write
+    * into an empty table goes through [[stageAndPromote]], so a crash
+    * in it leaves no data in the live directory.
     *
     * Contract: the partition-column value of a key must be immutable
     * across batches (true when it is derived from the key's own
@@ -329,6 +345,7 @@ object ParquetUpsertSink {
       key: String,
       partitionCol: String,
       orderCol: Option[String] = None): Unit = {
+    recover(spark, tablePath)
     // null-key invariant enforced inside dedupBatch (one probe job)
     val incoming = dedupBatch(batch, key, orderCol).cache()
     try {
@@ -339,9 +356,9 @@ object ParquetUpsertSink {
       def onePilePerPartition(df: DataFrame): DataFrame =
         df.repartition(col(partitionCol))
       if (!hasData(spark, tablePath)) {
-        onePilePerPartition(incoming)
-          .write.partitionBy(partitionCol).mode("overwrite").parquet(tablePath)
-        recordIo(countDataFiles(spark, tablePath), 0.0)
+        val promoteSec = stageAndPromote(
+          spark, onePilePerPartition(incoming), tablePath, Some(partitionCol))
+        recordIo(countDataFiles(spark, tablePath), promoteSec)
         return
       }
       // Partitions touched by this batch (small list, collected
@@ -365,7 +382,8 @@ object ParquetUpsertSink {
       }
       val existing = spark.read.parquet(tablePath)
         .filter(col(partitionCol).cast("string").isInCollection(touched))
-      val merged = merge(existing.select(incoming.columns.toIndexedSeq.map(col): _*), incoming, key)
+      val merged = merge(
+        existing.select(incoming.columns.toIndexedSeq.map(col): _*), incoming, incoming, key)
         .cache()
       try {
         onePilePerPartition(merged).write
@@ -400,9 +418,12 @@ object ParquetUpsertSink {
     * Null keys never reach this join: the anti join cannot match
     * them (they would survive on both sides and accumulate across
     * batches), so both public entry points reject them loudly first
-    * ([[requireNonNullKeys]]). */
-  private def merge(existing: DataFrame, incoming: DataFrame, key: String): DataFrame =
-    incoming.unionByName(
+    * ([[requireNonNullKeys]]). `kept` is `incoming` as the union
+    * writes it ([[upsert]] passes it observed); the anti join reads
+    * `incoming`'s keys. */
+  private def merge(
+      existing: DataFrame, kept: DataFrame, incoming: DataFrame, key: String): DataFrame =
+    kept.unionByName(
       existing.join(incoming.select(col(key)), Seq(key), "left_anti")
         .select(incoming.columns.toIndexedSeq.map(col): _*))
 }

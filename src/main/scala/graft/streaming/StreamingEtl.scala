@@ -300,6 +300,7 @@ object StreamingEtl {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         ParquetUpsertSink.upsert(batch.sparkSession, batch.toDF(), tablePath, key)
+        ()
       }
       .start()
 

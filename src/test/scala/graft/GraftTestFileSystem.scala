@@ -25,10 +25,22 @@ class GraftTestFileSystem extends RawLocalFileSystem {
 
   override def getUri: URI = if (myUri != null) myUri else URI.create("graftfs:///")
 
+  /** Renames the test's fault hook picks fail with an IOException. */
+  override def rename(src: Path, dst: Path): Boolean =
+    if (GraftTestFileSystem.failRename(src, dst))
+      throw new java.io.IOException(s"injected rename fault: $src -> $dst")
+    else super.rename(src, dst)
+
   /** Accept only graftfs paths (and scheme-less relative ones). */
   override def checkPath(path: Path): Unit = {
     val scheme = path.toUri.getScheme
     if (scheme != null && scheme != "graftfs")
       throw new IllegalArgumentException(s"Wrong FS scheme: $path")
   }
+}
+
+object GraftTestFileSystem {
+  /** Fault hook: a rename for which this returns true fails. Tests
+    * that set it restore the default. */
+  @volatile var failRename: (Path, Path) => Boolean = (_, _) => false
 }

@@ -9,6 +9,8 @@ import java.util.UUID
 import graft.config.EntitySchema
 import graft.jobs.{Executor, HandlerJob, IngestorJob, Pipelines}
 import graft.meta.{FileMonitorStore, HandlerExecution, IngestorExecution, JdbcMonitorStore, MonitorStore, StoreAdmin}
+import graft.obs.Probe
+import org.scalatest.BeforeAndAfterAll
 
 /** A fatal JVM error a store call can raise (out of memory and the
   * like are its siblings). */
@@ -17,9 +19,20 @@ final class StubFatalError extends VirtualMachineError("stub fatal error")
 /** End-to-end: landing JSON-lines → ingestor (cursor + hour pruning +
   * staging) → handler (split/normalize/key/dedup/upsert) → monitor
   * audit rows, across two hourly runs. */
-class JobsSpec extends SparkSpec {
+class JobsSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val hour0 = IngestorJob.coldStart // 2022-11-24T10:00:00Z
+
+  private lazy val probe = Probe.attach(spark)
+
+  override def afterAll(): Unit = try probe.detach() finally super.afterAll()
+
+  /** Spark jobs started while `body` ran. */
+  private def jobsOf(body: => Any): Int = {
+    val before = probe.snapshot()
+    body
+    probe.snapshot().since(before).jobs.size
+  }
 
   /** Both store backends under one e2e (round-7 verdict task 5): the
     * parquet store and the Derby-backed JDBC store are drop-in twins
@@ -242,6 +255,64 @@ class JobsSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       HandlerJob.run(spark, store, s"$root/tables", EntitySchema.reference, "not-a-uuid")
     }
+  }
+
+  private val vehicleLine =
+    """{"event": "update", "on": "vehicle", "at": "2022-11-24T10:02:11Z", "organization_id": "o", "data": {"id": "v-1", "location": {"lat": 1.5, "lng": 2.5, "at": "2022-11-24T10:02:10Z"}}}"""
+  private val periodLine =
+    """{"event": "create", "on": "operating_period", "at": "2022-11-24T10:00:05Z", "organization_id": "o", "data": {"id": "op-1", "start": "2022-11-24T08:00:00Z", "finish": "2022-11-24T20:00:00Z"}}"""
+
+  test("job budget: an incremental Executor hour runs at most 17 Spark jobs and audits distinct keys") {
+    // an hour ran 27 jobs when the monitor store scanned its audit
+    // files with Spark and the handler counted each entity with its own
+    // action; 16 since. One job of slack: a plan can start an extra
+    // one-task job from run to run.
+    val root = tmpDir("job_budget")
+    val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
+    writeLanding(landing, "a.json", hour0.plusSeconds(60), vehicleLine, periodLine)
+    val movedLine = vehicleLine.replace("T10:02", "T11:02").replace("1.5", "7.5")
+    // hour 11 sends v-1 at a new event time (a new key), twice verbatim
+    writeLanding(landing, "b.json", hour0.plusSeconds(3660),
+      movedLine, movedLine, periodLine.replace("op-1", "op-2"))
+    val args = Executor.parse(Seq("--root", root, "--landing", landing))
+    Executor.run(spark, args) // the cold hour, into an empty warehouse
+    val jobs = jobsOf(Executor.run(spark, args))
+    assert(jobs <= 17, s"an incremental hour ran $jobs Spark jobs")
+
+    val store = new FileMonitorStore(spark, s"$root/monitor")
+    val wf = store.ingestorRows()
+      .find(_.getAs[java.sql.Timestamp]("fetchedHour").toInstant == hour0.plusSeconds(3600))
+      .map(_.getAs[String]("workflowId")).get
+    val audited = store.handlerRows().filter(_.getAs[String]("workflowId") == wf)
+      .map(r => r.getAs[String]("destinationTable") -> r.getAs[Long]("recordsInserted")).toMap
+    assert(audited == Map("vehicle_location" -> 1L, "operating_periods" -> 1L))
+    assert(spark.read.parquet(s"$root/tables/vehicle_location").count() == 2)
+    assert(spark.read.parquet(s"$root/tables/operating_periods").count() == 2)
+  }
+
+  test("job budget: every FileMonitorStore call runs no Spark job") {
+    val root = tmpDir("store_jobs")
+    val store = new FileMonitorStore(spark, s"$root/monitor",
+      warehouseDir = Some(s"$root/tables"))
+    val schemas = EntitySchema.reference
+    val wf = UUID.randomUUID().toString
+    val now = java.sql.Timestamp.from(hour0.plusSeconds(7200))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "migrate" -> (() => store.migrate(schemas.map(_.targetTable))),
+      "lastSuccessfulFetchHour on no history" -> (() => store.lastSuccessfulFetchHour()),
+      "recordIngestor" -> (() => store.recordIngestor(IngestorExecution(wf, "e1", now,
+        java.sql.Timestamp.from(hour0), 1, Some(s"$root/staging/x"), None))),
+      "recordHandler" -> (() => store.recordHandler(HandlerExecution(wf, "e2", now,
+        Some(s"$root/staging/x"), "vehicle_location", 3L, None))),
+      "lastSuccessfulFetchHour" -> (() => store.lastSuccessfulFetchHour()),
+      "stagedFilePath" -> (() => store.stagedFilePath(wf)),
+      "targetTableExists" -> (() => store.targetTableExists("vehicle_location")),
+      "ingestorRows" -> (() => store.ingestorRows()),
+      "handlerRows" -> (() => store.handlerRows()))
+    val ran = calls.map { case (name, call) => name -> jobsOf(call()) }
+    assert(ran.forall(_._2 == 0), ran.mkString(", "))
+    assert(store.lastSuccessfulFetchHour().contains(hour0))
+    assert(store.stagedFilePath(wf).contains(s"$root/staging/x"))
   }
 
   test("executor arg consistency rules match the reference") {

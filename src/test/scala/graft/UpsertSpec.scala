@@ -153,6 +153,46 @@ class UpsertSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == 2)
   }
 
+  test("upsert returns the deduped batch's row count, an empty batch included") {
+    val path = tmpDir("upsert_count") + "/t"
+    val v1 = Seq(("k1", "a"), ("k1", "a"), ("k2", "b")).toDF("id", "payload")
+    assert(ParquetUpsertSink.upsert(spark, v1, path, "id") == 2L)
+    // a merge into existing data counts the batch's keys only
+    val v2 = Seq(("k2", "B"), ("k3", "c"), ("k3", "c")).toDF("id", "payload")
+    assert(ParquetUpsertSink.upsert(spark, v2, path, "id") == 2L)
+    assert(ParquetUpsertSink.upsert(spark, v2.filter($"id" === "none"), path, "id") == 0L)
+    assert(spark.read.parquet(path).count() == 3)
+    val ordered = Seq(("k4", "old", 1), ("k4", "new", 2)).toDF("id", "payload", "ver")
+    assert(ParquetUpsertSink.upsert(spark, ordered, path + "_ordered", "id", Some("ver")) == 1L)
+  }
+
+  test("a first partitioned batch that fails mid-write leaves the live table empty; recover cleans up") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfs.impl", classOf[GraftTestFileSystem].getName)
+    FileSystem.closeAll()
+    val table = s"graftfs://${tmpDir("upsert_part_crash")}/t"
+    val fs = new Path(table).getFileSystem(conf)
+    val batch = Seq(("k1", "2022-11-24", "a"), ("k2", "2022-11-25", "b"))
+      .toDF("id", "dt", "payload")
+    // the job commit moves one partition dir into place, then fails on
+    // the second: the write dies half-committed
+    val partitionMoves = new java.util.concurrent.atomic.AtomicInteger
+    GraftTestFileSystem.failRename = (_, dst) =>
+      dst.getName.startsWith("dt=") && partitionMoves.incrementAndGet() == 2
+    try intercept[Exception](ParquetUpsertSink.upsertPartitioned(spark, batch, table, "id", "dt"))
+    finally GraftTestFileSystem.failRename = (_, _) => false
+    assert(partitionMoves.get() >= 2, "the fault never fired")
+    assert(ParquetUpsertSink.visibleDataFiles(fs, new Path(table)).isEmpty)
+    ParquetUpsertSink.recover(spark, table)
+    assert(!fs.exists(new Path(table + "__staging")) && !fs.exists(new Path(table + "__backup")))
+    assert(ParquetUpsertSink.visibleDataFiles(fs, new Path(table)).isEmpty)
+    ParquetUpsertSink.upsertPartitioned(spark, batch, table, "id", "dt")
+    val got = spark.read.parquet(table).collect()
+      .map(r => r.getAs[String]("id") -> r.getAs[String]("payload")).toMap
+    assert(got == Map("k1" -> "a", "k2" -> "b"))
+  }
+
   test("live jdbc update-insert upsert against embedded Derby is last-write-wins") {
     val url = "jdbc:derby:memory:graft_rowmerge;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
