@@ -6,7 +6,7 @@ import java.util.UUID
 
 import graft.config.EntitySchema
 import graft.meta.{HandlerExecution, MonitorStore}
-import graft.operators.{Dedup, EntitySplit, KeyGen, Normalize}
+import graft.operators.{EntitySplit, KeyGen, Normalize}
 import graft.sinks.ParquetUpsertSink
 import graft.sources.JsonLinesSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,14 +14,16 @@ import scala.util.control.NonFatal
 
 /** Handler (reference entry point 3, `src/handler/handler.py`):
   * locate the staged batch for a workflow, split it by entity,
-  * normalize/key/dedup each entity, and upsert into its warehouse
+  * normalize and key each entity, and upsert into its warehouse
   * table, with per-entity error isolation and an audit row per
   * run×entity.
   *
   * The staged frame is read with the schema the ingestor wrote it
-  * with (no inference job), cached once, and each entity is a filter
-  * over it (one scan feeds all entities). An entity's audit count is
-  * the upsert's count of its deduped batch, which costs no job.
+  * with (no inference job). Each entity is one lazy plan (filter →
+  * normalize → keygen) handed to the upsert, whose per-key dedup is
+  * the only one (reference op R-2). Nothing is cached, so each
+  * entity's scans read only its own columns. An entity's audit count
+  * is the upsert's count of its deduped batch, which costs no job.
   * Per-entity failure is caught so one entity's bad batch never
   * blocks the others — the reference's contract
   * (`handler.py:91-100`). Fatal JVM errors (out of memory,
@@ -34,27 +36,25 @@ object HandlerJob {
 
   case class Result(recordsInserted: Map[String, Long], failures: Map[String, String])
 
-  /** The core semantic pipeline for one entity, exposed for tests and
-    * for the analytics registry: normalize → keygen → dedup. */
-  def entityPipeline(raw: DataFrame, schema: EntitySchema): DataFrame = {
-    val normalized = Normalize(raw, schema)
-    val keyed = KeyGen(normalized, schema)
-    Dedup(keyed, KeyGen.columnName)
-  }
+  /** The core semantic pipeline for one entity, exposed for tests:
+    * normalize → keygen. The per-key dedup is the upsert's. */
+  def entityPipeline(raw: DataFrame, schema: EntitySchema): DataFrame =
+    KeyGen(Normalize(raw, schema), schema)
 
-  /** Optional data-quality gate evaluated on each entity's READY
-    * frame (normalized/keyed/deduped) before its upsert: checks that
-    * fail BLOCK that entity's promotion — the write never happens and
-    * the violation report lands in the monitor store's error column,
-    * exactly like any other per-entity failure (other entities
-    * proceed). Built from [[graft.ext.profile.Expectations]]. */
+  /** Optional data-quality gate evaluated on each entity's keyed
+    * frame (every row of its batch, before the upsert's dedup, so a
+    * superset of the rows promoted): checks that fail BLOCK that
+    * entity's promotion — the write never happens and the violation
+    * report lands in the monitor store's error column, exactly like
+    * any other per-entity failure (other entities proceed). Built
+    * from [[graft.ext.profile.Expectations]]. */
   case class QualityGate(checks: Seq[graft.ext.profile.Expectations.Check])
 
   final class QualityGateViolation(report: String)
     extends RuntimeException(s"quality gate failed: $report")
 
-  private def enforceGate(ready: DataFrame, gate: QualityGate): Unit = {
-    val failed = graft.ext.profile.Expectations.validate(ready, gate.checks)
+  private def enforceGate(keyed: DataFrame, gate: QualityGate): Unit = {
+    val failed = graft.ext.profile.Expectations.validate(keyed, gate.checks)
       .filter(!org.apache.spark.sql.functions.col("pass"))
       .collect()
       .map(r => s"${r.getString(0)}=${r.getLong(1)}/${r.getLong(2)}")
@@ -83,45 +83,39 @@ object HandlerJob {
 
     // the schema the ingestor staged: an empty read is analysis only
     val stagedSchema = JsonLinesSource.read(spark, Nil, Pipelines.unionSourceStruct(schemas)).schema
-    val staged = spark.read.schema(stagedSchema).parquet(stagedPath.get).cache()
-    try {
-      val byEntity = EntitySplit(staged, "on", schemas.map(_.entity))
-      val outcomes = schemas.map { schema =>
-        val entity = schema.entity
-        // cache: the upsert's null-key probe and its staged write (and
-        // the quality gate, when set) all consume the pipeline —
-        // without a materialization point the normalize→keygen→dedup
-        // chain would execute once per consumer. Constructed INSIDE
-        // the try: analysis-time failures (e.g. AnalysisException on
-        // malformed staged data) must hit the per-entity catch and be
-        // recorded, not abort the remaining entities.
-        var ready: DataFrame = null
-        try {
-          ready = entityPipeline(byEntity(entity), schema).cache()
-          qualityGate.foreach(enforceGate(ready, _))
-          val n = ParquetUpsertSink.upsert(
-            spark, ready, s"$warehouseDir/${schema.targetTable}", KeyGen.columnName)
+    val staged = spark.read.schema(stagedSchema).parquet(stagedPath.get)
+    val byEntity = EntitySplit(staged, "on", schemas.map(_.entity))
+    val outcomes = schemas.map { schema =>
+      val entity = schema.entity
+      // the plan is built INSIDE the try: analysis-time failures (e.g.
+      // AnalysisException on malformed staged data) must hit the
+      // per-entity catch and be recorded, not abort the remaining
+      // entities
+      try {
+        val keyed = entityPipeline(byEntity(entity), schema)
+        qualityGate.foreach(enforceGate(keyed, _))
+        val n = ParquetUpsertSink.upsert(
+          spark, keyed, s"$warehouseDir/${schema.targetTable}", KeyGen.columnName)
+        store.recordHandler(HandlerExecution(
+          workflowId, executionId, Timestamp.from(now), stagedPath,
+          schema.targetTable, n, None))
+        log.info("entity upserted", "workflow" -> workflowId,
+          "entity" -> entity, "table" -> schema.targetTable, "rows" -> n)
+        entity -> Right(n)
+      } catch {
+        case NonFatal(e) =>
+          // full stack trace, matching the reference's traceback
+          // capture (src/helper/postgres.py:45-63)
+          log.error("entity failed", e, "workflow" -> workflowId,
+            "entity" -> entity, "table" -> schema.targetTable)
           store.recordHandler(HandlerExecution(
             workflowId, executionId, Timestamp.from(now), stagedPath,
-            schema.targetTable, n, None))
-          log.info("entity upserted", "workflow" -> workflowId,
-            "entity" -> entity, "table" -> schema.targetTable, "rows" -> n)
-          entity -> Right(n)
-        } catch {
-          case NonFatal(e) =>
-            // full stack trace, matching the reference's traceback
-            // capture (src/helper/postgres.py:45-63)
-            log.error("entity failed", e, "workflow" -> workflowId,
-              "entity" -> entity, "table" -> schema.targetTable)
-            store.recordHandler(HandlerExecution(
-              workflowId, executionId, Timestamp.from(now), stagedPath,
-              schema.targetTable, 0L, Some(Stacks.render(e))))
-            entity -> Left(e.toString)
-        } finally if (ready != null) ready.unpersist()
+            schema.targetTable, 0L, Some(Stacks.render(e))))
+          entity -> Left(e.toString)
       }
-      Result(
-        outcomes.collect { case (e, Right(n)) => e -> n }.toMap,
-        outcomes.collect { case (e, Left(err)) => e -> err }.toMap)
-    } finally staged.unpersist()
+    }
+    Result(
+      outcomes.collect { case (e, Right(n)) => e -> n }.toMap,
+      outcomes.collect { case (e, Left(err)) => e -> err }.toMap)
   }
 }

@@ -4,22 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact dedup by key (reference op R-2, `src/helper/helper.py:148`).
+/** Exact dedup by key in first-occurrence order (reference op R-2,
+  * `src/helper/helper.py:148`: `drop_duplicates` keeps the first row
+  * in file order).
   *
-  * Two forms:
-  *  - [[apply]]: order-agnostic `dropDuplicates` — one hash-aggregate,
-  *    map-side partial combine, the cheapest distributed dedup.
-  *  - [[firstOccurrence]]: reference-faithful "keep first in file
-  *    order" via `row_number()` over an explicit ordering. Costs a
-  *    shuffle + per-key sort; only use when arrival order matters.
-  *
-  * At 100 TB both shuffle by key once; `dropDuplicates` additionally
-  * benefits from partial aggregation before the exchange.
+  * [[firstOccurrence]] keeps the first row per key under an explicit
+  * ordering via `row_number()`: one shuffle by key plus a per-key
+  * sort. The order-agnostic per-key dedup of the ETL hour is
+  * [[graft.sinks.ParquetUpsertSink.upsert]]'s.
   */
 object Dedup {
-
-  def apply(df: DataFrame, keyCols: String*): DataFrame =
-    df.dropDuplicates(keyCols)
 
   def firstOccurrence(df: DataFrame, keys: Seq[Column], order: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(keys: _*).orderBy(order: _*)

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * The reference crashes on unknown discriminator values; the rebuild
   * counts them as rejects instead (SURVEY.md §3.2 corrected-quirk
-  * policy). Each entity frame is a `filter` over the SAME cached
-  * parent — one scan feeds all entities, no shuffle.
+  * policy). Each entity frame is a lazy `filter` over the parent, no
+  * shuffle; its consumers scan only the columns they read.
   */
 object EntitySplit {
 

@@ -37,7 +37,7 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
   /** Both store backends under one e2e (round-7 verdict task 5): the
     * parquet store and the Derby-backed JDBC store are drop-in twins
     * behind MonitorStore + StoreAdmin. Each JDBC store gets its own
-    * in-memory database (the UpsertSpec live-Derby convention). */
+    * in-memory Derby database. */
   private def mkStore(impl: String, root: String): MonitorStore with StoreAdmin =
     impl match {
       case "file" => new FileMonitorStore(spark, s"$root/monitor",
@@ -159,7 +159,7 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
       Pipelines.unionSourceStruct(schemas), wf)
     // vehicle_latitude 99.5 violates the [-90, 90] expectation;
     // operating_period has no such column, so its checks pass — the
-    // gate evaluates per entity on the READY (normalized) frame
+    // gate evaluates per entity on the keyed (normalized) frame
     def gateFor = HandlerJob.QualityGate(Seq(
       inRange("lat_in_range",
         org.apache.spark.sql.functions
@@ -262,11 +262,36 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
   private val periodLine =
     """{"event": "create", "on": "operating_period", "at": "2022-11-24T10:00:05Z", "organization_id": "o", "data": {"id": "op-1", "start": "2022-11-24T08:00:00Z", "finish": "2022-11-24T20:00:00Z"}}"""
 
-  test("job budget: an incremental Executor hour runs at most 17 Spark jobs and audits distinct keys") {
+  test("a same-key pair with different payloads lands as one row, audited as 1") {
+    // same data.id and event time (so the same key), different lat:
+    // the upsert's per-key dedup is the handler's only one
+    val root = tmpDir("same_key")
+    val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
+    val store = new FileMonitorStore(spark, s"$root/monitor",
+      warehouseDir = Some(s"$root/tables"))
+    val schemas = EntitySchema.reference.filter(_.entity == "vehicle")
+    store.migrate(schemas.map(_.targetTable))
+    writeLanding(landing, "a.json", hour0.plusSeconds(60),
+      vehicleLine, vehicleLine.replace("\"lat\": 1.5", "\"lat\": 3.5"))
+    val wf = UUID.randomUUID().toString
+    IngestorJob.run(spark, store, landing, s"$root/staging",
+      Pipelines.unionSourceStruct(schemas), wf)
+    val res = HandlerJob.run(spark, store, s"$root/tables", schemas, wf)
+    assert(res.failures.isEmpty && res.recordsInserted == Map("vehicle" -> 1L))
+    val rows = spark.read.parquet(s"$root/tables/vehicle_location").collect()
+    assert(rows.length == 1, rows.mkString("; "))
+    assert(Set(1.5, 3.5).contains(rows.head.getAs[Double]("vehicle_latitude")))
+    val audited = store.handlerRows().filter(_.getAs[String]("workflowId") == wf)
+      .map(r => r.getAs[String]("destinationTable") -> r.getAs[Long]("recordsInserted"))
+    assert(audited.toSeq == Seq("vehicle_location" -> 1L))
+  }
+
+  test("job budget: an incremental Executor hour runs at most 14 Spark jobs and audits distinct keys") {
     // an hour ran 27 jobs when the monitor store scanned its audit
     // files with Spark and the handler counted each entity with its own
-    // action; 16 since. One job of slack: a plan can start an extra
-    // one-task job from run to run.
+    // action; 16 while the handler cached the staged batch and each
+    // entity's frame and deduped before the upsert; 13 since. One job
+    // of slack: a plan can start an extra one-task job from run to run.
     val root = tmpDir("job_budget")
     val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
     writeLanding(landing, "a.json", hour0.plusSeconds(60), vehicleLine, periodLine)
@@ -277,7 +302,7 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
     val args = Executor.parse(Seq("--root", root, "--landing", landing))
     Executor.run(spark, args) // the cold hour, into an empty warehouse
     val jobs = jobsOf(Executor.run(spark, args))
-    assert(jobs <= 17, s"an incremental hour ran $jobs Spark jobs")
+    assert(jobs <= 14, s"an incremental hour ran $jobs Spark jobs")
 
     val store = new FileMonitorStore(spark, s"$root/monitor")
     val wf = store.ingestorRows()

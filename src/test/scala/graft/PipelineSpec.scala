@@ -6,10 +6,11 @@ import java.security.MessageDigest
 import graft.config.EntitySchema
 import graft.jobs.{HandlerJob, Pipelines}
 import graft.operators.KeyGen
+import graft.sinks.ParquetUpsertSink
 import graft.sources.JsonLinesSource
 
 /** Core semantic pipeline tests over FIXTURES.md §A fixture rows:
-  * normalize coercion/trim, golden keygen hashes, dedup. */
+  * normalize coercion/trim, golden keygen hashes, upsert dedup. */
 class PipelineSpec extends SparkSpec {
 
   private val vehicleSchema = EntitySchema.reference.head
@@ -59,8 +60,11 @@ class PipelineSpec extends SparkSpec {
     val out = HandlerJob.entityPipeline(good, vehicleSchema)
     val rows = out.collect().map(r => r.getAs[String]("vehicle_id") -> r).toMap
 
-    // duplicate line collapsed: 5 good lines → 4 rows
-    assert(out.count() == 4)
+    // duplicate line collapsed by the upsert's per-key dedup (the
+    // handler's only one): 5 good lines → 4 rows
+    val table = tmpDir("normalize_upsert") + "/t"
+    ParquetUpsertSink.upsert(spark, out, table, KeyGen.columnName)
+    assert(spark.read.parquet(table).count() == 4)
     // clean row round-trips
     assert(rows("v-1").getAs[java.sql.Timestamp]("event_timestamp").toString
       == "2022-11-24 10:02:11.0")

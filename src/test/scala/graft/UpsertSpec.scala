@@ -1,6 +1,6 @@
 package graft
 
-import graft.sinks.{JdbcUpsertSink, ParquetUpsertSink}
+import graft.sinks.ParquetUpsertSink
 
 class UpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -191,154 +191,5 @@ class UpsertSpec extends SparkSpec {
     val got = spark.read.parquet(table).collect()
       .map(r => r.getAs[String]("id") -> r.getAs[String]("payload")).toMap
     assert(got == Map("k1" -> "a", "k2" -> "b"))
-  }
-
-  test("live jdbc update-insert upsert against embedded Derby is last-write-wins") {
-    val url = "jdbc:derby:memory:graft_rowmerge;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    // column names quoted to match the generated SQL's quoting (and
-    // Spark's own JDBC identifier behavior) — see JdbcUpsertSink.q
-    conn.createStatement().execute(
-      """CREATE TABLE users ("id" BIGINT PRIMARY KEY, "name" VARCHAR(64), "score" INT)""")
-    conn.close()
-    val types = Map("id" -> "BIGINT", "name" -> "VARCHAR(64)", "score" -> "INT")
-    val b1 = Seq((1L, "ann", 10), (2L, "bo", 20)).toDF("id", "name", "score")
-    JdbcUpsertSink.upsertViaUpdateInsert(b1, url, "users", "id", types, maxConnections = 2)
-    // batch 2 updates id=2, inserts id=3
-    val b2 = Seq((2L, "bo2", 25), (3L, "cy", 30)).toDF("id", "name", "score")
-    JdbcUpsertSink.upsertViaUpdateInsert(b2, url, "users", "id", types, maxConnections = 2)
-    val got = spark.read.jdbc(url, "users", new java.util.Properties())
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getInt(2))).toMap
-    assert(got == Map(1L -> ("ann", 10), 2L -> ("bo2", 25), 3L -> ("cy", 30)))
-    // replaying batch 2 is idempotent
-    JdbcUpsertSink.upsertViaUpdateInsert(b2, url, "users", "id", types, maxConnections = 2)
-    assert(spark.read.jdbc(url, "users", new java.util.Properties()).count() == 3)
-  }
-
-  test("live jdbc staged-merge upsert against embedded Derby is last-write-wins") {
-    val url = "jdbc:derby:memory:graft_merge;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    conn.createStatement().execute(
-      """CREATE TABLE items ("id" BIGINT PRIMARY KEY, "payload" VARCHAR(64))""")
-    conn.close()
-    val b1 = Seq((1L, "a"), (2L, "b")).toDF("id", "payload")
-    JdbcUpsertSink.upsertViaMerge(b1, url, "items", "id", numPartitions = 2)
-    val b2 = Seq((2L, "B"), (3L, "c")).toDF("id", "payload")
-    JdbcUpsertSink.upsertViaMerge(b2, url, "items", "id", numPartitions = 2)
-    val got = spark.read.jdbc(url, "items", new java.util.Properties())
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got == Map(1L -> "a", 2L -> "B", 3L -> "c"))
-  }
-
-  test("ON CONFLICT dialect-golden: generated statement mirrors the reference shape") {
-    // The reference's production loader (door2door-etl
-    // src/helper/postgres.py:157-189) builds
-    //   INSERT INTO {table} ({', '.join(columns)}) VALUES ({%s,...})
-    //   ON CONFLICT (key) DO UPDATE SET {col = EXCLUDED.col, ...}
-    // with columns in DataFrame order and the update set covering
-    // every non-key column in that same order. No Postgres exists in
-    // this sandbox, so this pin is what guards the dialect: clause
-    // order, column order, one placeholder per column, EXCLUDED
-    // references, and quoting (deliberate divergences from the
-    // reference: `?` JDBC placeholders instead of psycopg `%s`, and
-    // quoted identifiers to match Spark's JDBC writer casing).
-    val cols = Seq("event_generated_id", "event_location_lat",
-      "event_location_lng", "event_at", "created_at")
-    val sql = JdbcUpsertSink.onConflictSql("vehicle", cols, "event_generated_id")
-    val shape =
-      """INSERT INTO (\S+) \((.+)\) VALUES \((.+)\) ON CONFLICT \((.+)\) DO UPDATE SET (.+)""".r
-    sql match {
-      case shape(table, colList, params, conflict, sets) =>
-        assert(table == "vehicle")
-        assert(colList == cols.map(c => s""""$c"""").mkString(", "))
-        assert(params == cols.map(_ => "?").mkString(", "))
-        assert(conflict == "\"event_generated_id\"")
-        assert(sets == cols.filterNot(_ == "event_generated_id")
-          .map(c => s""""$c" = EXCLUDED."$c"""").mkString(", "))
-      case _ => fail(s"statement does not match the reference clause shape: $sql")
-    }
-  }
-
-  test("ON CONFLICT dialect parses under the PostgreSQL INSERT grammar (not just the regex)") {
-    // Round-12 verdict task 4: no PG-wire engine exists in this
-    // sandbox, so the generated dialect text is validated by a strict
-    // recursive-descent implementation of the PUBLIC PostgreSQL
-    // INSERT grammar (PgInsertGrammar — productions transcribed from
-    // sql-insert.html + the lexical rules), which checks what the
-    // clause-shape regex cannot: identifier lexing with "" escapes,
-    // reserved-word rejection, arity of VALUES vs the column list,
-    // duplicate columns, and strict end-of-statement.
-    import PgInsertGrammar._
-    val cols = Seq("event_generated_id", "event_location_lat",
-      "event_location_lng", "event_at", "created_at")
-    val p = parse(JdbcUpsertSink.onConflictSql("vehicle", cols, "event_generated_id"))
-    assert(p.table == Seq("vehicle") && p.alias.isEmpty)
-    assert(p.columns == cols)
-    // one parameter per column, a single VALUES row
-    assert(p.valueRows == Seq(cols.map(_ => Param)))
-    // conflict target is the key; the update set covers EXACTLY the
-    // non-key columns, each assigned from EXCLUDED.<same column>
-    val c = p.onConflict.getOrElse(fail("missing ON CONFLICT"))
-    assert(c.target == Seq("event_generated_id"))
-    c.action match {
-      case DoUpdate(sets, hasWhere) =>
-        assert(!hasWhere)
-        assert(sets == cols.filterNot(_ == "event_generated_id")
-          .map(col => col -> ColRef(Seq("excluded", col))))
-      case other => fail(s"expected DO UPDATE, got $other")
-    }
-    // quoting survives hostile identifiers: an embedded double quote
-    // must round-trip through the "" escape, and a column that is a
-    // PG RESERVED word is legal only BECAUSE the sink quotes it
-    val hostile = Seq("id", """we"ird""", "select")
-    val ph = parse(JdbcUpsertSink.onConflictSql("t", hostile, "id"))
-    assert(ph.columns == hostile)
-    // strictness: statements a regex would wave through all throw
-    Seq(
-      // psycopg %s placeholders are client-side, not SQL
-      "INSERT INTO t (\"a\") VALUES (%s) ON CONFLICT (\"a\") DO NOTHING",
-      // missing DO
-      "INSERT INTO t (\"a\") VALUES (?) ON CONFLICT (\"a\") UPDATE SET \"a\" = EXCLUDED.\"a\"",
-      // arity mismatch
-      "INSERT INTO t (\"a\", \"b\") VALUES (?) ON CONFLICT (\"a\") DO NOTHING",
-      // dangling comma
-      "INSERT INTO t (\"a\",) VALUES (?) ON CONFLICT (\"a\") DO NOTHING",
-      // unquoted reserved word as identifier
-      "INSERT INTO t (select) VALUES (?) ON CONFLICT (select) DO NOTHING",
-      // unbalanced quoted identifier
-      "INSERT INTO t (\"a) VALUES (?)",
-      // duplicate SET column
-      "INSERT INTO t (\"a\",\"b\") VALUES (?,?) ON CONFLICT (\"a\") " +
-        "DO UPDATE SET \"b\" = EXCLUDED.\"b\", \"b\" = EXCLUDED.\"b\"",
-      // trailing junk
-      "INSERT INTO t (\"a\") VALUES (?) ON CONFLICT (\"a\") DO NOTHING garbage"
-    ).foreach { bad =>
-      intercept[IllegalArgumentException](parse(bad))
-    }
-    // the reference's own literal shape (postgres.py with psycopg %s
-    // interpolated to a literal, unquoted lower-case identifiers)
-    // also parses — PG folds unquoted identifiers to lower case,
-    // which is exactly why the sink quotes Spark-cased columns
-    val ref = parse("INSERT INTO vehicle (event_generated_id, event_at) " +
-      "VALUES ($1, $2) ON CONFLICT (event_generated_id) " +
-      "DO UPDATE SET event_at = EXCLUDED.event_at")
-    assert(ref.columns == Seq("event_generated_id", "event_at"))
-  }
-
-  test("jdbc upsert SQL is parameterized ON CONFLICT / MERGE / UPDATE-INSERT") {
-    val sql = JdbcUpsertSink.onConflictSql("t", Seq("id", "a", "b"), "id")
-    assert(sql == """INSERT INTO t ("id", "a", "b") VALUES (?, ?, ?) """ +
-      """ON CONFLICT ("id") DO UPDATE SET "a" = EXCLUDED."a", "b" = EXCLUDED."b"""")
-    val merge = JdbcUpsertSink.mergeSql("t", "t_staging", Seq("id", "a"), "id")
-    assert(merge.contains("""MERGE INTO t t USING t_staging s ON t."id" = s."id""""))
-    assert(merge.contains("""WHEN MATCHED THEN UPDATE SET "a" = s."a""""))
-    assert(merge.contains("""WHEN NOT MATCHED THEN INSERT ("id", "a") VALUES (s."id", s."a")"""))
-    val upd = JdbcUpsertSink.updateSql("t", Seq("id", "a", "b"), "id")
-    assert(upd == """UPDATE t SET "a" = ?, "b" = ? WHERE "id" = ?""")
-    val ins = JdbcUpsertSink.insertIfAbsentSql(
-      "t", Seq("id" -> "BIGINT", "a" -> "INT"), "id")
-    assert(ins == """INSERT INTO t ("id", "a") SELECT s."id", s."a" """ +
-      """FROM (VALUES (CAST(? AS BIGINT), CAST(? AS INT))) AS s ("id", "a") """ +
-      """WHERE NOT EXISTS (SELECT 1 FROM t t WHERE t."id" = s."id")""")
   }
 }
