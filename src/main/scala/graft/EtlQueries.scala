@@ -154,11 +154,12 @@ object EtlQueries {
 
   private val qUpsertSql = upsertQualifySql("", "")
 
-  /** K-2 at scale: the hive-partitioned upsert path (only partitions
-    * present in the batch are merged/rewritten). Partitioning by
-    * `event_date = date(ts)` — derived from a key column, so keys can
-    * never move partitions and the default immutable-partition
-    * contract holds. */
+  /** K-2 at scale: [[ParquetUpsertSink.upsert]]'s hive-partitioned
+    * form (only the partitions present in the batch are merged,
+    * staged and promoted, each through the sink's one per-unit
+    * commit). Partitioning by `event_date = date(ts)` — derived from
+    * a key column, so keys can never move partitions and the
+    * immutable-partition contract holds. */
   private def qUpsertPartitioned(s: SparkSession, dir: String): DataFrame = {
     val base = KeyGen.withKey(events(s, dir),
       Seq("user_id" -> LongType, "ts" -> TimestampType))
@@ -169,10 +170,8 @@ object EtlQueries {
       val scratch = graft.tools.Scratch.reusableDir("graft_upsert_part") + "/t"
       val batch1 = base.filter(col("event_id") % 2 === 0)
       val batch2 = base.filter(col("event_id") % 2 === 1)
-      ParquetUpsertSink.upsertPartitioned(s, batch1, scratch, KeyGen.columnName,
-        partitionCol = "event_date", orderCol = Some("event_id"))
-      ParquetUpsertSink.upsertPartitioned(s, batch2, scratch, KeyGen.columnName,
-        partitionCol = "event_date", orderCol = Some("event_id"))
+      Seq(batch1, batch2).foreach(b => ParquetUpsertSink.upsert(s, b, scratch,
+        KeyGen.columnName, orderCol = Some("event_id"), partitionCol = Some("event_date")))
       s.read.parquet(scratch)
         .select(col(KeyGen.columnName), col("event_id"), col("user_id"), col("value"),
           col("event_date"))

@@ -1,5 +1,6 @@
 package graft.ext.dedup
 
+import graft.ext.dedup.NearDup.freeCheckpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -38,15 +39,6 @@ import org.apache.spark.sql.functions._
   * use to keep the plan constant-size.
   */
 object DupGroups {
-
-  /** `localCheckpoint` persists its RDD OUTSIDE the cache manager, so
-    * `Dataset.unpersist` cannot release it; free the underlying RDD
-    * directly off the checkpointed plan's scan node. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** (id, group_id) for every vertex that appears in `pairs`;
     * group_id = min reachable id. Vertices not in any pair are absent
@@ -99,8 +91,8 @@ object DupGroups {
       parent.keySet().forEach(id => out += ((id, find(id))))
       return out.toSeq.toDF("id", "group_id")
     }
-    // `ckpt` is the raw checkpointed frame (freeCheckpoint needs its
-    // plan to BE the LogicalRDD scan); `labels` is the (id, label)
+    // `ckpt` is the raw checkpointed frame freeCheckpoint releases
+    // (its plan IS the LogicalRDD scan); `labels` is the (id, label)
     // view consumed by the next round
     var ckpt = edges.groupBy(col("src"))
       .agg(min(col("dst")).as("__m"))

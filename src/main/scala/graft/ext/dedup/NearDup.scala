@@ -42,6 +42,17 @@ object NearDup {
     } finally caches.foreach(_.unpersist())
   }
 
+  /** `localCheckpoint` persists its RDD OUTSIDE the cache manager, so
+    * `Dataset.unpersist` cannot release it; free every RDD under a
+    * `LogicalRDD` scan of the plan directly (a checkpointed frame's
+    * root is that scan). Shared by the iterative operators that cut
+    * lineage per round: DupGroups, PageRank, BpeTrainer. */
+  private[graft] def freeCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    }
+
   // ----------------------------------------------------------- exact dedup
 
   /** Exact dedup on the normalized-content fingerprint; keeps the

@@ -1,5 +1,6 @@
 package graft.ext.graph
 
+import graft.ext.dedup.NearDup.freeCheckpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,12 +35,6 @@ import org.apache.spark.sql.functions._
   * edge lists (the registry query's shape) have none.
   */
 object PageRank {
-
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Ranks after `iters` rounds over `edges(srcCol, dstCol, wCol)`.
     * Vertices = every id appearing as src or dst. Output:

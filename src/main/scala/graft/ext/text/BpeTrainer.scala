@@ -121,14 +121,6 @@ object BpeTrainer {
     tagged.select(col("word"), col("freq"), merged.as("syms"))
   }
 
-  /** `localCheckpoint` persists outside the cache manager; free the
-    * RDD under the LogicalRDD scan directly (DupGroups' pattern). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** Train `numMerges` merges. Returns
     * (merges: (merge_rank, left_sym, right_sym, pair_freq),
     *  finalWords: (word, freq, syms) after all merges) — both
@@ -154,7 +146,7 @@ object BpeTrainer {
           col("l").as("left_sym"), col("r").as("right_sym"),
           col("pair_freq"))
         val next = applyPair(words, best).localCheckpoint(true)
-        freeCheckpoint(words)
+        NearDup.freeCheckpoint(words)
         words = next
         rank += 1
       }
@@ -185,7 +177,7 @@ object BpeTrainer {
       val (merges, words) = train(docs, textCol, numMerges)
       try (NearDup.materializeAndRelease(merges, "bpe_merges"),
         NearDup.materializeAndRelease(words, "bpe_words"))
-      finally { freeCheckpoint(merges); freeCheckpoint(words) }
+      finally { NearDup.freeCheckpoint(merges); NearDup.freeCheckpoint(words) }
     }
 
   /** Per-document piece statistics under a trained tokenizer:

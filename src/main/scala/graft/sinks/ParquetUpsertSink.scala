@@ -1,87 +1,78 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.util.control.NonFatal
 
 /** Idempotent keyed upsert onto a parquet table (reference op K-2,
   * `src/helper/postgres.py:157-189`: `INSERT ... ON CONFLICT (key) DO
-  * UPDATE`, last write wins per key).
+  * UPDATE`, last write wins per key, committed all or nothing).
   *
   * Strategy is merge-on-write:
   *  1. dedup the incoming batch to one row per key (last-write-wins
   *     inside a batch, like the reference's sequential executemany);
-  *  2. keep every batch row and anti-join the existing table against
-  *     the batch's keys (incoming wins per key; no aggregation state);
-  *  3. rewrite and promote crash-safely (see below).
+  *  2. keep every batch row and anti-join the live rows against the
+  *     batch's keys (incoming wins per key; no aggregation state);
+  *  3. stage the merged rows and promote them (below).
   *
-  * Scale posture: the unpartitioned form rewrites the whole table —
-  * correct but O(table) per batch, fine for entity tables far smaller
-  * than the event stream. [[upsertPartitioned]] is the 100 TB path:
-  * the table is hive-partitioned (e.g. by event date), only the
-  * partitions present in the batch are read+merged, and the write
-  * uses dynamic partition overwrite so untouched partitions are never
-  * rewritten. The merge itself is a single shuffle by key.
+  * Scale posture: without a partition column the upsert rewrites the
+  * whole table — correct but O(table) per batch, fine for entity
+  * tables far smaller than the event stream. With one the table is
+  * hive-partitioned (e.g. by event date): only the partitions present
+  * in the batch are read, merged, staged and promoted, and untouched
+  * partitions are never rewritten. The merge itself is a single
+  * shuffle by key.
   *
-  * Crash safety of the full-rewrite path: the merged table is staged to
-  * `<table>__staging` (complete only once Spark's `_SUCCESS` marker
-  * lands), then promoted via rename table→`<table>__backup`,
-  * rename staging→table, delete backup. At every instant at least one
-  * COMPLETE copy of the data exists in some directory; [[recover]]
-  * (called automatically at the start of every upsert) rolls the state
-  * machine forward after a crash at any point.
+  * One commit protocol for both forms. The merged rows are staged to
+  * `<table>__staging`, complete only once Spark's `_SUCCESS` marker
+  * lands, then promoted unit by unit. A unit is a `col=value` child of
+  * the staging directory (one partition), or the staging directory
+  * itself when it has no such child (the whole table). Per unit the
+  * live unit, if there is one, moves under `<table>__backup` (a whole
+  * table becomes that directory itself), then the staged unit moves
+  * into the live table; the backup and the staging are deleted last.
+  * The partitioned promote creates the backup directory before its
+  * first move, so an existing backup always means "the promote
+  * began". [[recover]] (called at the start of every upsert) reads the
+  * unit shape from the directories and settles a crash at any step on
+  * the pre-batch or the post-batch rows, never a mix.
   */
 object ParquetUpsertSink {
 
-  /** IO attribution for the scale bench (round-5 verdict task 4: the
-    * upsert ladder segment was 3.7× for 3.16× data and nothing
-    * recorded whether that was merge compute, small-file metadata, or
-    * promote/rename cost). Accumulated per upsert call, reset by the
-    * harness around a measured query: `filesWritten` counts the data
-    * files in the table after each promote (FS-metadata work scales
+  /** IO attribution for the scale bench and perfbench's sink layer.
+    * Accumulated per upsert call, reset by the harness around a
+    * measured query: `filesWritten` counts the data files each promote
+    * moved into the live table (the whole table without a partition
+    * column, the touched partitions with one; FS-metadata work scales
     * with it), `promoteSec` is time spent in the rename/delete state
-    * machine AFTER the merged write completed (pure commit cost,
-    * no compute). */
-  case class UpsertIo(
-      calls: Long, filesWritten: Long, promoteSec: Double, countFailures: Long = 0) {
+    * machine AFTER the merged write completed (pure commit cost, no
+    * compute). */
+  case class UpsertIo(calls: Long, filesWritten: Long, promoteSec: Double) {
     def json: String =
       s"""{"calls":$calls,"files_written":$filesWritten,""" +
-        s""""promote_sec":${math.rint(promoteSec * 1000) / 1000},""" +
-        s""""count_failures":$countFailures}"""
+        s""""promote_sec":${math.rint(promoteSec * 1000) / 1000}}"""
   }
   private val ioAcc =
     new java.util.concurrent.atomic.AtomicReference(UpsertIo(0, 0, 0.0))
   def resetIoStats(): Unit = ioAcc.set(UpsertIo(0, 0, 0.0))
   def ioStats: UpsertIo = ioAcc.get()
-  /** A negative `files` is [[countDataFiles]]'s listing-failure
-    * sentinel: adding it into the cumulative sum would silently skew
-    * the counter by −1 per failure, so it is recorded as an explicit
-    * `countFailures` tick instead (the sum stays a sum of real
-    * counts, and the failure is visible in the artifact). */
-  private def recordIo(files: Long, promoteSec: Double): Unit = {
-    var done = false
-    while (!done) {
-      val cur = ioAcc.get()
-      done = ioAcc.compareAndSet(cur, UpsertIo(
-        cur.calls + 1, cur.filesWritten + math.max(files, 0L),
-        cur.promoteSec + promoteSec,
-        cur.countFailures + (if (files < 0) 1 else 0)))
-    }
-  }
+  private def recordIo(files: Long, promoteSec: Double): Unit =
+    ioAcc.updateAndGet(cur =>
+      UpsertIo(cur.calls + 1, cur.filesWritten + files, cur.promoteSec + promoteSec))
+
+  /** A name Spark's parquet reader skips: it starts with `.`, or with
+    * `_` and is not a hive partition dir (`__batch_id=0` is visible;
+    * `_SUCCESS`, `_temporary`, `.crc` files are not). */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
 
   /** Data files under `dir` that Spark's parquet reader would see,
-    * recursive, lazily. A name is hidden when it starts with `.` or
-    * with `_` and is not a hive partition dir (`__batch_id=0` is
-    * visible; `_SUCCESS`, `_temporary`, `.crc` files are not), and a
-    * hidden dir hides everything under it. `listStatus` recursion,
-    * not `listFiles(recursive)`: the latter builds LocatedFileStatus,
-    * which some FileSystem implementations (including the local-FS
-    * wrapper the FS-contract tests drive through a custom scheme)
-    * cannot serve. */
+    * recursive, lazily; a [[hidden]] dir hides everything under it.
+    * `listStatus` recursion, not `listFiles(recursive)`: the latter
+    * builds LocatedFileStatus, which some FileSystem implementations
+    * (including the local-FS wrapper the FS-contract tests drive
+    * through a custom scheme) cannot serve. */
   private[graft] def visibleDataFiles(f: FileSystem, dir: Path): Iterator[Path] = {
-    def hidden(name: String): Boolean =
-      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
     def walk(p: Path): Iterator[Path] =
       f.listStatus(p).iterator.filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
         if (s.isDirectory) walk(s.getPath) else Iterator.single(s.getPath)
@@ -89,17 +80,8 @@ object ParquetUpsertSink {
     if (f.exists(dir)) walk(dir) else Iterator.empty
   }
 
-  /** [[visibleDataFiles]] count under `path`; −1 on any failure — IO
-    * observability must never fail the write. */
-  private def countDataFiles(spark: SparkSession, path: String): Long =
-    try visibleDataFiles(fs(spark, path), new Path(path)).size.toLong
-    catch { case NonFatal(_) => -1L }
-
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def exists(spark: SparkSession, path: String): Boolean =
-    fs(spark, path).exists(new Path(path))
 
   /** True iff the table path holds actual data files. A bare empty
     * directory — what [[graft.meta.FileMonitorStore.migrate]] creates —
@@ -132,38 +114,77 @@ object ParquetUpsertSink {
   /** True iff `path` holds a COMPLETE Spark write (its `_SUCCESS`
     * commit marker landed). */
   private[graft] def isComplete(spark: SparkSession, path: String): Boolean =
-    exists(spark, path.stripSuffix("/") + "/_SUCCESS")
+    fs(spark, path).exists(new Path(path.stripSuffix("/") + "/_SUCCESS"))
 
-  /** Roll the promote state machine forward after a crash. States
-    * (T = live table, S = complete staging, B = backup):
-    *  - T only / T+incomplete-S: normal; drop the half-written staging.
-    *  - T+S: crashed after staging, before promote — the merge never
-    *    took effect; drop S (the next upsert re-merges from T).
-    *  - B+S, no T: crashed mid-promote — S is the newest complete
-    *    table; promote it and drop B.
-    *  - B only, no T, no S: crashed between `rename S→T` failing
-    *    half-way? Renames are atomic per directory on HDFS/local FS, so
-    *    this state means S was already promoted and deleted — restore B.
-    *  - incomplete S only: a first write into a missing table crashed
-    *    mid-write; drop S.
+  /** The visible `col=value` child dirs of a listing: one per hive
+    * partition. */
+  private def partitionDirs(listing: Seq[FileStatus]): Seq[Path] =
+    listing.filter { s =>
+      val name = s.getPath.getName
+      s.isDirectory && name.contains("=") && !hidden(name)
+    }.map(_.getPath)
+
+  /** Promote the complete staging `s` into the live table `t` unit by
+    * unit (class doc), then drop the backup `b` and `s`; returns the
+    * data files promoted, counted from the promote's own listing.
+    * A unit already moved is no longer staged, so [[recover]] rolls a
+    * half-done promote forward through the same loop. */
+  private def promote(f: FileSystem, t: Path, s: Path, b: Path): Long = {
+    val listing = f.listStatus(s).toSeq
+    val parts = partitionDirs(listing)
+    // (staged, live, backup) per unit
+    val units =
+      if (parts.isEmpty) Seq((s, t, b))
+      else {
+        f.mkdirs(b)
+        f.mkdirs(t)
+        parts.map(u => (u, new Path(t, u.getName), new Path(b, u.getName)))
+      }
+    val files =
+      if (parts.isEmpty) listing.count(st => st.isFile && !hidden(st.getPath.getName))
+      else parts.map(visibleDataFiles(f, _).size).sum
+    units.foreach { case (staged, live, backup) =>
+      if (f.exists(live)) renameOrThrow(f, live, backup)
+      renameOrThrow(f, staged, live)
+    }
+    if (f.exists(b)) deleteOrThrow(f, b)
+    if (f.exists(s)) deleteOrThrow(f, s)
+    files.toLong
+  }
+
+  /** Settle the promote state machine after a crash (T = live table,
+    * S = staging, B = backup; the unit shape comes from the
+    * directories, see the class doc):
+    *  - complete S and B: the promote began — roll forward the units
+    *    still in S. S with no unit left beside a live T is a finished
+    *    partitioned promote; only its cleanup (below) remains;
+    *  - S and no B, or an incomplete S: the promote never began, the
+    *    batch never took effect — drop S (the next upsert re-merges);
+    *  - B and no S: every staged unit was promoted — restore any
+    *    backed-up unit with no live twin (a whole-table B with no T),
+    *    then drop B.
     */
   def recover(spark: SparkSession, tablePath: String): Unit = {
     val f = fs(spark, tablePath)
     val t = new Path(tablePath)
     val s = new Path(stagingPath(tablePath))
     val b = new Path(backupPath(tablePath))
-    if (f.exists(t)) {
-      // live table wins; discard any leftover promote state
+    if (f.exists(s) && f.exists(b) && isComplete(spark, s.toString) &&
+        (partitionDirs(f.listStatus(s).toSeq).nonEmpty || !f.exists(t))) {
+      promote(f, t, s, b)
+    } else {
       if (f.exists(s)) deleteOrThrow(f, s)
-      if (f.exists(b)) deleteOrThrow(f, b)
-    } else if (f.exists(s) && isComplete(spark, stagingPath(tablePath))) {
-      renameOrThrow(f, s, t)
-      if (f.exists(b)) deleteOrThrow(f, b)
-    } else if (f.exists(b)) {
-      if (f.exists(s)) deleteOrThrow(f, s) // incomplete staging
-      renameOrThrow(f, b, t)
-    } else if (f.exists(s)) {
-      deleteOrThrow(f, s) // a first write that never completed
+      if (f.exists(b)) {
+        val parts = partitionDirs(f.listStatus(b).toSeq)
+        val units = if (parts.isEmpty) Seq((b, t)) else parts.map(u => (u, new Path(t, u.getName)))
+        units.foreach { case (backup, live) =>
+          if (!f.exists(live)) {
+            f.mkdirs(live.getParent)
+            renameOrThrow(f, backup, live)
+          }
+        }
+        if (f.exists(b)) deleteOrThrow(f, b)
+      }
     }
   }
 
@@ -249,31 +270,35 @@ object ParquetUpsertSink {
         batch.dropDuplicates(key)
     }
 
-  private def nullKeyMessage(key: String): String =
-    s"null values in upsert key column '$key' are unsupported (the " +
-      "keyed merge cannot match them); keys are generated surrogates — " +
-      "fix the key derivation upstream"
-
   /** Null keys would silently corrupt the merge — [[merge]]'s
     * anti-join never matches a null key, so null-keyed rows would
     * survive on BOTH sides and accumulate monotonically across
     * batches. Keys are generated surrogates (upstream contract), so a
-    * null here is a bug: fail loudly, the same posture
-    * [[upsertPartitioned]] already takes for null partition values.
-    * Only the orderCol-less path uses this standalone scan (one
-    * key-column-pruned pass with an immediate limit-1); with an
-    * orderCol the check folds into [[dedupBatch]]'s single probe
-    * aggregate so the batch lineage is derived once, not twice. */
+    * null here is a bug: fail loudly, the same posture the partitioned
+    * form takes for null partition values. One key-column-pruned scan
+    * with an immediate limit-1, kept apart from [[dedupBatch]]'s dup
+    * probe (see its scaladoc). */
   private def requireNonNullKeys(batch: DataFrame, key: String): Unit =
-    require(batch.filter(col(key).isNull).isEmpty, nullKeyMessage(key))
+    require(batch.filter(col(key).isNull).isEmpty,
+      s"null values in upsert key column '$key' are unsupported (the " +
+        "keyed merge cannot match them); keys are generated surrogates — " +
+        "fix the key derivation upstream")
 
-  /** Data files per upsert rewrite. Modest: entity tables are row-few
-    * relative to the event stream, and per-file FS metadata work
-    * dominates rewrite cost at small scale. */
+  /** Data files per unpartitioned upsert rewrite. Modest: entity
+    * tables are row-few relative to the event stream, and per-file FS
+    * metadata work dominates rewrite cost at small scale. */
   private val OutputFiles = 8
 
-  /** Full-table merge-on-write upsert. Every write, the first into an
-    * empty table included, goes through [[stageAndPromote]].
+  /** Merge-on-write upsert. Every write, the first into an empty table
+    * included, goes through [[stageAndPromote]].
+    *
+    * With `partitionCol` the table is hive-partitioned by it and only
+    * the partitions the batch touches are read, rewritten and promoted.
+    * Contract: the partition-column value of a key must be immutable
+    * across batches (true when it is derived from the key's own
+    * columns, e.g. `event_date = date(ts)` under a `(user_id, ts)`
+    * key). A key that moved to another partition would keep its old
+    * copy there: only the touched partitions are read and merged.
     *
     * Returns the rows of the deduped batch: the distinct keys it
     * inserted or updated. The count is observed on the staged write
@@ -284,116 +309,78 @@ object ParquetUpsertSink {
       batch: DataFrame,
       tablePath: String,
       key: String,
-      orderCol: Option[String] = None): Long = {
+      orderCol: Option[String] = None,
+      partitionCol: Option[String] = None): Long = {
     recover(spark, tablePath)
-    // the null-key invariant is enforced inside dedupBatch (folded
-    // into its single probe aggregate on the orderCol path)
+    // the null-key invariant is enforced inside dedupBatch
     val incoming = dedupBatch(batch, key, orderCol)
     val rows = Observation()
     val counted = incoming.observe(rows, count(lit(1)).as("rows"))
     // the staged write reads the live table, so it can't overwrite it
     // in place; an empty table has nothing to merge
     val merged =
-      if (hasData(spark, tablePath)) merge(spark.read.parquet(tablePath), counted, incoming, key)
-      else counted
+      if (!hasData(spark, tablePath)) counted
+      else {
+        val live = spark.read.parquet(tablePath)
+        partitionCol match {
+          case None => merge(live, counted, incoming, key)
+          case Some(p) =>
+            val touched = touchedPartitions(batch, p)
+            // an empty batch touches no partition: nothing to stage
+            if (touched.isEmpty) return 0L
+            merge(live.filter(col(p).cast("string").isInCollection(touched)), counted, incoming, key)
+        }
+      }
     // repartition, NOT coalesce: coalesce is a narrow dependency, so
     // it fused the dedup/merge work INTO an OutputFiles-way final
     // stage — at sf100 that ran the whole merge at 8-task parallelism
     // (the dominant share of the 36 GB spill, and an OOM under a
     // forced hash build). The round-robin exchange decouples compute
-    // width from file count for one extra narrow-format pass.
-    val promoteSec = stageAndPromote(spark, merged.repartition(OutputFiles), tablePath)
-    recordIo(countDataFiles(spark, tablePath), promoteSec)
+    // width from file count for one extra narrow-format pass. The
+    // partitioned form co-locates each partition's rows in one task,
+    // or every task would append a file to every partition dir.
+    val out = partitionCol.fold(merged.repartition(OutputFiles))(p => merged.repartition(col(p)))
+    val (files, promoteSec) = stageAndPromote(spark, out, tablePath, partitionCol)
+    recordIo(files, promoteSec)
     rows.get("rows").asInstanceOf[Long]
   }
 
-  /** Replace the table at `tablePath` with `df` through the crash-safe
-    * stage-then-promote of the class doc (the table→backup rename is
-    * skipped when no table exists yet), hive-partitioned by
-    * `partitionCol` when given. Records no [[ioStats]]; returns the
-    * seconds spent after the staged write. */
+  /** Partition values the batch touches (a small list, collected
+    * driver-side), read off the raw batch: under the
+    * immutable-partition contract every row of a key carries the same
+    * value, so the dedup changes nothing here. Values are compared as
+    * STRINGS throughout: hive-style partition reads type-infer the
+    * partition column (e.g. "2022-11-24" → DateType) while the
+    * in-flight batch may carry it as a string, and a mixed-type Set
+    * would silently never match — string form is also what names the
+    * directory. NULL partition values are unsupported: hive writes
+    * them as the __HIVE_DEFAULT_PARTITION__ directory, which this
+    * string comparison would not match — fail loudly instead of
+    * merging the wrong partitions. */
+  private def touchedPartitions(batch: DataFrame, partitionCol: String): Seq[String] = {
+    val vs = batch.select(col(partitionCol).cast("string")).distinct()
+      .collect().map(r => Option(r.getString(0))).toSeq
+    require(vs.forall(_.isDefined),
+      s"null values in partition column '$partitionCol' are unsupported " +
+        "by the partitioned upsert (hive default partition); filter or " +
+        "default them upstream")
+    vs.flatten
+  }
+
+  /** Replace the table at `tablePath` with `df` (or, with
+    * `partitionCol`, the partitions `df` holds) through the staged,
+    * per-unit promote of the class doc. Records no [[ioStats]];
+    * returns the data files promoted and the seconds spent after the
+    * staged write. */
   private[graft] def stageAndPromote(
       spark: SparkSession, df: DataFrame, tablePath: String,
-      partitionCol: Option[String] = None): Double = {
+      partitionCol: Option[String] = None): (Long, Double) = {
     val staged = new Path(stagingPath(tablePath))
     df.write.partitionBy(partitionCol.toSeq: _*).mode("overwrite").parquet(staged.toString)
     val t0 = System.nanoTime()
-    val f = fs(spark, tablePath)
-    val table = new Path(tablePath)
-    val backup = new Path(backupPath(tablePath))
-    if (f.exists(table)) renameOrThrow(f, table, backup)
-    renameOrThrow(f, staged, table)
-    deleteOrThrow(f, backup)
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Partition-pruned upsert: merges only the partitions the batch
-    * touches and dynamically overwrites just those. The first write
-    * into an empty table goes through [[stageAndPromote]], so a crash
-    * in it leaves no data in the live directory.
-    *
-    * Contract: the partition-column value of a key must be immutable
-    * across batches (true when it is derived from the key's own
-    * columns, e.g. `event_date = date(ts)` under a `(user_id, ts)`
-    * key). A key that moved to another partition would keep its old
-    * copy there: only the touched partitions are read and merged.
-    */
-  def upsertPartitioned(
-      spark: SparkSession,
-      batch: DataFrame,
-      tablePath: String,
-      key: String,
-      partitionCol: String,
-      orderCol: Option[String] = None): Unit = {
-    recover(spark, tablePath)
-    // null-key invariant enforced inside dedupBatch (one probe job)
-    val incoming = dedupBatch(batch, key, orderCol).cache()
-    try {
-      // co-locate each hive partition's rows in one task before the
-      // write: otherwise every shuffle task appends a file to every
-      // partition dir (tasks × partitions small files — FS metadata
-      // cost dominates the merge at scale)
-      def onePilePerPartition(df: DataFrame): DataFrame =
-        df.repartition(col(partitionCol))
-      if (!hasData(spark, tablePath)) {
-        val promoteSec = stageAndPromote(
-          spark, onePilePerPartition(incoming), tablePath, Some(partitionCol))
-        recordIo(countDataFiles(spark, tablePath), promoteSec)
-        return
-      }
-      // Partitions touched by this batch (small list, collected
-      // driver-side). Values are compared as STRINGS throughout:
-      // hive-style partition reads type-infer the partition column
-      // (e.g. "2022-11-24" → DateType) while the in-flight batch may
-      // carry it as a string, and a mixed-type Set would silently
-      // never match — string form is also what names the directory.
-      // NULL partition values are unsupported: hive writes them as the
-      // __HIVE_DEFAULT_PARTITION__ directory, which this string
-      // comparison would not match — fail loudly instead of merging
-      // the wrong partitions.
-      val touched: Seq[String] = {
-        val vs = incoming.select(col(partitionCol).cast("string")).distinct()
-          .collect().map(r => Option(r.getString(0))).toSeq
-        require(vs.forall(_.isDefined),
-          s"null values in partition column '$partitionCol' are unsupported " +
-            "by the partitioned upsert (hive default partition); filter or " +
-            "default them upstream")
-        vs.flatten
-      }
-      val existing = spark.read.parquet(tablePath)
-        .filter(col(partitionCol).cast("string").isInCollection(touched))
-      val merged = merge(
-        existing.select(incoming.columns.toIndexedSeq.map(col): _*), incoming, incoming, key)
-        .cache()
-      try {
-        onePilePerPartition(merged).write
-          .partitionBy(partitionCol)
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(tablePath)
-        recordIo(countDataFiles(spark, tablePath), 0.0)
-      } finally merged.unpersist()
-    } finally incoming.unpersist()
+    val files = promote(fs(spark, tablePath), new Path(tablePath), staged,
+      new Path(backupPath(tablePath)))
+    (files, (System.nanoTime() - t0) / 1e9)
   }
 
   /** Prefer the incoming row per key: all incoming rows survive, and
@@ -417,7 +404,7 @@ object ParquetUpsertSink {
     * spill path and OOM'd the sf100 cell under stage fusion).
     * Null keys never reach this join: the anti join cannot match
     * them (they would survive on both sides and accumulate across
-    * batches), so both public entry points reject them loudly first
+    * batches), so [[upsert]] rejects them loudly first
     * ([[requireNonNullKeys]]). `kept` is `incoming` as the union
     * writes it ([[upsert]] passes it observed); the anti join reads
     * `incoming`'s keys. */

@@ -31,6 +31,12 @@ class GraftTestFileSystem extends RawLocalFileSystem {
       throw new java.io.IOException(s"injected rename fault: $src -> $dst")
     else super.rename(src, dst)
 
+  /** Deletes the test's fault hook picks fail with an IOException. */
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    if (GraftTestFileSystem.failDelete(p))
+      throw new java.io.IOException(s"injected delete fault: $p")
+    else super.delete(p, recursive)
+
   /** Accept only graftfs paths (and scheme-less relative ones). */
   override def checkPath(path: Path): Unit = {
     val scheme = path.toUri.getScheme
@@ -43,4 +49,6 @@ object GraftTestFileSystem {
   /** Fault hook: a rename for which this returns true fails. Tests
     * that set it restore the default. */
   @volatile var failRename: (Path, Path) => Boolean = (_, _) => false
+  /** Fault hook: a delete for which this returns true fails. */
+  @volatile var failDelete: Path => Boolean = _ => false
 }

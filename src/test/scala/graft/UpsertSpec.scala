@@ -74,7 +74,7 @@ class UpsertSpec extends SparkSpec {
     }
     assert(e1.getMessage.contains("null values in upsert key column"))
     val e2 = intercept[IllegalArgumentException] {
-      ParquetUpsertSink.upsertPartitioned(spark, bad, path, "id", "dt")
+      ParquetUpsertSink.upsert(spark, bad, path, "id", partitionCol = Some("dt"))
     }
     assert(e2.getMessage.contains("null values in upsert key column"))
     assert(!new java.io.File(path).exists()) // nothing written
@@ -84,13 +84,13 @@ class UpsertSpec extends SparkSpec {
     val root = tmpDir("upsert3") + "/t"
     val day1 = Seq(("k1", "2022-11-24", "a"), ("k2", "2022-11-25", "b"))
       .toDF("id", "dt", "payload")
-    ParquetUpsertSink.upsertPartitioned(spark, day1, root, "id", "dt")
+    ParquetUpsertSink.upsert(spark, day1, root, "id", partitionCol = Some("dt"))
     // touch only dt=2022-11-25
     val day2 = Seq(("k2", "2022-11-25", "B"), ("k3", "2022-11-25", "c"))
       .toDF("id", "dt", "payload")
     val p24 = new java.io.File(s"$root/dt=2022-11-24")
     val before = p24.listFiles().map(_.getName).toSet
-    ParquetUpsertSink.upsertPartitioned(spark, day2, root, "id", "dt")
+    ParquetUpsertSink.upsert(spark, day2, root, "id", partitionCol = Some("dt"))
     // untouched partition files unchanged
     assert(p24.listFiles().map(_.getName).toSet == before)
     val got = spark.read.parquet(root).collect()
@@ -101,12 +101,12 @@ class UpsertSpec extends SparkSpec {
   test("partitioned upsert rejects null partition values loudly") {
     val root = tmpDir("upsert_null") + "/t"
     val seed = Seq(("k1", "2022-11-24", "a")).toDF("id", "dt", "payload")
-    ParquetUpsertSink.upsertPartitioned(spark, seed, root, "id", "dt")
+    ParquetUpsertSink.upsert(spark, seed, root, "id", partitionCol = Some("dt"))
     // a null dt would land in __HIVE_DEFAULT_PARTITION__, which the
     // string-matched touched-partition logic cannot address — must fail
     val bad = Seq(("k2", null: String, "b")).toDF("id", "dt", "payload")
     val e = intercept[IllegalArgumentException] {
-      ParquetUpsertSink.upsertPartitioned(spark, bad, root, "id", "dt")
+      ParquetUpsertSink.upsert(spark, bad, root, "id", partitionCol = Some("dt"))
     }
     assert(e.getMessage.contains("null values in partition column"))
     // table untouched by the failed batch
@@ -180,16 +180,95 @@ class UpsertSpec extends SparkSpec {
     val partitionMoves = new java.util.concurrent.atomic.AtomicInteger
     GraftTestFileSystem.failRename = (_, dst) =>
       dst.getName.startsWith("dt=") && partitionMoves.incrementAndGet() == 2
-    try intercept[Exception](ParquetUpsertSink.upsertPartitioned(spark, batch, table, "id", "dt"))
+    try intercept[Exception](ParquetUpsertSink.upsert(spark, batch, table, "id", partitionCol = Some("dt")))
     finally GraftTestFileSystem.failRename = (_, _) => false
     assert(partitionMoves.get() >= 2, "the fault never fired")
     assert(ParquetUpsertSink.visibleDataFiles(fs, new Path(table)).isEmpty)
     ParquetUpsertSink.recover(spark, table)
     assert(!fs.exists(new Path(table + "__staging")) && !fs.exists(new Path(table + "__backup")))
     assert(ParquetUpsertSink.visibleDataFiles(fs, new Path(table)).isEmpty)
-    ParquetUpsertSink.upsertPartitioned(spark, batch, table, "id", "dt")
+    ParquetUpsertSink.upsert(spark, batch, table, "id", partitionCol = Some("dt"))
     val got = spark.read.parquet(table).collect()
       .map(r => r.getAs[String]("id") -> r.getAs[String]("payload")).toMap
     assert(got == Map("k1" -> "a", "k2" -> "b"))
+  }
+
+  /** The sink fault matrix on `graftfs://`: a later batch (two
+    * updates and one insert, one key left alone) into a non-empty
+    * table, run once for every rename and once for every delete the
+    * upsert reaches (Spark's task and job commit into the staging
+    * included), with that call failing. After each fault `recover`
+    * must leave exactly the pre-batch or the post-batch rows and no
+    * promote state, and rerunning the upsert must land the post-batch
+    * rows. */
+  private def faultMatrix(partitionCol: Option[String]): Unit = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfs.impl", classOf[GraftTestFileSystem].getName)
+    FileSystem.closeAll()
+    val root = tmpDir("upsert_faults")
+    val local = FileSystem.getLocal(conf).getRawFileSystem
+    val pre = Seq(("k0", "2022-11-23", "z"), ("k1", "2022-11-24", "a"), ("k2", "2022-11-25", "b"))
+      .toDF("id", "dt", "payload")
+    val batch = Seq(("k1", "2022-11-24", "A"), ("k2", "2022-11-25", "B"), ("k3", "2022-11-26", "c"))
+      .toDF("id", "dt", "payload")
+    val preRows = Map("k0" -> "z", "k1" -> "a", "k2" -> "b")
+    val postRows = Map("k0" -> "z", "k1" -> "A", "k2" -> "B", "k3" -> "c")
+    ParquetUpsertSink.upsert(spark, pre, s"$root/template", "id", partitionCol = partitionCol)
+    def rows(table: String): Map[String, String] = spark.read.parquet(table).collect()
+      .map(r => r.getAs[String]("id") -> r.getAs[String]("payload")).toMap
+
+    val trials = new AtomicInteger
+    val renames, deletes = new AtomicInteger
+    /** Upserts `batch` into a fresh copy of the pre-batch table with
+      * the `failRenameAt`-th rename or the `failDeleteAt`-th delete
+      * under it failing (0: none); returns the table. The upsert may
+      * throw or not: the rows are checked either way. */
+    def run(failRenameAt: Int, failDeleteAt: Int): String = {
+      val dir = s"$root/t${trials.incrementAndGet()}"
+      assert(FileUtil.copy(local, new Path(s"$root/template"), local, new Path(dir), false, conf))
+      def mine(p: Path): Boolean = p.toUri.getPath.startsWith(dir)
+      renames.set(0)
+      deletes.set(0)
+      GraftTestFileSystem.failRename = (src, _) =>
+        mine(src) && renames.incrementAndGet() == failRenameAt
+      GraftTestFileSystem.failDelete = p => mine(p) && deletes.incrementAndGet() == failDeleteAt
+      val table = s"graftfs://$dir"
+      try scala.util.Try(
+        ParquetUpsertSink.upsert(spark, batch, table, "id", partitionCol = partitionCol))
+      finally {
+        GraftTestFileSystem.failRename = (_, _) => false
+        GraftTestFileSystem.failDelete = _ => false
+      }
+      table
+    }
+
+    assert(rows(run(0, 0)) == postRows)
+    val (nRenames, nDeletes) = (renames.get, deletes.get)
+    assert(nRenames >= 3 && nDeletes >= 1, s"$nRenames renames, $nDeletes deletes")
+    info(s"faulting each of $nRenames renames and $nDeletes deletes")
+    val faults = (1 to nRenames).map(n => (s"rename $n", n, 0)) ++
+      (1 to nDeletes).map(n => (s"delete $n", 0, n))
+    faults.foreach { case (fault, r, d) =>
+      val table = run(r, d)
+      assert(renames.get >= r && deletes.get >= d, s"$fault of $nRenames/$nDeletes never fired")
+      ParquetUpsertSink.recover(spark, table)
+      val fs = new Path(table).getFileSystem(conf)
+      assert(!fs.exists(new Path(table + "__staging")) && !fs.exists(new Path(table + "__backup")),
+        s"$fault: promote state left after recover")
+      val got = rows(table)
+      assert(got == preRows || got == postRows, s"$fault: recovered to a mix: $got")
+      ParquetUpsertSink.upsert(spark, batch, table, "id", partitionCol = partitionCol)
+      assert(rows(table) == postRows, s"$fault: rerun after recover")
+    }
+  }
+
+  test("sink fault matrix: a failed rename or delete anywhere in an upsert recovers to pre or post rows") {
+    faultMatrix(partitionCol = None)
+  }
+
+  test("sink fault matrix: a failed rename or delete anywhere in a partitioned upsert recovers to pre or post rows") {
+    faultMatrix(partitionCol = Some("dt"))
   }
 }
