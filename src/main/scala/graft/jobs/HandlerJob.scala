@@ -3,6 +3,7 @@ package graft.jobs
 import java.sql.Timestamp
 import java.time.Instant
 import java.util.UUID
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 
 import graft.config.EntitySchema
 import graft.meta.{HandlerExecution, MonitorStore}
@@ -24,11 +25,26 @@ import scala.util.control.NonFatal
   * the only one (reference op R-2). Nothing is cached, so each
   * entity's scans read only its own columns. An entity's audit count
   * is the upsert's count of its deduped batch, which costs no job.
-  * Per-entity failure is caught so one entity's bad batch never
-  * blocks the others — the reference's contract
-  * (`handler.py:91-100`). Fatal JVM errors (out of memory,
-  * interrupts) are not per-entity failures: they propagate and the
-  * remaining entities are not attempted.
+  *
+  * The entities run side by side, unlike the reference's loop: each
+  * entity's plan, quality gate and [[ParquetUpsertSink.prepare]]
+  * (dedup, merge, staged write) run on a pool thread of their own, so
+  * one entity's Spark jobs and driver gaps overlap the other's. The
+  * calling thread then takes the entities in schema order: it waits
+  * for the entity's prepare, commits it (the promote) and appends its
+  * audit row. Every monitor-store call stays on the calling thread,
+  * in the sequential loop's order, so audit rows land in schema order.
+  * Each entity writes its own table (checked up front): two prepares
+  * into one table would share its staging.
+  *
+  * Per-entity failure, in the prepare or the commit, is caught so one
+  * entity's bad batch never blocks the others — the reference's
+  * contract (`handler.py:91-100`). Fatal JVM errors (out of memory,
+  * interrupts) are not per-entity failures: the loop stops, waits
+  * for the prepares still in flight and rethrows the error itself,
+  * and the remaining entities are not committed. What they staged
+  * stays invisible: a staging with no backup is dropped by the next
+  * upsert's [[ParquetUpsertSink.recover]].
   */
 object HandlerJob {
 
@@ -74,6 +90,9 @@ object HandlerJob {
       try { UUID.fromString(workflowId); true } catch { case _: Exception => false },
       s"workflow id is not a UUID: $workflowId")
 
+    // two concurrent prepares into one table would share its staging
+    val shared = schemas.groupBy(_.targetTable).collect { case (t, ss) if ss.size > 1 => t }
+    require(shared.isEmpty, s"target tables shared by several entities: ${shared.mkString(", ")}")
     val missing = schemas.map(_.targetTable).filterNot(store.targetTableExists)
     require(missing.isEmpty, s"missing target tables: ${missing.mkString(", ")}")
 
@@ -85,37 +104,54 @@ object HandlerJob {
     val stagedSchema = JsonLinesSource.read(spark, Nil, Pipelines.unionSourceStruct(schemas)).schema
     val staged = spark.read.schema(stagedSchema).parquet(stagedPath.get)
     val byEntity = EntitySplit(staged, "on", schemas.map(_.entity))
-    val outcomes = schemas.map { schema =>
-      val entity = schema.entity
-      // the plan is built INSIDE the try: analysis-time failures (e.g.
-      // AnalysisException on malformed staged data) must hit the
-      // per-entity catch and be recorded, not abort the remaining
-      // entities
-      try {
-        val keyed = entityPipeline(byEntity(entity), schema)
-        qualityGate.foreach(enforceGate(keyed, _))
-        val n = ParquetUpsertSink.upsert(
-          spark, keyed, s"$warehouseDir/${schema.targetTable}", KeyGen.columnName)
-        store.recordHandler(HandlerExecution(
-          workflowId, executionId, Timestamp.from(now), stagedPath,
-          schema.targetTable, n, None))
-        log.info("entity upserted", "workflow" -> workflowId,
-          "entity" -> entity, "table" -> schema.targetTable, "rows" -> n)
-        entity -> Right(n)
-      } catch {
-        case NonFatal(e) =>
-          // full stack trace, matching the reference's traceback
-          // capture (src/helper/postgres.py:45-63)
-          log.error("entity failed", e, "workflow" -> workflowId,
-            "entity" -> entity, "table" -> schema.targetTable)
+    // created here, so its threads inherit this thread's Spark local
+    // properties and active session
+    val pool = Executors.newFixedThreadPool(math.max(1, schemas.size))
+    try {
+      // the plan is built INSIDE the prepare: analysis-time failures
+      // (e.g. AnalysisException on malformed staged data) must become
+      // that entity's failure, not abort the remaining entities
+      val prepares = schemas.map { schema =>
+        val prepare: Callable[ParquetUpsertSink.Prepared] = () => {
+          val keyed = entityPipeline(byEntity(schema.entity), schema)
+          qualityGate.foreach(enforceGate(keyed, _))
+          ParquetUpsertSink.prepare(
+            spark, keyed, s"$warehouseDir/${schema.targetTable}", KeyGen.columnName)
+        }
+        pool.submit(prepare)
+      }
+      val outcomes = schemas.zip(prepares).map { case (schema, prepared) =>
+        val entity = schema.entity
+        try {
+          val n =
+            try prepared.get().commit()
+            catch { case e: ExecutionException => throw e.getCause }
           store.recordHandler(HandlerExecution(
             workflowId, executionId, Timestamp.from(now), stagedPath,
-            schema.targetTable, 0L, Some(Stacks.render(e))))
-          entity -> Left(e.toString)
+            schema.targetTable, n, None))
+          log.info("entity upserted", "workflow" -> workflowId,
+            "entity" -> entity, "table" -> schema.targetTable, "rows" -> n)
+          entity -> Right(n)
+        } catch {
+          case NonFatal(e) =>
+            // full stack trace, matching the reference's traceback
+            // capture (src/helper/postgres.py:45-63)
+            log.error("entity failed", e, "workflow" -> workflowId,
+              "entity" -> entity, "table" -> schema.targetTable)
+            store.recordHandler(HandlerExecution(
+              workflowId, executionId, Timestamp.from(now), stagedPath,
+              schema.targetTable, 0L, Some(Stacks.render(e))))
+            entity -> Left(e.toString)
+        }
       }
+      Result(
+        outcomes.collect { case (e, Right(n)) => e -> n }.toMap,
+        outcomes.collect { case (e, Left(err)) => e -> err }.toMap)
+    } finally {
+      // after a fatal error, the prepares still in flight finish
+      // before it propagates; what they staged is never promoted
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
     }
-    Result(
-      outcomes.collect { case (e, Right(n)) => e -> n }.toMap,
-      outcomes.collect { case (e, Left(err)) => e -> err }.toMap)
   }
 }

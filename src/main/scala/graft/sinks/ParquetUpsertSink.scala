@@ -1,8 +1,13 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent keyed upsert onto a parquet table (reference op K-2,
   * `src/helper/postgres.py:157-189`: `INSERT ... ON CONFLICT (key) DO
@@ -36,6 +41,11 @@ import org.apache.spark.sql.functions._
   * began". [[recover]] (called at the start of every upsert) reads the
   * unit shape from the directories and settles a crash at any step on
   * the pre-batch or the post-batch rows, never a mix.
+  *
+  * [[upsert]] is [[prepare]] (recover, dedup, merge, staged write)
+  * then [[Prepared.commit]] (the promote). A caller that writes
+  * several tables can prepare them concurrently and commit them in
+  * its own order ([[graft.jobs.HandlerJob]]).
   */
 object ParquetUpsertSink {
 
@@ -83,13 +93,19 @@ object ParquetUpsertSink {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** True iff the table path holds actual data files. A bare empty
-    * directory — what [[graft.meta.FileMonitorStore.migrate]] creates —
-    * is a valid PRE-EXISTING but EMPTY table: the upsert then takes
-    * the fresh-write path instead of trying to read a schema from
-    * nothing. */
-  private def hasData(spark: SparkSession, path: String): Boolean =
-    visibleDataFiles(fs(spark, path), new Path(path)).hasNext
+  /** The live table's data schema, from the footer of one of its
+    * data files, read on the driver. `spark.read.parquet` infers it
+    * from one file's footer too, with the same conversion
+    * (`readSchemaFromFooter` under the session's parquet settings),
+    * but in a one-task Spark job. Partition columns are not in the
+    * footer; the read still infers them from the directory names. */
+  private def footerSchema(spark: SparkSession, file: Path): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** HDFS-style FileSystem calls signal some failures by RETURNING
     * false rather than throwing (e.g. rename onto an existing path) —
@@ -289,8 +305,41 @@ object ParquetUpsertSink {
     * metadata work dominates rewrite cost at small scale. */
   private val OutputFiles = 8
 
-  /** Merge-on-write upsert. Every write, the first into an empty table
-    * included, goes through [[stageAndPromote]].
+  /** A batch [[prepare]] merged and staged under `<table>__staging`.
+    * Nothing of it is visible until [[commit]]. A handle never
+    * committed leaves a staging with no backup, which the next
+    * upsert's [[recover]] drops. */
+  final class Prepared private[ParquetUpsertSink] (
+      spark: SparkSession, tablePath: String, rows: Long, staged: Boolean) {
+
+    /** Promote the staging into the live table (class doc), record
+      * the promote in [[ioStats]] and return the rows of the deduped
+      * batch. */
+    def commit(): Long = {
+      if (staged) {
+        val (files, promoteSec) = promoteStaged(spark, tablePath)
+        recordIo(files, promoteSec)
+      }
+      rows
+    }
+  }
+
+  /** Merge-on-write upsert: [[prepare]] then [[Prepared.commit]].
+    * Returns the rows of the deduped batch. */
+  def upsert(
+      spark: SparkSession,
+      batch: DataFrame,
+      tablePath: String,
+      key: String,
+      orderCol: Option[String] = None,
+      partitionCol: Option[String] = None): Long =
+    prepare(spark, batch, tablePath, key, orderCol, partitionCol).commit()
+
+  /** The upsert up to its promote: [[recover]] the table, dedup the
+    * batch, merge it with the live rows and stage the result. Every
+    * write, the first into an empty table included, is staged. Two
+    * prepares into one table at once would share its staging; into
+    * different tables they are independent.
     *
     * With `partitionCol` the table is hive-partitioned by it and only
     * the partitions the batch touches are read, rewritten and promoted.
@@ -300,37 +349,41 @@ object ParquetUpsertSink {
     * key). A key that moved to another partition would keep its old
     * copy there: only the touched partitions are read and merged.
     *
-    * Returns the rows of the deduped batch: the distinct keys it
-    * inserted or updated. The count is observed on the staged write
+    * The handle's count is the rows of the deduped batch: the distinct
+    * keys it inserts or updates. It is observed on the staged write
     * itself (`Dataset.observe` on the batch's branch of the merge
-    * union, not on the anti join's key side), so it costs no job. */
-  def upsert(
+    * union, not on the anti join's key side), so it costs no job. The
+    * live rows are read with the schema of one data file's footer
+    * ([[footerSchema]]), found by the same listing that tells an empty
+    * table from a live one, so no schema-inference job runs. */
+  def prepare(
       spark: SparkSession,
       batch: DataFrame,
       tablePath: String,
       key: String,
       orderCol: Option[String] = None,
-      partitionCol: Option[String] = None): Long = {
+      partitionCol: Option[String] = None): Prepared = {
     recover(spark, tablePath)
     // the null-key invariant is enforced inside dedupBatch
     val incoming = dedupBatch(batch, key, orderCol)
     val rows = Observation()
     val counted = incoming.observe(rows, count(lit(1)).as("rows"))
     // the staged write reads the live table, so it can't overwrite it
-    // in place; an empty table has nothing to merge
-    val merged =
-      if (!hasData(spark, tablePath)) counted
-      else {
-        val live = spark.read.parquet(tablePath)
+    // in place; an empty table (e.g. the bare directory
+    // FileMonitorStore.migrate creates) has nothing to merge
+    val merged = visibleDataFiles(fs(spark, tablePath), new Path(tablePath)).nextOption() match {
+      case None => counted
+      case Some(file) =>
+        val live = spark.read.schema(footerSchema(spark, file)).parquet(tablePath)
         partitionCol match {
           case None => merge(live, counted, incoming, key)
           case Some(p) =>
             val touched = touchedPartitions(batch, p)
             // an empty batch touches no partition: nothing to stage
-            if (touched.isEmpty) return 0L
+            if (touched.isEmpty) return new Prepared(spark, tablePath, 0L, staged = false)
             merge(live.filter(col(p).cast("string").isInCollection(touched)), counted, incoming, key)
         }
-      }
+    }
     // repartition, NOT coalesce: coalesce is a narrow dependency, so
     // it fused the dedup/merge work INTO an OutputFiles-way final
     // stage — at sf100 that ran the whole merge at 8-task parallelism
@@ -340,9 +393,8 @@ object ParquetUpsertSink {
     // partitioned form co-locates each partition's rows in one task,
     // or every task would append a file to every partition dir.
     val out = partitionCol.fold(merged.repartition(OutputFiles))(p => merged.repartition(col(p)))
-    val (files, promoteSec) = stageAndPromote(spark, out, tablePath, partitionCol)
-    recordIo(files, promoteSec)
-    rows.get("rows").asInstanceOf[Long]
+    stage(out, tablePath, partitionCol)
+    new Prepared(spark, tablePath, rows.get("rows").asInstanceOf[Long], staged = true)
   }
 
   /** Partition values the batch touches (a small list, collected
@@ -367,6 +419,21 @@ object ParquetUpsertSink {
     vs.flatten
   }
 
+  /** Write `df` (partitioned by `partitionCol`, if given) to the
+    * staging of the table at `tablePath`; complete once Spark's
+    * `_SUCCESS` marker lands. */
+  private def stage(df: DataFrame, tablePath: String, partitionCol: Option[String]): Unit =
+    df.write.partitionBy(partitionCol.toSeq: _*).mode("overwrite").parquet(stagingPath(tablePath))
+
+  /** [[promote]] the complete staging of the table at `tablePath`;
+    * returns the data files promoted and the seconds it took. */
+  private def promoteStaged(spark: SparkSession, tablePath: String): (Long, Double) = {
+    val t0 = System.nanoTime()
+    val files = promote(fs(spark, tablePath), new Path(tablePath),
+      new Path(stagingPath(tablePath)), new Path(backupPath(tablePath)))
+    (files, (System.nanoTime() - t0) / 1e9)
+  }
+
   /** Replace the table at `tablePath` with `df` (or, with
     * `partitionCol`, the partitions `df` holds) through the staged,
     * per-unit promote of the class doc. Records no [[ioStats]];
@@ -375,12 +442,8 @@ object ParquetUpsertSink {
   private[graft] def stageAndPromote(
       spark: SparkSession, df: DataFrame, tablePath: String,
       partitionCol: Option[String] = None): (Long, Double) = {
-    val staged = new Path(stagingPath(tablePath))
-    df.write.partitionBy(partitionCol.toSeq: _*).mode("overwrite").parquet(staged.toString)
-    val t0 = System.nanoTime()
-    val files = promote(fs(spark, tablePath), new Path(tablePath), staged,
-      new Path(backupPath(tablePath)))
-    (files, (System.nanoTime() - t0) / 1e9)
+    stage(df, tablePath, partitionCol)
+    promoteStaged(spark, tablePath)
   }
 
   /** Prefer the incoming row per key: all incoming rows survive, and
@@ -397,16 +460,16 @@ object ParquetUpsertSink {
     * write-side `coalesce(OutputFiles)` narrowed the FINAL stage, so
     * that sort-aggregation ran at OutputFiles-way parallelism —
     * together the dominant share of the sf100 upsert cells' 36-45 GB
-    * spill (the coalesce is now a repartition — see [[upsert]]).
+    * spill (the coalesce is now a repartition — see [[prepare]]).
     * The batch-keys side is corpus-LINEAR, so the join carries no
     * strategy hint: AQE's local-map-threshold demotion hash-builds it
     * only after checking the per-partition size (a forced hint has no
     * spill path and OOM'd the sf100 cell under stage fusion).
     * Null keys never reach this join: the anti join cannot match
     * them (they would survive on both sides and accumulate across
-    * batches), so [[upsert]] rejects them loudly first
+    * batches), so [[prepare]] rejects them loudly first
     * ([[requireNonNullKeys]]). `kept` is `incoming` as the union
-    * writes it ([[upsert]] passes it observed); the anti join reads
+    * writes it ([[prepare]] passes it observed); the anti join reads
     * `incoming`'s keys. */
   private def merge(
       existing: DataFrame, kept: DataFrame, incoming: DataFrame, key: String): DataFrame =

@@ -187,7 +187,7 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
       recorded.mkString("; "))
   }
 
-  test("a fatal JVM error propagates out of the handler; the next entity is not attempted") {
+  test("a fatal JVM error propagates out of the handler; the next entity is not committed") {
     val root = tmpDir("fatal")
     val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
     val files = new FileMonitorStore(spark, s"$root/monitor",
@@ -222,6 +222,100 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
       try spark.read.parquet(s"$root/tables/${schemas(1).targetTable}").count()
       catch { case _: org.apache.spark.sql.AnalysisException => 0L }
     assert(second == 0L, "the second entity must not be attempted")
+  }
+
+  /** A staged hour of one vehicle and one operating period, for the
+    * handler on a `graftfs://` warehouse whose fault hooks the test
+    * sets. Returns the warehouse, the audit rows the handler appends
+    * (recorded in order, then written through) and its store. */
+  private def graftfsHour(name: String, wf: String)
+      : (String, scala.collection.mutable.ArrayBuffer[HandlerExecution], MonitorStore) = {
+    import org.apache.hadoop.fs.FileSystem
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfs.impl", classOf[GraftTestFileSystem].getName)
+    FileSystem.closeAll()
+    val root = tmpDir(name)
+    val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
+    val tables = s"graftfs://$root/tables"
+    val files = new FileMonitorStore(spark, s"$root/monitor", warehouseDir = Some(tables))
+    val schemas = EntitySchema.reference
+    files.migrate(schemas.map(_.targetTable))
+    writeLanding(landing, "a.json", hour0.plusSeconds(60), vehicleLine, periodLine)
+    IngestorJob.run(spark, files, landing, s"$root/staging",
+      Pipelines.unionSourceStruct(schemas), wf)
+    val recorded = scala.collection.mutable.ArrayBuffer.empty[HandlerExecution]
+    val store = new MonitorStore {
+      def lastSuccessfulFetchHour() = files.lastSuccessfulFetchHour()
+      def stagedFilePath(workflowId: String) = files.stagedFilePath(workflowId)
+      def recordIngestor(row: IngestorExecution): Unit = files.recordIngestor(row)
+      def recordHandler(row: HandlerExecution): Unit = { recorded += row; files.recordHandler(row) }
+      def targetTableExists(table: String) = files.targetTableExists(table)
+    }
+    (tables, recorded, store)
+  }
+
+  /** Rows of a warehouse table; a table with no data file has none. */
+  private def tableRows(path: String): Long =
+    try spark.read.parquet(path).count()
+    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+
+  test("a fatal error in the second entity's prepare propagates itself; the first is committed and audited") {
+    val wf = UUID.randomUUID().toString
+    val (tables, recorded, store) = graftfsHour("fatal_prepare", wf)
+    val Seq(first, second) = EntitySchema.reference.map(_.targetTable)
+    // a stale staging the second prepare's recover deletes first
+    val stale = new org.apache.hadoop.fs.Path(s"$tables/${second}__staging")
+    stale.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(stale)
+    GraftTestFileSystem.failDelete = p => p.getName == stale.getName && (throw new StubFatalError)
+    try intercept[StubFatalError] {
+      HandlerJob.run(spark, store, tables, EntitySchema.reference, wf)
+    }
+    finally GraftTestFileSystem.failDelete = _ => false
+    assert(recorded.map(r => r.destinationTable -> r.traceback) == Seq(first -> None),
+      "the first entity is audited; the error is no failure row")
+    assert(tableRows(s"$tables/$first") == 1L)
+    assert(tableRows(s"$tables/$second") == 0L, "the second entity has no visible rows")
+  }
+
+  test("a failed prepare of the first entity lets the second commit; audit rows stay in schema order") {
+    val wf = UUID.randomUUID().toString
+    val (tables, recorded, store) = graftfsHour("failed_prepare", wf)
+    val Seq(first, second) = EntitySchema.reference.map(_.targetTable)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stale = new org.apache.hadoop.fs.Path(s"$tables/${first}__staging")
+    val fs = stale.getFileSystem(conf)
+    fs.mkdirs(stale)
+    // the first prepare fails only once the second has staged its batch,
+    // so the second is ready before the first's failure is known
+    val secondStaged = new org.apache.hadoop.fs.Path(s"$tables/${second}__staging/_SUCCESS")
+    val waited = new java.util.concurrent.atomic.AtomicBoolean
+    GraftTestFileSystem.failDelete = p => p.getName == stale.getName && {
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!fs.exists(secondStaged) && System.nanoTime() < deadline) Thread.sleep(20)
+      waited.set(fs.exists(secondStaged))
+      true
+    }
+    val res =
+      try HandlerJob.run(spark, store, tables, EntitySchema.reference, wf)
+      finally GraftTestFileSystem.failDelete = _ => false
+    assert(waited.get, "the second entity never staged its batch")
+    assert(res.failures.keySet == Set("vehicle") && res.failures("vehicle").contains("injected delete fault"))
+    assert(res.recordsInserted == Map("operating_period" -> 1L))
+    assert(recorded.map(r => r.destinationTable -> r.traceback.isDefined) ==
+      Seq(first -> true, second -> false))
+    assert(tableRows(s"$tables/$first") == 0L)
+    assert(tableRows(s"$tables/$second") == 1L)
+  }
+
+  test("precheck refuses entities that share a target table") {
+    val root = tmpDir("shared_table")
+    val store = new FileMonitorStore(spark, s"$root/monitor")
+    val Seq(vehicle, period) = EntitySchema.reference
+    val ex = intercept[IllegalArgumentException] {
+      HandlerJob.run(spark, store, s"$root/tables",
+        Seq(vehicle, period.copy(targetTable = vehicle.targetTable)), UUID.randomUUID().toString)
+    }
+    assert(ex.getMessage.contains(s"target tables shared by several entities: ${vehicle.targetTable}"))
   }
 
   test("handler with no staged file is a clean no-op") {
@@ -286,12 +380,13 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
     assert(audited.toSeq == Seq("vehicle_location" -> 1L))
   }
 
-  test("job budget: an incremental Executor hour runs at most 14 Spark jobs and audits distinct keys") {
+  test("job budget: an incremental Executor hour runs at most 12 Spark jobs and audits distinct keys") {
     // an hour ran 27 jobs when the monitor store scanned its audit
     // files with Spark and the handler counted each entity with its own
     // action; 16 while the handler cached the staged batch and each
-    // entity's frame and deduped before the upsert; 13 since. One job
-    // of slack: a plan can start an extra one-task job from run to run.
+    // entity's frame and deduped before the upsert; 13 while the upsert
+    // inferred the live table's schema in a job; 11 since. One job of
+    // slack: a plan can start an extra one-task job from run to run.
     val root = tmpDir("job_budget")
     val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
     writeLanding(landing, "a.json", hour0.plusSeconds(60), vehicleLine, periodLine)
@@ -302,7 +397,7 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
     val args = Executor.parse(Seq("--root", root, "--landing", landing))
     Executor.run(spark, args) // the cold hour, into an empty warehouse
     val jobs = jobsOf(Executor.run(spark, args))
-    assert(jobs <= 14, s"an incremental hour ran $jobs Spark jobs")
+    assert(jobs <= 12, s"an incremental hour ran $jobs Spark jobs")
 
     val store = new FileMonitorStore(spark, s"$root/monitor")
     val wf = store.ingestorRows()

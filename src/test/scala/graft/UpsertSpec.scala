@@ -166,6 +166,49 @@ class UpsertSpec extends SparkSpec {
     assert(ParquetUpsertSink.upsert(spark, ordered, path + "_ordered", "id", Some("ver")) == 1L)
   }
 
+  test("schema drift: an extra batch column fails; a missing or retyped one merges as before") {
+    // the live rows are read with the schema of a data file's footer;
+    // these are the outcomes of the inferred-schema read it replaced
+    val base = Seq(("k1", "a", 1), ("k2", "b", 2)).toDF("id", "payload", "n")
+    def live(name: String): String = {
+      val path = tmpDir(name) + "/t"
+      ParquetUpsertSink.upsert(spark, base, path, "id")
+      path
+    }
+    def rows(path: String): (String, Seq[String]) = {
+      val t = spark.read.parquet(path)
+      (t.schema.simpleString, t.collect().map(_.toString).toSeq.sorted)
+    }
+    val before = ("struct<id:string,payload:string,n:int>", Seq("[k1,a,1]", "[k2,b,2]"))
+
+    // a column the live table lacks
+    val extra = live("drift_extra")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      ParquetUpsertSink.upsert(spark,
+        Seq(("k2", "B", 2, "x")).toDF("id", "payload", "n", "extra"), extra, "id")
+    }
+    assert(rows(extra) == before)
+
+    // a batch without a live column: the rewrite keeps the batch's
+    // columns only, so the column leaves the table
+    val missing = live("drift_missing")
+    assert(ParquetUpsertSink.upsert(spark, Seq(("k2", 3)).toDF("id", "n"), missing, "id") == 1L)
+    assert(rows(missing) == (("struct<id:string,n:int>", Seq("[k1,1]", "[k2,3]"))))
+
+    // a live column's type changed: a widening merges into the wider
+    // type, a string column the batch brings as bigint fails the cast
+    // of the live values and leaves the table as it was
+    val widened = live("drift_widened")
+    assert(ParquetUpsertSink.upsert(spark,
+      Seq(("k2", "B", 3L)).toDF("id", "payload", "n"), widened, "id") == 1L)
+    assert(rows(widened) == (("struct<id:string,payload:string,n:bigint>", Seq("[k1,a,1]", "[k2,B,3]"))))
+    val retyped = live("drift_retyped")
+    intercept[NumberFormatException] {
+      ParquetUpsertSink.upsert(spark, Seq(("k2", 7L, 2)).toDF("id", "payload", "n"), retyped, "id")
+    }
+    assert(rows(retyped) == before)
+  }
+
   test("a first partitioned batch that fails mid-write leaves the live table empty; recover cleans up") {
     import org.apache.hadoop.fs.{FileSystem, Path}
     val conf = spark.sparkContext.hadoopConfiguration
