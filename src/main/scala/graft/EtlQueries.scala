@@ -155,7 +155,7 @@ object EtlQueries {
   private val qUpsertSql = upsertQualifySql("", "")
 
   /** K-2 at scale: [[ParquetUpsertSink.upsert]]'s hive-partitioned
-    * form (only the partitions present in the batch are merged,
+    * form (only the partitions present in the batch are picked,
     * staged and promoted, each through the sink's one per-unit
     * commit). Partitioning by `event_date = date(ts)` — derived from
     * a key column, so keys can never move partitions and the

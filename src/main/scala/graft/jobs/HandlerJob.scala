@@ -21,20 +21,21 @@ import scala.util.control.NonFatal
   *
   * The staged frame is read with the schema the ingestor wrote it
   * with (no inference job). Each entity is one lazy plan (filter →
-  * normalize → keygen) handed to the upsert, whose per-key dedup is
-  * the only one (reference op R-2). Nothing is cached, so each
+  * normalize → keygen) handed to the upsert, whose keyed pick is the
+  * only per-key dedup (reference op R-2). Nothing is cached, so each
   * entity's scans read only its own columns. An entity's audit count
-  * is the upsert's count of its deduped batch, which costs no job.
+  * is the batch rows the upsert's pick kept, which costs no job.
   *
   * The entities run side by side, unlike the reference's loop: each
   * entity's plan, quality gate and [[ParquetUpsertSink.prepare]]
-  * (dedup, merge, staged write) run on a pool thread of their own, so
-  * one entity's Spark jobs and driver gaps overlap the other's. The
-  * calling thread then takes the entities in schema order: it waits
-  * for the entity's prepare, commits it (the promote) and appends its
-  * audit row. Every monitor-store call stays on the calling thread,
-  * in the sequential loop's order, so audit rows land in schema order.
-  * Each entity writes its own table (checked up front): two prepares
+  * (the keyed pick and its staged write) run on a pool thread of
+  * their own, so one entity's Spark jobs and driver gaps overlap the
+  * other's. The calling thread then takes the entities in schema
+  * order: it waits for the entity's prepare, commits it (the promote)
+  * and appends its audit row. Every monitor-store call stays on the
+  * calling thread, in the sequential loop's order, so audit rows land
+  * in schema order. Each entity writes its own table (checked up
+  * front): two prepares
   * into one table would share its staging.
   *
   * Per-entity failure, in the prepare or the commit, is caught so one

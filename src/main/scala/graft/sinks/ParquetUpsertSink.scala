@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -13,22 +14,22 @@ import org.apache.spark.sql.types.StructType
   * `src/helper/postgres.py:157-189`: `INSERT ... ON CONFLICT (key) DO
   * UPDATE`, last write wins per key, committed all or nothing).
   *
-  * Strategy is merge-on-write:
-  *  1. dedup the incoming batch to one row per key (last-write-wins
-  *     inside a batch, like the reference's sequential executemany);
-  *  2. keep every batch row and anti-join the live rows against the
-  *     batch's keys (incoming wins per key; no aggregation state);
-  *  3. stage the merged rows and promote them (below).
+  * Strategy is merge-on-write: one keyed pick over the batch and the
+  * live rows keeps one row per key, the incoming row over the live one
+  * and, inside the batch, the max-`orderCol` row ([[prepare]]); the
+  * picked rows are staged and promoted (below).
   *
   * Scale posture: without a partition column the upsert rewrites the
   * whole table — correct but O(table) per batch, fine for entity
   * tables far smaller than the event stream. With one the table is
   * hive-partitioned (e.g. by event date): only the partitions present
-  * in the batch are read, merged, staged and promoted, and untouched
-  * partitions are never rewritten. The merge itself is a single
-  * shuffle by key.
+  * in the batch are read, picked, staged and promoted, and untouched
+  * partitions are never rewritten. The pick is a single shuffle and a
+  * sort, with no join and no aggregation buffer; the rewrite has one
+  * file per reduce partition of that shuffle as adaptive execution
+  * coalesces it (one per touched partition in the partitioned form).
   *
-  * One commit protocol for both forms. The merged rows are staged to
+  * One commit protocol for both forms. The picked rows are staged to
   * `<table>__staging`, complete only once Spark's `_SUCCESS` marker
   * lands, then promoted unit by unit. A unit is a `col=value` child of
   * the staging directory (one partition), or the staging directory
@@ -42,7 +43,7 @@ import org.apache.spark.sql.types.StructType
   * unit shape from the directories and settles a crash at any step on
   * the pre-batch or the post-batch rows, never a mix.
   *
-  * [[upsert]] is [[prepare]] (recover, dedup, merge, staged write)
+  * [[upsert]] is [[prepare]] (recover, pick, staged write)
   * then [[Prepared.commit]] (the promote). A caller that writes
   * several tables can prepare them concurrently and commit them in
   * its own order ([[graft.jobs.HandlerJob]]).
@@ -175,7 +176,7 @@ object ParquetUpsertSink {
     *    still in S. S with no unit left beside a live T is a finished
     *    partitioned promote; only its cleanup (below) remains;
     *  - S and no B, or an incomplete S: the promote never began, the
-    *    batch never took effect — drop S (the next upsert re-merges);
+    *    batch never took effect — drop S (the next upsert re-picks);
     *  - B and no S: every staged unit was promoted — restore any
     *    backed-up unit with no live twin (a whole-table B with no T),
     *    then drop B.
@@ -204,108 +205,24 @@ object ParquetUpsertSink {
     }
   }
 
-  /** One row per key in the batch — UNCONDITIONALLY (the table's
-    * key-unique invariant must hold whatever the batch contains,
-    * matching the reference's `ON CONFLICT (key) DO UPDATE`, which
-    * can never insert a second row for a key). Without `orderCol`
-    * the surviving row is arbitrary (`dropDuplicates`); with it the
-    * max-`orderCol` row wins ("last" made explicit), rows tying on
-    * the max settle on the highest full-row `xxhash64` (deterministic;
-    * exact byte-duplicates collapse to one). Rows whose `orderCol` is
-    * NULL lose to any non-null row for the same key and fall back to
-    * the hash tie-break when the whole key group is null — never
-    * silently dropped (max() ignores nulls, so the winner join is
-    * null-SAFE on `orderCol`).
-    *
-    * Shape: the hot path is UNCHANGED from the pre-tie-break form —
-    * one narrow `max(o)` aggregate (fixed-width buffer) plus one
-    * null-SAFE semi-join of the batch against the winners. The tie
-    * machinery (a full-row-hash argmax + an all-column distinct —
-    * two more batch-wide exchanges) runs ONLY when the invariant
-    * probe finds a duplicate `(key, orderCol)` pair anywhere in the
-    * batch. The probes are TWO deliberately separate short-circuit
-    * jobs — a no-shuffle null-key scan (`filter(isNull).isEmpty`) and
-    * a grouped dup probe behind a limit-1 — NOT one folded aggregate:
-    * the fold ("one probe job answers both invariants", tried after
-    * a round-12 job-count observation) was MEASURED 1.87× slower on
-    * the sf100 cell (331 s folded vs 177 s split, same host, fresh
-    * JVMs, min-of-2, byte-identical shuffle/spill/input — the eager
-    * nested two-level aggregate costs far more wall than the extra
-    * short-circuit pass it saves; `EXP_UPSERT_QUIET_SF100.json` vs
-    * `EXP_UPSERT_PREFOLD_SF100.json`). The documented-unique common
-    * case pays metadata-width scans only, never the extra wide
-    * shuffles (the sf100 upsert cells are the registry's heaviest
-    * rows — doubling their shuffle for a contract-violation path
-    * would regress the ladder for nothing). Every aggregation buffer
-    * on either path is FIXED-WIDTH — `max(o)`, `count`, `max(__tb)`
-    * (8-byte row hash), and the final all-column distinct (grouping
-    * keys only, EMPTY buffer) — so nothing here ever falls back to
-    * sort-based aggregation (the semantic-dedup argmax lesson; the
-    * previous `max_by(struct(all columns))` form spilled tens of GB
-    * at sf100 through exactly that fallback). Tie-break trade: two
-    * DISTINCT tying rows sharing a 64-bit full-row hash would both
-    * survive — ~2⁻⁶⁴ per tying pair, the repo's standard accepted
-    * 8-byte-hash collision bound. */
-  private def dedupBatch(batch: DataFrame, key: String, orderCol: Option[String]): DataFrame =
-    orderCol match {
-      case Some(o) =>
-        val cols = batch.columns.toIndexedSeq
-        // two SEPARATE short-circuit probes, deliberately not folded
-        // into one aggregate — the folded form measured 1.87× slower
-        // at sf100 with byte-identical IO (see the scaladoc above)
-        requireNonNullKeys(batch, key)
-        // aliased aggregate, not .count(): the implicit "count" column
-        // would capture a key/orderCol literally named "count"
-        val hasDupPairs = !batch.groupBy(col(key), col(o))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > lit(1L)).isEmpty
-        // winners is narrow but corpus-LINEAR (one row per batch key),
-        // so neither join carries a shuffle-hash hint: AQE's
-        // local-map-threshold demotion converts the planned SMJ to a
-        // hash join only after CHECKING the per-partition build size —
-        // a blind hint OOM'd the sf100 cell when the write-side
-        // file-count stage fused in (no spill path in a forced hash
-        // build). The winner join is null-safe on o: max() ignores
-        // nulls, so an all-null key group matches its null "max" and
-        // still lands (previously silently dropped), while null-o rows
-        // lose to any non-null sibling.
-        val winners = batch.groupBy(col(key)).agg(max(col(o)).as("__o"))
-          .select(col(key).as("__k"), col("__o"))
-        val maxed = batch.join(winners,
-          batch(key) === winners("__k") && (batch(o) <=> winners("__o")), "left_semi")
-        if (!hasDupPairs) maxed
-        else {
-          val b = maxed.withColumn("__tb", xxhash64(cols.map(col): _*))
-          val tieBreak = b.groupBy(col(key)).agg(max(col("__tb")).as("__tb"))
-          b.join(tieBreak, Seq(key, "__tb"), "left_semi")
-            .dropDuplicates()
-            .select(cols.map(col): _*)
-        }
-      case None =>
-        requireNonNullKeys(batch, key)
-        batch.dropDuplicates(key)
-    }
-
-  /** Null keys would silently corrupt the merge — [[merge]]'s
-    * anti-join never matches a null key, so null-keyed rows would
-    * survive on BOTH sides and accumulate monotonically across
-    * batches. Keys are generated surrogates (upstream contract), so a
+  /** Null keys are refused before anything is staged. The pick would
+    * put every null-keyed row, batch and live, in one window group and
+    * keep one of them; the reference's key column cannot hold a null
+    * at all. Keys are generated surrogates (upstream contract), so a
     * null here is a bug: fail loudly, the same posture the partitioned
     * form takes for null partition values. One key-column-pruned scan
-    * with an immediate limit-1, kept apart from [[dedupBatch]]'s dup
-    * probe (see its scaladoc). */
+    * with an immediate limit-1, a short-circuit job of its own: a probe
+    * folded into an aggregate measured 1.87x slower on the sf100 cell
+    * (`EXP_UPSERT_QUIET_SF100.json` vs `EXP_UPSERT_PREFOLD_SF100.json`).
+    * On a key the plan knows is non-null (KeyGen's) the filter folds to
+    * an empty local scan and runs no job. */
   private def requireNonNullKeys(batch: DataFrame, key: String): Unit =
     require(batch.filter(col(key).isNull).isEmpty,
       s"null values in upsert key column '$key' are unsupported (the " +
-        "keyed merge cannot match them); keys are generated surrogates — " +
+        "keyed pick cannot match them); keys are generated surrogates — " +
         "fix the key derivation upstream")
 
-  /** Data files per unpartitioned upsert rewrite. Modest: entity
-    * tables are row-few relative to the event stream, and per-file FS
-    * metadata work dominates rewrite cost at small scale. */
-  private val OutputFiles = 8
-
-  /** A batch [[prepare]] merged and staged under `<table>__staging`.
+  /** A batch [[prepare]] picked and staged under `<table>__staging`.
     * Nothing of it is visible until [[commit]]. A handle never
     * committed leaves a staging with no backup, which the next
     * upsert's [[recover]] drops. */
@@ -313,8 +230,8 @@ object ParquetUpsertSink {
       spark: SparkSession, tablePath: String, rows: Long, staged: Boolean) {
 
     /** Promote the staging into the live table (class doc), record
-      * the promote in [[ioStats]] and return the rows of the deduped
-      * batch. */
+      * the promote in [[ioStats]] and return the batch rows the pick
+      * kept. */
     def commit(): Long = {
       if (staged) {
         val (files, promoteSec) = promoteStaged(spark, tablePath)
@@ -325,7 +242,7 @@ object ParquetUpsertSink {
   }
 
   /** Merge-on-write upsert: [[prepare]] then [[Prepared.commit]].
-    * Returns the rows of the deduped batch. */
+    * Returns the batch rows the pick kept, one per key. */
   def upsert(
       spark: SparkSession,
       batch: DataFrame,
@@ -335,25 +252,58 @@ object ParquetUpsertSink {
       partitionCol: Option[String] = None): Long =
     prepare(spark, batch, tablePath, key, orderCol, partitionCol).commit()
 
-  /** The upsert up to its promote: [[recover]] the table, dedup the
-    * batch, merge it with the live rows and stage the result. Every
-    * write, the first into an empty table included, is staged. Two
-    * prepares into one table at once would share its staging; into
+  /** The upsert up to its promote: [[recover]] the table, pick one row
+    * per key from the batch and the live rows, and stage the result.
+    * Every write, the first into an empty table included, is staged.
+    * Two prepares into one table at once would share its staging; into
     * different tables they are independent.
+    *
+    * The pick: the batch rows, tagged `__pri = 1`, and the live rows,
+    * tagged `__pri = 0`, meet in one `unionByName`, and `row_number() =
+    * 1` over a window partitioned by the key keeps one row per key,
+    * ordered by `__pri` desc, then (with `orderCol`) `orderCol` desc
+    * nulls last, then `__tb` desc. So the incoming row wins per key
+    * (the reference's `ON CONFLICT (key) DO UPDATE`, which never
+    * inserts a second row for a key). Inside the batch, without
+    * `orderCol` the surviving row is arbitrary; with it the
+    * max-`orderCol` row wins, a null `orderCol` loses to any non-null
+    * one, and a tie goes to the highest `__tb`, the `xxhash64` of the
+    * batch row's own columns, computed before the union so that its
+    * type widening cannot change the winner. Exact duplicates collapse
+    * to one row, and so do two DISTINCT rows tying on (`orderCol`,
+    * 64-bit hash): about 2^-64 per tying pair, the repo's accepted
+    * 8-byte-hash collision bound. The union needs every column on both
+    * sides: a batch with a column the table lacks, or without one it
+    * has, fails with an `AnalysisException` before anything is staged.
+    *
+    * The plan is one exchange by key and a sort: Spark plans the
+    * `row_number() = 1` filter as a window group limit, with no
+    * aggregation buffer, so it spills like a sort. No join runs, and
+    * none of the sf100 lessons of the older plans is undone: no forced
+    * join hint (a hash build has no spill path), no variable-length
+    * aggregation buffer (those fall back to sort-based aggregation and
+    * spilled tens of GB). The staged table gets one data file per
+    * reduce partition of that exchange, as adaptive execution
+    * coalesces them.
     *
     * With `partitionCol` the table is hive-partitioned by it and only
     * the partitions the batch touches are read, rewritten and promoted.
+    * The union is repartitioned by `partitionCol` and the window is
+    * partitioned by (`partitionCol`, key), which that exchange already
+    * satisfies: still one exchange, and one file per partition.
     * Contract: the partition-column value of a key must be immutable
     * across batches (true when it is derived from the key's own
     * columns, e.g. `event_date = date(ts)` under a `(user_id, ts)`
     * key). A key that moved to another partition would keep its old
-    * copy there: only the touched partitions are read and merged.
+    * copy there: only the touched partitions are read, and a key is
+    * picked per partition, so one that moved between two touched
+    * partitions keeps a copy in each. A column whose type differs from
+    * the live files' fails before staging ([[requireLiveTypes]]).
     *
-    * The handle's count is the rows of the deduped batch: the distinct
-    * keys it inserts or updates. It is observed on the staged write
-    * itself (`Dataset.observe` on the batch's branch of the merge
-    * union, not on the anti join's key side), so it costs no job. The
-    * live rows are read with the schema of one data file's footer
+    * The handle's count is the batch rows the pick kept: the distinct
+    * keys the batch inserts or updates. It is observed on the staged
+    * write itself (`Dataset.observe`), so it costs no job. The live
+    * rows are read with the schema of one data file's footer
     * ([[footerSchema]]), found by the same listing that tells an empty
     * table from a live one, so no schema-inference job runs. */
   def prepare(
@@ -364,43 +314,58 @@ object ParquetUpsertSink {
       orderCol: Option[String] = None,
       partitionCol: Option[String] = None): Prepared = {
     recover(spark, tablePath)
-    // the null-key invariant is enforced inside dedupBatch
-    val incoming = dedupBatch(batch, key, orderCol)
-    val rows = Observation()
-    val counted = incoming.observe(rows, count(lit(1)).as("rows"))
+    requireNonNullKeys(batch, key)
+    val tagged = {
+      val b = batch.withColumn("__pri", lit(1))
+      orderCol.fold(b)(_ => b.withColumn("__tb", xxhash64(batch.columns.toIndexedSeq.map(col): _*)))
+    }
     // the staged write reads the live table, so it can't overwrite it
     // in place; an empty table (e.g. the bare directory
-    // FileMonitorStore.migrate creates) has nothing to merge
-    val merged = visibleDataFiles(fs(spark, tablePath), new Path(tablePath)).nextOption() match {
-      case None => counted
+    // FileMonitorStore.migrate creates) has nothing to pick from
+    val both = visibleDataFiles(fs(spark, tablePath), new Path(tablePath)).nextOption() match {
+      case None => tagged
       case Some(file) =>
-        val live = spark.read.schema(footerSchema(spark, file)).parquet(tablePath)
-        partitionCol match {
-          case None => merge(live, counted, incoming, key)
+        val schema = footerSchema(spark, file)
+        val live = spark.read.schema(schema).parquet(tablePath)
+        val read = partitionCol match {
+          case None => live
           case Some(p) =>
             val touched = touchedPartitions(batch, p)
             // an empty batch touches no partition: nothing to stage
             if (touched.isEmpty) return new Prepared(spark, tablePath, 0L, staged = false)
-            merge(live.filter(col(p).cast("string").isInCollection(touched)), counted, incoming, key)
+            live.filter(col(p).cast("string").isInCollection(touched))
         }
+        val l = read.withColumn("__pri", lit(0))
+        val union = tagged.unionByName(orderCol.fold(l)(_ => l.withColumn("__tb", lit(null).cast("long"))))
+        if (partitionCol.isDefined) requireLiveTypes(union, schema, tablePath)
+        union
     }
-    // repartition, NOT coalesce: coalesce is a narrow dependency, so
-    // it fused the dedup/merge work INTO an OutputFiles-way final
-    // stage — at sf100 that ran the whole merge at 8-task parallelism
-    // (the dominant share of the 36 GB spill, and an OOM under a
-    // forced hash build). The round-robin exchange decouples compute
-    // width from file count for one extra narrow-format pass. The
-    // partitioned form co-locates each partition's rows in one task,
-    // or every task would append a file to every partition dir.
-    val out = partitionCol.fold(merged.repartition(OutputFiles))(p => merged.repartition(col(p)))
-    stage(out, tablePath, partitionCol)
+    val byKey = Window.partitionBy(partitionCol.toSeq.map(col) :+ col(key): _*).orderBy(
+      col("__pri").desc +: orderCol.toSeq.flatMap(o => Seq(col(o).desc_nulls_last, col("__tb").desc)): _*)
+    val rows = Observation()
+    val picked = partitionCol.fold(both)(p => both.repartition(col(p)))
+      .withColumn("__rn", row_number().over(byKey)).filter(col("__rn") === 1)
+      .observe(rows, count(when(col("__pri") === 1, 1)).as("rows"))
+      .drop("__rn", "__pri", "__tb")
+    stage(picked, tablePath, partitionCol)
     new Prepared(spark, tablePath, rows.get("rows").asInstanceOf[Long], staged = true)
   }
+
+  /** The partitioned form rewrites only the touched partitions, so a
+    * column the union would write with another type than the live
+    * files' (`live`, a footer schema) would leave two types in one
+    * table, which no read reconciles: fail before staging, naming the
+    * column. */
+  private def requireLiveTypes(union: DataFrame, live: StructType, tablePath: String): Unit =
+    for (f <- union.schema.fields; l <- live.find(_.name == f.name) if l.dataType.sql != f.dataType.sql)
+      throw new IllegalArgumentException(s"column '${f.name}' is ${l.dataType.sql} in the " +
+        s"partitioned table at $tablePath and would be written as ${f.dataType.sql}; the " +
+        "partitioned upsert rewrites only the touched partitions, so it cannot change a column's type")
 
   /** Partition values the batch touches (a small list, collected
     * driver-side), read off the raw batch: under the
     * immutable-partition contract every row of a key carries the same
-    * value, so the dedup changes nothing here. Values are compared as
+    * value, so the pick changes nothing here. Values are compared as
     * STRINGS throughout: hive-style partition reads type-infer the
     * partition column (e.g. "2022-11-24" → DateType) while the
     * in-flight batch may carry it as a string, and a mixed-type Set
@@ -445,35 +410,4 @@ object ParquetUpsertSink {
     stage(df, tablePath, partitionCol)
     promoteStaged(spark, tablePath)
   }
-
-  /** Prefer the incoming row per key: all incoming rows survive, and
-    * an existing row survives iff its key is absent from the batch —
-    * i.e. `incoming UNION (existing ANTI JOIN incoming ON key)`.
-    * Identical to the previous union+argmax form on the (invariant)
-    * key-unique inputs, but with NO aggregation state at all: the
-    * union is exchange-free, the anti join streams the table side
-    * against a hash build of just the batch's KEY column.
-    *
-    * Why not the `max_by(struct(all columns), __pri)` aggregate this
-    * replaces: (a) its var-length buffer forced sort-based
-    * aggregation over union-of-both-sides row mass, and (b) the
-    * write-side `coalesce(OutputFiles)` narrowed the FINAL stage, so
-    * that sort-aggregation ran at OutputFiles-way parallelism —
-    * together the dominant share of the sf100 upsert cells' 36-45 GB
-    * spill (the coalesce is now a repartition — see [[prepare]]).
-    * The batch-keys side is corpus-LINEAR, so the join carries no
-    * strategy hint: AQE's local-map-threshold demotion hash-builds it
-    * only after checking the per-partition size (a forced hint has no
-    * spill path and OOM'd the sf100 cell under stage fusion).
-    * Null keys never reach this join: the anti join cannot match
-    * them (they would survive on both sides and accumulate across
-    * batches), so [[prepare]] rejects them loudly first
-    * ([[requireNonNullKeys]]). `kept` is `incoming` as the union
-    * writes it ([[prepare]] passes it observed); the anti join reads
-    * `incoming`'s keys. */
-  private def merge(
-      existing: DataFrame, kept: DataFrame, incoming: DataFrame, key: String): DataFrame =
-    kept.unionByName(
-      existing.join(incoming.select(col(key)), Seq(key), "left_anti")
-        .select(incoming.columns.toIndexedSeq.map(col): _*))
 }

@@ -385,10 +385,12 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
     // files with Spark and the handler counted each entity with its own
     // action; 16 while the handler cached the staged batch and each
     // entity's frame and deduped before the upsert; 13 while the upsert
-    // inferred the live table's schema in a job; 11 since. One job of
-    // slack: a plan can start an extra one-task job from run to run.
-    // The name keeps the ceiling of 14 it was written with; the assertion
-    // holds the hour to the tighter 12.
+    // inferred the live table's schema in a job; 11 while it deduped the
+    // batch, anti-joined the live rows against the batch's keys and
+    // repartitioned the result; 5 since it picks one row per key in one
+    // exchange. One job of slack: a plan can start an extra one-task job
+    // from run to run. The name keeps the ceiling of 14 it was written
+    // with; the assertion holds the hour to the tighter 6.
     val root = tmpDir("job_budget")
     val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
     writeLanding(landing, "a.json", hour0.plusSeconds(60), vehicleLine, periodLine)
@@ -399,7 +401,7 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
     val args = Executor.parse(Seq("--root", root, "--landing", landing))
     Executor.run(spark, args) // the cold hour, into an empty warehouse
     val jobs = jobsOf(Executor.run(spark, args))
-    assert(jobs <= 12, s"an incremental hour ran $jobs Spark jobs")
+    assert(jobs <= 6, s"an incremental hour ran $jobs Spark jobs")
 
     val store = new FileMonitorStore(spark, s"$root/monitor")
     val wf = store.ingestorRows()

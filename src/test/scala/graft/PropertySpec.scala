@@ -8,7 +8,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Property-based invariants (SURVEY.md §5.2): keygen determinism and
-  * format, cast totality, upsert idempotence.
+  * format, cast totality, upsert idempotence and its keyed pick.
   * Uses scalacheck generators with fixed seeds sampled over several
   * iterations (the scalatest-scalacheck bridge artifact is not on the
   * offline classpath). */
@@ -77,6 +77,47 @@ class PropertySpec extends SparkSpec {
     assert(state1 == state2)
     // last-write-wins within the batch by orderCol
     assert(state1("k1") == rows.filter(_._1 == "k1").map(_._2).max)
+  }
+
+  test("upsert equals a collections model: incoming wins, then max orderCol, then max row hash") {
+    // few keys, payloads and versions, so a batch has duplicate keys,
+    // tied and null versions and byte-identical rows
+    val row = Gen.zip(Gen.choose(0, 7).map(i => s"k$i"), Gen.oneOf("a", "b"), Gen.option(Gen.choose(1, 3)))
+    val gen = Gen.zip(Gen.listOfN(14, row), Gen.listOfN(6, row).map(_.distinctBy(_._1)))
+    forSamples(gen) { case (batchRows, liveRows) =>
+      type R = (String, String, Option[Int])
+      val live = liveRows.toDF("id", "payload", "ver")
+      val batch = batchRows.toDF("id", "payload", "ver")
+      // the tie-break hash of each distinct batch row, from Spark's own
+      // xxhash64 over the batch's columns
+      val hashOf: Map[R, Long] = batch.distinct()
+        .select($"id", $"payload", $"ver", xxhash64($"id", $"payload", $"ver")).collect()
+        .map(r => (r.getString(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Int])) -> r.getLong(3))
+        .toMap
+      val liveModel = liveRows.map(r => r._1 -> r).toMap
+      def upserted(orderCol: Option[String]): Seq[R] = {
+        val path = tmpDir("prop-pick") + "/t"
+        live.write.parquet(path)
+        assert(ParquetUpsertSink.upsert(spark, batch, path, "id", orderCol) ==
+          batchRows.map(_._1).distinct.size.toLong)
+        val got = spark.read.parquet(path).as[(String, String, Option[Int])].collect().toSeq
+        assert(got.map(_._1).distinct.size == got.size, s"a key kept twice: $got")
+        got
+      }
+
+      val byKey = batchRows.groupBy(_._1)
+      val model = liveModel ++ byKey.map { case (k, rs) =>
+        k -> rs.maxBy(r => (r._3, hashOf(r))) // None orders below every Some
+      }
+      assert(upserted(Some("ver")).sortBy(_._1) == model.values.toSeq.sortBy(_._1))
+
+      // without orderCol the batch row kept per key is any of that key's
+      val plain = upserted(None).map(r => r._1 -> r).toMap
+      assert(plain.keySet == model.keySet)
+      plain.foreach { case (k, r) =>
+        assert(byKey.get(k).fold(liveModel(k) == r)(_.contains(r)), s"$k kept $r")
+      }
+    }
   }
 
   test("TopKHeap equals sort-take under the (score desc, id asc) order on random inputs") {

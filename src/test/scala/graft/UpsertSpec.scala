@@ -166,9 +166,9 @@ class UpsertSpec extends SparkSpec {
     assert(ParquetUpsertSink.upsert(spark, ordered, path + "_ordered", "id", Some("ver")) == 1L)
   }
 
-  test("schema drift: an extra batch column fails; a missing or retyped one merges as before") {
-    // the live rows are read with the schema of a data file's footer;
-    // these are the outcomes of the inferred-schema read it replaced
+  test("schema drift: an extra or missing batch column fails; a retyped one merges as before") {
+    // the live rows are read with the schema of a data file's footer,
+    // and the batch and the live rows meet in one union by name
     val base = Seq(("k1", "a", 1), ("k2", "b", 2)).toDF("id", "payload", "n")
     def live(name: String): String = {
       val path = tmpDir(name) + "/t"
@@ -189,11 +189,13 @@ class UpsertSpec extends SparkSpec {
     }
     assert(rows(extra) == before)
 
-    // a batch without a live column: the rewrite keeps the batch's
-    // columns only, so the column leaves the table
+    // a batch without a live column: the column's values have no
+    // incoming side, so nothing is staged and the table keeps them
     val missing = live("drift_missing")
-    assert(ParquetUpsertSink.upsert(spark, Seq(("k2", 3)).toDF("id", "n"), missing, "id") == 1L)
-    assert(rows(missing) == (("struct<id:string,n:int>", Seq("[k1,1]", "[k2,3]"))))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      ParquetUpsertSink.upsert(spark, Seq(("k2", 3)).toDF("id", "n"), missing, "id")
+    }
+    assert(rows(missing) == before)
 
     // a live column's type changed: a widening merges into the wider
     // type, a string column the batch brings as bigint fails the cast
@@ -207,6 +209,65 @@ class UpsertSpec extends SparkSpec {
       ParquetUpsertSink.upsert(spark, Seq(("k2", 7L, 2)).toDF("id", "payload", "n"), retyped, "id")
     }
     assert(rows(retyped) == before)
+  }
+
+  test("partitioned upsert refuses a column whose type differs from the live table's") {
+    // only the touched partition would be rewritten, so a retyped
+    // column would leave two types in one table, which no read
+    // reconciles; the check runs before anything is staged
+    val path = tmpDir("drift_partitioned") + "/t"
+    ParquetUpsertSink.upsert(spark, Seq(("k1", "a", 1), ("k2", "b", 2)).toDF("id", "payload", "n"),
+      path, "id", partitionCol = Some("n"))
+    val e = intercept[IllegalArgumentException] {
+      ParquetUpsertSink.upsert(spark, Seq(("k2", 7L, 2)).toDF("id", "payload", "n"),
+        path, "id", partitionCol = Some("n"))
+    }
+    assert(e.getMessage.contains("column 'payload'"), e.getMessage)
+    val t = spark.read.parquet(path)
+    assert(t.schema.simpleString == "struct<id:string,payload:string,n:int>")
+    assert(t.collect().map(_.toString).toSeq.sorted == Seq("[k1,a,1]", "[k2,b,2]"))
+  }
+
+  test("an upsert into a non-empty table writes through one shuffle exchange (plain, orderCol, partitioned)") {
+    import org.apache.spark.graftbridge.ListenerBridge
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val v1 = Seq(("k1", "2022-11-24", "a", 1), ("k2", "2022-11-25", "b", 1))
+      .toDF("id", "dt", "payload", "ver")
+    val v2 = Seq(("k2", "2022-11-25", "B", 2), ("k2", "2022-11-25", "old", 1), ("k3", "2022-11-25", "c", 2))
+      .toDF("id", "dt", "payload", "ver")
+    val forms = Seq(("plain", None, None), ("orderCol", Some("ver"), None), ("partitioned", None, Some("dt")))
+    forms.foreach { case (form, orderCol, partitionCol) =>
+      val path = tmpDir(s"upsert_one_exchange_$form") + "/t"
+      ParquetUpsertSink.upsert(spark, v1, path, "id", orderCol, partitionCol)
+      ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      plans.clear()
+      spark.listenerManager.register(listener)
+      try assert(ParquetUpsertSink.upsert(spark, v2, path, "id", orderCol, partitionCol) == 2L)
+      finally {
+        ListenerBridge.waitUntilEmpty(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+      val writes = plans.toArray(Array.empty[SparkPlan]).toSeq
+        .filter(Plans.find(_)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+      assert(writes.size == 1, s"$form: ${writes.size} writes")
+      val exchanges = Plans.collectWithSubqueries(writes.head) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"$form: ${exchanges.size} exchanges in\n${writes.head}")
+      val got = spark.read.parquet(path).collect()
+        .map(r => r.getAs[String]("id") -> r.getAs[String]("payload")).toMap
+      assert(got("k1") == "a" && got("k3") == "c" && Set("B", "old").contains(got("k2")), s"$form: $got")
+      if (orderCol.nonEmpty) assert(got("k2") == "B")
+    }
   }
 
   test("a first partitioned batch that fails mid-write leaves the live table empty; recover cleans up") {
