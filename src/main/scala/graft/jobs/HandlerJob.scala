@@ -19,12 +19,13 @@ import scala.util.control.NonFatal
   * table, with per-entity error isolation and an audit row per
   * run×entity.
   *
-  * The staged frame is read with the schema the ingestor wrote it
-  * with (no inference job). Each entity is one lazy plan (filter →
-  * normalize → keygen) handed to the upsert, whose keyed pick is the
-  * only per-key dedup (reference op R-2). Nothing is cached, so each
-  * entity's scans read only its own columns. An entity's audit count
-  * is the batch rows the upsert's pick kept, which costs no job.
+  * The staged frame is read with the landing-record shape the ingestor
+  * wrote it with ([[JsonLinesSource.recordStruct]], no inference job).
+  * Each entity is one lazy plan (filter → normalize → keygen) handed
+  * to the upsert, whose keyed pick is the only per-key dedup
+  * (reference op R-2). Nothing is cached, so each entity's scans read
+  * only its own columns. An entity's audit count is the batch rows the
+  * upsert's pick kept, which costs no job.
   *
   * The entities run side by side, unlike the reference's loop: each
   * entity's plan, quality gate and [[ParquetUpsertSink.prepare]]
@@ -101,9 +102,9 @@ object HandlerJob {
     val stagedPath = store.stagedFilePath(workflowId)
     if (stagedPath.isEmpty) return Result(Map.empty, Map.empty)
 
-    // the schema the ingestor staged: an empty read is analysis only
-    val stagedSchema = JsonLinesSource.read(spark, Nil, Pipelines.unionSourceStruct(schemas)).schema
-    val staged = spark.read.schema(stagedSchema).parquet(stagedPath.get)
+    val staged = spark.read
+      .schema(JsonLinesSource.recordStruct(Pipelines.unionSourceStruct(schemas)))
+      .parquet(stagedPath.get)
     val byEntity = EntitySplit(staged, "on", schemas.map(_.entity))
     // created here, so its threads inherit this thread's Spark local
     // properties and active session

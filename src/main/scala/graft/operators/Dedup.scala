@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * [[firstOccurrence]] keeps the first row per key under an explicit
   * ordering via `row_number()`: one shuffle by key plus a per-key
-  * sort. The order-agnostic per-key dedup of the ETL hour is
+  * sort. [[Scd2.mergeBatch]] picks a key's latest in-batch record with
+  * it. The order-agnostic per-key dedup of the ETL hour is
   * [[graft.sinks.ParquetUpsertSink.upsert]]'s.
   */
 object Dedup {

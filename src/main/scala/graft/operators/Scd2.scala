@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Type-2 slowly-changing-dimension history maintenance: instead of
@@ -26,15 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Scd2 {
 
-  /** Latest row per key within a batch under `ord` (descending
-    * priority first element). */
-  private def latestPerKey(
-      batch: DataFrame, key: Seq[String], ord: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(key.map(col): _*).orderBy(ord: _*)
-    batch.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
   /** Merge one batch into the history (None = initial load).
     * `ord` orders a key's in-batch records, HIGHEST priority first
     * (e.g. `Seq($"ts".desc, $"event_id".desc)`). Returns the new
@@ -45,7 +35,8 @@ object Scd2 {
       key: Seq[String], ord: Seq[Column], version: Int): DataFrame = {
     val dataCols = batch.columns.toSeq
     val outCols = dataCols ++ Seq("valid_from", "valid_to", "is_current")
-    val incoming = latestPerKey(batch, key, ord)
+    // the key's latest in-batch record: the first under `ord`
+    val incoming = Dedup.firstOccurrence(batch, key.map(col), ord)
       .withColumn("valid_from", lit(version))
       .withColumn("valid_to", lit(null).cast("int"))
       .withColumn("is_current", lit(true))

@@ -45,23 +45,32 @@ object JsonLinesSource {
       .sorted
   }
 
-  /** Read the given JSON-lines files with the declared schema plus a
-    * corrupt-record column; inject lineage in `bucket/key` form. */
-  def read(spark: SparkSession, files: Seq[String], schema: StructType): DataFrame = {
-    val withCorrupt = StructType(schema.fields :+ StructField(corruptCol, StringType))
-    val raw =
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withCorrupt)
-      else
-        spark.read
-          .schema(withCorrupt)
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", corruptCol)
-          .json(files: _*)
-    // lineage: strip the scheme, keep "bucket/key"-style relative path
-    raw.withColumn(lineageCol,
-      regexp_replace(input_file_name(), "^[a-zA-Z0-9]+://?/?", ""))
-  }
+  /** The landing-record shape every read of the landing area yields:
+    * the declared `schema` (less any column named [[lineageCol]]), then
+    * [[corruptCol]], then [[lineageCol]]. */
+  def recordStruct(schema: StructType): StructType = parseStruct(schema).add(lineageCol, StringType)
+
+  /** Read the given (non-empty) JSON-lines files as [[recordStruct]]
+    * rows. */
+  def read(spark: SparkSession, files: Seq[String], schema: StructType): DataFrame =
+    withLineage(spark.read.schema(parseStruct(schema)).options(parseOptions).json(files: _*))
+
+  /** File-stream read of every JSON-lines file landing under `dir`, as
+    * [[recordStruct]] rows, the same parse as [[read]].
+    * `maxFilesPerTrigger` caps the files of one micro-batch. */
+  def readStream(spark: SparkSession, dir: String, schema: StructType,
+      maxFilesPerTrigger: Int): DataFrame =
+    withLineage(spark.readStream.schema(parseStruct(schema)).options(parseOptions)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger).json(dir))
+
+  private def parseStruct(schema: StructType): StructType =
+    StructType(schema.filterNot(_.name == lineageCol) :+ StructField(corruptCol, StringType))
+
+  private val parseOptions = Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corruptCol)
+
+  /** Lineage in `bucket/key` form: the file path without its scheme. */
+  private def withLineage(raw: DataFrame): DataFrame =
+    raw.withColumn(lineageCol, regexp_replace(input_file_name(), "^[a-zA-Z0-9]+://?/?", ""))
 
   /** Count of unparseable lines (the reference logs-and-skips;
     * we count them; rows remain dropped from the good frame).

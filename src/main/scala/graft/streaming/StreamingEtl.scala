@@ -2,11 +2,12 @@ package graft.streaming
 
 import graft.config.EntitySchema
 import graft.ext.text.TextFunctions
-import graft.jobs.Pipelines
-import graft.operators.{KeyGen, Normalize}
+import graft.jobs.{HandlerJob, Pipelines}
+import graft.operators.{EntitySplit, KeyGen}
 import graft.sinks.ParquetUpsertSink
+import graft.sources.JsonLinesSource
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -17,8 +18,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Correspondence to the reference's simulated-streaming mechanics:
   *  - monitor-table cursor → streaming checkpoint (file-source offsets);
   *  - hourly tumbling file buckets → event-time windows + watermark;
-  *  - upsert-on-key idempotence → `dropDuplicatesWithinWatermark` on
-  *    the deterministic surrogate key;
+  *  - upsert-on-key idempotence → the hourly product's own keyed
+  *    upsert ([[graft.sinks.ParquetUpsertSink.upsert]]) per
+  *    micro-batch, on the deterministic surrogate key, so a re-sent
+  *    key takes its latest payload however late it arrives;
   *  - retry-failed-hour → replayable source + checkpoint recovery.
   *
   * `Trigger.AvailableNow` gives the reference's batch cadence (drain
@@ -29,36 +32,26 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingEtl {
 
-  /** Streaming read of the landing area with the union source schema.
-    * `maxFilesPerTrigger` is the ingestion rate limit: each
+  /** Streaming read of the landing area: the ingestor's landing records
+    * ([[graft.sources.JsonLinesSource.readStream]]) over the union
+    * source schema. `maxFilesPerTrigger` is the ingestion rate limit: each
     * micro-batch takes at most that many files, so a backlog (or a
     * misbehaving upstream dumping thousands of files) drains as a
     * SEQUENCE of bounded batches instead of one unbounded one —
-    * per-batch state, shuffle, and sink commit sizes stay flat.
+    * per-batch shuffle and sink commit sizes stay flat.
     * AvailableNow honors it while still draining to the end. */
   def eventStream(spark: SparkSession, landingDir: String,
       schemas: Seq[EntitySchema] = EntitySchema.reference,
       maxFilesPerTrigger: Int = 64): DataFrame =
-    spark.readStream
-      .schema(Pipelines.unionSourceStruct(schemas))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(landingDir)
+    JsonLinesSource.readStream(spark, landingDir, Pipelines.unionSourceStruct(schemas),
+      maxFilesPerTrigger)
 
-  /** Normalize+key one entity from the stream and dedup within the
-    * watermark — the streaming twin of HandlerJob.entityPipeline. */
-  def entityPipeline(
-      stream: DataFrame,
-      schema: EntitySchema,
-      watermark: String = "2 hours"): DataFrame = {
-    val one = stream.filter(col("on") === schema.entity)
-    val keyed = KeyGen(Normalize(one, schema), schema)
-    keyed
-      .withWatermark("event_timestamp", watermark)
-      .dropDuplicatesWithinWatermark(KeyGen.columnName)
-  }
-
-  /** Run one AvailableNow drain of an entity into a parquet sink with
-    * checkpointed exactly-once progress; returns when drained. */
+  /** Run one AvailableNow drain of an entity into its warehouse table
+    * at `outDir`; returns when drained. Each micro-batch takes the
+    * hourly handler's path: the `on = entity` split,
+    * [[graft.jobs.HandlerJob.entityPipeline]], then the keyed upsert
+    * ([[upsertInto]]). Exactly-once: a replayed batch re-runs an
+    * idempotent upsert. */
   def drainEntity(
       spark: SparkSession,
       landingDir: String,
@@ -66,16 +59,11 @@ object StreamingEtl {
       outDir: String,
       checkpointDir: String,
       maxFilesPerTrigger: Int = 64): Unit = {
-    val q = entityPipeline(
-      eventStream(spark, landingDir, maxFilesPerTrigger = maxFilesPerTrigger), schema)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val stream = eventStream(spark, landingDir, Seq(schema), maxFilesPerTrigger)
+    val keyed = HandlerJob.entityPipeline(
+      EntitySplit(stream, "on", Seq(schema.entity))(schema.entity), schema)
+    eachBatch(keyed, checkpointDir, trigger = Trigger.AvailableNow())(
+      upsertInto(outDir, KeyGen.columnName)).awaitTermination()
   }
 
   /** Hourly event counts per entity with a watermark — the streaming
@@ -188,9 +176,17 @@ object StreamingEtl {
     * sinks instead (keyed upsert, versioned history). */
   private def foreachBatchAppend(stream: DataFrame, checkpointDir: String)(
       body: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(stream, checkpointDir, OutputMode.Append)(body)
+
+  /** Start `stream` in `mode` under `trigger` with checkpointed
+    * offsets, running `body(batch, batchId)` per micro-batch. */
+  private def eachBatch(stream: DataFrame, checkpointDir: String,
+      mode: OutputMode = OutputMode.Update, trigger: Trigger = Trigger.ProcessingTime(0L))(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
-      .outputMode(OutputMode.Append)
+      .outputMode(mode)
       .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
       .foreachBatch(body)
       .start()
 
@@ -295,14 +291,12 @@ object StreamingEtl {
       tablePath: String,
       key: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        ParquetUpsertSink.upsert(batch.sparkSession, batch.toDF(), tablePath, key)
-        ()
-      }
-      .start()
+    eachBatch(stream, checkpointDir)(upsertInto(tablePath, key))
+
+  /** The micro-batch body of [[upsertStream]] and [[drainEntity]]:
+    * upsert the batch into the table at `tablePath` on `key`. */
+  private def upsertInto(tablePath: String, key: String): (DataFrame, Long) => Unit =
+    (batch, _) => ParquetUpsertSink.upsert(batch.sparkSession, batch, tablePath, key)
 
   /** Streaming SCD2 maintenance: each micro-batch is merged into the
     * type-2 history table with [[graft.operators.Scd2.mergeBatch]].
@@ -329,27 +323,21 @@ object StreamingEtl {
       key: Seq[String],
       ord: Seq[org.apache.spark.sql.Column],
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          ParquetUpsertSink.recover(s, tablePath)
-          val version = (batchId + 1).toInt
-          val history =
-            if (ParquetUpsertSink.isComplete(s, tablePath)) Some(s.read.parquet(tablePath))
-            else None
-          val alreadyApplied = history.exists(h =>
-            !h.filter(col("valid_from") === version).isEmpty)
-          if (!alreadyApplied)
-            ParquetUpsertSink.stageAndPromote(s,
-              graft.operators.Scd2.mergeBatch(history, batch.toDF(), key, ord, version),
-              tablePath)
-        }
-        ()
+    eachBatch(stream, checkpointDir) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val s = batch.sparkSession
+        ParquetUpsertSink.recover(s, tablePath)
+        val version = (batchId + 1).toInt
+        val history =
+          if (ParquetUpsertSink.isComplete(s, tablePath)) Some(s.read.parquet(tablePath))
+          else None
+        val alreadyApplied = history.exists(h =>
+          !h.filter(col("valid_from") === version).isEmpty)
+        if (!alreadyApplied)
+          ParquetUpsertSink.stageAndPromote(s,
+            graft.operators.Scd2.mergeBatch(history, batch, key, ord, version), tablePath)
       }
-      .start()
+    }
 
   /** Streaming quality scoring against the AT-REST classifier model
     * (round-10 verdict task 5): the frozen

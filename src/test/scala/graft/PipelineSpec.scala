@@ -8,6 +8,7 @@ import graft.jobs.{HandlerJob, Pipelines}
 import graft.operators.KeyGen
 import graft.sinks.ParquetUpsertSink
 import graft.sources.JsonLinesSource
+import org.apache.spark.sql.types.StructType
 
 /** Core semantic pipeline tests over FIXTURES.md §A fixture rows:
   * normalize coercion/trim, golden keygen hashes, upsert dedup. */
@@ -40,13 +41,23 @@ class PipelineSpec extends SparkSpec {
     """{"event": "update", "on": "vehicle", THIS IS NOT JSON"""
   )
 
-  private lazy val rawFixture = {
+  private lazy val fixtureFile = {
     val dir = tmpDir("fixture")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/part-0.json"),
       fixtureLines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    JsonLinesSource.read(spark, Seq(s"$dir/part-0.json"),
-      Pipelines.unionSourceStruct(Seq(vehicleSchema)))
+    s"$dir/part-0.json"
+  }
+
+  private lazy val rawFixture = JsonLinesSource.read(spark, Seq(fixtureFile),
+    Pipelines.unionSourceStruct(Seq(vehicleSchema)))
+
+  test("a read yields the landing-record shape the source exposes") {
+    def shape(s: StructType) = s.map(f => f.name -> f.dataType)
+    // the union struct declares the lineage column; a bare one does not
+    for (s <- Seq(Pipelines.unionSourceStruct(Seq(vehicleSchema)), StructType.fromDDL("on STRING")))
+      assert(shape(JsonLinesSource.read(spark, Seq(fixtureFile), s).schema)
+        == shape(JsonLinesSource.recordStruct(s)))
   }
 
   test("malformed lines are isolated, not fatal") {

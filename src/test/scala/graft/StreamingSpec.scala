@@ -2,8 +2,10 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 
 import graft.config.EntitySchema
+import graft.jobs.{Executor, IngestorJob}
 import graft.streaming.StreamingEtl
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -88,6 +90,39 @@ class StreamingSpec extends SparkSpec {
       .count(!_.startsWith("."))
     assert(batches2 <= 2, s"expected a single data batch, got $batches2")
     assert(spark.read.parquet(s"$root2/out").count() == 3)
+  }
+
+  test("drainEntity leaves the warehouse rows Executor hours leave over the same landing files") {
+    val root = tmpDir("parity")
+    val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
+    writeLanding(landing, "a.json",
+      """{"event": "update", "on": "vehicle", "at": "2022-11-24T10:02:11Z", "organization_id": "o", "data": {"id": "v-1", "location": {"lat": 1.0, "lng": 2.0, "at": "2022-11-24T10:02:10Z"}}}""",
+      """{"event": "update", "on": "vehicle", THIS IS NOT JSON""",
+      """{"event": "create", "on": "trailer", "at": "2022-11-24T10:03:00Z", "organization_id": "o", "data": {"id": "t-1"}}""")
+    // the same key (id, at) re-sent later with a new payload
+    writeLanding(landing, "b.json",
+      """{"event": "update", "on": "vehicle", "at": "2022-11-24T10:02:11Z", "organization_id": "o", "data": {"id": "v-1", "location": {"lat": 9.0, "lng": 2.0, "at": "2022-11-24T10:02:10Z"}}}""")
+    // one file per hour, as the Executor's cursor takes them
+    Seq("a.json" -> 60L, "b.json" -> 3660L).foreach { case (f, s) =>
+      Files.setLastModifiedTime(Paths.get(s"$landing/$f"),
+        FileTime.from(IngestorJob.coldStart.plusSeconds(s)))
+    }
+    val hours = Executor.Args(root = s"$root/batch", landing = Some(landing))
+    Executor.run(spark, hours)
+    Executor.run(spark, hours)
+    // one file per micro-batch (oldest first), as one file per hour
+    StreamingEtl.drainEntity(spark, landing, vehicleSchema,
+      s"$root/stream", s"$root/ckpt", maxFilesPerTrigger = 1)
+
+    val batch = spark.read.parquet(s"$root/batch/tables/vehicle_location")
+    val stream = spark.read.parquet(s"$root/stream")
+    assert(stream.dtypes.toSeq == batch.dtypes.toSeq)
+    val rows = batch.collect()
+    assert(stream.collect().toSet == rows.toSet)
+    // one row: the latest payload, with its file's lineage
+    assert(rows.length == 1)
+    assert(rows.head.getAs[Double]("vehicle_latitude") == 9.0)
+    assert(rows.head.getAs[String]("original_s3_file_path").endsWith("landing/b.json"))
   }
 
   test("watermarked hourly window counts per entity") {
