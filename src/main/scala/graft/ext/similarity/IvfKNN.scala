@@ -400,26 +400,25 @@ object IvfKNN {
     * oracle-replayable — the scale path for corpus-proportional K,
     * (C + probes·K/C)·dim work per row instead of K·dim.
     *
-    * Scale shape: explode(probes) → join on `gid` → hash-agg argmax
-    * keyed by the row id ([[packedArgmaxIds]]) → [[reattach]]. With
-    * `broadcastFine` the codebook ships to executors once and the
-    * corpus never moves; past broadcast size (~10⁷ centroids) set it
-    * false and the join shuffles by `gid` against the bucketed at-rest
-    * codebook — the standard IVF probe join, same shape as
-    * [[ivfTopK]]. The argmax agg is map-side (candidates for a row
-    * never leave its partition under broadcast), so the shuffle moves
-    * exactly one row per input row.
+    * Scale shape: explode(probes) → join on `gid` against the
+    * broadcast codebook → hash-agg argmax keyed by the row id
+    * ([[packedArgmaxIds]]) → [[reattach]]. The codebook ships to
+    * executors once and the corpus never moves, so the argmax agg is
+    * map-side and the shuffle moves one row per input row. This stops
+    * scaling where the codebook (K rows of ~4·dim bytes, held by the
+    * driver and every executor) outgrows a broadcast, 8 GB at most:
+    * some 10⁷ centroids, far above any caller's K. Past that the join
+    * must shuffle by `gid` against the bucketed codebook, [[ivfTopK]]'s
+    * shape.
     *
     * Output: (idCol, vecCol, list_id). */
   def assignListsJoined(
       corpus: DataFrame, idCol: String, vecCol: String,
-      coarse: Seq[Centroid], fine: DataFrame, probes: Int,
-      broadcastFine: Boolean = true): DataFrame = {
+      coarse: Seq[Centroid], fine: DataFrame, probes: Int): DataFrame = {
     val probed = corpus.select(col(idCol), col(vecCol),
       CosineKNN.norm(col(vecCol)).as("__vn"),
       explode(probeLists(col(vecCol), coarse, probes)).as("gid"))
-    val f = if (broadcastFine) broadcast(fine) else fine
-    val scored = probed.join(f, "gid")
+    val scored = probed.join(broadcast(fine), "gid")
       .withColumn("__s",
         round(CosineKNN.dot(col(vecCol), col("cv")) / (col("__vn") * col("cnorm")), 9))
     reattach(corpus, idCol, vecCol, packedArgmaxIds(scored, idCol))

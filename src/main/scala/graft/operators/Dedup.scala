@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * [[firstOccurrence]] keeps the first row per key under an explicit
   * ordering via `row_number()`: one shuffle by key plus a per-key
-  * sort. [[Scd2.mergeBatch]] picks a key's latest in-batch record with
-  * it. The order-agnostic per-key dedup of the ETL hour is
-  * [[graft.sinks.ParquetUpsertSink.upsert]]'s.
+  * sort, planned as a window group limit. The repo's one per-key pick:
+  * [[Scd2.mergeBatch]] keeps a key's latest in-batch record with it,
+  * [[graft.sinks.ParquetUpsertSink.prepare]] the incoming row per key.
   */
 object Dedup {
 

@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -29,24 +29,29 @@ import org.apache.spark.sql.types.StructType
   * file per reduce partition of that shuffle as adaptive execution
   * coalesces it (one per touched partition in the partitioned form).
   *
-  * One commit protocol for both forms. The picked rows are staged to
-  * `<table>__staging`, complete only once Spark's `_SUCCESS` marker
-  * lands, then promoted unit by unit. A unit is a `col=value` child of
-  * the staging directory (one partition), or the staging directory
-  * itself when it has no such child (the whole table). Per unit the
-  * live unit, if there is one, moves under `<table>__backup` (a whole
-  * table becomes that directory itself), then the staged unit moves
-  * into the live table; the backup and the staging are deleted last.
-  * The partitioned promote creates the backup directory before its
-  * first move, so an existing backup always means "the promote
-  * began". [[recover]] (called at the start of every upsert) reads the
-  * unit shape from the directories and settles a crash at any step on
-  * the pre-batch or the post-batch rows, never a mix.
+  * One commit protocol for both forms, and for every table the repo
+  * keeps. The rows are staged to `<table>__staging`, complete only
+  * once Spark's `_SUCCESS` marker lands, then promoted unit by unit.
+  * The writer states the form: a unit is the staging directory itself
+  * (the whole table), or each `col=value` child of it (one partition).
+  * Per unit the live unit, if there is one, moves under
+  * `<table>__backup` (a whole table becomes that directory itself),
+  * then the staged unit moves into the live table; the backup and the
+  * staging are deleted last. The partitioned promote creates the
+  * backup directory before its first move, so an existing backup
+  * always means "the promote began"; a partitioned write with no rows
+  * stages no partition and leaves the live table as it was.
+  * [[recover]] reads the unit shape from the directories and settles a
+  * crash at any step on the pre-write or the post-write rows, never a
+  * mix; every write and every [[read]] runs it first.
   *
-  * [[upsert]] is [[prepare]] (recover, pick, staged write)
-  * then [[Prepared.commit]] (the promote). A caller that writes
-  * several tables can prepare them concurrently and commit them in
-  * its own order ([[graft.jobs.HandlerJob]]).
+  * Callers: [[upsert]] ([[prepare]], then [[Prepared.commit]]) lands
+  * the hourly product's entities ([[graft.jobs.HandlerJob]] prepares
+  * them concurrently, commits in its own order), the ETL registry
+  * queries and the keyed streams; [[stageAndPromote]] lands every
+  * other stream's batch (one `__batch_id` partition) and the SCD2
+  * history; [[read]], the committed read, serves [[prepare]],
+  * `StreamingEtl.priorState` and the SCD2 history.
   */
 object ParquetUpsertSink {
 
@@ -130,7 +135,7 @@ object ParquetUpsertSink {
 
   /** True iff `path` holds a COMPLETE Spark write (its `_SUCCESS`
     * commit marker landed). */
-  private[graft] def isComplete(spark: SparkSession, path: String): Boolean =
+  private def isComplete(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path.stripSuffix("/") + "/_SUCCESS"))
 
   /** The visible `col=value` child dirs of a listing: one per hive
@@ -142,23 +147,24 @@ object ParquetUpsertSink {
     }.map(_.getPath)
 
   /** Promote the complete staging `s` into the live table `t` unit by
-    * unit (class doc), then drop the backup `b` and `s`; returns the
-    * data files promoted, counted from the promote's own listing.
-    * A unit already moved is no longer staged, so [[recover]] rolls a
-    * half-done promote forward through the same loop. */
-  private def promote(f: FileSystem, t: Path, s: Path, b: Path): Long = {
+    * unit (class doc; `partitioned` names the form), then drop the
+    * backup `b` and `s`; returns the data files promoted, counted from
+    * the promote's own listing. A unit already moved is no longer
+    * staged, so [[recover]] rolls a half-done promote forward through
+    * the same loop. */
+  private def promote(f: FileSystem, t: Path, s: Path, b: Path, partitioned: Boolean): Long = {
     val listing = f.listStatus(s).toSeq
     val parts = partitionDirs(listing)
     // (staged, live, backup) per unit
     val units =
-      if (parts.isEmpty) Seq((s, t, b))
-      else {
-        f.mkdirs(b)
-        f.mkdirs(t)
-        parts.map(u => (u, new Path(t, u.getName), new Path(b, u.getName)))
-      }
+      if (!partitioned) Seq((s, t, b))
+      else parts.map(u => (u, new Path(t, u.getName), new Path(b, u.getName)))
+    if (parts.nonEmpty && partitioned) {
+      f.mkdirs(b)
+      f.mkdirs(t)
+    }
     val files =
-      if (parts.isEmpty) listing.count(st => st.isFile && !hidden(st.getPath.getName))
+      if (!partitioned) listing.count(st => st.isFile && !hidden(st.getPath.getName))
       else parts.map(visibleDataFiles(f, _).size).sum
     units.foreach { case (staged, live, backup) =>
       if (f.exists(live)) renameOrThrow(f, live, backup)
@@ -171,7 +177,7 @@ object ParquetUpsertSink {
 
   /** Settle the promote state machine after a crash (T = live table,
     * S = staging, B = backup; the unit shape comes from the
-    * directories, see the class doc):
+    * directories, as an empty partitioned write never makes B):
     *  - complete S and B: the promote began — roll forward the units
     *    still in S. S with no unit left beside a live T is a finished
     *    partitioned promote; only its cleanup (below) remains;
@@ -186,9 +192,9 @@ object ParquetUpsertSink {
     val t = new Path(tablePath)
     val s = new Path(stagingPath(tablePath))
     val b = new Path(backupPath(tablePath))
-    if (f.exists(s) && f.exists(b) && isComplete(spark, s.toString) &&
-        (partitionDirs(f.listStatus(s).toSeq).nonEmpty || !f.exists(t))) {
-      promote(f, t, s, b)
+    lazy val staged = partitionDirs(f.listStatus(s).toSeq).nonEmpty
+    if (f.exists(s) && f.exists(b) && isComplete(spark, s.toString) && (staged || !f.exists(t))) {
+      promote(f, t, s, b, partitioned = staged)
     } else {
       if (f.exists(s)) deleteOrThrow(f, s)
       if (f.exists(b)) {
@@ -227,16 +233,14 @@ object ParquetUpsertSink {
     * committed leaves a staging with no backup, which the next
     * upsert's [[recover]] drops. */
   final class Prepared private[ParquetUpsertSink] (
-      spark: SparkSession, tablePath: String, rows: Long, staged: Boolean) {
+      spark: SparkSession, tablePath: String, partitioned: Boolean, rows: Long) {
 
     /** Promote the staging into the live table (class doc), record
       * the promote in [[ioStats]] and return the batch rows the pick
       * kept. */
     def commit(): Long = {
-      if (staged) {
-        val (files, promoteSec) = promoteStaged(spark, tablePath)
-        recordIo(files, promoteSec)
-      }
+      val (files, promoteSec) = promoteStaged(spark, tablePath, partitioned)
+      recordIo(files, promoteSec)
       rows
     }
   }
@@ -252,17 +256,29 @@ object ParquetUpsertSink {
       partitionCol: Option[String] = None): Long =
     prepare(spark, batch, tablePath, key, orderCol, partitionCol).commit()
 
-  /** The upsert up to its promote: [[recover]] the table, pick one row
+  /** The committed rows of the table at `tablePath`: [[recover]], then
+    * a read with the schema of one data file's footer ([[footerSchema]]),
+    * so no schema-inference job runs. None while no data file is
+    * visible: no table, a bare directory, or only a crashed write's
+    * `_temporary` debris (which a schema-inferring read would fail on,
+    * every retry). Partition columns come from the directory names. */
+  def read(spark: SparkSession, tablePath: String): Option[DataFrame] = {
+    recover(spark, tablePath)
+    visibleDataFiles(fs(spark, tablePath), new Path(tablePath)).nextOption()
+      .map(file => spark.read.schema(footerSchema(spark, file)).parquet(tablePath))
+  }
+
+  /** The upsert up to its promote: [[read]] the table, pick one row
     * per key from the batch and the live rows, and stage the result.
     * Every write, the first into an empty table included, is staged.
     * Two prepares into one table at once would share its staging; into
     * different tables they are independent.
     *
     * The pick: the batch rows, tagged `__pri = 1`, and the live rows,
-    * tagged `__pri = 0`, meet in one `unionByName`, and `row_number() =
-    * 1` over a window partitioned by the key keeps one row per key,
-    * ordered by `__pri` desc, then (with `orderCol`) `orderCol` desc
-    * nulls last, then `__tb` desc. So the incoming row wins per key
+    * tagged `__pri = 0`, meet in one `unionByName`, and
+    * [[graft.operators.Dedup.firstOccurrence]] on the key keeps one row
+    * per key, ordered by `__pri` desc, then (with `orderCol`)
+    * `orderCol` desc nulls last, then `__tb` desc. So the incoming row wins per key
     * (the reference's `ON CONFLICT (key) DO UPDATE`, which never
     * inserts a second row for a key). Inside the batch, without
     * `orderCol` the surviving row is arbitrary; with it the
@@ -276,8 +292,8 @@ object ParquetUpsertSink {
     * sides: a batch with a column the table lacks, or without one it
     * has, fails with an `AnalysisException` before anything is staged.
     *
-    * The plan is one exchange by key and a sort: Spark plans the
-    * `row_number() = 1` filter as a window group limit, with no
+    * The plan is one exchange by key and a sort: Spark plans that
+    * pick's `row_number() = 1` filter as a window group limit, with no
     * aggregation buffer, so it spills like a sort. No join runs, and
     * none of the sf100 lessons of the older plans is undone: no forced
     * join hint (a hash build has no spill path), no variable-length
@@ -303,9 +319,7 @@ object ParquetUpsertSink {
     * The handle's count is the batch rows the pick kept: the distinct
     * keys the batch inserts or updates. It is observed on the staged
     * write itself (`Dataset.observe`), so it costs no job. The live
-    * rows are read with the schema of one data file's footer
-    * ([[footerSchema]]), found by the same listing that tells an empty
-    * table from a live one, so no schema-inference job runs. */
+    * rows come from [[read]], so no schema-inference job runs. */
   def prepare(
       spark: SparkSession,
       batch: DataFrame,
@@ -313,51 +327,44 @@ object ParquetUpsertSink {
       key: String,
       orderCol: Option[String] = None,
       partitionCol: Option[String] = None): Prepared = {
-    recover(spark, tablePath)
+    // the staged write reads the live table, so it can't overwrite it
+    // in place; an empty table has nothing to pick from
+    val committed = read(spark, tablePath)
     requireNonNullKeys(batch, key)
     val tagged = {
       val b = batch.withColumn("__pri", lit(1))
       orderCol.fold(b)(_ => b.withColumn("__tb", xxhash64(batch.columns.toIndexedSeq.map(col): _*)))
     }
-    // the staged write reads the live table, so it can't overwrite it
-    // in place; an empty table (e.g. the bare directory
-    // FileMonitorStore.migrate creates) has nothing to pick from
-    val both = visibleDataFiles(fs(spark, tablePath), new Path(tablePath)).nextOption() match {
+    val both = committed match {
       case None => tagged
-      case Some(file) =>
-        val schema = footerSchema(spark, file)
-        val live = spark.read.schema(schema).parquet(tablePath)
-        val read = partitionCol match {
-          case None => live
-          case Some(p) =>
-            val touched = touchedPartitions(batch, p)
-            // an empty batch touches no partition: nothing to stage
-            if (touched.isEmpty) return new Prepared(spark, tablePath, 0L, staged = false)
-            live.filter(col(p).cast("string").isInCollection(touched))
-        }
-        val l = read.withColumn("__pri", lit(0))
+      case Some(live) =>
+        val l = partitionCol.fold(live)(p =>
+          live.filter(col(p).cast("string").isInCollection(touchedPartitions(batch, p))))
+          .withColumn("__pri", lit(0))
         val union = tagged.unionByName(orderCol.fold(l)(_ => l.withColumn("__tb", lit(null).cast("long"))))
-        if (partitionCol.isDefined) requireLiveTypes(union, schema, tablePath)
+        partitionCol.foreach(requireLiveTypes(union, live.schema, _, tablePath))
         union
     }
-    val byKey = Window.partitionBy(partitionCol.toSeq.map(col) :+ col(key): _*).orderBy(
-      col("__pri").desc +: orderCol.toSeq.flatMap(o => Seq(col(o).desc_nulls_last, col("__tb").desc)): _*)
     val rows = Observation()
-    val picked = partitionCol.fold(both)(p => both.repartition(col(p)))
-      .withColumn("__rn", row_number().over(byKey)).filter(col("__rn") === 1)
+    val picked = Dedup.firstOccurrence(partitionCol.fold(both)(p => both.repartition(col(p))),
+        partitionCol.toSeq.map(col) :+ col(key),
+        col("__pri").desc +: orderCol.toSeq.flatMap(o => Seq(col(o).desc_nulls_last, col("__tb").desc)))
       .observe(rows, count(when(col("__pri") === 1, 1)).as("rows"))
-      .drop("__rn", "__pri", "__tb")
+      .drop("__pri", "__tb")
     stage(picked, tablePath, partitionCol)
-    new Prepared(spark, tablePath, rows.get("rows").asInstanceOf[Long], staged = true)
+    new Prepared(spark, tablePath, partitionCol.isDefined, rows.get("rows").asInstanceOf[Long])
   }
 
   /** The partitioned form rewrites only the touched partitions, so a
     * column the union would write with another type than the live
-    * files' (`live`, a footer schema) would leave two types in one
-    * table, which no read reconciles: fail before staging, naming the
-    * column. */
-  private def requireLiveTypes(union: DataFrame, live: StructType, tablePath: String): Unit =
-    for (f <- union.schema.fields; l <- live.find(_.name == f.name) if l.dataType.sql != f.dataType.sql)
+    * files' (`live`, the footer schema plus the partition column
+    * `partitionCol`, whose type the directory names only suggest) would
+    * leave two types in one table, which no read reconciles: fail
+    * before staging, naming the column. */
+  private def requireLiveTypes(
+      union: DataFrame, live: StructType, partitionCol: String, tablePath: String): Unit =
+    for (f <- union.schema.fields if f.name != partitionCol;
+         l <- live.find(_.name == f.name) if l.dataType.sql != f.dataType.sql)
       throw new IllegalArgumentException(s"column '${f.name}' is ${l.dataType.sql} in the " +
         s"partitioned table at $tablePath and would be written as ${f.dataType.sql}; the " +
         "partitioned upsert rewrites only the touched partitions, so it cannot change a column's type")
@@ -390,24 +397,26 @@ object ParquetUpsertSink {
   private def stage(df: DataFrame, tablePath: String, partitionCol: Option[String]): Unit =
     df.write.partitionBy(partitionCol.toSeq: _*).mode("overwrite").parquet(stagingPath(tablePath))
 
-  /** [[promote]] the complete staging of the table at `tablePath`;
-    * returns the data files promoted and the seconds it took. */
-  private def promoteStaged(spark: SparkSession, tablePath: String): (Long, Double) = {
+  /** [[promote]] the complete staging of the table at `tablePath` in
+    * the form `partitioned` names; returns the data files promoted and
+    * the seconds it took. */
+  private def promoteStaged(spark: SparkSession, tablePath: String, partitioned: Boolean): (Long, Double) = {
     val t0 = System.nanoTime()
     val files = promote(fs(spark, tablePath), new Path(tablePath),
-      new Path(stagingPath(tablePath)), new Path(backupPath(tablePath)))
+      new Path(stagingPath(tablePath)), new Path(backupPath(tablePath)), partitioned)
     (files, (System.nanoTime() - t0) / 1e9)
   }
 
   /** Replace the table at `tablePath` with `df` (or, with
-    * `partitionCol`, the partitions `df` holds) through the staged,
-    * per-unit promote of the class doc. Records no [[ioStats]];
-    * returns the data files promoted and the seconds spent after the
-    * staged write. */
+    * `partitionCol`, the partitions `df` holds: none when `df` is
+    * empty) through [[recover]] and the staged, per-unit promote of
+    * the class doc. Records no [[ioStats]]; returns the data files
+    * promoted and the seconds spent after the staged write. */
   private[graft] def stageAndPromote(
       spark: SparkSession, df: DataFrame, tablePath: String,
       partitionCol: Option[String] = None): (Long, Double) = {
+    recover(spark, tablePath)
     stage(df, tablePath, partitionCol)
-    promoteStaged(spark, tablePath)
+    promoteStaged(spark, tablePath, partitionCol.isDefined)
   }
 }

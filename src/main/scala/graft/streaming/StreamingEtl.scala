@@ -6,7 +6,6 @@ import graft.jobs.{HandlerJob, Pipelines}
 import graft.operators.{EntitySplit, KeyGen}
 import graft.sinks.ParquetUpsertSink
 import graft.sources.JsonLinesSource
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -160,20 +159,21 @@ object StreamingEtl {
     * offset commit replays the batch under the SAME `batchId` on
     * restart. Three rules make the committed output exactly-once:
     *  1. every write is [[writeBatch]]: the frame tagged
-    *     `__batch_id = batchId` and written with dynamic partition
-    *     OVERWRITE, partitioned by `__batch_id`, so a replay rewrites
-    *     its own partition instead of appending a second copy;
-    *  2. every state read is [[priorState]]: committed data only,
-    *     pinned to `__batch_id < batchId`, so a replay re-reads
-    *     exactly the state its first attempt saw (its own half-written
-    *     delta excluded);
+    *     `__batch_id = batchId`, committed as that one partition by
+    *     the sink's staged promote ([[graft.sinks.ParquetUpsertSink]]),
+    *     so a replay replaces its own partition instead of appending a
+    *     second copy, and a crash mid-commit recovers to before or after;
+    *  2. every state read is [[priorState]]: the sink's committed read
+    *     ([[graft.sinks.ParquetUpsertSink.read]]), pinned to
+    *     `__batch_id < batchId`, so a replay re-reads exactly the state
+    *     its first attempt saw (its own delta excluded);
     *  3. a stateful stream writes its state delta FIRST and its output
-    *     second: a crash between the two replays under rules 1 and 2
-    *     and overwrites both partitions.
+    *     second ([[statefulAppend]]): a crash between the two replays
+    *     under rules 1 and 2 and replaces both partitions.
     * This starts such a stream: Append mode, checkpointed offsets,
     * `body(batch, batchId)` per micro-batch. [[upsertStream]] and
-    * [[scd2Stream]] get the same guarantee from their idempotent
-    * sinks instead (keyed upsert, versioned history). */
+    * [[scd2Stream]] get the same guarantee from the same sink instead
+    * (keyed upsert, versioned history). */
   private def foreachBatchAppend(stream: DataFrame, checkpointDir: String)(
       body: (DataFrame, Long) => Unit): StreamingQuery =
     eachBatch(stream, checkpointDir, OutputMode.Append)(body)
@@ -191,13 +191,10 @@ object StreamingEtl {
       .start()
 
   /** Rule 1 of [[foreachBatchAppend]]: batch `batchId`'s idempotent
-    * write of `df` under `dir`. */
+    * write of `df` under `dir`. An empty `df` leaves `dir` as it was. */
   private def writeBatch(df: DataFrame, batchId: Long, dir: String): Unit =
-    df.withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id")
-      .parquet(dir)
+    ParquetUpsertSink.stageAndPromote(df.sparkSession,
+      df.withColumn("__batch_id", lit(batchId)), dir, Some("__batch_id"))
 
   /** Rule 2 of [[foreachBatchAppend]]: the state under `dir` as batch
     * `batchId` must see it — the committed deltas of earlier batches;
@@ -205,28 +202,21 @@ object StreamingEtl {
     * every committed delta. */
   private[graft] def priorState(
       s: SparkSession, dir: String, batchId: Long): Option[DataFrame] =
-    committedState(s, dir).map(_.filter(col("__batch_id") < batchId))
+    ParquetUpsertSink.read(s, dir).map(_.filter(col("__batch_id") < batchId))
 
-  /** The state read gated on COMMITTED DATA rather than bare directory
-    * existence: a crash during the very first state write leaves the
-    * directory with only `_temporary/` task attempts (no committed
-    * files), and a bare existence check + schema-inference read would
-    * then fail every replay with "Unable to infer schema for Parquet"
-    * — permanently wedging the stream (round-12 advice). The gate
-    * looks for one file Spark's reader would see
-    * ([[graft.sinks.ParquetUpsertSink.visibleDataFiles]]: hive
-    * partition dirs like `__batch_id=0` count; `_temporary`,
-    * `.staging`, `.crc` do not) — i.e. exactly "some earlier batch
-    * committed state". A root `_SUCCESS` marker would be simpler but
-    * dynamic partition overwrite does NOT write one (probed on this
-    * Spark version), so presence-of-committed-data is the reliable
-    * signal; StreamingSpec pins the wedge scenario. */
-  private def committedState(s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new Path(dir)
-    val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (ParquetUpsertSink.visibleDataFiles(hfs, p).hasNext) Some(s.read.parquet(dir))
-    else None
-  }
+  /** Rule 3 of [[foreachBatchAppend]]: start a stateful stream whose
+    * micro-batch `step(batch, prior)` turns the batch and its
+    * [[priorState]] under `stateDir` into (output, state delta). The
+    * delta lands under `stateDir` first, the output under `outDir`
+    * second. */
+  private def statefulAppend(stream: DataFrame, outDir: String, stateDir: String,
+      checkpointDir: String)(
+      step: (DataFrame, Option[DataFrame]) => (DataFrame, DataFrame)): StreamingQuery =
+    foreachBatchAppend(stream, checkpointDir) { (batch, batchId) =>
+      val (output, delta) = step(batch, priorState(batch.sparkSession, stateDir, batchId))
+      writeBatch(delta, batchId, stateDir)
+      writeBatch(output, batchId, outDir)
+    }
 
   /** End-to-end streaming curation: continuous ingestion of raw
     * documents into a curated training corpus —
@@ -307,11 +297,9 @@ object StreamingEtl {
     *  - a replayed batch is detected by `valid_from == version`
     *    already present in the history and SKIPPED — merging is
     *    idempotent per version;
-    *  - the rewrite is the upsert sink's crash-safe promote
-    *    ([[graft.sinks.ParquetUpsertSink.stageAndPromote]]), so
-    *    [[graft.sinks.ParquetUpsertSink.recover]] — invoked at the top
-    *    of every batch — rolls any crash state forward: a complete
-    *    history exists at every instant.
+    *  - the history is the sink's committed read and the rewrite its
+    *    staged promote ([[graft.sinks.ParquetUpsertSink]]); both run
+    *    its `recover` first: a complete history exists at every instant.
     *
     * Per batch the merge is one per-key window over the BATCH plus
     * one equi join against history (Scd2's contract); Scd2Spec owns
@@ -326,11 +314,8 @@ object StreamingEtl {
     eachBatch(stream, checkpointDir) { (batch, batchId) =>
       if (!batch.isEmpty) {
         val s = batch.sparkSession
-        ParquetUpsertSink.recover(s, tablePath)
         val version = (batchId + 1).toInt
-        val history =
-          if (ParquetUpsertSink.isComplete(s, tablePath)) Some(s.read.parquet(tablePath))
-          else None
+        val history = ParquetUpsertSink.read(s, tablePath)
         val alreadyApplied = history.exists(h =>
           !h.filter(col("valid_from") === version).isEmpty)
         if (!alreadyApplied)
@@ -406,16 +391,12 @@ object StreamingEtl {
       seenDir: String,
       checkpointDir: String,
       gramTokens: Int = 20): StreamingQuery =
-    foreachBatchAppend(docStream, checkpointDir) { (batch, batchId) =>
+    statefulAppend(docStream, outDir, seenDir, checkpointDir) { (batch, prior) =>
       // the batch feeds the gram ranking AND the coverage/reassembly
       // branches — materialize once (the curationStream lesson:
       // foreachBatch re-executes the upstream per branch)
-      val b = batch.localCheckpoint()
-      val seen = priorState(batch.sparkSession, seenDir, batchId).map(_.select(col("gram")))
-      val (res, newHashes) = graft.ext.dedup.BlockDedup
-        .dedupNgramsHashedIncremental(b, idCol, textCol, gramTokens, seen)
-      writeBatch(newHashes, batchId, seenDir)
-      writeBatch(res, batchId, outDir)
+      graft.ext.dedup.BlockDedup.dedupNgramsHashedIncremental(batch.localCheckpoint(),
+        idCol, textCol, gramTokens, prior.map(_.select(col("gram"))))
     }
 
   /** Streaming per-domain frequency caps — the cross-batch twin of
@@ -464,8 +445,8 @@ object StreamingEtl {
       outDir: String,
       stateDir: String,
       checkpointDir: String): StreamingQuery =
-    foreachBatchAppend(docStream, checkpointDir) { (batch, batchId) =>
-      val prior = priorState(batch.sparkSession, stateDir, batchId).map(
+    statefulAppend(docStream, outDir, stateDir, checkpointDir) { (batch, priorDeltas) =>
+      val prior = priorDeltas.map(
         _.groupBy(col(domainCol))
           .agg(sum(col("kept_n")).as("__kept0"),
             max(col("max_kept_id")).as("__maxid"),
@@ -512,14 +493,14 @@ object StreamingEtl {
           (col("__rn") <= lit(maxPerDomain.toLong) - col("__kept"))
             .cast("long"))
         .localCheckpoint()
-      writeBatch(ranked.groupBy(col(domainCol))
-        .agg(sum(col("__keptFlag")).as("kept_n"),
-          max(when(col("__keptFlag") === 1L, col(idCol))).as("max_kept_id"),
-          max(col("n_domain")).as("seen_n")), batchId, stateDir)
-      writeBatch(ranked.filter(col("__keptFlag") === 1L)
+      (ranked.filter(col("__keptFlag") === 1L)
         .select(col(idCol), col(domainCol),
           (col("n_domain") + coalesce(col("__seen0"), lit(0L)))
-            .as("n_domain_so_far")), batchId, outDir)
+            .as("n_domain_so_far")),
+        ranked.groupBy(col(domainCol))
+          .agg(sum(col("__keptFlag")).as("kept_n"),
+            max(when(col("__keptFlag") === 1L, col(idCol))).as("max_kept_id"),
+            max(col("n_domain")).as("seen_n")))
     }
 
   /** Streaming semantic dedup (the last major curation operator
@@ -550,15 +531,10 @@ object StreamingEtl {
       checkpointDir: String,
       threshold: Double = 0.3,
       probes: Int = 2): StreamingQuery =
-    foreachBatchAppend(vecStream, checkpointDir) { (batch, batchId) =>
-      val b = batch.localCheckpoint()
-      val prior = priorState(batch.sparkSession, stateDir, batchId).map(
-        _.select(col("vid"), col("v"), col("n"), col("list_id")))
-      val (verdictRows, delta) = graft.ext.dedup.SemanticDedup
-        .verdictsIncremental(b, idCol, vecCol, coarse, fine,
-          threshold, probes, prior)
-      writeBatch(delta, batchId, stateDir)
-      writeBatch(verdictRows, batchId, outDir)
+    statefulAppend(vecStream, outDir, stateDir, checkpointDir) { (batch, prior) =>
+      graft.ext.dedup.SemanticDedup.verdictsIncremental(batch.localCheckpoint(),
+        idCol, vecCol, coarse, fine, threshold, probes,
+        prior.map(_.select(col("vid"), col("v"), col("n"), col("list_id"))))
     }
 
   /** Stream-static semantic decontamination — the streaming twin of

@@ -384,6 +384,97 @@ class StreamingSpec extends SparkSpec {
     assert(out.find(_.getLong(0) == 4L).get.getLong(2) == 8L)
   }
 
+  test("a failed rename or delete anywhere in an n-gram dedup batch's commit leaves, after a restart, the fault-free output and seen-state") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftfs.impl", classOf[GraftTestFileSystem].getName)
+    FileSystem.closeAll()
+    val local = FileSystem.getLocal(conf).getRawFileSystem
+    def copy(from: String, to: String): Unit =
+      assert(FileUtil.copy(local, new Path(from), local, new Path(to), false, conf))
+    val passage = "alpha bravo charlie delta echo foxtrot golf hotel"
+    def doc(id: Long, text: String) = s"""{"doc_id":$id,"text":"$text"}"""
+    val root = tmpDir("ngramfaults")
+    val landing = s"$root/landing"
+    new java.io.File(landing).mkdirs()
+    // one drain of the landing files: out and seen dirs on graftfs, the
+    // checkpoint on the local FS
+    def runOnce(dir: String): Unit = {
+      val stream = spark.readStream.schema("doc_id LONG, text STRING").json(landing)
+      val q = StreamingEtl.ngramDedupStream(stream, "doc_id", "text",
+        s"graftfs://$dir/out", s"graftfs://$dir/seen", s"$dir/ckpt", gramTokens = 5)
+      try q.processAllAvailable() finally q.stop()
+    }
+    // two templates every run copies: "first" has run batch 0, so a run
+    // commits batch 1 for the first time; "replay" has run batch 1 too
+    // but lost its commit marker, so a run replays batch 1 over its own
+    // live partitions. Batch 1 re-uses batch 0's passage, so its
+    // verdicts depend on the at-rest state.
+    writeLanding(landing, "b1.json",
+      doc(1, s"$passage india juliet"), doc(2, s"kilo lima $passage"))
+    runOnce(s"$root/first")
+    writeLanding(landing, "b2.json",
+      doc(3, s"mike november $passage oscar"),
+      doc(4, "papa quebec romeo sierra tango uniform victor whiskey"))
+    copy(s"$root/first", s"$root/replay")
+    runOnce(s"$root/replay")
+    dropLastCommit(s"$root/replay/ckpt")
+
+    val trials = new AtomicInteger
+    val renames, deletes = new AtomicInteger
+    /** Batch 1 on a copy of `template` with the `failRenameAt`-th
+      * rename or the `failDeleteAt`-th delete under the copy's tables
+      * failing (0: none), then a restart from the checkpoint; returns
+      * the copy's dir. The faulted run may throw or not. */
+    def run(template: String, failRenameAt: Int, failDeleteAt: Int): String = {
+      val dir = s"$root/t${trials.incrementAndGet()}"
+      copy(template, dir)
+      def mine(p: Path): Boolean = p.toUri.getPath.startsWith(dir)
+      renames.set(0)
+      deletes.set(0)
+      GraftTestFileSystem.failRename = (src, _) =>
+        mine(src) && renames.incrementAndGet() == failRenameAt
+      GraftTestFileSystem.failDelete = p => mine(p) && deletes.incrementAndGet() == failDeleteAt
+      try scala.util.Try(runOnce(dir))
+      finally {
+        GraftTestFileSystem.failRename = (_, _) => false
+        GraftTestFileSystem.failDelete = _ => false
+      }
+      runOnce(dir)
+      assert(new java.io.File(s"$dir/ckpt/commits/1").exists(), s"$dir: batch 1 did not commit")
+      dir
+    }
+    /** Promote state left under `dir`, then its output and seen rows. */
+    def state(dir: String) = {
+      val fs = new Path(s"graftfs://$dir").getFileSystem(conf)
+      val left = Seq("out", "seen").flatMap(t => Seq(s"${t}__staging", s"${t}__backup"))
+        .filter(d => fs.exists(new Path(s"graftfs://$dir/$d")))
+      val out = spark.read.parquet(s"graftfs://$dir/out")
+        .select($"doc_id", $"n_tokens", $"n_kept", $"text_kept", $"__batch_id")
+        .orderBy($"doc_id").collect().toSeq
+      val seen = spark.read.parquet(s"graftfs://$dir/seen")
+        .select($"gram", $"__batch_id").orderBy($"gram").collect().toSeq
+      (left, out, seen)
+    }
+
+    val clean = state(run(s"$root/first", 0, 0))
+    assert(clean._1.isEmpty && clean._2.map(_.getLong(0)) == Seq(1L, 2L, 3L, 4L), clean.toString)
+    for (template <- Seq("first", "replay")) {
+      assert(state(run(s"$root/$template", 0, 0)) == clean, template)
+      val (nRenames, nDeletes) = (renames.get, deletes.get)
+      assert(nRenames >= 4 && nDeletes >= 2, s"$template: $nRenames renames, $nDeletes deletes")
+      info(s"$template: faulting each of $nRenames renames and $nDeletes deletes")
+      val faults = (1 to nRenames).map(n => (s"$template, rename $n", n, 0)) ++
+        (1 to nDeletes).map(n => (s"$template, delete $n", 0, n))
+      faults.foreach { case (fault, r, d) =>
+        val got = state(run(s"$root/$template", r, d))
+        assert(renames.get >= r && deletes.get >= d, s"$fault of $nRenames/$nDeletes never fired")
+        assert(got == clean, s"$fault: $got, fault-free $clean")
+      }
+    }
+  }
+
   test("foreachBatch upsert sink is last-write-wins across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val root = tmpDir("streamupsert")
@@ -817,7 +908,7 @@ class StreamingSpec extends SparkSpec {
     trainRows.map(_._1).filter(_ % 2 == 0).foreach(id =>
       assert(flags(id), s"planted near-anchor train $id not flagged"))
     // stateless: no state directory exists, and a REPLAYED batch is
-    // idempotent (dynamic overwrite of its own partition)
+    // idempotent (the staged promote of its own partition)
     assert(!new java.io.File(s"$root/state").exists())
     assert(spark.read.parquet(s"$root/out").count() == trainRows.length)
   }

@@ -297,6 +297,26 @@ class UpsertSpec extends SparkSpec {
     assert(got == Map("k1" -> "a", "k2" -> "b"))
   }
 
+  test("an empty partitioned write leaves the live table as it was and does not create it") {
+    import org.apache.hadoop.fs.Path
+    val table = tmpDir("empty_partitioned") + "/t"
+    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def write(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+      ParquetUpsertSink.stageAndPromote(spark, df, path, Some("__batch_id"))
+    Seq(0L, 1L).foreach(b => write(Seq((s"k$b", b)).toDF("id", "__batch_id"), table))
+    def rows = spark.read.parquet(table).collect().map(r => r.getString(0) -> r.getInt(1)).toSet
+    assert(rows == Set("k0" -> 0, "k1" -> 1))
+    val empty = Seq.empty[(String, Long)].toDF("id", "__batch_id")
+    write(empty, table)
+    assert(rows == Set("k0" -> 0, "k1" -> 1))
+    assert(ParquetUpsertSink.upsert(spark, empty, table, "id", partitionCol = Some("__batch_id")) == 0L)
+    assert(rows == Set("k0" -> 0, "k1" -> 1))
+    assert(!fs.exists(new Path(table + "__staging")) && !fs.exists(new Path(table + "__backup")))
+    val fresh = tmpDir("empty_partitioned") + "/t"
+    write(empty, fresh)
+    assert(!fs.exists(new Path(fresh)) && !fs.exists(new Path(fresh + "__staging")))
+  }
+
   /** The sink fault matrix on `graftfs://`: a later batch (two
     * updates and one insert, one key left alone) into a non-empty
     * table, run once for every rename and once for every delete the
