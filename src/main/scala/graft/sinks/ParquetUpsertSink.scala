@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import graft.operators.Dedup
+import graft.operators.{Dedup, Spread}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -24,10 +24,15 @@ import org.apache.spark.sql.types.StructType
   * tables far smaller than the event stream. With one the table is
   * hive-partitioned (e.g. by event date): only the partitions present
   * in the batch are read, picked, staged and promoted, and untouched
-  * partitions are never rewritten. The pick is a single shuffle and a
-  * sort, with no join and no aggregation buffer; the rewrite has one
-  * file per reduce partition of that shuffle as adaptive execution
-  * coalesces it (one per touched partition in the partitioned form).
+  * partitions are never rewritten. The pick is a sort, with no join
+  * and no aggregation buffer, in one of two plan shapes ([[prepare]]).
+  * Without a partition column, a pick input Catalyst estimates at most
+  * 1.5 MiB ([[graft.operators.Spread.NarrowBytes]], the measured
+  * break-even) runs as one task with no shuffle and stages one file. A
+  * larger input, and every partitioned one, goes through a single
+  * shuffle and stages one file per reduce partition of it as adaptive
+  * execution coalesces them (one per touched partition in the
+  * partitioned form).
   *
   * One commit protocol for both forms, and for every table the repo
   * keeps. The rows are staged to `<table>__staging`, complete only
@@ -220,13 +225,20 @@ object ParquetUpsertSink {
     * with an immediate limit-1, a short-circuit job of its own: a probe
     * folded into an aggregate measured 1.87x slower on the sf100 cell
     * (`EXP_UPSERT_QUIET_SF100.json` vs `EXP_UPSERT_PREFOLD_SF100.json`).
-    * On a key the plan knows is non-null (KeyGen's) the filter folds to
-    * an empty local scan and runs no job. */
-  private def requireNonNullKeys(batch: DataFrame, key: String): Unit =
-    require(batch.filter(col(key).isNull).isEmpty,
+    * A key column the schema marks non-nullable (KeyGen's) holds no
+    * null, which Spark guarantees, so no probe runs at all: no
+    * analysis, optimization or SQL execution of its own. The key is
+    * looked up with the session's resolver, as `col(key)` resolves it
+    * (case-insensitive by default); a key the schema lacks is probed
+    * and fails there. */
+  private def requireNonNullKeys(batch: DataFrame, key: String): Unit = {
+    val resolver = batch.sparkSession.sessionState.conf.resolver
+    val nullable = batch.schema.find(f => resolver(f.name, key)).forall(_.nullable)
+    require(!nullable || batch.filter(col(key).isNull).isEmpty,
       s"null values in upsert key column '$key' are unsupported (the " +
         "keyed pick cannot match them); keys are generated surrogates — " +
         "fix the key derivation upstream")
+  }
 
   /** A batch [[prepare]] picked and staged under `<table>__staging`.
     * Nothing of it is visible until [[commit]]. A handle never
@@ -292,21 +304,47 @@ object ParquetUpsertSink {
     * sides: a batch with a column the table lacks, or without one it
     * has, fails with an `AnalysisException` before anything is staged.
     *
-    * The plan is one exchange by key and a sort: Spark plans that
+    * Without `partitionCol`, two plan shapes, chosen by
+    * [[graft.operators.Spread.narrow]] from the size Catalyst
+    * estimates for the union's analyzed plan: the batch's and the live
+    * table's file bytes, scaled to the projected columns. At most
+    * [[graft.operators.Spread.NarrowBytes]] (1.5 MiB, where one task
+    * stopped beating the exchange on a vehicle-shaped table of about
+    * 21k rows on 4 cores), the union is coalesced to one partition,
+    * which already satisfies the window's clustering: one job and one
+    * task read the batch and the live rows, pick and stage one file,
+    * with no exchange, no map-stage job and no adaptive re-plan. The
+    * hourly product's perfbench tables (up to 19k and 6k rows, 1.39 MB
+    * and 0.34 MB) stay under it. Above it, or with
+    * `spark.sql.autoBroadcastJoinThreshold` at -1, the plan is one
+    * exchange by key and a sort. Either way Spark plans the
     * pick's `row_number() = 1` filter as a window group limit, with no
     * aggregation buffer, so it spills like a sort. No join runs, and
     * none of the sf100 lessons of the older plans is undone: no forced
     * join hint (a hash build has no spill path), no variable-length
     * aggregation buffer (those fall back to sort-based aggregation and
-    * spilled tens of GB). The staged table gets one data file per
-    * reduce partition of that exchange, as adaptive execution
+    * spilled tens of GB). Through the exchange the staged table gets
+    * one data file per reduce partition, as adaptive execution
     * coalesces them.
+    *
+    * Limit: the estimate counts compressed file bytes, not rows, and
+    * one task then reads, sorts and writes them on one core, the
+    * batch's own upstream plan included. KeyGen's key, 36 characters of
+    * hash per row, holds a table near 54 bytes per row in parquet even
+    * when every other column repeats; at that width one task was not
+    * slower up to 60k rows (3.42 MB, 0.63 vs 0.63 s, 7 runs). A table
+    * on a short key whose rows repeat puts more rows under the line,
+    * where the one task can be the slower shape; that was not measured.
     *
     * With `partitionCol` the table is hive-partitioned by it and only
     * the partitions the batch touches are read, rewritten and promoted.
     * The union is repartitioned by `partitionCol` and the window is
     * partitioned by (`partitionCol`, key), which that exchange already
-    * satisfies: still one exchange, and one file per partition.
+    * satisfies: one exchange at any size, and one file per partition.
+    * This form takes no one-task shape: one task writing every touched
+    * partition in turn measured slower on the sf0.1 registry cell
+    * (`etl_upsert_partitioned`, 3.40-4.06 s vs 2.86-3.01 s through the
+    * exchange, 4 cores, 3 alternated runs each).
     * Contract: the partition-column value of a key must be immutable
     * across batches (true when it is derived from the key's own
     * columns, e.g. `event_date = date(ts)` under a `(user_id, ts)`
@@ -346,7 +384,8 @@ object ParquetUpsertSink {
         union
     }
     val rows = Observation()
-    val picked = Dedup.firstOccurrence(partitionCol.fold(both)(p => both.repartition(col(p))),
+    val input = partitionCol.fold(Spread.narrow(both))(p => both.repartition(col(p)))
+    val picked = Dedup.firstOccurrence(input,
         partitionCol.toSeq.map(col) :+ col(key),
         col("__pri").desc +: orderCol.toSeq.flatMap(o => Seq(col(o).desc_nulls_last, col("__tb").desc)))
       .observe(rows, count(when(col("__pri") === 1, 1)).as("rows"))

@@ -387,10 +387,12 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
     // entity's frame and deduped before the upsert; 13 while the upsert
     // inferred the live table's schema in a job; 11 while it deduped the
     // batch, anti-joined the live rows against the batch's keys and
-    // repartitioned the result; 5 since it picks one row per key in one
-    // exchange. One job of slack: a plan can start an extra one-task job
-    // from run to run. The name keeps the ceiling of 14 it was written
-    // with; the assertion holds the hour to the tighter 6.
+    // repartitioned the result; 5 while it picked one row per key in one
+    // exchange; 5 → 3 since a small ingest and a small upsert each run
+    // as one task with no exchange. One job of slack: a plan can start
+    // an extra one-task job from run to run. The name keeps the ceiling
+    // of 14 it was written with; the assertion holds the hour to the
+    // tighter 4.
     val root = tmpDir("job_budget")
     val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
     writeLanding(landing, "a.json", hour0.plusSeconds(60), vehicleLine, periodLine)
@@ -401,7 +403,7 @@ class JobsSpec extends SparkSpec with BeforeAndAfterAll {
     val args = Executor.parse(Seq("--root", root, "--landing", landing))
     Executor.run(spark, args) // the cold hour, into an empty warehouse
     val jobs = jobsOf(Executor.run(spark, args))
-    assert(jobs <= 6, s"an incremental hour ran $jobs Spark jobs")
+    assert(jobs <= 4, s"an incremental hour ran $jobs Spark jobs")
 
     val store = new FileMonitorStore(spark, s"$root/monitor")
     val wf = store.ingestorRows()

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.KeyGen
 import graft.sinks.ParquetUpsertSink
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
 import org.scalacheck.Gen
@@ -84,9 +85,15 @@ class PropertySpec extends SparkSpec {
     // tied and null versions and byte-identical rows
     val row = Gen.zip(Gen.choose(0, 7).map(i => s"k$i"), Gen.oneOf("a", "b"), Gen.option(Gen.choose(1, 3)))
     val gen = Gen.zip(Gen.listOfN(14, row), Gen.listOfN(6, row).map(_.distinctBy(_._1)))
+    // the pick runs as one task at most Spread.NarrowBytes and through one
+    // exchange above it; an isolated session at
+    // spark.sql.autoBroadcastJoinThreshold=-1 turns the one-task rule off
+    // and stands in for the latter (a shared-conf mutation would race
+    // other suites)
+    val above = spark.newSession()
+    above.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     forSamples(gen) { case (batchRows, liveRows) =>
       type R = (String, String, Option[Int])
-      val live = liveRows.toDF("id", "payload", "ver")
       val batch = batchRows.toDF("id", "payload", "ver")
       // the tie-break hash of each distinct batch row, from Spark's own
       // xxhash64 over the batch's columns
@@ -95,11 +102,11 @@ class PropertySpec extends SparkSpec {
         .map(r => (r.getString(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Int])) -> r.getLong(3))
         .toMap
       val liveModel = liveRows.map(r => r._1 -> r).toMap
-      def upserted(orderCol: Option[String]): Seq[R] = {
+      def upserted(s: SparkSession, orderCol: Option[String]): Seq[R] = {
         val path = tmpDir("prop-pick") + "/t"
-        live.write.parquet(path)
-        assert(ParquetUpsertSink.upsert(spark, batch, path, "id", orderCol) ==
-          batchRows.map(_._1).distinct.size.toLong)
+        s.createDataFrame(liveRows).toDF("id", "payload", "ver").write.parquet(path)
+        assert(ParquetUpsertSink.upsert(s, s.createDataFrame(batchRows).toDF("id", "payload", "ver"),
+          path, "id", orderCol) == batchRows.map(_._1).distinct.size.toLong)
         val got = spark.read.parquet(path).as[(String, String, Option[Int])].collect().toSeq
         assert(got.map(_._1).distinct.size == got.size, s"a key kept twice: $got")
         got
@@ -109,13 +116,16 @@ class PropertySpec extends SparkSpec {
       val model = liveModel ++ byKey.map { case (k, rs) =>
         k -> rs.maxBy(r => (r._3, hashOf(r))) // None orders below every Some
       }
-      assert(upserted(Some("ver")).sortBy(_._1) == model.values.toSeq.sortBy(_._1))
+      for (s <- Seq(spark, above)) {
+        val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        assert(upserted(s, Some("ver")).sortBy(_._1) == model.values.toSeq.sortBy(_._1), s"threshold $threshold")
 
-      // without orderCol the batch row kept per key is any of that key's
-      val plain = upserted(None).map(r => r._1 -> r).toMap
-      assert(plain.keySet == model.keySet)
-      plain.foreach { case (k, r) =>
-        assert(byKey.get(k).fold(liveModel(k) == r)(_.contains(r)), s"$k kept $r")
+        // without orderCol the batch row kept per key is any of that key's
+        val plain = upserted(s, None).map(r => r._1 -> r).toMap
+        assert(plain.keySet == model.keySet, s"threshold $threshold")
+        plain.foreach { case (k, r) =>
+          assert(byKey.get(k).fold(liveModel(k) == r)(_.contains(r)), s"$k kept $r at threshold $threshold")
+        }
       }
     }
   }

@@ -327,8 +327,8 @@ class StreamingSpec extends SparkSpec {
     writeLanding(landing, "b1.json",
       """{"doc_id":1,"text":"the quick brown fox jumps over the lazy dog tonight"}""")
     runOnce()
-    // on restart the engine replays the batch, and the per-batch
-    // dynamic partition overwrite must rewrite, not append
+    // on restart the engine replays the batch, and the sink's staged
+    // promote of the batch's partition must rewrite, not append
     dropLastCommit(s"$root/ckpt")
     runOnce()
     val out = spark.read.parquet(s"$root/corpus")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sinks.ParquetUpsertSink
+import scala.jdk.CollectionConverters._
 
 class UpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -78,6 +79,45 @@ class UpsertSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("null values in upsert key column"))
     assert(!new java.io.File(path).exists()) // nothing written
+  }
+
+  test("a KeyGen-keyed upsert runs no query besides its write") {
+    import graft.operators.KeyGen
+    import org.apache.spark.graftbridge.ListenerBridge
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    // KeyGen's key column is non-nullable in the schema, so the null-key
+    // check needs no probe query; an isolated session's listener sees
+    // only this test's queries
+    val s = spark.newSession()
+    import s.implicits._
+    val path = tmpDir("upsert_keygen") + "/t"
+    def keyed(rows: (String, String)*) =
+      KeyGen.withKey(rows.toDF("id", "payload"), Seq("id" -> StringType))
+    ParquetUpsertSink.upsert(s, keyed(("a", "1"), ("b", "2")), path, KeyGen.columnName)
+    val batch = keyed(("b", "3"), ("c", "4"))
+    assert(!batch.schema(KeyGen.columnName).nullable)
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        ran.add(funcName -> Plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        ran.add(s"$funcName failed" -> false)
+    }
+    ListenerBridge.waitUntilEmpty(spark.sparkContext)
+    s.listenerManager.register(listener)
+    try assert(ParquetUpsertSink.upsert(s, batch, path, KeyGen.columnName) == 2L)
+    finally {
+      ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      s.listenerManager.unregister(listener)
+    }
+    val queries = ran.asScala.toSeq
+    assert(queries.size == 1 && queries.head._2, s"queries besides the write: $queries")
+    assert(s.read.parquet(path).count() == 3)
   }
 
   test("partitioned upsert only rewrites touched partitions") {
@@ -228,46 +268,102 @@ class UpsertSpec extends SparkSpec {
     assert(t.collect().map(_.toString).toSeq.sorted == Seq("[k1,a,1]", "[k2,b,2]"))
   }
 
-  test("an upsert into a non-empty table writes through one shuffle exchange (plain, orderCol, partitioned)") {
+  test("Spread.narrow runs an input as one task only at most NarrowBytes, and never at threshold -1") {
+    import graft.operators.Spread
+    // a Range's size estimate is 8 bytes per row; one row past the line
+    // is still far under the broadcast threshold, and keeps its tasks
+    val rows = Spread.NarrowBytes / 8
+    val under = spark.range(0, rows, 1, 4).toDF()
+    val over = spark.range(0, rows + 1, 1, 4).toDF()
+    assert(over.queryExecution.analyzed.stats.sizeInBytes == Spread.NarrowBytes + 8)
+    assert(Spread.NarrowBytes + 8 < spark.sessionState.conf.autoBroadcastJoinThreshold)
+    assert(Spread.narrow(under).rdd.getNumPartitions == 1)
+    assert(Spread.narrow(over) eq over)
+    val off = spark.newSession()
+    off.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val offUnder = off.range(0, rows, 1, 4).toDF()
+    assert(Spread.narrow(offUnder) eq offUnder)
+  }
+
+  test("an upsert into a non-empty table runs as one task when small and through one exchange otherwise (plain, orderCol; partitioned always one exchange)") {
     import org.apache.spark.graftbridge.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import org.apache.spark.sql.util.QueryExecutionListener
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
     object Plans extends AdaptiveSparkPlanHelper
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    val v1 = Seq(("k1", "2022-11-24", "a", 1), ("k2", "2022-11-25", "b", 1))
-      .toDF("id", "dt", "payload", "ver")
-    val v2 = Seq(("k2", "2022-11-25", "B", 2), ("k2", "2022-11-25", "old", 1), ("k3", "2022-11-25", "c", 2))
-      .toDF("id", "dt", "payload", "ver")
+    // tasks per SQL execution, and each execution's plan text, to count
+    // the tasks of the execution that writes a given staging path
+    val execOfStage = new ConcurrentHashMap[Int, String]
+    val tasksOfExec = new ConcurrentHashMap[String, Integer]
+    val planOfExec = new ConcurrentHashMap[String, String]
+    val tasks = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(x => e.stageIds.foreach(execOfStage.put(_, x)))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(execOfStage.get(e.stageId)).foreach(tasksOfExec.merge(_, 1, (a, b) => a + b))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => planOfExec.put(s.executionId.toString, s.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(tasks)
+    // these tables are far under Spread.NarrowBytes; an isolated session
+    // at spark.sql.autoBroadcastJoinThreshold=-1 turns the one-task rule
+    // off and stands in for a larger input (a shared-conf mutation would
+    // race the suites running beside this one)
+    val above = spark.newSession()
+    above.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val forms = Seq(("plain", None, None), ("orderCol", Some("ver"), None), ("partitioned", None, Some("dt")))
-    forms.foreach { case (form, orderCol, partitionCol) =>
-      val path = tmpDir(s"upsert_one_exchange_$form") + "/t"
-      ParquetUpsertSink.upsert(spark, v1, path, "id", orderCol, partitionCol)
+    try for (s <- Seq[SparkSession](spark, above); (form, orderCol, partitionCol) <- forms) {
+      // the partitioned form goes through its exchange at any size
+      val small = (s eq spark) && partitionCol.isEmpty
+      val what = s"$form, ${if (s eq spark) "small" else "rule off"}"
+      import s.implicits._
+      val v1 = Seq(("k1", "2022-11-24", "a", 1), ("k2", "2022-11-25", "b", 1))
+        .toDF("id", "dt", "payload", "ver")
+      val v2 = Seq(("k2", "2022-11-25", "B", 2), ("k2", "2022-11-25", "old", 1), ("k3", "2022-11-25", "c", 2))
+        .toDF("id", "dt", "payload", "ver")
+      val path = tmpDir(s"upsert_plan_shape_$form") + "/t"
+      ParquetUpsertSink.upsert(s, v1, path, "id", orderCol, partitionCol)
       ListenerBridge.waitUntilEmpty(spark.sparkContext)
       plans.clear()
-      spark.listenerManager.register(listener)
-      try assert(ParquetUpsertSink.upsert(spark, v2, path, "id", orderCol, partitionCol) == 2L)
+      planOfExec.clear()
+      s.listenerManager.register(listener)
+      try assert(ParquetUpsertSink.upsert(s, v2, path, "id", orderCol, partitionCol) == 2L)
       finally {
         ListenerBridge.waitUntilEmpty(spark.sparkContext)
-        spark.listenerManager.unregister(listener)
+        s.listenerManager.unregister(listener)
       }
       val writes = plans.toArray(Array.empty[SparkPlan]).toSeq
         .filter(Plans.find(_)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
-      assert(writes.size == 1, s"$form: ${writes.size} writes")
+      assert(writes.size == 1, s"$what: ${writes.size} writes")
       val exchanges = Plans.collectWithSubqueries(writes.head) { case e: ShuffleExchangeExec => e }
-      assert(exchanges.size == 1, s"$form: ${exchanges.size} exchanges in\n${writes.head}")
-      val got = spark.read.parquet(path).collect()
+      assert(exchanges.size == (if (small) 0 else 1), s"$what: ${exchanges.size} exchanges in\n${writes.head}")
+      if (small) {
+        val staging = new java.io.File(path + "__staging").toURI.getPath.stripSuffix("/")
+        val writeTasks = planOfExec.asScala.collect {
+          case (x, plan) if plan.contains(staging) => tasksOfExec.getOrDefault(x, 0).intValue
+        }.sum
+        assert(writeTasks == 1, s"$what: $writeTasks write tasks")
+      }
+      val got = s.read.parquet(path).collect()
         .map(r => r.getAs[String]("id") -> r.getAs[String]("payload")).toMap
-      assert(got("k1") == "a" && got("k3") == "c" && Set("B", "old").contains(got("k2")), s"$form: $got")
+      assert(got("k1") == "a" && got("k3") == "c" && Set("B", "old").contains(got("k2")), s"$what: $got")
       if (orderCol.nonEmpty) assert(got("k2") == "B")
-    }
+    } finally spark.sparkContext.removeSparkListener(tasks)
   }
 
   test("a first partitioned batch that fails mid-write leaves the live table empty; recover cleans up") {
