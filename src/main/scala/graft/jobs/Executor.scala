@@ -1,5 +1,6 @@
 package graft.jobs
 
+import java.time.Instant
 import java.util.UUID
 
 import graft.config.EntitySchema
@@ -11,6 +12,16 @@ import org.apache.spark.sql.SparkSession
   * reference's consistency rule: a workflow id may only be supplied
   * for a handler-only run, and a handler-only run requires one
   * (`src/helper/helper.py:176-194`).
+  *
+  * `--step all` runs both steps of one hour under one workflow id. An
+  * hour the ingestor stages in one task ([[IngestorJob.Planned.oneTask]],
+  * the `Spread.fitsOneTask` line) overlaps them: the handler's
+  * prepares start from the ingestor's landing read while this thread
+  * writes the staging and appends the ingestor's row, and no entity
+  * commits before both returned. A larger hour runs the steps in
+  * turn, so its JSON is parsed once, by the staging. Either way the
+  * warehouse, the audit rows and the cursor are the same
+  * (SURVEY.md §3.1).
   *
   * Paths default to a local warehouse layout under `--root`; on a
   * cluster the same flags point at object-store URIs.
@@ -74,12 +85,24 @@ object Executor {
     store.migrate(schemas.map(_.targetTable))
     val source = graft.jobs.Pipelines.unionSourceStruct(schemas)
     val wfId = args.workflow.getOrElse(UUID.randomUUID().toString)
-    if (args.step == "all" || args.step == "ingestor")
-      IngestorJob.run(spark, store,
-        args.landing.getOrElse(s"${args.root}/landing"),
-        s"${args.root}/staging", source, wfId)
-    if (args.step == "all" || args.step == "handler")
-      HandlerJob.run(spark, store, s"${args.root}/tables", schemas, wfId)
+    val tables = s"${args.root}/tables"
+    args.step match {
+      case "handler" => HandlerJob.run(spark, store, tables, schemas, wfId)
+      case step =>
+        val hour = IngestorJob.plan(spark, store,
+          args.landing.getOrElse(s"${args.root}/landing"),
+          s"${args.root}/staging", source, wfId)
+        if (step == "ingestor") hour.stage()
+        else if (hour.oneTask)
+          // the prepares parse the landing files while the hour stages;
+          // nothing commits before the stage and its audit row returned
+          HandlerJob.upsert(spark, store, tables, schemas, wfId, Instant.now(), None,
+            batch = hour.read.zip(hour.stagedPath), beforeCommit = () => hour.stage())
+        else {
+          hour.stage()
+          HandlerJob.run(spark, store, tables, schemas, wfId)
+        }
+    }
   }
 }
 

@@ -3,7 +3,7 @@ package graft.jobs
 import java.sql.Timestamp
 import java.time.Instant
 import java.util.UUID
-import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
 
 import graft.config.EntitySchema
 import graft.meta.{HandlerExecution, MonitorStore}
@@ -11,6 +11,7 @@ import graft.operators.{EntitySplit, KeyGen, Normalize}
 import graft.sinks.ParquetUpsertSink
 import graft.sources.JsonLinesSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
 import scala.util.control.NonFatal
 
 /** Handler (reference entry point 3, `src/handler/handler.py`):
@@ -19,32 +20,39 @@ import scala.util.control.NonFatal
   * table, with per-entity error isolation and an audit row per
   * run×entity.
   *
-  * The staged frame is read with the landing-record shape the ingestor
-  * wrote it with ([[JsonLinesSource.recordStruct]], no inference job).
-  * Each entity is one lazy plan (filter → normalize → keygen) handed
-  * to the upsert, whose keyed pick is the only per-key dedup
-  * (reference op R-2). Nothing is cached, so each entity's scans read
-  * only its own columns. An entity's audit count is the batch rows the
-  * upsert's pick kept, which costs no job.
+  * [[run]] finds the batch as the reference does: the workflow's
+  * ingestor row names the staged path (A-2), read with the
+  * landing-record shape the ingestor wrote it with
+  * ([[JsonLinesSource.recordStruct]], no inference job). `Executor`'s
+  * `--step all` hands a small hour's landing read
+  * ([[JsonLinesSource.read]], the frame the staging is written from)
+  * straight to the same body, [[upsert]], with the ingestor's stage
+  * step as the barrier before the first commit. Each entity is one
+  * lazy plan (filter → normalize → keygen) handed to the upsert, whose
+  * keyed pick is the only per-key dedup (reference op R-2). Nothing is
+  * cached, so each entity's scans read only its own columns. An
+  * entity's audit count is the batch rows the upsert's pick kept,
+  * which costs no job.
   *
-  * The entities run side by side, unlike the reference's loop: each
-  * entity's plan, quality gate and [[ParquetUpsertSink.prepare]]
-  * (the keyed pick and its staged write) run on a pool thread of
-  * their own, so one entity's Spark jobs and driver gaps overlap the
-  * other's. The calling thread then takes the entities in schema
+  * The order, strictly: the precheck and the batch on the calling
+  * thread; then each entity's plan, quality gate and
+  * [[ParquetUpsertSink.prepare]] (the keyed pick and its staged write)
+  * on a pool thread of its own, so one entity's Spark jobs and driver
+  * gaps overlap the other's, and the barrier's; only once the barrier
+  * has returned does the calling thread take the entities in schema
   * order: it waits for the entity's prepare, commits it (the promote)
-  * and appends its audit row. Every monitor-store call stays on the
-  * calling thread, in the sequential loop's order, so audit rows land
-  * in schema order. Each entity writes its own table (checked up
-  * front): two prepares
-  * into one table would share its staging.
+  * and appends its audit row. Unlike the reference's loop the entities
+  * run side by side, but every monitor-store call stays on the calling
+  * thread, in the sequential loop's order, so audit rows land in
+  * schema order. Each entity writes its own table (checked up front):
+  * two prepares into one table would share its staging.
   *
   * Per-entity failure, in the prepare or the commit, is caught so one
   * entity's bad batch never blocks the others — the reference's
-  * contract (`handler.py:91-100`). Fatal JVM errors (out of memory,
-  * interrupts) are not per-entity failures: the loop stops, waits
-  * for the prepares still in flight and rethrows the error itself,
-  * and the remaining entities are not committed. What they staged
+  * contract (`handler.py:91-100`). A failed barrier or fatal JVM
+  * error (out of memory, interrupts) is not a per-entity failure: the
+  * handler stops, waits for the prepares still in flight and rethrows
+  * it, and the remaining entities are not committed. What they staged
   * stays invisible: a staging with no backup is dropped by the next
   * upsert's [[ParquetUpsertSink.recover]].
   */
@@ -86,74 +94,113 @@ object HandlerJob {
       schemas: Seq[EntitySchema],
       workflowId: String,
       now: Instant = Instant.now(),
-      qualityGate: Option[QualityGate] = None): Result = {
+      qualityGate: Option[QualityGate] = None): Result =
+    upsert(spark, store, warehouseDir, schemas, workflowId, now, qualityGate,
+      batch = store.stagedFilePath(workflowId).map { path =>
+        spark.read
+          .schema(JsonLinesSource.recordStruct(Pipelines.unionSourceStruct(schemas)))
+          .parquet(path) -> path
+      },
+      beforeCommit = () => ())
 
+  /** The handler's one body. `batch` is the hour's frame and the path
+    * its audit rows name, or None for a no-op; it is taken after the
+    * precheck. The prepares start at once; `beforeCommit` runs on the
+    * calling thread while they run, and the first commit waits for it
+    * to return. A non-fatal failure of the precheck or of `batch`
+    * surfaces only after `beforeCommit` returned (a fatal one at once,
+    * without it). A failure of `beforeCommit` propagates once the
+    * prepares in flight have finished, and none of them is promoted. */
+  private[jobs] def upsert(
+      spark: SparkSession,
+      store: MonitorStore,
+      warehouseDir: String,
+      schemas: Seq[EntitySchema],
+      workflowId: String,
+      now: Instant,
+      qualityGate: Option[QualityGate],
+      batch: => Option[(DataFrame, String)],
+      beforeCommit: () => Unit): Result = {
+    val executionId = UUID.randomUUID().toString
+    // created here, so its threads inherit this thread's Spark local
+    // properties and active session
+    val pool = Executors.newFixedThreadPool(math.max(1, schemas.size))
+    try {
+      val started = Try {
+        precheck(store, schemas, workflowId)
+        batch.map { case (frame, path) =>
+          val byEntity = EntitySplit(frame, "on", schemas.map(_.entity))
+          // the plan is built INSIDE the prepare: analysis-time failures
+          // (e.g. AnalysisException on malformed staged data) must become
+          // that entity's failure, not abort the remaining entities
+          path -> schemas.map { schema =>
+            val prepare: Callable[ParquetUpsertSink.Prepared] = () => {
+              val keyed = entityPipeline(byEntity(schema.entity), schema)
+              qualityGate.foreach(enforceGate(keyed, _))
+              ParquetUpsertSink.prepare(
+                spark, keyed, s"$warehouseDir/${schema.targetTable}", KeyGen.columnName)
+            }
+            pool.submit(prepare)
+          }
+        }
+      }
+      beforeCommit()
+      started.get match {
+        case None => Result(Map.empty, Map.empty)
+        case Some((path, prepares)) =>
+          val outcomes = schemas.zip(prepares).map { case (schema, prepared) =>
+            commit(store, workflowId, executionId, now, Some(path), schema, prepared)
+          }
+          Result(
+            outcomes.collect { case (e, Right(n)) => e -> n }.toMap,
+            outcomes.collect { case (e, Left(err)) => e -> err }.toMap)
+      }
+    } finally {
+      // after a fatal error or a failed barrier, the prepares still in
+      // flight finish before it propagates; what they staged is never
+      // promoted
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+  }
+
+  private def precheck(store: MonitorStore, schemas: Seq[EntitySchema], workflowId: String): Unit = {
     require(
       try { UUID.fromString(workflowId); true } catch { case _: Exception => false },
       s"workflow id is not a UUID: $workflowId")
-
     // two concurrent prepares into one table would share its staging
     val shared = schemas.groupBy(_.targetTable).collect { case (t, ss) if ss.size > 1 => t }
     require(shared.isEmpty, s"target tables shared by several entities: ${shared.mkString(", ")}")
     val missing = schemas.map(_.targetTable).filterNot(store.targetTableExists)
     require(missing.isEmpty, s"missing target tables: ${missing.mkString(", ")}")
+  }
 
-    val executionId = UUID.randomUUID().toString
-    val stagedPath = store.stagedFilePath(workflowId)
-    if (stagedPath.isEmpty) return Result(Map.empty, Map.empty)
-
-    val staged = spark.read
-      .schema(JsonLinesSource.recordStruct(Pipelines.unionSourceStruct(schemas)))
-      .parquet(stagedPath.get)
-    val byEntity = EntitySplit(staged, "on", schemas.map(_.entity))
-    // created here, so its threads inherit this thread's Spark local
-    // properties and active session
-    val pool = Executors.newFixedThreadPool(math.max(1, schemas.size))
+  /** Wait for one entity's prepare, commit it and append its audit row;
+    * a non-fatal failure becomes that entity's failure row. */
+  private def commit(store: MonitorStore, workflowId: String, executionId: String,
+      now: Instant, stagedPath: Option[String], schema: EntitySchema,
+      prepared: Future[ParquetUpsertSink.Prepared]): (String, Either[String, Long]) = {
+    val entity = schema.entity
     try {
-      // the plan is built INSIDE the prepare: analysis-time failures
-      // (e.g. AnalysisException on malformed staged data) must become
-      // that entity's failure, not abort the remaining entities
-      val prepares = schemas.map { schema =>
-        val prepare: Callable[ParquetUpsertSink.Prepared] = () => {
-          val keyed = entityPipeline(byEntity(schema.entity), schema)
-          qualityGate.foreach(enforceGate(keyed, _))
-          ParquetUpsertSink.prepare(
-            spark, keyed, s"$warehouseDir/${schema.targetTable}", KeyGen.columnName)
-        }
-        pool.submit(prepare)
-      }
-      val outcomes = schemas.zip(prepares).map { case (schema, prepared) =>
-        val entity = schema.entity
-        try {
-          val n =
-            try prepared.get().commit()
-            catch { case e: ExecutionException => throw e.getCause }
-          store.recordHandler(HandlerExecution(
-            workflowId, executionId, Timestamp.from(now), stagedPath,
-            schema.targetTable, n, None))
-          log.info("entity upserted", "workflow" -> workflowId,
-            "entity" -> entity, "table" -> schema.targetTable, "rows" -> n)
-          entity -> Right(n)
-        } catch {
-          case NonFatal(e) =>
-            // full stack trace, matching the reference's traceback
-            // capture (src/helper/postgres.py:45-63)
-            log.error("entity failed", e, "workflow" -> workflowId,
-              "entity" -> entity, "table" -> schema.targetTable)
-            store.recordHandler(HandlerExecution(
-              workflowId, executionId, Timestamp.from(now), stagedPath,
-              schema.targetTable, 0L, Some(Stacks.render(e))))
-            entity -> Left(e.toString)
-        }
-      }
-      Result(
-        outcomes.collect { case (e, Right(n)) => e -> n }.toMap,
-        outcomes.collect { case (e, Left(err)) => e -> err }.toMap)
-    } finally {
-      // after a fatal error, the prepares still in flight finish
-      // before it propagates; what they staged is never promoted
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      val n =
+        try prepared.get().commit()
+        catch { case e: ExecutionException => throw e.getCause }
+      store.recordHandler(HandlerExecution(
+        workflowId, executionId, Timestamp.from(now), stagedPath,
+        schema.targetTable, n, None))
+      log.info("entity upserted", "workflow" -> workflowId,
+        "entity" -> entity, "table" -> schema.targetTable, "rows" -> n)
+      entity -> Right(n)
+    } catch {
+      case NonFatal(e) =>
+        // full stack trace, matching the reference's traceback
+        // capture (src/helper/postgres.py:45-63)
+        log.error("entity failed", e, "workflow" -> workflowId,
+          "entity" -> entity, "table" -> schema.targetTable)
+        store.recordHandler(HandlerExecution(
+          workflowId, executionId, Timestamp.from(now), stagedPath,
+          schema.targetTable, 0L, Some(Stacks.render(e))))
+        entity -> Left(e.toString)
     }
   }
 }

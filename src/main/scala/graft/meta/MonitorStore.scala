@@ -11,7 +11,7 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
 import org.apache.spark.sql.{Encoders, Row, SparkSession}
@@ -133,8 +133,13 @@ class FileMonitorStore(spark: SparkSession, dir: String,
       .sortBy(_.path.getName)
   }
 
+  /** Built from an `InputFile` on the session's configuration: the
+    * `Path` builder makes a `new Configuration()` per file, which
+    * parses Hadoop's default resources each time. */
   private def read(f: AuditFile, schema: StructType): Seq[Row] = {
-    val reader = ParquetReader.builder[Group](new GroupReadSupport(), f.path).withConf(conf).build()
+    val reader = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(f.path, conf)) {
+      override def getReadSupport = new GroupReadSupport()
+    }.build()
     try Iterator.continually(reader.read()).takeWhile(_ != null).map(toRow(_, schema)).toVector
     finally reader.close()
   }

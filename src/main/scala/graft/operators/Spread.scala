@@ -31,6 +31,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * a map-stage job and an adaptive re-plan per exchange), so the
   * ingestor's hour of 1,000 events stages one file and a small
   * unpartitioned upsert picks and stages in one task with no exchange.
+  * [[fitsOneTask]] is the line's one definition.
   */
 object Spread {
 
@@ -78,18 +79,23 @@ object Spread {
     * gains and the break-even moves down. */
   val NarrowBytes: Long = 1536L * 1024
 
-  /** `df` as one task (`coalesce(1)`) when the size estimate of its
-    * analyzed plan is at most [[NarrowBytes]]; any other plan is
-    * returned unchanged. `spark.sql.autoBroadcastJoinThreshold` at -1
-    * turns the rule off, as it turns off broadcast joins. One
-    * partition satisfies every clustered distribution, so a keyed
-    * operator over the result plans no exchange. The estimate is the
+  /** Whether [[narrow]] runs `df` as one task: the size estimate of
+    * its analyzed plan is at most [[NarrowBytes]], and
+    * `spark.sql.autoBroadcastJoinThreshold` is not -1, which turns the
+    * rule off as it turns off broadcast joins. The estimate is the
     * input files' bytes (compressed, for parquet) scaled by projected
     * row width, so rows that compress well put more of them under the
-    * line than the measurement above. */
-  def narrow(df: DataFrame): DataFrame = {
-    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold >= 0 && df.queryExecution.analyzed.stats.sizeInBytes <= NarrowBytes) df.coalesce(1)
-    else df
-  }
+    * line than the measurement above. Two callers: [[narrow]], and
+    * `Executor`'s `--step all`, which prepares a small hour's entities
+    * from the landing read while the ingestor stages it (above the
+    * line each entity would parse the JSON again). */
+  def fitsOneTask(df: DataFrame): Boolean =
+    df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold >= 0 &&
+      df.queryExecution.analyzed.stats.sizeInBytes <= NarrowBytes
+
+  /** `df` as one task (`coalesce(1)`) when it [[fitsOneTask]]; any
+    * other plan is returned unchanged. One partition satisfies every
+    * clustered distribution, so a keyed operator over the result plans
+    * no exchange. */
+  def narrow(df: DataFrame): DataFrame = if (fitsOneTask(df)) df.coalesce(1) else df
 }
