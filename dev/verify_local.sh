@@ -4,10 +4,8 @@
 # Needs `sbt compile` first: it runs the classes in
 # target/scala-2.13/classes and stops with an error when any src/main
 # file is newer than the last compile (the newest class, or the
-# compile.stamp every sbt compile touches). Heap and cores follow
-# SPARK_DRIVER_MEM and SPARK_GRAFT_CPUS; unset, they are sized from the
-# host like the test command: half of RAM clamped to 2-8 GB, and every
-# core.
+# compile.stamp every sbt compile touches). Verify runs through
+# dev/run_main.sh, which sizes its heap and cores.
 set -e
 cd "$(dirname "$0")/.."
 CLASSES=target/scala-2.13/classes
@@ -25,23 +23,9 @@ if [ -n "$STALE" ]; then
 fi
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
-MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
-rm -rf "$OUT"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} java -Xmx"$MEM" \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/jdk.internal.ref=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF" "$OUT" 2>/dev/null | grep -v WARN || true
+rm -rf "$OUT" && mkdir -p "$OUT"
+# Spark's log goes to $OUT/verify.log; a Verify that fails to run (an
+# unknown SPARK_GRAFT_ONLY name, say) stops the script with its error
+GRAFT_CLASSES=$CLASSES dev/run_main.sh graft.Verify "$SF" "$OUT" 2>"$OUT/verify.log" || {
+  grep -m1 Exception "$OUT/verify.log" >&2; exit 1; }
 python3 dev/compare.py "$SF" "$OUT"

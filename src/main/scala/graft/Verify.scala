@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,19 +6,11 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b restricts the dump for local iteration
     // (same knob as Bench); the driver leaves it unset → full run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = Launch.only(SparkEntry.queries.keys)
+    val spark = Launch.session("graft-verify")
+    new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.contains(n)) }
     selected.foreach { case (name, fn) =>

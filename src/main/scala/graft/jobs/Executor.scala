@@ -61,14 +61,7 @@ object Executor {
 
   def main(argv: Array[String]): Unit = {
     val args = parse(argv.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Launch.session("graft-etl")
     try run(spark, args)
     finally spark.stop()
   }

@@ -282,18 +282,10 @@ object ScaleBench {
       if (args.length > 1) args.drop(1).map(_.toDouble).toSeq.sorted
       else Seq(0.1, 1.0, 3.16)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Launch.cpus
     // SPARK_GRAFT_ONLY=a,b restricts the heavy list (isolated reruns,
-    // same contract as graft.Bench); unknown names fail fast — a typo
-    // would otherwise select nothing and write an empty artifact
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { o =>
-      val unknown = o -- heavy.toSet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in ScaleBench.heavy: " +
-          s"${unknown.toSeq.sorted.mkString(",")} (valid: ${heavy.mkString(",")})")
-    }
+    // same contract as graft.Bench)
+    val only = graft.Launch.only(heavy)
     // SPARK_GRAFT_SKIP=a,b drops named queries but — unlike ONLY —
     // keeps the run FULL: the at-rest builds still run and the skip is
     // recorded in the artifact note. Needed because the sf100 rung
@@ -339,19 +331,10 @@ object ScaleBench {
       math.max(512L, math.round(512.0 * sf / 10.0)).toInt
     def advisoryMbFor(sf: Double): Int =
       math.max(16L, math.round(64.0 / math.max(1.0, sf / 10.0))).toInt
-    val spark = SparkSession.builder()
-      .appName("graft-scalebench")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialPartsFor(sfs.max))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        s"${advisoryMbFor(sfs.max)}m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Launch.session("graft-scalebench", cpus, Map(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        initialPartsFor(sfs.max).toString,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> s"${advisoryMbFor(sfs.max)}m"))
     val probe = graft.obs.Probe.attach(spark)
     def ms(t: Double) = (math.rint(t * 1000) / 1000).toString
     def mb(b: Long) = (math.rint(b / 1048576.0 * 10) / 10).toString

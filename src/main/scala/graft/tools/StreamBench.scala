@@ -321,15 +321,9 @@ object StreamBench {
     val workDir = if (args.length > 0) args(0) else "target/synth"
     val sf = if (args.length > 1) args(1).toDouble else 31.6
     val out = if (args.length > 2) args(2) else s"FILESTREAM_BENCH_sf$sf.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.fileSource.log.compactInterval", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Launch.cpus
+    val spark = graft.Launch.session("graft-streambench", cpus,
+      Map("spark.sql.streaming.fileSource.log.compactInterval" -> "1000"))
     val sfDir = s"$workDir/sf$sf"
     require(new java.io.File(s"$sfDir/documents.parquet").exists(),
       s"rung corpus missing at $sfDir — run ScaleBench/SynthGen first")

@@ -347,13 +347,7 @@ object SynthGen {
   /** `runMain graft.tools.SynthGen <outDir> <sf>` */
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: SynthGen <outDir> <sf>")
-    val spark = SparkSession.builder()
-      .appName("graft-synthgen")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.Launch.session("graft-synthgen")
     try generate(spark, args(0), args(1).toDouble)
     finally spark.stop()
   }

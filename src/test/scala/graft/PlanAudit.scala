@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (the Profile* family): execute every registry query at
   * sf0.001 and report which FINAL adaptive plans still contain a
   * SortMergeJoin — the round-11 residual-spill sweep's audit surface.
@@ -14,12 +12,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Launch.session("graft-planaudit", cpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
     val hits = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
       try {

@@ -2,15 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (round-14 optimization deliverable): dump
   * `explain("formatted")` for registry queries into plan files the
   * judge can diff (`plans/r14/<query>_{before,after}.txt`).
   *
   *   sbt "Test/runMain graft.PlanDump <suffix> [sfDir] [outDir] [q1,q2,...]"
   *
-  * Runs under the exact Bench session confs (local[32], AQE on) so the
+  * Runs under Bench's session (the factory's, here on local[32]) so the
   * dumped INITIAL plan matches what the bench executes; the dump also
   * executes each query once (Force.rows) and appends the FINAL adaptive
   * plan, where join-strategy rewrites and coalesced reads show up.
@@ -23,11 +21,7 @@ object PlanDump {
     val only = if (args.length > 3)
       Some(args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet)
     else None
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Launch.session("graft-plandump", cpus = 32)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(out))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
